@@ -148,10 +148,21 @@ def run_at_pinned(cores: int, sf_dir: str, replicate: int,
 def _cpu_rotation(cores: int, window: int, total: int = 32) -> str:
     """Disjoint-ish core sets per window: window i at `cores` cores uses a
     contiguous block starting at (i * cores) mod total."""
+    if cores > total:
+        raise ValueError(f"cannot pin {cores} cores on a {total}-vCPU box")
     start = (window * cores) % total
     if start + cores <= total:
         return f"{start}-{start + cores - 1}"
     return f"{start}-{total - 1},0-{(start + cores) % total - 1}"
+
+
+def scaling_skip_reason(cpus: int) -> str | None:
+    """Why the N vs 4N scaling block cannot run on `cpus` vCPUs, or None:
+    the 4N side must be pinned to 4N distinct vCPUs."""
+    if SCALE_N * 4 > cpus:
+        return (f"the {SCALE_N}v{SCALE_N * 4} scaling pair needs "
+                f"{SCALE_N * 4} vCPUs; this box has {cpus}")
+    return None
 
 
 def main() -> None:
@@ -220,7 +231,9 @@ def main() -> None:
     result["n_turns"] = n_turns
     result["turns_per_sec"] = round(n_turns / pipe_sec, 1)
 
-    if SCALING:
+    if SCALING and (skip := scaling_skip_reason(CPUS)):
+        result["scaling"] = {"skipped": skip}
+    elif SCALING:
         try:
             small, big = SCALE_N, SCALE_N * 4
             # INTERLEAVED windows (N, 4N, N, 4N, ...): neighbor steal on

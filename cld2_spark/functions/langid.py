@@ -3,15 +3,20 @@
 Reproduces the reference public API (SURVEY.md §2.10,
 public/compact_lang_det.h:177-306) as Arrow-batched pandas UDFs:
 
-  detect_udf          ~ DetectLanguage           (top language code only)
-  detect_summary_udf  ~ ExtDetectLanguageSummary (top-3 + percents + scores)
-  analyze_udf         = summary + fastText cross-check + perplexity (the
-                        pipeline's combined stage)
+  detect_udf               ~ DetectLanguage (top language code only)
+  detect_summary_udf       ~ ExtDetectLanguageSummary (top-3 + percents +
+                             scores), with 0-4 CLDHints columns
+  make_detect_summary_udf  the same with the reference's flag bits
+  detect_spans_udf         per-language spans (ResultChunkVector)
+  pipeline_udf             summary answer + fastText cross-check +
+                           perplexity: the keep/drop pipeline's one
+                           Python stage
 
-All are `Iterator[pd.Series] -> Iterator[...]` UDFs so the broadcast model
-loads once per Python worker, not once per batch
-(executor-side lazy singleton = CLD2 dynamic-mode load,
-internal/compact_lang_det_impl.cc:108-136).
+Every UDF comes from one factory, `_langid_udf`: an `Iterator[pd.Series]
+-> Iterator[...]` UDF, so the model loads once per Python worker, not
+once per batch (executor-side lazy singleton = CLD2 dynamic-mode load,
+internal/compact_lang_det_impl.cc:108-136), and each Arrow batch is one
+kernel call.
 """
 
 from __future__ import annotations
@@ -43,25 +48,13 @@ SUMMARY_SCHEMA = StructType([
     StructField("summary_pct", IntegerType()),
 ])
 
-ANALYZE_SCHEMA = StructType(
-    SUMMARY_SCHEMA.fields + [
-        StructField("ft_lang", StringType()),
-        StructField("ppl", DoubleType()),
-        StructField("tri_grams", LongType()),
-        # short-turn bestEffort rescue flag (analyze.BEST_EFFORT_MAX_BYTES):
-        # true when the answer is a bestEffort guess that passed its own
-        # confidence gate; is_reliable stays false on such rows
-        StructField("be_ok", BooleanType()),
-    ]
-)
-
-_SUMMARY_COLS = [f.name for f in SUMMARY_SCHEMA.fields]
-_ANALYZE_COLS = [f.name for f in ANALYZE_SCHEMA.fields]
-
-# slim schema for the keep/drop pipeline: only what the decision consumes
-# (less Arrow traffic + pandas assembly per batch). `lang1` here is the
-# pipeline's per-turn language answer = the kernel's summary_lang (the
-# FIXTURES.md contract name predates the sorted-array refactor).
+# the keep/drop pipeline's schema: only what the decision consumes.
+# `lang1` here is the pipeline's per-turn language answer = the kernel's
+# summary_lang (the FIXTURES.md contract name predates the sorted-array
+# refactor). be_ok is the short-turn bestEffort rescue flag
+# (analyze.BEST_EFFORT_MAX_BYTES): true when the answer is a bestEffort
+# guess that passed its own confidence gate; is_reliable stays false on
+# such rows.
 PIPELINE_SCHEMA = StructType([
     StructField("lang1", StringType()),
     StructField("pct1", IntegerType()),
@@ -72,39 +65,92 @@ PIPELINE_SCHEMA = StructType([
     StructField("tri_grams", LongType()),
     StructField("be_ok", BooleanType()),
 ])
-_PIPELINE_COLS = [f.name for f in PIPELINE_SCHEMA.fields]
+
+# W4 chunk vector: per-language spans of the source text
+# (ResultChunkVector, public/compact_lang_det.h:146-153). off/len are
+# CHARACTER offsets; off_b/len_b the same spans in UTF-8 BYTES (the
+# reference's OffsetMap domain, internal/offsetmap.h:25-45)
+SPANS_SCHEMA = ArrayType(StructType([
+    StructField("off", IntegerType()), StructField("len", IntegerType()),
+    StructField("off_b", IntegerType()), StructField("len_b", IntegerType()),
+    StructField("lang", StringType()),
+]))
+
+# the CLDHints record, in the order hint columns follow the text column
+# (public/compact_lang_det.h:133-138,241-271)
+_HINT_FIELDS = ("lang", "content_language", "tld", "encoding")
 
 
-def _pipeline_pdf(res: dict) -> pd.DataFrame:
-    out = dict(res)
-    out["lang1"] = res["summary_lang"]
-    return _to_pdf(out, _PIPELINE_COLS)
+def _hint_records(cols: list[pd.Series]) -> list[dict | None]:
+    """Hint columns -> detect_batch's per-row hint dicts. NULL or empty
+    fields are left out; a row without any hint is None."""
+    rows = zip(*(c.fillna("") for c in cols))
+    return [{k: v for k, v in zip(_HINT_FIELDS, r) if v} or None for r in rows]
 
 
-def _to_pdf(res: dict, cols: list[str]) -> pd.DataFrame:
-    return pd.DataFrame({c: res[c] for c in cols})
+def _frame(schema: StructType, **source: str):
+    """Kernel result -> the schema's columns as a DataFrame; `source`
+    names the result key an output column is read from when it differs."""
+    cols = [f.name for f in schema.fields]
+    return lambda res: pd.DataFrame({c: res[source.get(c, c)] for c in cols})
 
 
-@F.pandas_udf(StringType())
-def detect_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """DetectLanguage analogue: top language code per row."""
-    from cld2_spark.kernels.detect import detect_batch
-    from cld2_spark.kernels.model import default_model
-    model = default_model()
-    for s in batches:
-        res = detect_batch(s.fillna("").tolist(), model)
-        yield pd.Series(res["summary_lang"])
+def _span_rows(res: dict) -> pd.Series:
+    """detect_batch's flat span arrays -> one list of span structs per row."""
+    import numpy as np
+    n = len(res["summary_lang"])
+    rid = res["span_rid"]
+    order = np.argsort(rid, kind="stable")
+    bounds = np.searchsorted(rid[order], np.arange(n + 1))
+    rows = []
+    off, ln, lg = (res["span_off"][order], res["span_len"][order],
+                   res["span_lang"][order])
+    offb, lnb = res["span_off_b"][order], res["span_len_b"][order]
+    for i in range(n):
+        lo, hi = bounds[i], bounds[i + 1]
+        rows.append([{"off": int(off[j]), "len": int(ln[j]),
+                      "off_b": int(offb[j]), "len_b": int(lnb[j]),
+                      "lang": str(lg[j])} for j in range(lo, hi)])
+    return pd.Series(rows)
 
 
-@F.pandas_udf(SUMMARY_SCHEMA)
-def detect_summary_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """ExtDetectLanguageSummary analogue: top-3 + percents + reliability."""
-    from cld2_spark.kernels.detect import detect_batch
-    from cld2_spark.kernels.model import default_model
-    model = default_model()
-    for s in batches:
-        res = detect_batch(s.fillna("").tolist(), model)
-        yield _to_pdf(res, _SUMMARY_COLS)
+def _langid_udf(name: str, schema, out, doc: str, analyze: bool = False,
+                **flags):
+    """One SCALAR_ITER pandas UDF over a langid kernel. Per Python worker
+    it loads the model once; per Arrow batch it fills NULL text with "",
+    turns any hint columns into hint records, makes one kernel call
+    (analyze_batch, or detect_batch with `flags`) and returns
+    `out(result)`."""
+    def udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        from cld2_spark.kernels.analyze import analyze_batch
+        from cld2_spark.kernels.detect import detect_batch
+        from cld2_spark.kernels.model import default_model
+        model = default_model()
+        for batch in batches:
+            text, *hint_cols = batch if isinstance(batch, tuple) else (batch,)
+            texts = text.fillna("").tolist()
+            if analyze:
+                res = analyze_batch(texts, model)
+            else:
+                hints = _hint_records(hint_cols) if hint_cols else None
+                res = detect_batch(texts, model, hints=hints, **flags)
+            yield out(res)
+    udf.__name__ = udf.__qualname__ = name
+    udf.__doc__ = doc
+    return F.pandas_udf(schema)(udf)
+
+
+detect_udf = _langid_udf(
+    "detect_udf", StringType(), lambda res: pd.Series(res["summary_lang"]),
+    "DetectLanguage analogue: top language code per row.")
+
+detect_summary_udf = _langid_udf(
+    "detect_summary_udf", SUMMARY_SCHEMA, _frame(SUMMARY_SCHEMA),
+    """ExtDetectLanguageSummary analogue: top-3 + percents + reliability.
+    detect_summary_udf(text, *hints) takes 0-4 hint columns after the
+    text, in CLDHints order: (lang, content_language, tld, encoding).
+    Up to 4 merged priors per row (TrimCLDLangPriors); hints bias the
+    scoring, they never force the result (J8).""")
 
 
 def make_detect_summary_udf(best_effort: bool = False,
@@ -117,107 +163,21 @@ def make_detect_summary_udf(best_effort: bool = False,
     scoreAsQuads scores single-language scripts through the quad path;
     is_plain_text=False strips tags and expands the FULL verbatim entity
     table before detection."""
-    @F.pandas_udf(SUMMARY_SCHEMA)
-    def _udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        from cld2_spark.kernels.detect import detect_batch
-        from cld2_spark.kernels.model import default_model
-        model = default_model()
-        for s in batches:
-            res = detect_batch(s.fillna("").tolist(), model,
-                               best_effort=best_effort,
-                               score_as_quads=score_as_quads,
-                               is_plain_text=is_plain_text)
-            yield _to_pdf(res, _SUMMARY_COLS)
-    return _udf
+    return _langid_udf(
+        "detect_summary_udf", SUMMARY_SCHEMA, _frame(SUMMARY_SCHEMA),
+        detect_summary_udf.__doc__, best_effort=best_effort,
+        score_as_quads=score_as_quads, is_plain_text=is_plain_text)
 
 
-@F.pandas_udf(ANALYZE_SCHEMA)
-def analyze_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """Combined langid + cross-check + perplexity (one normalization pass)."""
-    from cld2_spark.kernels.analyze import analyze_batch
-    from cld2_spark.kernels.model import default_model
-    model = default_model()
-    for s in batches:
-        res = analyze_batch(s.fillna("").tolist(), model)
-        yield _to_pdf(res, _ANALYZE_COLS)
-
-
-@F.pandas_udf(SUMMARY_SCHEMA)
-def detect_summary_hinted_udf(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-    """ExtDetectLanguageSummary with a per-row language hint column (J8:
-    hints bias the scoring, they never force the result)."""
-    from cld2_spark.kernels.detect import detect_batch
-    from cld2_spark.kernels.model import default_model
-    model = default_model()
-    for texts, hints in batches:
-        res = detect_batch(texts.fillna("").tolist(), model,
-                           lang_hints=hints.fillna("").tolist())
-        yield _to_pdf(res, _SUMMARY_COLS)
-
-
-@F.pandas_udf(SUMMARY_SCHEMA)
-def detect_summary_ext_udf(batches: Iterator[tuple[pd.Series, ...]]) -> Iterator[pd.DataFrame]:
-    """ExtDetectLanguageSummary with the full CLDHints record as columns:
-    (text, lang_hint, content_language_hint, tld_hint, encoding_hint) --
-    public/compact_lang_det.h:133-138,241-271. Up to 4 merged priors per
-    row (TrimCLDLangPriors); hints bias the scoring, never force it."""
-    from cld2_spark.kernels.detect import detect_batch
-    from cld2_spark.kernels.model import default_model
-    model = default_model()
-    for texts, lang_h, cl_h, tld_h, enc_h in batches:
-        hints = [
-            {"lang": lh or None, "content_language": ch or None,
-             "tld": th or None, "encoding": eh or None}
-            if (lh or ch or th or eh) else None
-            for lh, ch, th, eh in zip(lang_h.fillna(""), cl_h.fillna(""),
-                                      tld_h.fillna(""), enc_h.fillna(""))
-        ]
-        res = detect_batch(texts.fillna("").tolist(), model, hints=hints)
-        yield _to_pdf(res, _SUMMARY_COLS)
-
-
-# W4 chunk vector: per-language spans of the source text
-# (ResultChunkVector, public/compact_lang_det.h:146-153). off/len are
-# CHARACTER offsets; off_b/len_b the same spans in UTF-8 BYTES (the
-# reference's OffsetMap domain, internal/offsetmap.h:25-45)
-SPANS_SCHEMA = ArrayType(StructType([
-    StructField("off", IntegerType()), StructField("len", IntegerType()),
-    StructField("off_b", IntegerType()), StructField("len_b", IntegerType()),
-    StructField("lang", StringType()),
-]))
-
-
-@F.pandas_udf(SPANS_SCHEMA)
-def detect_spans_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+detect_spans_udf = _langid_udf(
+    "detect_spans_udf", SPANS_SCHEMA, _span_rows,
     """Per-row language spans (the ExtDetectLanguageSummaryCheckUTF8
-    resultchunkvector output: W4 stitching + W3 boundary sharpening)."""
-    import numpy as np
-    from cld2_spark.kernels.detect import detect_batch
-    from cld2_spark.kernels.model import default_model
-    model = default_model()
-    for s in batches:
-        res = detect_batch(s.fillna("").tolist(), model, return_spans=True)
-        rid = res["span_rid"]
-        order = np.argsort(rid, kind="stable")
-        bounds = np.searchsorted(rid[order], np.arange(len(s) + 1))
-        rows = []
-        off, ln, lg = (res["span_off"][order], res["span_len"][order],
-                       res["span_lang"][order])
-        offb, lnb = res["span_off_b"][order], res["span_len_b"][order]
-        for i in range(len(s)):
-            lo, hi = bounds[i], bounds[i + 1]
-            rows.append([{"off": int(off[j]), "len": int(ln[j]),
-                          "off_b": int(offb[j]), "len_b": int(lnb[j]),
-                          "lang": str(lg[j])} for j in range(lo, hi)])
-        yield pd.Series(rows)
+    resultchunkvector output: W4 stitching + W3 boundary sharpening).""",
+    return_spans=True)
 
-
-@F.pandas_udf(PIPELINE_SCHEMA)
-def pipeline_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """analyze_udf minus the columns the keep/drop decision never reads."""
-    from cld2_spark.kernels.analyze import analyze_batch
-    from cld2_spark.kernels.model import default_model
-    model = default_model()
-    for s in batches:
-        res = analyze_batch(s.fillna("").tolist(), model)
-        yield _pipeline_pdf(res)
+pipeline_udf = _langid_udf(
+    "pipeline_udf", PIPELINE_SCHEMA,
+    _frame(PIPELINE_SCHEMA, lang1="summary_lang"),
+    """Combined langid + cross-check + perplexity (one normalization
+    pass), reduced to the columns the keep/drop decision reads.""",
+    analyze=True)

@@ -44,22 +44,6 @@ QUAD_CHUNK = 20   # quads per scored chunk (internal/scoreonescriptspan.h:91)
 UNI_CHUNK = 50    # CJK unigrams per chunk (internal/scoreonescriptspan.h:92)
 NO_LANG = 255
 
-# Which quad-gram walk inference uses — MUST match how the shipped model
-# was trained (tools/build_model.py):
-#   True    = historical approximation (gram at every letter position,
-#             mid-word vowel STARTS skipped)
-#   "exact" = the reference's literal stride-2 walk with post-advance
-#             vowel skip and short word-tail grams (F6 byte-exact;
-#             _exact_walk_grams, internal/cldutil.cc:377-391)
-# Swept in round 6 (BENCH/BASELINE.md, 5 variants): the exact walk
-# RAISES held-out default accuracy 77->81/104 but flips the bg/sr
-# close-pair case on the full corpus (104->103) and costs one
-# bestEffort point in every training pairing — at ~125 training
-# chars/language the sparser walk cannot separate that pair. The denser
-# approximation stays the default to keep the 104/104 full-corpus gate;
-# flip to "exact" (and retrain with tools/build_model.py --walk=exact)
-# on any corpus large enough to feed the reference walk.
-QUAD_WALK_VOWEL: bool | str = True
 # J2 second-table votes are capped below the max quad vote: trigram-backoff
 # evidence is weaker than a full quad hit (tuned on the held-out split)
 BACKOFF_MAX_QPROB = 6
@@ -153,45 +137,9 @@ def _empty_quads():
     return z, z, z, np.zeros(32, dtype=np.uint8), z, z, z
 
 
-def _exact_walk_grams(arr, wstart, wlen):
-    """The reference's EXACT per-word gram walk (GetQuadHits,
-    internal/cldutil.cc:337-391): grams start at word offset 0 and then
-    every 2 chars (src=src_mid), PLUS one extra char whenever the next
-    start lands on an ASCII vowel (kAdvanceOneCharSpaceVowel,
-    internal/cldutil_shared.h:476-486); a gram whose 4-char window
-    reaches the word end jumps to the next word (src=src_end), so word
-    tails emit ONE possibly-short (1-4 char) gram. Vectorized as rounds
-    over all words simultaneously (round r = every word's r-th gram);
-    rounds = max grams in the longest word. Returns (pos, glen) sorted
-    in stream order."""
-    n = len(wstart)
-    p = np.zeros(n, dtype=np.int64)
-    active = np.ones(n, dtype=bool)
-    pos_parts, len_parts = [], []
-    while active.any():
-        aw = np.flatnonzero(active)
-        pw = p[aw]
-        L = wlen[aw]
-        glen = np.minimum(4, L - pw)
-        pos_parts.append(wstart[aw] + pw)
-        len_parts.append(glen)
-        done = pw + 4 >= L
-        active[aw[done]] = False
-        cont = aw[~done]
-        p[cont] += 2
-        p[cont] += _VOWEL_LUT[arr[wstart[cont] + p[cont]]]
-    pos = np.concatenate(pos_parts)
-    glen = np.concatenate(len_parts).astype(np.int32)
-    order = np.argsort(pos, kind="stable")
-    return pos[order], glen[order]
-
-
 def _quads_from_walk(walk, arr, rid_s, vowel_skip):
     """Quadgram outputs from a precomputed word walk (see quad_grams)."""
     is_sp, wid, idx, wstart, wlen, boff, buf = walk
-    if vowel_skip == "exact":
-        pos, glen = _exact_walk_grams(arr, wstart, wlen)
-        return _quad_outputs(pos, glen, boff, buf, rid_s)
     o = idx - wstart[wid]                                # offset in word
     L = wlen[wid]
     # streams are built from the lower table + SPACE, both < MAX_CP by
@@ -242,6 +190,8 @@ def quad_grams(arr: np.ndarray, rid_s: np.ndarray, vowel_skip: bool = True):
     letter position, mid-word vowel starts skipped (kAdvanceOneCharSpaceVowel
     internal/cldutil_shared.h:462-486), short words produce one whole-word
     gram, pre/post-space bits sensed from the real spaces in the stream.
+    The reference's literal stride-2 walk was measured as an alternative
+    and not chosen (PARITY.md F6, BENCH/BASELINE.md).
     """
     walk = _word_walk(arr) if len(arr) else None
     if walk is None:
@@ -359,8 +309,7 @@ def _words_from_walk(walk, rid_s):
     return w_rid, h40, pair, wstart
 
 
-def quad_and_word_grams(arr: np.ndarray, rid_s: np.ndarray,
-                        vowel_skip: bool = True):
+def quad_and_word_grams(arr: np.ndarray, rid_s: np.ndarray):
     """quad_grams + word_grams sharing ONE word walk over the stream.
 
     The two extractors share the word walk (space mask, word ids/lengths),
@@ -374,7 +323,7 @@ def quad_and_word_grams(arr: np.ndarray, rid_s: np.ndarray,
     walk = _word_walk(arr) if len(arr) else None
     if walk is None:
         return _empty_quads(), (z, zu, zu, z)
-    return (_quads_from_walk(walk, arr, rid_s, vowel_skip),
+    return (_quads_from_walk(walk, arr, rid_s, True),
             _words_from_walk(walk, rid_s))
 
 
@@ -468,15 +417,18 @@ def _pad_slots(langs: np.ndarray, qprobs: np.ndarray, width: int):
 
 
 def _score_hits(g_rid, langs3, qprobs3, gram_bytes, chunk_size, n_rows, n_langs, acc,
-                hint_lid=None, whack_map=None, expected=None, closeset=None,
+                hint_lid=None, whack_map=None, closeset=None,
                 gpos=None, span_sink=None, distinct_mask=None, seg_rid=None):
     """Chunked scatter-add scoring: the Tote/DocTote pipeline (A1-A3).
 
     g_rid must be sorted ascending. Chunk winner takes the chunk's byte span;
-    per-chunk reliability = min(ReliabilityDelta, ReliabilityExpected)
-    (SetChunkSummary + SummaryBufferToDocTote,
-    internal/scoreonescriptspan.cc:60-96,305-315), with the delta forced to
-    100 when the chunk's top two languages are in the same close set.
+    per-chunk reliability = ReliabilityDelta (SetChunkSummary,
+    internal/scoreonescriptspan.cc:60-96), forced to 100 when the chunk's
+    top two languages are in the same close set. The reference also takes
+    the MIN with a per-chunk ReliabilityExpected (SummaryBufferToDocTote
+    :305-315); detect_batch applies that check at document level only,
+    because the self-trained quad table's score scale varies ~1.9x between
+    seen and unseen text (measured: per chunk it cost 9 corpus cases).
     hint_lid is a (ids (n,4), weights (n,4)) prior pair from resolve_hints:
     each prior adds its weight as a vote to every chunk of the row (J8:
     hints bias, never force -- public/compact_lang_det.h:133-138).
@@ -671,25 +623,6 @@ def _score_hits(g_rid, langs3, qprobs3, gram_bytes, chunk_size, n_rows, n_langs,
     if closeset is not None:
         same = (closeset[win] > 0) & (closeset[win] == closeset[win2])
         rel = np.where(same, maxrel, rel)
-    # per-chunk ReliabilityExpected: actual = (score1 << 10) / bytes vs the
-    # winner's expected score/KB; chunk reliability is the MIN of the two
-    # (SummaryBufferToDocTote, internal/scoreonescriptspan.cc:305-315).
-    # NOTE: only sound when chunk scores have a stable scale; our
-    # self-trained quad table varies ~1.9x between seen and unseen text
-    # (build_model.py calibration), so detect_batch keeps this check at the
-    # document level (expected=None here) -- measured: enabling it per
-    # chunk costs 9 corpus cases to over-deletion.
-    if expected is not None:
-        e = expected[win].astype(np.int64)
-        a_kb = np.where(cb > 0, (s1.astype(np.int64) << 10) // np.maximum(cb, 1), 0)
-        ratio = np.where((a_kb > 0) & (e > 0),
-                         np.maximum(a_kb, e) / np.maximum(np.minimum(a_kb, e), 1), 1.0)
-        rel_score = np.where(e == 0, 100,
-                             np.where(a_kb == 0, 0,
-                                      np.where(ratio <= 1.5, 100,
-                                               np.where(ratio > 4.0, 0,
-                                                        100.0 * (4.0 - ratio) / 2.5)))).astype(np.int64)
-        rel = np.minimum(rel, rel_score)
 
     # chunks where nothing scored attribute NO bytes (argmax of an all-zero
     # tote is meaningless; the reference never reaches this because every
@@ -816,7 +749,7 @@ def _sharpen_boundaries(cid, cr, win, scored, langs3, qprobs3, gram_bytes,
 
 
 def _score_othr_bank(streams, orig_s, n_rows, n_langs, acc, hint_lid,
-                     whack_map, expected, closeset, span_sink) -> None:
+                     whack_map, closeset, span_sink) -> None:
     """Score the non-Latin script streams with ONE shared W5 ring bank.
 
     The reference keeps exactly two distinct-boost rings per document:
@@ -837,7 +770,7 @@ def _score_othr_bank(streams, orig_s, n_rows, n_langs, acc, hint_lid,
             gpos = np.where(s_pos >= 0, orig_s[safe], np.int64(-1))
         _score_hits(s_rid, langs3, qprobs3, s_gb, QUAD_CHUNK, n_rows,
                     n_langs, acc, hint_lid=hint_lid, whack_map=whack_map,
-                    expected=expected, closeset=closeset, gpos=gpos,
+                    closeset=closeset, gpos=gpos,
                     span_sink=span_sink, distinct_mask=dmask)
         return
     width = max(st[2].shape[1] for st in streams)
@@ -885,13 +818,13 @@ def _score_othr_bank(streams, orig_s, n_rows, n_langs, acc, hint_lid,
         gpos = np.where(all_pos >= 0, orig_s[safe], np.int64(-1))
     _score_hits(g_rid, langs3, qprobs3, s_gb, QUAD_CHUNK, n_rows, n_langs,
                 acc, hint_lid=hint_lid, whack_map=whack_map,
-                expected=expected, closeset=closeset, gpos=gpos,
+                closeset=closeset, gpos=gpos,
                 span_sink=span_sink, distinct_mask=dmask, seg_rid=seg)
 
 
 def detect_batch(texts: list[str], model: Cld2sModel | None = None,
                  return_raw: bool = False, nb: T.NormBatch | None = None,
-                 lang_hints: list | None = None, hints: list | None = None,
+                 hints: list | None = None,
                  return_spans: bool = False, best_effort: bool = False,
                  score_as_quads: bool = False, is_plain_text: bool = True,
                  _repeats: bool = False, _retry: bool = True,
@@ -946,7 +879,6 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
             gid = model.lang_id.get(c)
             if gid is not None:
                 closeset[gid] = si
-    expected = None  # see note in _score_hits: doc-level check only
     # languages corroborated by a reference word-table hit, per row --
     # gates the A9 boilerplate demotion (see _extract)
     word_ev = np.zeros((n, L), dtype=bool)
@@ -955,8 +887,6 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
 
     hint_lid = None
     whack_map = None
-    if hints is None and lang_hints is not None:
-        hints = [{"lang": h} if h else None for h in lang_hints]
     if hints is not None:
         hint_lid = resolve_hints(model, hints)
         whack_map = {}
@@ -1061,7 +991,7 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
             if have_words:
                 ((g_rid, bs, bl, buf, gb, pos, tri_len),
                  (w_rid, wh40, pair40, wpos)) = quad_and_word_grams(
-                    arr, rid_s, vowel_skip=QUAD_WALK_VOWEL)
+                    arr, rid_s)
             else:
                 g_rid, bs, bl, buf, gb, pos, tri_len = quad_grams(arr, rid_s)
             if len(g_rid):
@@ -1241,14 +1171,14 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
                         gpos = np.where(s_pos >= 0, orig_s[safe], np.int64(-1))
                     _score_hits(s_rid, langs3, qprobs3, s_gb, QUAD_CHUNK, n, L,
                                 acc, hint_lid=hint_lid, whack_map=whack_map,
-                                expected=expected, closeset=closeset,
+                                closeset=closeset,
                                 gpos=gpos, span_sink=span_sink,
                                 distinct_mask=dmask)
                 else:
                     nl_streams.append(
                         (s_rid, s_pos, langs3, qprobs3, s_gb, dmask))
             _score_othr_bank(nl_streams, orig_s, n, L, acc, hint_lid,
-                             whack_map, expected, closeset, span_sink)
+                             whack_map, closeset, span_sink)
 
     # CJK pass: unigram hits (J3) + adjacent-pair bigram delta hits (J4)
     # merged into one chunk stream. With reference tables: unigrams via the
@@ -1317,7 +1247,7 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
                 cpos = all_pos[order]
             _score_hits(g_rid, langs3, qprobs3, gb, UNI_CHUNK, n, L, acc,
                         hint_lid=hint_lid, whack_map=whack_map,
-                        expected=expected, closeset=closeset,
+                        closeset=closeset,
                         gpos=cpos if span_sink is not None else None,
                         span_sink=span_sink)
 

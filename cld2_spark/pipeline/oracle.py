@@ -34,7 +34,7 @@ def oracle_labels(transcripts: pd.DataFrame, text_col: str = "text") -> pd.DataF
     scrubbed = S.scrub_pandas(texts)
 
     # the pipeline's `lang1` column is the per-turn answer = the kernel's
-    # summary_lang (same mapping as functions/langid._pipeline_pdf)
+    # summary_lang (same mapping as functions/langid.pipeline_udf)
     lang = res["summary_lang"]
     keep, reason = decision_pandas(
         too_short=too_short, lang1=lang, is_reliable=res["is_reliable"],

@@ -8,7 +8,7 @@ verdicts + scrubbed text over the transcripts schema
 Physical shape (designed for 10^12 turns / 1000 executors):
   - every stage is row-local: NO shuffle anywhere in the chain; the only
     exchanges in a production run are the source scan and the sink write.
-  - the single Python stage is one Arrow-batched iterator UDF (`analyze_udf`)
+  - the single Python stage is one Arrow-batched iterator UDF (`pipeline_udf`)
     computing langid + cross-check + perplexity in one normalization pass;
     everything else is whole-stage-codegen SQL (rules, scrub, decision).
   - `partition_for_scale` gives the explicit conv_id hash partitioning +
@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from cld2_spark.functions.langid import analyze_udf, pipeline_udf
+from cld2_spark.functions.langid import pipeline_udf
 from cld2_spark.kernels import quality as Q
 from cld2_spark.kernels import scrub as S
 from cld2_spark.pipeline.decide import decision_columns
@@ -29,11 +29,11 @@ from cld2_spark.pipeline.decide import decision_columns
 LD = "ld"  # struct column name for langid output
 
 
-def with_langid(df: DataFrame, text_col: str = "text", slim: bool = True) -> DataFrame:
-    """Attach the combined langid/cross-check/perplexity struct column.
-    slim=True ships only the columns the decision consumes."""
-    udf = pipeline_udf if slim else analyze_udf
-    return df.withColumn(LD, udf(F.col(text_col)))
+def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Attach the combined langid/cross-check/perplexity struct column
+    (only the columns the decision consumes; its lang1 is the per-turn
+    summary answer)."""
+    return df.withColumn(LD, pipeline_udf(F.col(text_col)))
 
 
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -47,20 +47,10 @@ def with_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
     return S.scrub_spark_columns(df, text_col, "scrubbed_text")
 
 
-def _answer_field(df: DataFrame) -> str:
-    """The per-turn language ANSWER inside the langid struct: pipeline_udf
-    already maps lang1 = summary_lang; analyze_udf keeps the reference
-    surface (sorted lang1 + separate summary_lang), so the decision must
-    read summary_lang there -- both paths otherwise diverge on A9-demoted
-    rows (and from the single-node oracle)."""
-    fields = [f.name for f in df.schema[LD].dataType.fields]
-    return f"{LD}.summary_lang" if "summary_lang" in fields else f"{LD}.lang1"
-
-
 def with_decision(df: DataFrame) -> DataFrame:
     cols: dict[str, Column] = {
         "too_short": F.col("too_short"),
-        "lang1": F.col(_answer_field(df)),
+        "lang1": F.col(f"{LD}.lang1"),
         "is_reliable": F.col(f"{LD}.is_reliable"),
         "rel1": F.col(f"{LD}.rel1"),
         "ft_lang": F.col(f"{LD}.ft_lang"),
@@ -82,7 +72,7 @@ def run_pipeline(df: DataFrame, text_col: str = "text",
     out = with_decision(with_scrub(with_quality(with_langid(df, text_col), text_col), text_col))
     return out.select(
         "conv_id", "turn_idx",
-        F.col(_answer_field(out)).alias("lang1"),
+        F.col(f"{LD}.lang1").alias("lang1"),
         F.col(f"{LD}.pct1").alias("pct1"),
         F.col(f"{LD}.rel1").alias("rel1"),
         F.col(f"{LD}.is_reliable").alias("is_reliable"),

@@ -47,3 +47,22 @@ def test_cpu_rotation_disjoint_blocks():
     assert rot16 == ["0-15", "16-31", "0-15"]
     # wraparound block stays well-formed
     assert bench._cpu_rotation(12, 2, 32) == "24-31,0-3"
+
+
+def test_scaling_skipped_when_box_too_small():
+    """On a box with fewer vCPUs than the 4N side of the scaling pair, the
+    rotation refuses to build an ill-formed CPU list and the scaling block
+    carries an explicit skip reason instead of an exception string."""
+    import importlib.util
+
+    import pytest
+    spec = importlib.util.spec_from_file_location("bench", REPO / "bench.py")
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    with pytest.raises(ValueError):
+        bench._cpu_rotation(8, 1, 4)
+    assert bench._cpu_rotation(4, 1, 4) == "0-3"
+    bench.SCALE_N = 2
+    assert "needs 8 vCPUs" in bench.scaling_skip_reason(4)
+    assert bench.scaling_skip_reason(8) is None
+    assert bench.scaling_skip_reason(32) is None

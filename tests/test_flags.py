@@ -86,3 +86,22 @@ def test_flagged_udf_runs(spark, flag):
     df = spark.createDataFrame([(_case_text("en_Latn"),)], ["text"])
     out = df.select(udf(F.col("text")).alias("ld")).select("ld.lang1").collect()
     assert out[0][0] == "en"
+
+
+def test_langid_udfs_are_module_level_scalar_iter():
+    """Every public langid UDF is a module attribute of functions.langid
+    and a SCALAR_ITER pandas UDF: the iterator form is what loads the
+    model once per Python worker, and the benchmark's set-up reset finds
+    the UDFs by scanning the module's attributes."""
+    from pyspark.util import PythonEvalType
+
+    import cld2_spark.functions.langid as L
+
+    udfs = {name: obj for name, obj in vars(L).items()
+            if not name.startswith("_") and hasattr(obj, "evalType")}
+    assert set(udfs) == {"detect_udf", "detect_summary_udf",
+                         "detect_spans_udf", "pipeline_udf"}
+    udfs["make_detect_summary_udf"] = L.make_detect_summary_udf(best_effort=True)
+    for name, udf in udfs.items():
+        assert udf.evalType == PythonEvalType.SQL_SCALAR_PANDAS_ITER_UDF, name
+        assert hasattr(udf, "_unwrapped"), name

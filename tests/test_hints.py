@@ -29,19 +29,19 @@ def _corpus_text(case_id: str) -> str:
 def test_hint_redirects_within_close_set():
     hr = _corpus_text("hr_Latn")
     assert detect_batch([hr])["lang1"][0] == "hr"
-    assert detect_batch([hr], lang_hints=["bs"])["lang1"][0] == "bs"
-    assert detect_batch([hr], lang_hints=["hr"])["lang1"][0] == "hr"
+    assert detect_batch([hr], hints=[{"lang": "bs"}])["lang1"][0] == "bs"
+    assert detect_batch([hr], hints=[{"lang": "hr"}])["lang1"][0] == "hr"
     bs = _corpus_text("bs_Latn")
-    assert detect_batch([bs], lang_hints=["hr"])["lang1"][0] == "hr"
+    assert detect_batch([bs], hints=[{"lang": "hr"}])["lang1"][0] == "hr"
 
 
 def test_hint_never_forces_clear_text():
-    res = detect_batch([CLEAR_EN], lang_hints=["fr"])
+    res = detect_batch([CLEAR_EN], hints=[{"lang": "fr"}])
     assert res["lang1"][0] == "en"
 
 
 def test_unknown_hint_code_is_ignored():
-    a = detect_batch([CLEAR_EN], lang_hints=["zz-bogus"])
+    a = detect_batch([CLEAR_EN], hints=[{"lang": "zz-bogus"}])
     b = detect_batch([CLEAR_EN])
     assert a["lang1"][0] == b["lang1"][0]
     assert a["pct1"][0] == b["pct1"][0]
@@ -96,13 +96,13 @@ def test_two_hint_interaction_redirects():
 
 def test_ext_hint_udf(spark):
     from pyspark.sql import functions as F
-    from cld2_spark.functions.langid import detect_summary_ext_udf
+    from cld2_spark.functions.langid import detect_summary_udf
     hr = _corpus_text("hr_Latn")
     df = spark.createDataFrame(
         [(hr, None, "bs", None, None), (CLEAR_EN, None, None, "fr", None),
          (CLEAR_EN, None, None, None, None)],
         "text string, lh string, cl string, tld string, enc string")
-    out = (df.withColumn("ld", detect_summary_ext_udf(
+    out = (df.withColumn("ld", detect_summary_udf(
         F.col("text"), F.col("lh"), F.col("cl"), F.col("tld"), F.col("enc")))
         .select(F.col("ld.lang1").alias("lang1")).toPandas())
     assert out.lang1.tolist() == ["bs", "en", "en"]
@@ -110,10 +110,10 @@ def test_ext_hint_udf(spark):
 
 def test_hint_udf_roundtrip(spark):
     from pyspark.sql import functions as F
-    from cld2_spark.functions.langid import detect_summary_hinted_udf
+    from cld2_spark.functions.langid import detect_summary_udf
     hr = _corpus_text("hr_Latn")
     df = spark.createDataFrame([(hr, "bs"), (CLEAR_EN, "fr"), (CLEAR_EN, None)],
                                "text string, hint string")
-    out = (df.withColumn("ld", detect_summary_hinted_udf(F.col("text"), F.col("hint")))
+    out = (df.withColumn("ld", detect_summary_udf(F.col("text"), F.col("hint")))
            .select(F.col("ld.lang1").alias("lang1")).toPandas())
     assert out.lang1.tolist() == ["bs", "en", "en"]

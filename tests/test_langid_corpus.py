@@ -131,44 +131,29 @@ def test_mixed_batch_order_stability():
     assert list(a["pct1"]) == list(reversed(list(b["pct1"])))
 
 
-def test_exact_reference_walk_matches_scalar_transcription():
-    """F6: the byte-exact GetQuadHits walk (stride-2 with src_mid/src_end
-    advance, post-advance kAdvanceOneCharSpaceVowel skip, short word-tail
-    grams; internal/cldutil.cc:337-391) — the vectorized rounds
-    implementation must equal a literal scalar transcription of the C++
-    loop on randomized words. The shipped model keeps the denser
-    approximate walk (see detect.QUAD_WALK_VOWEL for the measured
-    trade); this pins the exact machinery itself."""
-    import numpy as np
+def test_model_rebuild_reproduces_shipped_model(tmp_path, monkeypatch):
+    """tools/build_model.py must rebuild the shipped cld2s_model.npz
+    array-for-array and report the gated accuracies, so any training
+    change that alters the shipped model fails here."""
+    import importlib.util
 
-    from cld2_spark.kernels import detect as D
-    from cld2_spark.kernels import text as T
+    from cld2_spark.kernels.model import Cld2sModel
 
-    def scalar_walk(arr, wstart, wlen):
-        out = []
-        for ws, L in zip(wstart, wlen):
-            p = 0
-            while True:
-                out.append((int(ws + p), int(min(4, L - p))))
-                if p + 4 >= L:
-                    break
-                p += 2
-                if D._VOWEL_LUT[arr[ws + p]]:
-                    p += 1
-        return sorted(out)
+    repo = Path(__file__).resolve().parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "build_model", repo / "tools" / "build_model.py")
+    build_model = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(build_model)
 
-    rng = np.random.RandomState(7)
-    for _ in range(100):
-        words = ["".join(rng.choice(list("aeioubcdfgzxy"),
-                                    rng.randint(1, 14)))
-                 for _ in range(rng.randint(1, 8))]
-        nb = T.normalize_batch([" ".join(words)])
-        scripts = np.unique(nb.script[nb.letter]).astype(np.uint8)
-        arr, rid_s = T.group_stream(nb, scripts)
-        walk = D._word_walk(arr)
-        if walk is None:
-            continue
-        _, _, _, wstart, wlen, boff, buf = walk
-        pos, glen = D._exact_walk_grams(arr, wstart, wlen)
-        assert sorted(zip(pos.tolist(), glen.tolist())) == \
-            scalar_walk(arr, wstart, wlen)
+    rebuilt = tmp_path / "cld2s_model.npz"
+    save = Cld2sModel.save
+    monkeypatch.setattr(Cld2sModel, "save",
+                        lambda self, path: save(self, str(rebuilt)))
+    acc = build_model.main(write=True)
+    assert (acc["full"], acc["held"], acc["held_be"]) == (104, 77, 81)
+
+    shipped = np.load(repo / "cld2_spark" / "model" / "cld2s_model.npz")
+    got = np.load(rebuilt)
+    assert sorted(got.files) == sorted(shipped.files)
+    for name in shipped.files:
+        assert np.array_equal(got[name], shipped[name]), name

@@ -6,6 +6,9 @@ exact agreement -- shared kernels), identical drop reasons, and EXACT
 scrubbed-text equality under stable (conv_id, turn_idx) ordering.
 """
 
+import json
+from pathlib import Path
+
 import pandas as pd
 import pytest
 
@@ -84,15 +87,27 @@ def test_short_turn_best_effort_rescue(spark):
     """VERDICT r3 #2: transcript turns <=256 bytes are the reference's
     out-of-design zone; when the default pass refuses or is unreliable,
     the pipeline consults bestEffort and keeps the turn with the right
-    language, carrying is_reliable=false (the answer is a guess)."""
+    language, carrying is_reliable=false (the answer is a guess).
+
+    The third row is the A9 case (boilerplate demotion): its sorted lang1
+    is "en" but its CalcSummaryLang answer is "fr", and the pipeline's
+    per-turn lang1 must carry the answer on both sides."""
+    from cld2_spark.kernels.detect import detect_batch
+
     gr = "η βιβλιοθήκη της πόλης θα ανοίξει μια νέα πτέρυγα την άνοιξη"
     fr = "le conseil a décidé de restaurer les fontaines du jardin"
+    pairs = Path(__file__).parent / "data" / "cld2_unittest_pairs.jsonl"
+    a9 = next(p["text"] for p in map(json.loads, pairs.open())
+              if p["case_id"] == "fr_en_Latn")
+    det = detect_batch([a9])
+    assert (det["lang1"][0], det["summary_lang"][0]) == ("en", "fr")
     rows = [("c1", 0, "user", fr, "", None),
-            ("c1", 1, "assistant", gr, "", None)]
+            ("c1", 1, "assistant", gr, "", None),
+            ("c2", 0, "user", a9, "", None)]
     pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role",
                                       "text", "tool", "ts"])
     want = oracle_labels(pdf)
-    assert want["lang1"].tolist() == ["fr", "el"]
+    assert want["lang1"].tolist() == ["fr", "el", "fr"]
     # the rescued short-fr turn is KEPT; no row drops as langid_unreliable
     # (the Greek row may still drop on perplexity -- a separate filter
     # whose trigram model covers fewer languages)
@@ -104,41 +119,11 @@ def test_short_turn_best_effort_rescue(spark):
               "tool string, ts timestamp")
     got = (run_pipeline(df).toPandas()
            .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-    assert got["lang1"].tolist() == ["fr", "el"]
+    assert got["lang1"].tolist() == ["fr", "el", "fr"]
     assert bool(got["keep"][0])
     assert got["drop_reason"].tolist() == want["drop_reason"].tolist()
     # the short-fr row is a bestEffort guess: is_reliable carried false
     assert not bool(got["is_reliable"][0])
-
-
-def test_slim_and_full_langid_paths_decide_identically(spark):
-    """with_langid(slim=False) attaches the full analyze struct (sorted
-    lang1 + separate summary_lang); the decision must read the summary
-    answer there, agreeing with the slim path on every row -- including
-    A9-demoted docs where sorted lang1 != summary_lang (round-3 review)."""
-    from pyspark.sql import functions as F
-    from cld2_spark.pipeline.stages import (with_decision, with_langid,
-                                            with_quality, with_scrub)
-    en_head = ("France is the largest country in western europe and the "
-               "third largest overall. ")
-    fr = ("le conseil municipal a décidé de restaurer les fontaines du "
-          "jardin public et la bibliothèque ouvrira une nouvelle aile au "
-          "printemps prochain. les habitants du quartier pourront consulter "
-          "et emprunter des ouvrages numériques pendant les travaux.")
-    rows = [("c1", 0, "user", en_head + fr, "", None),
-            ("c1", 1, "assistant", fr, "", None),
-            ("c2", 0, "user", "short", "", None)]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, "
-              "tool string, ts timestamp")
-
-    def verdicts(slim):
-        out = with_decision(with_scrub(with_quality(
-            with_langid(df, slim=slim))))
-        return (out.orderBy("conv_id", "turn_idx")
-                .select("keep", "drop_reason").collect())
-
-    assert verdicts(True) == verdicts(False)
 
 
 def test_crosscheck_stream_reuse():

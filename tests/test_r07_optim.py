@@ -124,3 +124,17 @@ def test_semdedup_matches_unpersisted_recompute(spark):
                       .select("a", "b", F.round("sim", 4).alias("sim"))
                       ).collect()}
     assert got == want and got
+
+
+def test_register_memo_restores_dropped_view(spark):
+    """The per-session `_register` memo must not trust its key once an
+    expected view is gone: a query entry after `transcripts` was dropped
+    re-registers the views and returns the same rows."""
+    import __spark_entry__ as E
+    from test_frozen_fixture import SF_DIR as sf
+
+    q = E.queries()["conv_rollup"]
+    want = sorted(q(spark, sf).collect())
+    assert want
+    spark.catalog.dropTempView("transcripts")
+    assert sorted(q(spark, sf).collect()) == want

@@ -173,64 +173,10 @@ def reference_lang_codes() -> set[str]:
     return out
 
 
-def _distinct_word_gram_mask(arr, rid_s, pos, distinct_rt, latin: bool):
-    """Gram positions falling inside a word (or word-pair member) that
-    HITS the reference distinct-octa table. Used by the --joint-distinct
-    sweep (VERDICT r5 #5): at inference those words already score through
-    the W5 distinct-boost channel, so the sweep trains the quad table
-    WITHOUT them, shifting its limited per-language mass (~125 chars/lang)
-    onto content the boost cannot cover. Returns a bool mask over `pos`
-    (True = gram starts inside a distinct-active word)."""
-    from cld2_spark.kernels.detect import _word_walk
-    from cld2_spark.kernels.hashes import octa_hash_40, pair_hash
-
-    walk = _word_walk(arr) if len(arr) else None
-    if walk is None or distinct_rt is None:
-        return np.zeros(len(pos), dtype=bool)
-    _, _, _, wstart, wlen, boff, wbuf = walk
-    if len(wstart) == 0:
-        return np.zeros(len(pos), dtype=bool)
-    wl8 = np.minimum(wlen, 8)
-    bstart = boff[wstart]
-    blen = np.minimum(boff[wstart + wl8] - bstart, 24)
-    h40 = octa_hash_40(wbuf, bstart, blen)
-    fnd, _, wq = distinct_rt.probe_octa(h40, latin)
-    hit = fnd & (wq > 0).any(axis=1)
-    if len(h40) > 1:  # word-pair probes flag both members (J6 channel)
-        p40 = pair_hash(h40[:-1], h40[1:])
-        same_row = rid_s[wstart[1:]] == rid_s[wstart[:-1]]
-        pf, _, pq = distinct_rt.probe_octa(p40, latin)
-        phit = pf & (pq > 0).any(axis=1) & same_row & (h40[1:] != h40[:-1])
-        hit[1:] |= phit
-        hit[:-1] |= phit
-    if not hit.any():
-        return np.zeros(len(pos), dtype=bool)
-    # char-level coverage of hit words -> gram-start membership
-    bad = np.zeros(len(arr) + 1, dtype=np.int32)
-    np.add.at(bad, wstart[hit], 1)
-    np.add.at(bad, np.minimum(wstart[hit] + wlen[hit], len(arr)), -1)
-    return np.cumsum(bad[:-1]) [pos] > 0
-
-
-def main(joint_distinct: bool = False, write: bool = True,
-         walk_mode: bool | str = False) -> dict:
-    """walk_mode: the vowel_skip argument used when extracting TRAINING
-    quads (False = every-position superset, the shipped default;
-    "exact" = the reference's literal stride-2 walk). When "exact",
-    inference is switched to the same walk for the evaluation passes so
-    train/infer stay consistent (and restored afterwards)."""
-    import cld2_spark.kernels.detect as _detect
-    prev_walk = _detect.QUAD_WALK_VOWEL
-    if walk_mode in ("exact", "exact-infer", "blend"):
-        _detect.QUAD_WALK_VOWEL = "exact"
-    train_walk = walk_mode if walk_mode in ("exact", "blend") else False
-    try:
-        return _main_inner(joint_distinct, write, train_walk)
-    finally:
-        _detect.QUAD_WALK_VOWEL = prev_walk
-
-
-def _main_inner(joint_distinct, write, walk_mode) -> dict:
+def main(write: bool = True) -> dict:
+    """Train the quad tables, calibrate expected scores, optionally write
+    cld2s_model.npz, and return the accuracy report
+    {"full", "held", "held_be", "n"}."""
     corpus = load_corpus()
     eval_texts = load_eval_texts()
 
@@ -282,21 +228,8 @@ def _main_inner(joint_distinct, write, walk_mode) -> dict:
         # TRAIN without the mid-word vowel skip: trained grams are a strict
         # superset of what inference probes (quad_grams vowel_skip doc),
         # raising the unseen-text hit rate at zero inference cost
-        if walk_mode == "blend":
-            # every-position grams once + exact-walk grams AGAIN: the
-            # inference walk's grams get double weight without losing
-            # the density the tiny corpus needs
-            parts = [quad_grams(arr, rid_s, vowel_skip=False),
-                     quad_grams(arr, rid_s, vowel_skip="exact")]
-            g_rid = np.concatenate([p[0] for p in parts])
-            bs = np.concatenate([p[1] for p in parts])
-            bl = np.concatenate([p[2] for p in parts])
-            buf = parts[0][3]
-            pos = np.concatenate([p[5] for p in parts])
-            tri_len = np.concatenate([p[6] for p in parts])
-        else:
-            g_rid, bs, bl, buf, gb, pos, tri_len = quad_grams(
-                arr, rid_s, vowel_skip=walk_mode)
+        g_rid, bs, bl, buf, gb, pos, tri_len = quad_grams(
+            arr, rid_s, vowel_skip=False)
         if len(g_rid) == 0:
             continue
         hs = quad_hash_v2(buf, bs, bl)
@@ -305,18 +238,6 @@ def _main_inner(joint_distinct, write, walk_mode) -> dict:
         hs, h3, pos = hs[keep], h3[keep], pos[keep]
         m = scr_s[pos] == sid
         gname = ut.SCRIPTS[sid][0]
-        if joint_distinct:
-            dbad = _distinct_word_gram_mask(arr, rid_s, pos,
-                                            refs["word_distinct"],
-                                            latin=(gname == "Latn"))
-            if joint_distinct == "double":
-                # count distinct-word grams twice (emphasize the words
-                # the boost channel marks discriminative)
-                for hh in hs[m & dbad].tolist():
-                    group_counts[gname][hh][lid] += 1
-                group_totals[gname][lid] += int((m & dbad).sum())
-            else:  # "drop": exclude them from quad training entirely
-                m &= ~dbad
         for h in hs[m].tolist():
             group_counts[gname][h][lid] += 1
         for h in h3[m].tolist():
@@ -449,17 +370,4 @@ def _main_inner(joint_distinct, write, walk_mode) -> dict:
 
 
 if __name__ == "__main__":
-    jd: str | bool = False
-    if "--joint-distinct" in sys.argv:
-        jd = "drop"
-    if "--joint-distinct=double" in sys.argv:
-        jd = "double"
-    wm: str | bool = False
-    if "--walk=exact" in sys.argv:
-        wm = "exact"
-    if "--walk=exact-infer" in sys.argv:
-        wm = "exact-infer"   # superset training, exact-walk inference
-    if "--walk=blend" in sys.argv:
-        wm = "blend"         # superset + double-weighted exact grams
-    main(joint_distinct=jd, write="--dry-run" not in sys.argv,
-         walk_mode=wm)
+    main(write="--dry-run" not in sys.argv)
