@@ -156,13 +156,11 @@ def _q_scrub_pii(spark, sf_dir):
 
 
 def _q_quality_flags(spark, sf_dir):
-    from cld2_spark.kernels.quality import low_quality_sql, too_short_sql
+    from cld2_spark.pipeline.stages import with_quality
     from cld2_spark.session import ensure_parallelism
     _register(spark, sf_dir)
-    return ensure_parallelism(spark.table("transcripts")).selectExpr(
-        "conv_id", "turn_idx",
-        f"{too_short_sql('text', 'spark')} AS too_short",
-        f"{low_quality_sql('text', 'spark')} AS low_quality")
+    return with_quality(ensure_parallelism(spark.table("transcripts"))).select(
+        "conv_id", "turn_idx", "too_short", "low_quality")
 
 
 def _q_toxicity(spark, sf_dir):

@@ -11,6 +11,16 @@ Physical shape (designed for 10^12 turns / 1000 executors):
   - the single Python stage is one Arrow-batched iterator UDF (`pipeline_udf`)
     computing langid + cross-check + perplexity in one normalization pass;
     everything else is whole-stage-codegen SQL (rules, scrub, decision).
+  - the rules, toxicity check and scrub read only the text, so
+    `run_pipeline` attaches them BEFORE the UDF: Catalyst plans them in
+    the subtree beneath ArrowEvalPython, i.e. in the Arrow writer that
+    feeds the Python worker. The task thread writes (and so computes the
+    rules of) batch k+1 whenever the worker's socket takes input, while
+    the worker is still scoring batch k, so the JVM's string work overlaps
+    the kernel; in the Project above the UDF they would run only once each
+    batch had come back. The decision reads the UDF's
+    struct and stays above; so does the last scrub step, which
+    CollapseProject folds into the Project holding the UDF call.
   - `partition_for_scale` gives the explicit conv_id hash partitioning +
     salt for mega-conversations demanded by the north rule; per-turn stages
     don't need it (row-local), so it's applied only when downstream
@@ -37,9 +47,16 @@ def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Attach `too_short` and `low_quality`. The five features are helper
+    columns of their own Project: the rules read n_chars and n_words more
+    than once, so CollapseProject keeps each feature evaluated once per
+    row instead of inlining it into every rule that reads it."""
+    feats = Q.features_sql(text_col, "spark")
+    helper = {k: f"_q_{k}" for k in feats}
     return (df
-            .withColumn("too_short", F.expr(Q.too_short_sql(text_col, "spark")))
-            .withColumn("low_quality", F.expr(Q.low_quality_sql(text_col, "spark"))))
+            .withColumns({helper[k]: F.expr(v) for k, v in feats.items()})
+            .withColumns({k: F.expr(v) for k, v in Q.flags_sql(helper).items()})
+            .drop(*helper.values()))
 
 
 def with_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -69,7 +86,7 @@ def run_pipeline(df: DataFrame, text_col: str = "text",
     """Full per-turn chain; returns the flat verdict table (FIXTURES.md §4).
     `passthrough` names extra input columns to carry into the output (e.g.
     the event-time column for a downstream stateful streaming operator)."""
-    out = with_decision(with_scrub(with_quality(with_langid(df, text_col), text_col), text_col))
+    out = with_decision(with_langid(with_scrub(with_quality(df, text_col), text_col), text_col))
     return out.select(
         "conv_id", "turn_idx",
         F.col(f"{LD}.lang1").alias("lang1"),

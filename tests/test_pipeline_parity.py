@@ -153,3 +153,69 @@ def test_crosscheck_stream_reuse():
         assert list(base["ft_lang"]) == list(reused["ft_lang"])
         assert np.allclose(base["ppl"], reused["ppl"])
         assert (base["n_grams"] == reused["n_grams"]).all()
+
+
+# Rule edge cases: whitespace variants (trim strips only ' ', Java's \s
+# includes \x0b), supplementary-plane code points, non-ASCII letters,
+# digit/symbol-only rows, toxic words at string end, the Kelvin sign
+# (U+212A, which Java's lower() maps to 'k') and a row just over MAX_CHARS
+# that only the n_chars rule drops.
+EDGE_TEXTS = [
+    None, "", " ", "\t", "\tfoo bar\t", "a\x0bb\x0cc\rd\ne",
+    "ok 😀 wörld 🦆🦆 \U0001F600x", "ÀÉÎ abc", "1234567890", "@@@",
+    "FRAKKING", "belgium++ x", "fra\u212aking",
+    "mail jo.doe@example.com, 123-45-6789, 10.0.0.1 or 4111 1111 1111 1111",
+    "word " * 20_000 + "x",
+]
+
+
+def test_spark_rule_forms_match_both_oracles_on_edge_strings(spark):
+    """The Spark rule forms (the helper-column features, flags, guarded
+    toxicity and scrub chain `run_pipeline` uses) against the pandas
+    oracle and DuckDB's oracle SQL, row by row."""
+    import duckdb
+
+    from cld2_spark.kernels import quality as Q
+    from cld2_spark.kernels import scrub as S
+    from cld2_spark.pipeline.stages import with_quality, with_scrub
+
+    spark_feats = Q.features_sql("text", "spark")
+    feats = list(spark_feats)
+    flags = ["too_short", "low_quality", "toxic", "scrubbed_text"]
+    df = spark.createDataFrame(list(enumerate(EDGE_TEXTS)), "id int, text string")
+    df = df.selectExpr("*", *(f"{v} AS {k}" for k, v in spark_feats.items()))
+    got = (with_scrub(with_quality(df)).select("id", *feats, *flags)
+           .toPandas().sort_values("id").reset_index(drop=True))
+    assert got["low_quality"].tolist()[-1] and len(EDGE_TEXTS[-1]) == Q.MAX_CHARS + 1
+
+    s = pd.Series(EDGE_TEXTS, dtype=object)
+    want = pd.DataFrame({**Q.features_pandas(s),
+                         "too_short": Q.too_short_pandas(s),
+                         "low_quality": Q.low_quality_pandas(s),
+                         "toxic": S.toxicity_mask_pandas(s),
+                         "scrubbed_text": S.scrub_pandas(s)})
+    # NULL text: Spark and DuckDB propagate NULL; the pandas oracle reads
+    # it as "" (the pipeline's UDF does the same for langid)
+    assert got.iloc[0][feats + flags].isna().all()
+    for col in feats + flags:
+        assert got[col][1:].tolist() == want[col][1:].tolist(), col
+
+    tbl = pd.DataFrame({"id": range(len(EDGE_TEXTS)), "text": s})
+    sel = ", ".join(f"{v} AS {k}" for k, v in Q.features_sql("text", "duckdb").items())
+    duck = duckdb.sql(
+        f"SELECT {sel}, {Q.too_short_sql('text', 'duckdb')} AS too_short, "
+        f"{Q.low_quality_sql('text', 'duckdb')} AS low_quality, "
+        f"{S.toxicity_sql('text', 'duckdb')} AS toxic, "
+        f"{S.scrub_sql('text', 'duckdb')} AS scrubbed_text "
+        f"FROM tbl ORDER BY id").df()
+    # known divergences of the DuckDB oracle (PARITY.md): RE2's \s lacks
+    # \x0b, and RE2's (?i) folds the Kelvin sign to 'k'
+    vt = EDGE_TEXTS.index("a\x0bb\x0cc\rd\ne")
+    kelvin = EDGE_TEXTS.index("fra\u212aking")
+    assert (got["n_words"][vt], duck["n_words"][vt]) == (5, 4)
+    assert (got["toxic"][kelvin], duck["toxic"][kelvin]) == (False, True)
+    duck.loc[vt, "n_words"] = 5
+    duck.loc[kelvin, "toxic"] = False
+    for col in feats + flags:
+        assert (got[col].astype(object).where(got[col].notna(), None).tolist()
+                == duck[col].astype(object).where(duck[col].notna(), None).tolist()), col

@@ -9,13 +9,29 @@ from cld2_spark.sources.transcripts import spark_transcripts
 
 
 def test_pipeline_is_shuffle_free_single_python_stage(spark, tmp_path):
+    """One Python stage, no shuffle, and the quality rules and toxicity
+    check computed in the subtree that feeds ArrowEvalPython, so their
+    work for batch k+1 overlaps the kernel on batch k; above the node they
+    would run only after each batch returns. Only the last guarded scrub
+    step may sit above it: it reads the previous step's output once, so
+    CollapseProject folds it into the Project holding the UDF call. The
+    Spark rule SQL counts with the regex engine, never `translate`."""
+    import re
+
     # realistic source: parquet scan, not an in-memory relation
     src = str(tmp_path / "t")
     spark_transcripts(spark, 500).write.parquet(src)
     df = run_pipeline(spark.read.parquet(src))
+    plan = formatted_plan(df)
     stats = plan_stats(df)
-    assert stats["exchanges"] == 0, formatted_plan(df)
-    assert stats["python_stages"] == 1, formatted_plan(df)
+    assert stats["exchanges"] == 0, plan
+    assert stats["python_stages"] == 1, plan
+    py_in = re.search(r"^\(\d+\) ArrowEvalPython\s*\nInput \[\d+\]: \[(.*)\]$",
+                      plan, re.M)
+    assert py_in, plan
+    beneath = {c.split("#")[0] for c in py_in.group(1).split(", ")}
+    assert {"too_short", "low_quality", "toxic", "scrubbed_text"} <= beneath, plan
+    assert "translate(" not in plan
 
 
 def test_projection_pushdown_reaches_scan(spark, tmp_path):

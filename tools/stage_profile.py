@@ -29,22 +29,16 @@ def main() -> None:
     os.makedirs(EVDIR, exist_ok=True)
     for f in Path(EVDIR).glob("*"):
         subprocess.run(["rm", "-rf", str(f)])
-    from pyspark.sql import SparkSession
-
+    # the event-log confs ride the JVM's launch arguments, so the profiled
+    # session is get_spark's own engine (MALLOC_* heap settings, Arrow
+    # batch size, AQE coalesce and skew-join) with only the log added
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.eventLog.enabled=true --conf spark.eventLog.dir={EVDIR} "
+        "--conf spark.eventLog.compress=false pyspark-shell")
     import __spark_entry__ as E
+    from cld2_spark.session import get_spark
 
-    spark = (SparkSession.builder.master(f"local[{CPUS}]")
-             .appName("stage-profile")
-             .config("spark.sql.shuffle.partitions", str(CPUS))
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.driver.memory", "8g")
-             .config("spark.eventLog.enabled", "true")
-             .config("spark.eventLog.dir", EVDIR)
-             .config("spark.eventLog.compress", "false")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    spark = get_spark("stage-profile", cores=CPUS)
     qs = E.queries()
     sc = spark.sparkContext
     names = sys.argv[1:]
