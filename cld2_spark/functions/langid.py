@@ -15,8 +15,10 @@ public/compact_lang_det.h:177-306) as Arrow-batched pandas UDFs:
 Every UDF comes from one factory, `_langid_udf`: an `Iterator[pd.Series]
 -> Iterator[...]` UDF, so the model loads once per Python worker, not
 once per batch (executor-side lazy singleton = CLD2 dynamic-mode load,
-internal/compact_lang_det_impl.cc:108-136), and each Arrow batch is one
-kernel call.
+internal/compact_lang_det_impl.cc:108-136). Each Arrow batch is scored in
+row slices of at most `analyze.KERNEL_SLICE_CHARS` codepoints, one kernel
+call per slice, so a worker's peak memory is bounded by the slice budget,
+not by the batch's bytes.
 """
 
 from __future__ import annotations
@@ -118,23 +120,28 @@ def _langid_udf(name: str, schema, out, doc: str, analyze: bool = False,
                 **flags):
     """One SCALAR_ITER pandas UDF over a langid kernel. Per Python worker
     it loads the model once; per Arrow batch it fills NULL text with "",
-    turns any hint columns into hint records, makes one kernel call
-    (analyze_batch, or detect_batch with `flags`) and returns
-    `out(result)`."""
+    turns any hint columns into hint records, and cuts the rows into
+    `kernel_slices`. Per slice it makes one kernel call (analyze_batch,
+    or detect_batch with `flags`) and yields `out(result)`: Spark checks
+    only the total row count of an iterator UDF, so a batch may come back
+    as several frames."""
     def udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        from cld2_spark.kernels.analyze import analyze_batch
+        from cld2_spark.kernels.analyze import analyze_batch, kernel_slices
         from cld2_spark.kernels.detect import detect_batch
         from cld2_spark.kernels.model import default_model
         model = default_model()
         for batch in batches:
             text, *hint_cols = batch if isinstance(batch, tuple) else (batch,)
             texts = text.fillna("").tolist()
-            if analyze:
-                res = analyze_batch(texts, model)
-            else:
-                hints = _hint_records(hint_cols) if hint_cols else None
-                res = detect_batch(texts, model, hints=hints, **flags)
-            yield out(res)
+            hints = _hint_records(hint_cols) if hint_cols else None
+            for s in kernel_slices(texts):
+                if analyze:
+                    res = analyze_batch(texts[s], model)
+                else:
+                    res = detect_batch(texts[s], model,
+                                       hints=hints[s] if hints else None,
+                                       **flags)
+                yield out(res)
     udf.__name__ = udf.__qualname__ = name
     udf.__doc__ = doc
     return F.pandas_udf(schema)(udf)

@@ -8,6 +8,8 @@ Spark output and oracle labels agree by construction.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 
 from . import text as T
@@ -22,6 +24,33 @@ from .model import Cld2sModel
 # guess. Measured +4 held-out cases (77 -> 81 of 104) on sub-128-byte
 # fragments.
 BEST_EFFORT_MAX_BYTES = 256
+
+# Codepoints of text per kernel call. The kernel allocates ~125-170
+# transient bytes per input codepoint, so bounding the text per call
+# bounds a Python worker's peak memory whatever batch size the engine
+# hands over (the analogue of CLD2's fixed 1,000-hit buffer per scoring
+# pass, internal/scoreonescriptspan.h:93). Measured in one process on a
+# 4-vCPU Xeon over 10k-row batches of transcript turns: at 2^18 the
+# kernel runs no slower than one unsliced call while its traced peak falls
+# from 324 to 40 MiB; 2^16 runs slower. The budget is at least text.TEXT_LIMIT, so
+# a row longer than the budget, scored alone and truncated to TEXT_LIMIT,
+# costs no more than a full slice.
+KERNEL_SLICE_CHARS = 1 << 18
+
+
+def kernel_slices(texts: list[str]) -> Iterator[slice]:
+    """Cut a batch into consecutive row slices of at most
+    KERNEL_SLICE_CHARS codepoints each; a longer row is a slice of its
+    own. Every kernel is row-local, so scoring the slices one by one gives
+    the same per-row results as one call over the whole batch."""
+    end = np.cumsum(np.fromiter(map(len, texts), count=len(texts),
+                                dtype=np.int64))
+    lo, base = 0, 0
+    while lo < len(texts):
+        hi = max(int(np.searchsorted(end, base + KERNEL_SLICE_CHARS,
+                                     side="right")), lo + 1)
+        yield slice(lo, hi)
+        lo, base = hi, int(end[hi - 1])
 
 
 def analyze_batch(texts: list[str], model: Cld2sModel | None = None,

@@ -335,36 +335,28 @@ def cjk_bigram_hash(cp1: np.ndarray, cp2: np.ndarray) -> np.ndarray:
     return h | np.uint32(1)  # never 0 (0 = empty slot)
 
 
-def row_dedupe_filter(h: np.ndarray, g_rid: np.ndarray, max_occ: int = 2) -> np.ndarray:
-    """Keep only the first `max_occ` occurrences of each (row, hash)."""
+def row_dedupe_filter(h: np.ndarray, g_rid: np.ndarray) -> np.ndarray:
+    """Keep only the first occurrence of each (row, hash)."""
     n = len(h)
-    if n == 0:
-        return np.ones(0, dtype=bool)
-    h64 = np.asarray(h, dtype=np.uint64)
-    # fast path needs the row id to fit the remaining 64-44=20 bits too
-    # (g_rid is sorted, so the last element is the max); an oversized
-    # batch would silently wrap the shift and merge distinct groups
-    if (h64.max() < (np.uint64(1) << np.uint64(44))
-            and g_rid[-1] < (1 << 20)):
-        # quad (32-bit) and word/pair (40-bit) hashes pack with the row id
-        # into ONE uint64 sort key: a single stable argsort replaces
-        # lexsort's two passes (~2x on the hot dedupe path)
-        key = (g_rid.astype(np.uint64) << np.uint64(44)) | h64
-        order = np.argsort(key, kind="stable")
-        sk = key[order]
-        new_grp = np.ones(n, dtype=bool)
-        new_grp[1:] = sk[1:] != sk[:-1]
-    else:
-        # 64-bit hash domain (predicted_filter's mixed pairs): two-key path
-        # (lexsort is stable, so equal (row, hash) keys keep stream order)
-        order = np.lexsort((h64, g_rid))
-        sh, srid = h[order], g_rid[order]
-        new_grp = np.ones(n, dtype=bool)
-        new_grp[1:] = (sh[1:] != sh[:-1]) | (srid[1:] != srid[:-1])
-    idx = np.arange(n)
-    occ = idx - np.maximum.accumulate(np.where(new_grp, idx, 0))
     keep = np.zeros(n, dtype=bool)
-    keep[order] = occ < max_occ
+    if n == 0:
+        return keep
+    h64 = np.asarray(h, dtype=np.uint64)
+    # one mixed 64-bit key per (row, hash): a single unstable argsort
+    # (NumPy's SIMD sort) instead of lexsort's two stable passes. Within a
+    # row equal keys mean equal hashes; min(order) over a group is its
+    # first occurrence in stream order
+    key = h64 ^ (g_rid.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15))
+    order = np.argsort(key)
+    sk, srid = key[order], g_rid[order]
+    same = sk[1:] == sk[:-1]
+    if (same & (srid[1:] != srid[:-1])).any():
+        # a key collision across rows: the exact two-key sort
+        order = np.lexsort((h64, g_rid))
+        sh, srid = h64[order], g_rid[order]
+        same = (sh[1:] == sh[:-1]) & (srid[1:] == srid[:-1])
+    starts = np.flatnonzero(np.concatenate(([True], ~same)))
+    keep[np.minimum.reduceat(order, starts)] = True
     return keep
 
 
@@ -386,7 +378,7 @@ def predicted_filter(h: np.ndarray, g_rid: np.ndarray) -> np.ndarray:
     # row-unique sentinel for first-of-row tokens (never "predicted")
     pair = np.where(same_row, pair,
                     np.arange(1, n, dtype=np.uint64) << np.uint64(32))
-    first = row_dedupe_filter(pair, g_rid[1:], max_occ=1)
+    first = row_dedupe_filter(pair, g_rid[1:])
     keep[1:] = first
     return keep
 

@@ -58,12 +58,16 @@ def normalize_batch(texts: list[str]) -> NormBatch:
     # CLD2 scans at most ~160KB of text per document (FLAGS_cld_textlimit,
     # internal/compact_lang_det_impl.cc:192,1811-1812); the cap also bounds
     # every per-row accumulator to int32 range
-    if any(len(t) > TEXT_LIMIT for t in texts):
-        texts = [t if len(t) <= TEXT_LIMIT else t[:TEXT_LIMIT] for t in texts]
+    lens = np.fromiter(map(len, texts), count=n, dtype=np.int64)
+    over = np.flatnonzero(lens > TEXT_LIMIT)
+    if len(over):
+        texts = list(texts)
+        for i in over.tolist():
+            texts[i] = texts[i][:TEXT_LIMIT]
+        np.minimum(lens, TEXT_LIMIT, out=lens)
     joined = " " + " ".join(texts) + " "
     cp = ut.codepoints_of(joined)
 
-    lens = np.fromiter((len(t) for t in texts), count=n, dtype=np.int64)
     # layout: ' ' t0 ' ' t1 ' ' ... tn-1 ' '  -> leading space owned by
     # row 0, so row 0's repeat count is lens[0] + 2 (one allocation, no
     # concatenate copy)

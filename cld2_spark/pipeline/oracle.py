@@ -14,7 +14,7 @@ import pandas as pd
 
 from cld2_spark.kernels import quality as Q
 from cld2_spark.kernels import scrub as S
-from cld2_spark.kernels.analyze import analyze_batch
+from cld2_spark.kernels.analyze import analyze_batch, kernel_slices
 from cld2_spark.pipeline.decide import decision_pandas
 
 
@@ -27,7 +27,11 @@ def oracle_labels(transcripts: pd.DataFrame, text_col: str = "text") -> pd.DataF
     df = transcripts.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     texts = df[text_col].fillna("")
 
-    res = analyze_batch(texts.tolist())
+    # the kernel calls the Spark UDF makes on one batch holding every row
+    rows = texts.tolist()
+    parts = ([analyze_batch(rows[s]) for s in kernel_slices(rows)]
+             or [analyze_batch([])])
+    res = {k: np.concatenate([p[k] for p in parts]) for k in parts[0]}
     too_short = Q.too_short_pandas(texts).to_numpy()
     low_quality = Q.low_quality_pandas(texts).to_numpy()
     toxic = S.toxicity_mask_pandas(texts).to_numpy()

@@ -126,6 +126,17 @@ def test_short_turn_best_effort_rescue(spark):
     assert not bool(got["is_reliable"][0])
 
 
+def test_empty_input_runs_through_pipeline(spark):
+    """A 0-row input gives a 0-row verdict table (no kernel call, no
+    slice) on Spark and in the oracle alike."""
+    df = spark.createDataFrame(
+        [], "conv_id string, turn_idx int, role string, text string, "
+            "tool string, ts timestamp")
+    out = run_pipeline(df)
+    assert out.columns == list(oracle_labels(df.toPandas()).columns)
+    assert out.collect() == []
+
+
 def test_crosscheck_stream_reuse():
     """analyze_batch hands the detector's cached stream to the
     cross-check when the script sets coincide; results must be

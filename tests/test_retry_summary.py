@@ -6,9 +6,10 @@ closest-alt merge (P7), and the CalcSummaryLang boilerplate demotions (A9).
 import numpy as np
 import pytest
 
+import cld2_spark.kernels.detect as D
 from cld2_spark.kernels.detect import (
     MIN_RELIABLE_KEEP_PERCENT, _remove_unreliable, detect_batch,
-    predicted_filter)
+    predicted_filter, row_dedupe_filter)
 from cld2_spark.kernels.model import default_model
 
 JUNK = "foo.jpg bar.jpg baz.jpg qux.jpg quux.jpg corge.jpg " * 70  # ~3.6KB
@@ -34,6 +35,40 @@ def test_predicted_filter_junk_vs_natural():
     keep3 = predicted_filter(h3, rid3)
     assert keep3[8]                # first token of row 1 never "predicted"
     assert keep3[:5].all() and keep3[8:13].all()
+
+
+def _first_occurrence(h, rid):
+    seen, keep = set(), []
+    for k in zip(rid.tolist(), h.tolist()):
+        keep.append(k not in seen)
+        seen.add(k)
+    return np.array(keep, dtype=bool)
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_row_dedupe_filter_matches_first_occurrence(seed, monkeypatch):
+    """Random 64-bit (row, hash) streams with in-row repeats, the same hash
+    in several rows, and planted cross-row collisions of the mixed sort key
+    (h ^ rid * K equal for different rows), which must take the exact
+    two-key fallback."""
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(1, 3000))
+    rid = np.sort(rng.integers(0, max(1, n // 20), n))
+    pool = rng.integers(0, 2**64, 40, dtype=np.uint64)
+    h = np.where(rng.random(n) < 0.5, pool[rng.integers(0, 40, n)],
+                 rng.integers(0, 2**64, n, dtype=np.uint64))
+    mix = rid.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
+    collide = seed % 2 == 0 and rid[-1] > rid[0]
+    if collide:
+        a, b = 0, int(np.flatnonzero(rid != rid[0])[0])
+        h[b] = h[a] ^ mix[a] ^ mix[b]
+        assert h[a] ^ mix[a] == h[b] ^ mix[b] and h[a] != h[b]
+    sorts = []
+    lexsort = np.lexsort
+    monkeypatch.setattr(D.np, "lexsort",
+                        lambda *a, **k: sorts.append(1) or lexsort(*a, **k))
+    assert (row_dedupe_filter(h, rid) == _first_occurrence(h, rid)).all()
+    assert bool(sorts) == collide
 
 
 def test_squeeze_trigger_junk_plus_real_text():
