@@ -15,7 +15,9 @@ detector: different gram order, different table).
     high. Thresholded into drop reason 'high_perplexity'.
 
 Vectorized end-to-end: one compressed letter stream per batch, one hash
-pass, one table probe, two scatter-adds.
+pass, one table probe, two scatter-adds. Under analyze_batch the letter
+stream is the detector's own (detect.GramStream) whenever the detector's
+script set is all of the batch's scripts; otherwise it is compressed here.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import text as T
+from .detect import GramStream
 from .hashes import quad_hash_v2
 from .model import MAX_QPROB, Cld2sModel
 
@@ -53,33 +56,34 @@ def char_trigrams(arr: np.ndarray, rid_s: np.ndarray,
 
 def crosscheck_batch(texts: list[str], model: Cld2sModel | None = None,
                      nb: T.NormBatch | None = None,
-                     stream_cache: dict | None = None) -> dict[str, np.ndarray]:
-    """Returns per-row: ft_lang (code), ft_score (int), ppl (float), n_grams."""
+                     stream: GramStream | None = None) -> dict[str, np.ndarray]:
+    """Returns per-row: ft_lang (code), ft_score (int), ppl (float), n_grams.
+
+    `nb` (normalize_batch of `texts`) or the detector's `stream` over it
+    skips normalizing here; a built stream's compressed stream and buffer
+    are used as they are when they cover exactly the batch's scripts."""
     if model is None:
         from .model import default_model
         model = default_model()
     tri = model.tri
-    if nb is None:
+    if stream is not None:
+        nb = stream.nb
+    elif nb is None:
         nb = T.normalize_batch(texts)
     n = nb.n
     L = len(model.langs)
 
-    # one stream over ALL letters regardless of script. O(n) presence
-    # bincount instead of np.unique's sort over the letter-selected copy
-    if n:
-        present = np.bincount(nb.script, weights=nb.letter,
-                              minlength=0)
-        all_scripts = np.flatnonzero(present > 0)
-    else:
-        all_scripts = np.array([], dtype=np.uint8)
+    # one stream over ALL letters regardless of script
+    all_scripts = stream.present if stream is not None \
+        else T.present_scripts(nb)
     buf0 = None
-    if (stream_cache is not None and stream_cache.get("arr") is not None
-            and set(stream_cache["many"]) == set(all_scripts.tolist())):
-        # the detector's RTypeMany stream covered exactly these scripts:
-        # its compressed stream and encoded buffer ARE ours (identical
-        # keep logic, asserted by test_crosscheck_stream_reuse)
-        arr, rid_s = stream_cache["arr"], stream_cache["rid_s"]
-        buf0 = stream_cache.get("buf")
+    if (stream is not None and stream.rows is None
+            and stream.many == all_scripts.tolist()):
+        # the detector's RTypeMany stream covered exactly these scripts
+        # (all-Latin batches, the common case): its compressed stream and
+        # encoded buffer ARE ours (identical keep logic, asserted by
+        # test_crosscheck_stream_reuse)
+        arr, rid_s, buf0 = stream.arr, stream.rid_s, stream.buf
     else:
         arr, rid_s = T.group_stream(nb, all_scripts.astype(np.uint8))
     g_rid, bs, bl, buf = char_trigrams(arr, rid_s, buf=buf0)

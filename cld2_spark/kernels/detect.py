@@ -33,6 +33,8 @@ Known deviations from the C++ (documented for the judge):
 
 from __future__ import annotations
 
+from dataclasses import dataclass, replace
+
 import numpy as np
 
 from . import text as T
@@ -325,14 +327,6 @@ def quad_and_word_grams(arr: np.ndarray, rid_s: np.ndarray):
         return _empty_quads(), (z, zu, zu, z)
     return (_quads_from_walk(walk, arr, rid_s, True),
             _words_from_walk(walk, rid_s))
-
-
-def cjk_bigram_hash(cp1: np.ndarray, cp2: np.ndarray) -> np.ndarray:
-    """Deterministic 32-bit combine of two adjacent CJK codepoints (J4 key;
-    the reference hashes the UTF-8 bytes via BiHashV2 -- our table is
-    self-trained so a codepoint-domain mix is equivalent and cheaper)."""
-    h = (cp1.astype(np.uint32) * np.uint32(0x9E3779B1)) ^ cp2.astype(np.uint32)
-    return h | np.uint32(1)  # never 0 (0 = empty slot)
 
 
 def row_dedupe_filter(h: np.ndarray, g_rid: np.ndarray) -> np.ndarray:
@@ -740,18 +734,38 @@ def _sharpen_boundaries(cid, cr, win, scored, langs3, qprobs3, gram_bytes,
             smin[c] = gsl[b - lo:][right].min()
 
 
-def _score_othr_bank(streams, orig_s, n_rows, n_langs, acc, hint_lid,
+def _merge_hits(hits: list[tuple]) -> tuple:
+    """Concatenate hit streams (row, pos, langs, qprobs, gram_bytes,
+    distinct mask or None) into one, slot-padded and ordered by (row,
+    pos); the stable sort keeps earlier streams first at equal keys."""
+    width = max(x[2].shape[1] for x in hits)
+    padded = [_pad_slots(x[2], x[3], width) for x in hits]
+    rid = np.concatenate([x[0] for x in hits])
+    pos = np.concatenate([x[1] for x in hits])
+    order = np.lexsort((pos, rid))
+    dmask = np.concatenate([x[5] if x[5] is not None
+                            else np.zeros(len(x[0]), dtype=bool)
+                            for x in hits])[order]
+    return (rid[order], pos[order],
+            np.concatenate([p[0] for p in padded])[order],
+            np.concatenate([p[1] for p in padded])[order],
+            np.concatenate([x[4] for x in hits])[order],
+            dmask if dmask.any() else None)
+
+
+def _score_ring_bank(streams, orig_s, n_rows, n_langs, acc, hint_lid,
                      whack_map, closeset, span_sink) -> None:
-    """Score the non-Latin script streams with ONE shared W5 ring bank.
+    """Score script hit streams that share ONE W5 ring bank.
 
     The reference keeps exactly two distinct-boost rings per document:
     one for Latin and one shared by every other script
     (ScoringContext::distinct_boost_ othr bank,
     internal/scoreonescriptspan.h:124-147) -- so a Greek distinct word's
     boost persists into a following Cyrillic span until evicted. A single
-    stream scores exactly as before; multiple streams merge in stream
-    position order with per-(row, script-run) chunking (the reference's
-    per-scriptspan chunks) and a per-row ring (the shared bank)."""
+    stream (Latin's, or one non-Latin script's) scores with per-row
+    chunks; multiple streams merge in stream position order with
+    per-(row, script-run) chunking (the reference's per-scriptspan chunks)
+    and a per-row ring (the shared bank)."""
     if not streams:
         return
     if len(streams) == 1:
@@ -814,14 +828,94 @@ def _score_othr_bank(streams, orig_s, n_rows, n_langs, acc, hint_lid,
                 span_sink=span_sink, distinct_mask=dmask, seg_rid=seg)
 
 
+@dataclass
+class GramStream:
+    """One kernel slice's RTypeMany gram stream and everything derived from
+    it, built once and shared by every pass over the slice.
+
+    The compressed letter stream covers the slice's quad-scored scripts
+    (`many`); its quads and words are extracted and hashed once. Detect
+    pass 1 scores the whole stream; the O6 retry and analyze's bestEffort
+    rescue score `select(rows)` of it; the cross-check reads the compressed
+    stream and buffer of a built stream when its own script set is the
+    same. Rows are space-delimited in the stream and every gram, hash and
+    filter is row-local, so a row selection scores exactly like a stream
+    built from scratch on the selected rows (tests/test_retry_cache.py).
+    A selection shares the built stream's character arrays and buffer
+    instead of copying them -- the selection-vector model of PAPERS "Data
+    Chunk Compaction in Vectorized Execution" (SIGMOD 2025).
+    """
+
+    nb: T.NormBatch
+    present: np.ndarray   # script ids with a letter in nb, ascending
+    many: list            # present scripts the stream covers
+    arr: np.ndarray       # compressed stream: lowercased letters + single spaces
+    rid_s: np.ndarray     # row id per stream char
+    scr_s: np.ndarray     # script id per stream char
+    orig_s: np.ndarray    # position in nb.cp per stream char
+    buf: np.ndarray       # T.encode_utf8(arr) (only its padding if wordless)
+    g_rid: np.ndarray     # per quad: row id (ascending)
+    h: np.ndarray         # per quad: QuadHashV2
+    gb: np.ndarray        # per quad: byte coverage (see _quad_outputs)
+    pos: np.ndarray       # per quad: start in arr
+    bs: np.ndarray        # per quad: start byte in buf
+    tri3: np.ndarray      # per quad: bytes of its <=3-char prefix (J2 key)
+    w_rid: np.ndarray     # per word: row id (ascending)
+    wh40: np.ndarray      # per word: OctaHash40
+    pair40: np.ndarray    # per word: PairHash with the previous word, or 0
+    wpos: np.ndarray      # per word: start in arr
+    # None for a built stream; for a selection, its rows in the stream it
+    # was selected from (arr, rid_s, orig_s and buf are that stream's)
+    rows: np.ndarray | None = None
+
+    @classmethod
+    def build(cls, nb: T.NormBatch, model: Cld2sModel,
+              score_as_quads: bool = False) -> GramStream:
+        """Gram and hash `nb`'s stream. score_as_quads
+        (kCLDFlagScoreAsQuads, public/compact_lang_det.h:360-364) adds the
+        RTypeOne scripts that have a quad table."""
+        present = T.present_scripts(nb)
+        quad_rtypes = (ut.RTYPE_MANY, ut.RTYPE_ONE) if score_as_quads \
+            else (ut.RTYPE_MANY,)
+        many = [s for s in present.tolist() if ut.RTYPE[s] in quad_rtypes
+                and ut.SCRIPTS[s][0] in model.group_tables]
+        arr, rid_s, scr_s, orig_s = T.group_stream_with_script(
+            nb, np.array(many, dtype=np.uint8))
+        quads, w = quad_and_word_grams(arr, rid_s)
+        g_rid, bs, bl, buf, gb, pos, tri3 = quads
+        return cls(nb, present, many, arr, rid_s, scr_s, orig_s, buf, g_rid,
+                   quad_hash_v2(buf, bs, bl), gb, pos, bs, tri3, *w)
+
+    def select(self, rows: np.ndarray) -> GramStream:
+        """Rows `rows` (ascending) of this stream, with no re-gramming or
+        re-hashing: the NormBatch subset and the rows' quads and words (row
+        ids renumbered). The character arrays and the buffer stay shared,
+        so `pos`, `bs` and `wpos` keep addressing them."""
+        nb = T.subset_norm_batch(self.nb, rows)
+        present = T.present_scripts(nb)
+        gsel, g_rid = T.take_rows(self.g_rid, rows)
+        wsel, w_rid = T.take_rows(self.w_rid, rows)
+        return replace(self, nb=nb, present=present,
+                       many=[s for s in present.tolist() if s in self.many],
+                       g_rid=g_rid, h=self.h[gsel], gb=self.gb[gsel],
+                       pos=self.pos[gsel], bs=self.bs[gsel],
+                       tri3=self.tri3[gsel], w_rid=w_rid,
+                       wh40=self.wh40[wsel], pair40=self.pair40[wsel],
+                       wpos=self.wpos[wsel], rows=rows)
+
+    def backoff_hash(self, idx) -> np.ndarray:
+        """J2 backoff keys (prefix-trigram QuadHashV2) of the quads at
+        `idx`, derived on demand: only a bestEffort pass with a backoff
+        table reads them, and only for main-table misses."""
+        return quad_hash_v2(self.buf, self.bs[idx], self.tri3[idx])
+
+
 def detect_batch(texts: list[str], model: Cld2sModel | None = None,
                  return_raw: bool = False, nb: T.NormBatch | None = None,
                  hints: list | None = None,
                  return_spans: bool = False, best_effort: bool = False,
                  score_as_quads: bool = False, is_plain_text: bool = True,
-                 _repeats: bool = False, _retry: bool = True,
-                 _stream_cache: tuple | None = None,
-                 _export_cache: dict | None = None) -> dict[str, np.ndarray]:
+                 stream: GramStream | None = None) -> dict[str, np.ndarray]:
     """Detect top-3 languages per text. Pure NumPy; one pass per script group.
 
     Returns dict of per-row arrays matching the reference result contract
@@ -838,6 +932,9 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
     top1+2 >=93%, :1978-1991) are re-detected once with repeated-token
     suppression (kCLDFlagRepeats semantics) and that result is final
     (kCLDFlagFinish).
+
+    `nb` (normalize_batch of `texts`) or `stream` (GramStream.build over
+    it, with the same score_as_quads) skips that work here.
     """
     if model is None:
         from .model import default_model
@@ -847,15 +944,105 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
         # strip tags, expand the FULL verbatim entity table (html.py)
         from .html import html_to_text_batch
         texts = html_to_text_batch(texts)
-        nb = None
-    if nb is None:
-        if _stream_cache is not None:
-            # retry path: the subset NormBatch equals normalize_batch of
-            # the subset texts (proven + fuzz-tested, subset_norm_batch)
-            nb = T.subset_norm_batch(_stream_cache[0]["nb"],
-                                     _stream_cache[1])
-        else:
-            nb = T.normalize_batch(texts)
+        nb = stream = None
+    if stream is None:
+        stream = GramStream.build(
+            T.normalize_batch(texts) if nb is None else nb, model,
+            score_as_quads)
+    # a selection's positions address its built stream, not its own rows
+    assert stream.rows is None or not return_spans, "spans need a built stream"
+    nb = stream.nb
+    n = nb.n
+    hint_lid = resolve_hints(model, hints) if hints is not None else None
+    # chunk-vector capture (W4): list of (row, lang, min_pos, max_pos)
+    span_sink: list | None = [] if return_spans else None
+    out = _detect_pass(stream, model, repeats=False, best_effort=best_effort,
+                       hint_lid=hint_lid, span_sink=span_sink,
+                       return_raw=return_raw)
+    if return_raw:
+        return out
+    converged = out.pop("_converged")
+
+    # O6 retry: re-detect non-converged rows once with repeated-token
+    # suppression; the retry result is accepted as-is (Finish). Rows whose
+    # long text triggers the CheapSqueeze test (O8: first 256 stream bytes
+    # >=25% spaces or >=67% predictor-predictable,
+    # internal/compact_lang_det_impl.cc:952-971 at :1867-1877) are squeezed
+    # (48-byte chunk deletion, kernels/squeeze.py) and retried even when
+    # pass 1 converged.
+    squeeze = np.zeros(n, dtype=bool)
+    squeezed_text: dict[int, str] = {}
+    big = np.flatnonzero(nb.text_bytes > SQUEEZE_MIN_BYTES)
+    if len(big):
+        from .squeeze import cheap_squeeze, squeeze_trigger_test
+        # trigger + squeeze operate on the row's letters+spaces stream
+        # (the reference's scriptspan form), not the raw text. Only the
+        # big rows are streamed -- a whole-batch group_stream here
+        # measurably slowed batches containing one long row.
+        nb_big = T.subset_norm_batch(nb, big)
+        scripts_big = np.unique(nb_big.script[nb_big.letter])
+        s_arr, s_rid = T.group_stream(nb_big, scripts_big)
+        for j, i in enumerate(big.tolist()):
+            row = s_arr[s_rid == j]
+            # encode_utf8 pads with 32 NULs for windowed gathers; strip
+            # them here or they count toward the 256-byte trigger gate
+            # (and NUL is "predicted" by the zero-init table) and would
+            # ride into the squeezed retry text
+            sbuf = T.encode_utf8(row)[:-32].tobytes()
+            if squeeze_trigger_test(sbuf):
+                squeeze[i] = True
+                squeezed_text[i] = cheap_squeeze(
+                    sbuf.decode("utf-8", errors="ignore"))
+    idx = np.flatnonzero(~converged | squeeze)
+    if len(idx):
+        # unmodified rows re-score a selection of pass 1's stream; squeezed
+        # rows (text changed) are normalized and grammed afresh
+        sq = squeeze[idx]
+        subs = []
+        if (~sq).any():
+            # NOTE (r4 measurement): an "exact retry skip" for rows where
+            # predicted_filter removes nothing was built and REMOVED --
+            # on sf0.1 transcripts 84% of retried rows have at least one
+            # predicted-repeat quad (natural text repeats context pairs
+            # at quad granularity), so the check cost 70 ms/batch and
+            # skipped almost nothing.
+            subs.append((idx[~sq], stream.select(idx[~sq])))
+        if sq.any():
+            sqi = idx[sq]
+            nb_sq = T.normalize_batch([squeezed_text[i] for i in sqi.tolist()])
+            subs.append((sqi, GramStream.build(nb_sq, model, score_as_quads)))
+        for sidx, sub in subs:
+            out2 = _detect_pass(
+                sub, model, repeats=True, best_effort=best_effort,
+                hint_lid=None if hint_lid is None
+                else (hint_lid[0][sidx], hint_lid[1][sidx]))
+            # Monotone merge (deviation from the reference's unconditional
+            # kCLDFlagFinish accept, documented): with a corpus-trained
+            # quad table the squeezed pass works on tiny byte counts where
+            # fluke chunk winners loom large, so pass 2 replaces pass 1
+            # only when it is reliable or pass 1 had no answer. The
+            # reference can accept unconditionally because its web-scale
+            # table keeps pass-2 scores well-separated.
+            better = out2["is_reliable"] | (out["summary_lang"][sidx] == "un")
+            ridx = sidx[better]
+            for k in out:
+                out[k][ridx] = out2[k][better]
+    if return_spans:
+        # chunk vector from the pass-1 attribution (retry refines only the
+        # summary result; span boundaries come from the full-text chunks)
+        out.update(_build_spans(nb, model, span_sink))
+    return out
+
+
+def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
+                 best_effort: bool, hint_lid=None, span_sink: list | None = None,
+                 return_raw: bool = False) -> dict[str, np.ndarray]:
+    """One scoring pass over a gram stream: the RTypeOne, RTypeMany and
+    CJK passes, the close-set refinement and the summary extraction.
+    `repeats` is the retry pass (kCLDFlagRepeats): predicted tokens are
+    suppressed. Returns detect_batch's fields plus `_converged` (the O6
+    convergence test), or the raw score matrices with return_raw."""
+    nb = stream.nb
     n = nb.n
     L = len(model.langs)
     # int32 is safe: every sum is bounded by TEXT_LIMIT (160KB) * 100
@@ -874,36 +1061,24 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
     # languages corroborated by a reference word-table hit, per row --
     # gates the A9 boilerplate demotion (see _extract)
     word_ev = np.zeros((n, L), dtype=bool)
-    # chunk-vector capture (W4): list of (row, lang, min_pos, max_pos)
-    span_sink: list | None = [] if return_spans else None
 
-    hint_lid = None
+    # hinted language -> the rest of its close set (AddCloseLangWhack)
     whack_map = None
-    if hints is not None:
-        hint_lid = resolve_hints(model, hints)
-        whack_map = {}
-        for langs in CLOSE_SETS:
-            ids = [model.lang_id[c] for c in langs if c in model.lang_id]
-            for hid in ids:
-                others = np.array([i for i in ids if i != hid], dtype=np.int64)
-                if len(others):
-                    whack_map[hid] = others
+    if hint_lid is not None:
+        lids = np.arange(L)
+        whack_map = {hid: np.flatnonzero((closeset == closeset[hid])
+                                         & (lids != hid))
+                     for hid in np.flatnonzero(closeset).tolist()}
 
     u8len = nb.u8len
-    # O(n) presence bincount instead of np.unique's sort over a copy
-    present_scripts = (
-        np.flatnonzero(np.bincount(nb.script, weights=nb.letter) > 0)
-        if n else np.array([], dtype=np.uint8))
 
     # RTypeOne scripts: bytes score directly to the script's one language.
     # scoreAsQuads (kCLDFlagScoreAsQuads, public/compact_lang_det.h:360-364 /
     # ScoreOneScriptSpan rtype override, internal/scoreonescriptspan.cc:
-    # 1318-1320) forces them through the quad path instead (non-CJK only).
-    for s in present_scripts.tolist():
-        if ut.RTYPE[s] != ut.RTYPE_ONE:
+    # 1318-1320) puts them in the stream's `many` instead (non-CJK only).
+    for s in stream.present.tolist():
+        if ut.RTYPE[s] != ut.RTYPE_ONE or s in stream.many:
             continue
-        if score_as_quads and ut.SCRIPTS[s][0] in model.group_tables:
-            continue  # handled by the RTypeMany pass below
         lang = ut.DEFAULT_LANG[s]
         lid = model.lang_id.get(lang)
         if lid is None:
@@ -930,289 +1105,140 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
     # RTypeMany scripts: ONE compressed stream for all groups; grams are
     # dispatched to their script's table by first-char script (replaces
     # CLD2's per-scriptspan loop with a batched pass)
-    quad_rtypes = (ut.RTYPE_MANY, ut.RTYPE_ONE) if score_as_quads \
-        else (ut.RTYPE_MANY,)
-    many = [s for s in present_scripts.tolist()
-            if ut.RTYPE[s] in quad_rtypes and ut.SCRIPTS[s][0] in model.group_tables]
-    # Retry stream reuse: a row's letter stream, gram hashes and word
-    # hashes are identical between pass 1 and the retry (rows are
-    # space-delimited in every batch stream, and all filters are
-    # within-row), so pass 1 caches its PRE-filter streams and the retry
-    # subsets them by row membership instead of re-gramming and re-hashing
-    # ~half the batch (the retry still re-normalizes: the RTypeOne/CJK
-    # passes and _extract need the subset NormBatch). Squeezed rows (text
-    # modified) always take the fresh path.
-    stream_cache: dict | None = None
-    if _stream_cache is not None:
-        many = _stream_cache[0]["many"]
-    if many:
-        use_ref_words = model.ref_word_delta is not None
-        have_words = use_ref_words or model.words is not None
+    if len(stream.g_rid):
+        scr_s, orig_s = stream.scr_s, stream.orig_s
+        w_rid, wh40, pair40, wpos = (stream.w_rid, stream.wh40,
+                                     stream.pair40, stream.wpos)
         use_backoff = best_effort and bool(model.quad_backoff)
-        if _stream_cache is not None:
-            C, sub_rows = _stream_cache
-            scr_s, orig_s = C["scr_s"], C["orig_s"]
-            rlut = np.zeros(C["nb"].n, dtype=bool)  # LUT beats isin's sort
-            rlut[sub_rows] = True
-            # old->new row ids via an O(K) remap LUT (not a per-gram
-            # binary search)
-            remap = np.zeros(C["nb"].n, dtype=np.int32)
-            remap[sub_rows] = np.arange(len(sub_rows), dtype=np.int32)
-            gsel = rlut[C["g_rid"]]
-            g_rid = remap[C["g_rid"][gsel]]
-            h, gb, pos = C["h"][gsel], C["gb"][gsel], C["pos"][gsel]
-            bs, tri_len = C["bs"][gsel], C["tri3"][gsel]
-            buf = C["buf"]
-            if C["h3"] is not None:
-                h3 = C["h3"][gsel]
-            elif use_backoff:
-                # pass 1 ran without bestEffort and skipped the backoff
-                # hash; the byte offsets address the CACHED full-stream
-                # buffer, so the subset's J2 keys hash directly from it
-                h3 = quad_hash_v2(buf, bs, tri_len)
+        keep = repeat_filter(stream.h, stream.g_rid)
+        if repeats:
+            keep &= predicted_filter(stream.h, stream.g_rid)
+        kidx = np.flatnonzero(keep)
+        g_rid, h, gb, pos = (stream.g_rid[kidx], stream.h[kidx],
+                             stream.gb[kidx], stream.pos[kidx])
+        g_script = scr_s[pos]
+        nl_streams: list[tuple] = []  # non-Latin: shared "othr" ring bank
+        for s in stream.many:
+            m = g_script == s
+            if not m.any():
+                continue
+            latin = ut.SCRIPTS[s][0] == "Latn"
+            tbl = model.group_tables[ut.SCRIPTS[s][0]]
+            found, langs3, qprobs3 = tbl.probe(h[m])
+            # J2 dual lookup (GetQuadHits internal/cldutil.cc:355-362):
+            # grams missing from the main table probe the second table.
+            # The reference's table 2 is overflow space for the same
+            # quads; ours (self-trained, no size constraint) is a
+            # prefix-trigram backoff. Weak-evidence votes, so they are
+            # consulted only under bestEffort ("give best-effort answer")
+            # -- measured: +4 held-out cases there, -1 on the default
+            # path (documented deviation; PARITY.md).
+            bt = (model.quad_backoff or {}).get(ut.SCRIPTS[s][0]) \
+                if use_backoff else None
+            if bt is not None and not found.all():
+                miss = ~found
+                _, bl3, bq3 = bt.probe(stream.backoff_hash(kidx[m][miss]))
+                langs3[miss] = bl3
+                qprobs3[miss] = np.minimum(bq3, BACKOFF_MAX_QPROB)
+            s_rid = g_rid[m]
+            # J5/J6: merge word + word-pair hits into the quad hit
+            # stream before chunking (LinearizeAll analogue,
+            # internal/scoreonescriptspan.cc:856-975); word hits carry
+            # no bytes (delta votes only)
+            hits = [(s_rid, pos[m], langs3, qprobs3, gb[m], None)]
+            # W2 seed: every span contributes one qprob-1 hit for the
+            # script's default language (DefaultLangProb,
+            # internal/scoreonescriptspan.cc:848-851) so sparse/unseen
+            # text falls back to the script default, never to lang id 0
+            seed_gid = model.lang_id.get(ut.DEFAULT_LANG[s] or "")
+            if seed_gid is not None:
+                rows_s = _sorted_unique(s_rid)
+                k = len(rows_s)
+                hits.append((rows_s, np.full(k, -1, dtype=np.int32),
+                             np.full((k, 1), seed_gid, dtype=np.uint8),
+                             np.ones((k, 1), dtype=np.uint8),
+                             np.zeros(k, dtype=np.int32), None))
+            if model.ref_word_delta is not None and len(w_rid):
+                wm = scr_s[wpos] == s
+                keep_w = repeat_filter(wh40, w_rid) & wm
+                if repeats:
+                    keep_w &= predicted_filter(wh40, w_rid)
+                # reference deltaocta (word), distinctocta (word +
+                # word-pair), GetOctaHits internal/cldutil.cc:416-533.
+                # Distinct hits are flagged: _score_hits re-adds the
+                # last <=4 of them to every chunk's tote until ring
+                # eviction (W5 exact, AddDistinctBoost2/ScoreBoosts,
+                # internal/scoreonescriptspan.cc:112-152).
+                probes = [(wh40, model.ref_word_delta, False),
+                          (wh40, model.ref_word_distinct, True),
+                          (pair40, model.ref_word_distinct, True)]
+                for wh, rt, dis in probes:
+                    if rt is None:
+                        continue
+                    sel = keep_w & (wh != 0)
+                    if not sel.any():
+                        continue
+                    fnd, wl, wq = rt.probe_octa(wh[sel], latin)
+                    if not fnd.any():
+                        continue
+                    # misses never enter the hit stream: the
+                    # reference's hitbuffer stores delta/distinct
+                    # entries only on table hits (GetOctaHits,
+                    # internal/cldutil.cc:416-533) -- and word-
+                    # table miss rates run ~99% on transcripts,
+                    # so dropping them here shrinks the scoring
+                    # stream ~2x
+                    wl, wq = wl[fnd], wq[fnd]
+                    rows_w = w_rid[sel][fnd]
+                    wpos_f = wpos[sel][fnd]
+                    for j in range(wl.shape[1]):
+                        ev = (wq[:, j] > 0) & (wl[:, j] < L)
+                        if ev.any():
+                            word_ev[rows_w[ev], wl[:, j][ev]] = True
+                    zero = np.zeros(len(rows_w), dtype=np.int32)
+                    # only ACTUAL table hits enter the ring; a
+                    # found slot can still decode to all-zero
+                    # qprobs and must not evict
+                    hitmask = (wq > 0).any(axis=1) if dis else None
+                    hits.append((rows_w, wpos_f, wl, wq, zero, hitmask))
+            if latin:
+                # Latin ring bank is its own (scoreonescriptspan.h:
+                # 124-147 keeps latn separate from the shared othr bank)
+                _score_ring_bank([_merge_hits(hits)], orig_s, n, L, acc,
+                                 hint_lid, whack_map, closeset, span_sink)
             else:
-                h3 = None
-            if have_words:
-                wsel = rlut[C["w_rid"]]
-                w_rid = remap[C["w_rid"][wsel]].astype(C["w_rid"].dtype)
-                wh40, pair40, wpos = (C["wh40"][wsel], C["pair40"][wsel],
-                                      C["wpos"][wsel])
-        else:
-            arr, rid_s, scr_s, orig_s = T.group_stream_with_script(
-                nb, np.array(many, dtype=np.uint8))
-            if have_words:
-                ((g_rid, bs, bl, buf, gb, pos, tri_len),
-                 (w_rid, wh40, pair40, wpos)) = quad_and_word_grams(
-                    arr, rid_s)
-            else:
-                g_rid, bs, bl, buf, gb, pos, tri_len = quad_grams(arr, rid_s)
-            if len(g_rid):
-                h = quad_hash_v2(buf, bs, bl)
-                # J2 backoff key (prefix trigram): only ever consumed under
-                # bestEffort with a backoff table -- skip the second
-                # full-stream hash pass on the default hot path
-                h3 = quad_hash_v2(buf, bs, tri_len) if use_backoff else None
-        if len(g_rid):
-            if _retry and not _repeats:
-                stream_cache = {
-                    "many": many, "nb": nb,
-                    "scr_s": scr_s, "orig_s": orig_s,
-                    "g_rid": g_rid, "h": h, "h3": h3, "gb": gb, "pos": pos,
-                    # buf/bs/tri3 are references (no copies): they let a
-                    # bestEffort consumer derive the J2 backoff hash for
-                    # its subset without re-gramming the stream
-                    "buf": buf, "bs": bs, "tri3": tri_len,
-                    # the raw compressed stream (fresh path only):
-                    # crosscheck_batch reuses it -- and the encoded buf --
-                    # when its script set matches `many` (all-Latin
-                    # batches, the common case), skipping its own
-                    # group_stream + encode_utf8 passes
-                    "arr": arr if _stream_cache is None else None,
-                    "rid_s": rid_s if _stream_cache is None else None,
-                    "w_rid": w_rid if have_words else None,
-                    "wh40": wh40 if have_words else None,
-                    "pair40": pair40 if have_words else None,
-                    "wpos": wpos if have_words else None,
-                }
-                if _export_cache is not None:
-                    _export_cache.update(stream_cache)
-            keep = repeat_filter(h, g_rid)
-            if _repeats:
-                keep &= predicted_filter(h, g_rid)
-            g_rid, h, gb, pos = g_rid[keep], h[keep], gb[keep], pos[keep]
-            if h3 is not None:
-                h3 = h3[keep]
-            g_script = scr_s[pos]
-            if have_words and not use_ref_words:
-                from .hashes import fold40_to_32
-                w32 = fold40_to_32(wh40)
-                pair32 = np.where(pair40 != 0, fold40_to_32(pair40),
-                                  np.uint32(0))
-            nl_streams: list[tuple] = []  # non-Latin: shared "othr" ring bank
-            for s in many:
-                m = g_script == s
-                if not m.any():
-                    continue
-                latin = ut.SCRIPTS[s][0] == "Latn"
-                tbl = model.group_tables[ut.SCRIPTS[s][0]]
-                found, langs3, qprobs3 = tbl.probe(h[m])
-                # J2 dual lookup (GetQuadHits internal/cldutil.cc:355-362):
-                # grams missing from the main table probe the second table.
-                # The reference's table 2 is overflow space for the same
-                # quads; ours (self-trained, no size constraint) is a
-                # prefix-trigram backoff. Weak-evidence votes, so they are
-                # consulted only under bestEffort ("give best-effort answer")
-                # -- measured: +4 held-out cases there, -1 on the default
-                # path (documented deviation; PARITY.md).
-                bt = (model.quad_backoff or {}).get(ut.SCRIPTS[s][0]) \
-                    if use_backoff else None
-                if bt is not None and not found.all():
-                    miss = ~found
-                    _, bl3, bq3 = bt.probe(h3[m][miss])
-                    langs3[miss] = bl3
-                    qprobs3[miss] = np.minimum(bq3, BACKOFF_MAX_QPROB)
-                s_rid, s_gb, s_pos = g_rid[m], gb[m], pos[m]
-                # J5/J6: merge word + word-pair hits into the quad hit
-                # stream before chunking (LinearizeAll analogue,
-                # internal/scoreonescriptspan.cc:856-975); word hits carry
-                # no bytes (delta votes only)
-                hits = []
-                # W2 seed: every span contributes one qprob-1 hit for the
-                # script's default language (DefaultLangProb,
-                # internal/scoreonescriptspan.cc:848-851) so sparse/unseen
-                # text falls back to the script default, never to lang id 0
-                seed_gid = model.lang_id.get(ut.DEFAULT_LANG[s] or "")
-                if seed_gid is not None:
-                    rows_s = _sorted_unique(s_rid)
-                    k = len(rows_s)
-                    hits.append((rows_s, np.full(k, -1, dtype=np.int32),
-                                 np.full((k, 1), seed_gid, dtype=np.uint8),
-                                 np.ones((k, 1), dtype=np.uint8),
-                                 np.zeros(k, dtype=np.int32), None))
-                if have_words and len(w_rid):
-                    wm = scr_s[wpos] == s
-                    keep_w = repeat_filter(wh40, w_rid) & wm
-                    if _repeats:
-                        keep_w &= predicted_filter(wh40, w_rid)
-                    if use_ref_words:
-                        # reference deltaocta (word), distinctocta (word +
-                        # word-pair), GetOctaHits internal/cldutil.cc:416-533.
-                        # Distinct hits are flagged: _score_hits re-adds the
-                        # last <=4 of them to every chunk's tote until ring
-                        # eviction (W5 exact, AddDistinctBoost2/ScoreBoosts,
-                        # internal/scoreonescriptspan.cc:112-152).
-                        probes = [(wh40, model.ref_word_delta, False),
-                                  (wh40, model.ref_word_distinct, True),
-                                  (pair40, model.ref_word_distinct, True)]
-                        for wh, rt, dis in probes:
-                            if rt is None:
-                                continue
-                            sel = keep_w & (wh != 0)
-                            if not sel.any():
-                                continue
-                            fnd, wl, wq = rt.probe_octa(wh[sel], latin)
-                            if not fnd.any():
-                                continue
-                            # misses never enter the hit stream: the
-                            # reference's hitbuffer stores delta/distinct
-                            # entries only on table hits (GetOctaHits,
-                            # internal/cldutil.cc:416-533) -- and word-
-                            # table miss rates run ~99% on transcripts,
-                            # so dropping them here shrinks the scoring
-                            # stream ~2x
-                            wl, wq = wl[fnd], wq[fnd]
-                            rows_w = w_rid[sel][fnd]
-                            wpos_f = wpos[sel][fnd]
-                            for j in range(wl.shape[1]):
-                                ev = (wq[:, j] > 0) & (wl[:, j] < L)
-                                if ev.any():
-                                    word_ev[rows_w[ev], wl[:, j][ev]] = True
-                            zero = np.zeros(len(rows_w), dtype=np.int32)
-                            # only ACTUAL table hits enter the ring; a
-                            # found slot can still decode to all-zero
-                            # qprobs and must not evict
-                            hitmask = (wq > 0).any(axis=1) if dis else None
-                            hits.append((rows_w, wpos_f, wl, wq, zero,
-                                         hitmask))
-                    else:
-                        for wh in (w32, pair32):
-                            sel = keep_w & (wh != 0)
-                            if not sel.any():
-                                continue
-                            fnd, wl3, wq3 = model.words.probe(wh[sel])
-                            if not fnd.any():
-                                continue
-                            wl3, wq3 = wl3[fnd], wq3[fnd]
-                            rows_w = w_rid[sel][fnd]
-                            for j in range(wl3.shape[1]):
-                                ev = (wq3[:, j] > 0) & (wl3[:, j] < L)
-                                if ev.any():
-                                    word_ev[rows_w[ev], wl3[:, j][ev]] = True
-                            hits.append((rows_w, wpos[sel][fnd], wl3, wq3,
-                                         np.zeros(len(rows_w), dtype=np.int32),
-                                         None))
-                dmask = None
-                if hits:
-                    width = max(x[2].shape[1] for x in hits)
-                    width = max(width, langs3.shape[1])
-                    hits.insert(0, (s_rid, s_pos, langs3, qprobs3, s_gb, None))
-                    s_rid = np.concatenate([x[0] for x in hits])
-                    all_pos = np.concatenate([x[1] for x in hits])
-                    padded = [_pad_slots(x[2], x[3], width) for x in hits]
-                    langs3 = np.concatenate([p[0] for p in padded])
-                    qprobs3 = np.concatenate([p[1] for p in padded])
-                    s_gb = np.concatenate([x[4] for x in hits])
-                    dmask = np.concatenate(
-                        [x[5] if x[5] is not None
-                         else np.zeros(len(x[0]), dtype=bool) for x in hits])
-                    order = np.lexsort((all_pos, s_rid))
-                    s_rid, langs3 = s_rid[order], langs3[order]
-                    qprobs3, s_gb = qprobs3[order], s_gb[order]
-                    s_pos = all_pos[order]
-                    dmask = dmask[order]
-                    if not dmask.any():
-                        dmask = None
-                if latin:
-                    # Latin ring bank is its own (scoreonescriptspan.h:
-                    # 124-147 keeps latn separate from the shared othr bank)
-                    gpos = None
-                    if span_sink is not None:
-                        # clamp: seed hits sit at position -1 (zero-byte,
-                        # never used for spans)
-                        safe = np.clip(s_pos, 0, len(orig_s) - 1)
-                        gpos = np.where(s_pos >= 0, orig_s[safe], np.int64(-1))
-                    _score_hits(s_rid, langs3, qprobs3, s_gb, QUAD_CHUNK, n, L,
-                                acc, hint_lid=hint_lid, whack_map=whack_map,
-                                closeset=closeset,
-                                gpos=gpos, span_sink=span_sink,
-                                distinct_mask=dmask)
-                else:
-                    nl_streams.append(
-                        (s_rid, s_pos, langs3, qprobs3, s_gb, dmask))
-            _score_othr_bank(nl_streams, orig_s, n, L, acc, hint_lid,
-                             whack_map, closeset, span_sink)
+                nl_streams.append(_merge_hits(hits))
+        _score_ring_bank(nl_streams, orig_s, n, L, acc, hint_lid,
+                         whack_map, closeset, span_sink)
 
     # CJK pass: unigram hits (J3) + adjacent-pair bigram delta hits (J4)
-    # merged into one chunk stream. With reference tables: unigrams via the
-    # flattened CjkUni DFA, bigrams via bit-exact BiHashV2 over the UTF-8
-    # bytes of the two chars probed into kCjkDeltaBi (GetBiHits,
-    # internal/cldutil.cc:248-310).
-    use_ref_cjk = model.ref_cjk_uni is not None
-    if (use_ref_cjk or model.cjk_uni is not None) and len(present_scripts) and \
-            np.isin(CJK_SCRIPTS, present_scripts).any():
+    # merged into one chunk stream: unigrams via the flattened CjkUni DFA,
+    # bigrams via bit-exact BiHashV2 over the UTF-8 bytes of the two chars
+    # probed into kCjkDeltaBi (GetBiHits, internal/cldutil.cc:248-310).
+    if model.ref_cjk_uni is not None and \
+            np.isin(CJK_SCRIPTS, stream.present).any():
         mask = nb.letter & np.isin(nb.script, CJK_SCRIPTS)
         if mask.any():
             idx = np.flatnonzero(mask)
             cps = nb.cp[idx]
             g_rid = nb.rid[idx]
-            if use_ref_cjk:
-                found, langs3, qprobs3 = model.ref_cjk_uni.probe(cps)
-            else:
-                found, langs3, qprobs3 = model.cjk_uni.probe(cps)
-            gb = u8len[idx].astype(np.int32)
-            bi_hits = None
-            if len(idx) > 1:
+            found, langs3, qprobs3 = model.ref_cjk_uni.probe(cps)
+            streams = [(g_rid, idx.astype(np.int64), langs3, qprobs3,
+                        u8len[idx].astype(np.int32), None)]
+            if len(idx) > 1 and model.ref_cjk_bi is not None:
                 adj = (idx[1:] == idx[:-1] + 1) & (g_rid[1:] == g_rid[:-1])
                 if adj.any():
+                    from .hashes import bi_hash_v2
                     a = np.flatnonzero(adj)
-                    if model.ref_cjk_bi is not None:
-                        from .hashes import bi_hash_v2
-                        boff = T.utf8_offsets(cps)
-                        buf = T.encode_utf8(cps)
-                        bstart = boff[a]
-                        blen = boff[a + 2] - bstart  # two chars, <= 8 bytes
-                        bih = bi_hash_v2(buf, bstart, blen)
-                        _, bl3, bq3 = model.ref_cjk_bi.probe_quad(bih, latin=False)
-                        bi_hits = (a, bl3, bq3)
-                    elif model.cjk_bi is not None:
-                        bih = cjk_bigram_hash(cps[a], cps[a + 1])
-                        _, bl3, bq3 = model.cjk_bi.probe(bih)
-                        bi_hits = (a, bl3, bq3)
-            streams = [(g_rid, idx.astype(np.int64), langs3, qprobs3, gb)]
-            if bi_hits is not None:
-                a, bl3, bq3 = bi_hits
-                streams.append((g_rid[a], idx[a].astype(np.int64), bl3, bq3,
-                                np.zeros(len(a), dtype=np.int32)))
+                    boff = T.utf8_offsets(cps)
+                    buf = T.encode_utf8(cps)
+                    bstart = boff[a]
+                    blen = boff[a + 2] - bstart  # two chars, <= 8 bytes
+                    bih = bi_hash_v2(buf, bstart, blen)
+                    _, bl3, bq3 = model.ref_cjk_bi.probe_quad(bih, latin=False)
+                    streams.append((g_rid[a], idx[a].astype(np.int64), bl3,
+                                    bq3, np.zeros(len(a), dtype=np.int32),
+                                    None))
             # W2 seed: default language of merged-CJK (ULScript_Hani) is
             # JAPANESE (internal/generated_ulscript.cc:480), qprob 1
             seed_gid = model.lang_id.get("ja")
@@ -1222,21 +1248,8 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
                 streams.append((rows_c, np.full(k, -1, dtype=np.int64),
                                 np.full((k, 1), seed_gid, dtype=np.uint8),
                                 np.ones((k, 1), dtype=np.uint8),
-                                np.zeros(k, dtype=np.int32)))
-            cpos = idx.astype(np.int64)
-            if len(streams) > 1:
-                width = max(x[2].shape[1] for x in streams)
-                all_rid = np.concatenate([x[0] for x in streams])
-                all_pos = np.concatenate([x[1] for x in streams])
-                langs3 = np.concatenate(
-                    [_pad_slots(x[2], x[3], width)[0] for x in streams])
-                qprobs3 = np.concatenate(
-                    [_pad_slots(x[2], x[3], width)[1] for x in streams])
-                gb = np.concatenate([x[4] for x in streams])
-                order = np.lexsort((all_pos, all_rid))
-                g_rid, langs3 = all_rid[order], langs3[order]
-                qprobs3, gb = qprobs3[order], gb[order]
-                cpos = all_pos[order]
+                                np.zeros(k, dtype=np.int32), None))
+            g_rid, cpos, langs3, qprobs3, gb, _ = _merge_hits(streams)
             _score_hits(g_rid, langs3, qprobs3, gb, UNI_CHUNK, n, L, acc,
                         hint_lid=hint_lid, whack_map=whack_map,
                         closeset=closeset,
@@ -1251,96 +1264,14 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
         # a hinted close-set member zeroes its set complement for that row
         # (AddCloseLangWhack internal/compact_lang_det_impl.cc:1563-1584,
         #  applied as ZeroPSLang internal/scoreonescriptspan.cc:39-42)
-        for langs in CLOSE_SETS:
-            ids = [model.lang_id[c] for c in langs if c in model.lang_id]
-            for hid in ids:
-                rows = np.flatnonzero((hint_lid[0] == hid).any(axis=1))
-                if len(rows) == 0:
-                    continue
-                others = [i for i in ids if i != hid]
-                for mat in (bytes_rl, score_rl, relw_rl, onebytes_rl):
-                    mat[np.ix_(rows, others)] = 0
+        for hid, others in whack_map.items():
+            rows = np.flatnonzero((hint_lid[0] == hid).any(axis=1))
+            for mat in (bytes_rl, score_rl, relw_rl, onebytes_rl):
+                mat[np.ix_(rows, others)] = 0
 
     _refine_close_pairs(model, bytes_rl, score_rl, relw_rl, onebytes_rl)
     out = _extract(nb, model, bytes_rl, score_rl, relw_rl, onebytes_rl, word_ev,
                    best_effort=best_effort)
-    converged = out.pop("_converged")
-
-    # O6 retry: re-detect non-converged rows once with repeated-token
-    # suppression; the retry result is accepted as-is (Finish). Rows whose
-    # long text triggers the CheapSqueeze test (O8: first 256 stream bytes
-    # >=25% spaces or >=67% predictor-predictable,
-    # internal/compact_lang_det_impl.cc:952-971 at :1867-1877) are squeezed
-    # (48-byte chunk deletion, kernels/squeeze.py) and retried even when
-    # pass 1 converged.
-    squeeze = np.zeros(n, dtype=bool)
-    squeezed_text: dict[int, str] = {}
-    if _retry and not _repeats:
-        big = np.flatnonzero(nb.text_bytes > SQUEEZE_MIN_BYTES)
-        if len(big):
-            from .squeeze import cheap_squeeze, squeeze_trigger_test
-            # trigger + squeeze operate on the row's letters+spaces stream
-            # (the reference's scriptspan form), not the raw text. Only the
-            # big rows are re-normalized -- a whole-batch group_stream here
-            # measurably slowed batches containing one long row.
-            nb_big = T.normalize_batch([texts[i] for i in big.tolist()])
-            scripts_big = np.unique(nb_big.script[nb_big.letter])
-            s_arr, s_rid = T.group_stream(nb_big, scripts_big)
-            for j, i in enumerate(big.tolist()):
-                row = s_arr[s_rid == j]
-                # encode_utf8 pads with 32 NULs for windowed gathers; strip
-                # them here or they count toward the 256-byte trigger gate
-                # (and NUL is "predicted" by the zero-init table) and would
-                # ride into the squeezed retry text
-                sbuf = T.encode_utf8(row)[:-32].tobytes()
-                if squeeze_trigger_test(sbuf):
-                    squeeze[i] = True
-                    squeezed_text[i] = cheap_squeeze(
-                        sbuf.decode("utf-8", errors="ignore"))
-    if _retry and not _repeats and not (converged & ~squeeze).all():
-        idx = np.flatnonzero(~converged | squeeze)
-        # unmodified rows reuse the cached pass-1 streams; squeezed rows
-        # (text changed) take the fresh path
-        sq = squeeze[idx]
-        sub_batches = []
-        if (~sq).any():
-            clean = idx[~sq]
-            # NOTE (r4 measurement): an "exact retry skip" for rows where
-            # predicted_filter removes nothing was built and REMOVED --
-            # on sf0.1 transcripts 84% of retried rows have at least one
-            # predicted-repeat quad (natural text repeats context pairs
-            # at quad granularity), so the check cost 70 ms/batch and
-            # skipped almost nothing.
-            sub_batches.append(
-                (clean, [texts[i] for i in clean.tolist()],
-                 (stream_cache, clean) if stream_cache is not None else None))
-        if sq.any():
-            sqi = idx[sq]
-            sub_batches.append(
-                (sqi, [squeezed_text[i] for i in sqi.tolist()], None))
-        for sidx, texts2, cache2 in sub_batches:
-            hints2 = ([hints[i] for i in sidx.tolist()]
-                      if hints is not None else None)
-            out2 = detect_batch(texts2, model, hints=hints2,
-                                best_effort=best_effort,
-                                score_as_quads=score_as_quads,
-                                _repeats=True, _retry=False,
-                                _stream_cache=cache2)
-            # Monotone merge (deviation from the reference's unconditional
-            # kCLDFlagFinish accept, documented): with a corpus-trained
-            # quad table the squeezed pass works on tiny byte counts where
-            # fluke chunk winners loom large, so pass 2 replaces pass 1
-            # only when it is reliable or pass 1 had no answer. The
-            # reference can accept unconditionally because its web-scale
-            # table keeps pass-2 scores well-separated.
-            better = out2["is_reliable"] | (out["summary_lang"][sidx] == "un")
-            ridx = sidx[better]
-            for k in out:
-                out[k][ridx] = out2[k][better]
-    if return_spans:
-        # chunk vector from the pass-1 attribution (retry refines only the
-        # summary result; span boundaries come from the full-text chunks)
-        out.update(_build_spans(nb, model, span_sink))
     return out
 
 

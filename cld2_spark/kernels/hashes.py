@@ -29,12 +29,6 @@ _WORD_MASK0 = np.array([0xFFFFFFFF, 0x000000FF, 0x0000FFFF, 0x00FFFFFF],
                        dtype=np.uint32)
 
 
-def pad_buffer(buf: bytes | np.ndarray, overshoot: int = 24) -> np.ndarray:
-    """Return buf as uint8 array padded with `overshoot` zero bytes."""
-    a = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, bytearray)) else np.asarray(buf, dtype=np.uint8)
-    return np.concatenate([a, np.zeros(overshoot, dtype=np.uint8)])
-
-
 def _load32(buf: np.ndarray, off: np.ndarray) -> np.ndarray:
     """Vectorized UNALIGNED_LOAD32 (little-endian) at byte offsets `off`:
     one windowed row-gather + reinterpret instead of four byte-gathers
@@ -163,18 +157,3 @@ def pair_hash(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Vectorized PairHash (internal/cldutil_shared.cc:384-386)."""
     a = a.astype(np.uint64)
     return (((a >> np.uint64(13)) | (a << np.uint64(51))) + b.astype(np.uint64)).astype(np.uint64)
-
-
-def fold40_to_32(h: np.ndarray) -> np.ndarray:
-    """Fold a 40-bit OctaHash40 value to 32 bits for table keying (our
-    tables store 32-bit keys; the reference instead splits hash bits between
-    key and bucket subscript, internal/cldutil_shared.h:380-397)."""
-    h = h.astype(np.uint64)
-    return ((h ^ (h >> np.uint64(8))) & np.uint64(0xFFFFFFFF)).astype(np.uint32)
-
-
-def bucket_subscript(h: np.ndarray, n_buckets: int) -> np.ndarray:
-    """Hash -> bucket index, reference probe pattern
-    (internal/cldutil_shared.h:380-397): subscr = (h + (h >> 12)) & (n-1)."""
-    h32 = h.astype(np.uint32)
-    return ((h32 + (h32 >> np.uint32(12))) & np.uint32(n_buckets - 1)).astype(np.int64)

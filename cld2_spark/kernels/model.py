@@ -233,7 +233,6 @@ class Cld2sModel:
 
     langs: list[str]                       # global lang id -> ISO code
     group_tables: dict[str, GramTable]     # script name -> quadgram table
-    cjk_uni: GramTable | None              # CJK unigram table (key = codepoint)
     expected_1kb: np.ndarray               # (n_langs,) int32 expected score per 1KB
     version: str = "cld2s-r1"
     # J2 dual-lookup second tables (kQuad_obj2, GetQuadHits
@@ -243,8 +242,6 @@ class Cld2sModel:
     # deviation -- see detect.py).
     quad_backoff: dict[str, GramTable] | None = None
     tri: GramTable | None = None           # trigram table (fastText cross-check)
-    words: GramTable | None = None         # legacy self-trained word table
-    cjk_bi: GramTable | None = None        # legacy self-trained CJK bigram table
     # Reference tables parsed from the checkout (tools/parse_reference_tables.py)
     ref_word_delta: RefTable | None = None     # kDeltaOcta_obj (J5)
     ref_word_distinct: RefTable | None = None  # kDistinctOcta_obj (J5/J6)
@@ -277,22 +274,10 @@ class Cld2sModel:
                 arrs[f"b_{name}_keys"] = t.keys
                 arrs[f"b_{name}_langs"] = t.langs
                 arrs[f"b_{name}_qprobs"] = t.qprobs
-        if self.cjk_uni is not None:
-            arrs["cjk_keys"] = self.cjk_uni.keys
-            arrs["cjk_langs"] = self.cjk_uni.langs
-            arrs["cjk_qprobs"] = self.cjk_uni.qprobs
         if self.tri is not None:
             arrs["tri_keys"] = self.tri.keys
             arrs["tri_langs"] = self.tri.langs
             arrs["tri_qprobs"] = self.tri.qprobs
-        if self.words is not None:
-            arrs["word_keys"] = self.words.keys
-            arrs["word_langs"] = self.words.langs
-            arrs["word_qprobs"] = self.words.qprobs
-        if self.cjk_bi is not None:
-            arrs["cjkbi_keys"] = self.cjk_bi.keys
-            arrs["cjkbi_langs"] = self.cjk_bi.langs
-            arrs["cjkbi_qprobs"] = self.cjk_bi.qprobs
         for name, t in (("rwd", self.ref_word_delta),
                         ("rwx", self.ref_word_distinct),
                         ("rcb", self.ref_cjk_bi)):
@@ -336,22 +321,10 @@ class Cld2sModel:
                 backoff[name] = GramTable(
                     keys=z[f"b_{name}_keys"], langs=z[f"b_{name}_langs"],
                     qprobs=z[f"b_{name}_qprobs"])
-        cjk = None
-        if "cjk_keys" in z:
-            cjk = GramTable(keys=z["cjk_keys"], langs=z["cjk_langs"],
-                            qprobs=z["cjk_qprobs"])
         tri = None
         if "tri_keys" in z:
             tri = GramTable(keys=z["tri_keys"], langs=z["tri_langs"],
                             qprobs=z["tri_qprobs"])
-        words = None
-        if "word_keys" in z:
-            words = GramTable(keys=z["word_keys"], langs=z["word_langs"],
-                              qprobs=z["word_qprobs"])
-        cjk_bi = None
-        if "cjkbi_keys" in z:
-            cjk_bi = GramTable(keys=z["cjkbi_keys"], langs=z["cjkbi_langs"],
-                               qprobs=z["cjkbi_qprobs"])
         refs: dict[str, RefTable | None] = {}
         for name in ("rwd", "rwx", "rcb"):
             refs[name] = None
@@ -378,8 +351,7 @@ class Cld2sModel:
         return Cld2sModel(
             langs=[str(x) for x in z["langs"].tolist()],
             group_tables=groups, quad_backoff=backoff,
-            cjk_uni=cjk, tri=tri, words=words,
-            cjk_bi=cjk_bi,
+            tri=tri,
             ref_word_delta=refs["rwd"], ref_word_distinct=refs["rwx"],
             ref_cjk_bi=refs["rcb"], ref_cjk_uni=ref_uni,
             closest_alt=z["closest_alt"] if "closest_alt" in z else None,

@@ -104,6 +104,14 @@ def normalize_batch(texts: list[str]) -> NormBatch:
                      has_replacement=repl)
 
 
+def present_scripts(nb: NormBatch) -> np.ndarray:
+    """Script ids with at least one letter in the batch, ascending (an O(n)
+    presence bincount instead of np.unique's sort over a copy)."""
+    if not nb.n:
+        return np.array([], dtype=np.uint8)
+    return np.flatnonzero(np.bincount(nb.script, weights=nb.letter) > 0)
+
+
 def group_stream_with_script(nb: NormBatch, script_ids: np.ndarray):
     """Like group_stream but also returns the per-kept-char script ids and
     the kept chars' ORIGINAL positions in nb.cp (the OffsetMap analogue,
@@ -173,47 +181,41 @@ def encode_utf8(arr: np.ndarray) -> np.ndarray:
     return np.concatenate([buf, np.zeros(32, dtype=np.uint8)])
 
 
+def take_rows(rid: np.ndarray, rows: np.ndarray, lead: int = 0):
+    """The indices of `rows`' entries (ascending) in an array whose row ids
+    `rid` ascend, and their new row ids. Each row's entries are one
+    contiguous run, so this costs O(selected), not a pass over `rid`.
+    lead=1 puts index 0 first, owned by the new row 0: in NormBatch.cp
+    that is the leading space, which belongs to row 0 and must start
+    every batch."""
+    lo = np.searchsorted(rid, rows)
+    length = np.searchsorted(rid, rows + 1) - lo
+    idx = (np.repeat(lo - (np.cumsum(length) - length), length)
+           + np.arange(int(length.sum())))
+    new_rid = np.repeat(np.arange(len(rows), dtype=np.int32), length)
+    if lead:
+        idx = np.concatenate(([0], idx))
+        new_rid = np.concatenate((np.zeros(1, dtype=np.int32), new_rid))
+    return idx, new_rid
+
+
 def subset_norm_batch(nb: NormBatch, rows: np.ndarray) -> NormBatch:
     """Row-subset of a NormBatch, equal to normalize_batch of the subset
-    texts (used by the retry stream reuse, detect.py).
+    texts (used by detect.GramStream.select and the squeeze trigger).
 
     Why equality holds: the joined stream is ' ' t0 ' ' t1 ' ' ... with
     each row owning its chars + ONE trailing space (row 0 additionally
     owns the global leading space), so keeping the rows' positions
     preserves every per-row segment verbatim and every row boundary
     remains a single space. The only repair needed: when row 0 is not in
-    the subset, the stream lost its global leading space -- prepend one
-    owned by the new first row (exactly what normalize_batch emits).
+    the subset, the stream lost its global leading space -- the new first
+    row takes row 0's (exactly what normalize_batch emits).
 
     `rows` must be sorted ascending (np.flatnonzero order).
     """
-    # boolean-LUT membership: O(N) gather instead of np.isin's
-    # O(N log R) sort-based path (measured ~5x on retry-sized subsets).
-    # The kept positions are materialized ONCE as indices (each boolean
-    # gather re-scans the mask; fancy-index gathers don't), and old->new
-    # row ids come from an O(K) remap LUT rather than a per-char binary
-    # search.
-    lut = np.zeros(nb.n, dtype=bool)
-    lut[rows] = True
-    kidx = np.flatnonzero(lut[nb.rid])
-    remap = np.zeros(nb.n, dtype=np.int32)
-    remap[rows] = np.arange(len(rows), dtype=np.int32)
-    new_rid = remap[nb.rid[kidx]]
-    sub = dict(cp=nb.cp[kidx], rid=new_rid, u8len=nb.u8len[kidx],
-               script=nb.script[kidx], letter=nb.letter[kidx],
-               lower=nb.lower[kidx])
-    if len(rows) and rows[0] != 0:
-        # the global leading space belongs to row 0 and was dropped with
-        # it; the new first row owns the replacement (normalize_batch
-        # layout)
-        script_t, _, _ = ut.tables()
-        sub["cp"] = np.concatenate(
-            [[SPACE], sub["cp"]]).astype(np.uint32)
-        sub["rid"] = np.concatenate([[0], sub["rid"]]).astype(np.int32)
-        sub["u8len"] = np.concatenate([[1], sub["u8len"]]).astype(np.int8)
-        sub["script"] = np.concatenate(
-            [[script_t[32]], sub["script"]]).astype(np.uint8)
-        sub["letter"] = np.concatenate([[False], sub["letter"]])
-        sub["lower"] = np.concatenate([[SPACE], sub["lower"]]).astype(np.uint32)
-    return NormBatch(n=len(rows), text_bytes=nb.text_bytes[rows],
-                     has_replacement=nb.has_replacement[rows], **sub)
+    kidx, rid = take_rows(nb.rid, rows, int(len(rows) > 0 and rows[0] != 0))
+    return NormBatch(n=len(rows), cp=nb.cp[kidx], rid=rid,
+                     u8len=nb.u8len[kidx], script=nb.script[kidx],
+                     letter=nb.letter[kidx], lower=nb.lower[kidx],
+                     text_bytes=nb.text_bytes[rows],
+                     has_replacement=nb.has_replacement[rows])

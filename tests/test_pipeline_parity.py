@@ -138,15 +138,16 @@ def test_empty_input_runs_through_pipeline(spark):
 
 
 def test_crosscheck_stream_reuse():
-    """analyze_batch hands the detector's cached stream to the
-    cross-check when the script sets coincide; results must be
-    IDENTICAL to the uncached path on Latin, mixed-script and
-    CJK-bearing batches (the latter two must fall back internally)."""
+    """analyze_batch hands the detector's gram stream to the cross-check,
+    which reads its compressed stream when the script sets coincide;
+    results must be IDENTICAL to the stream-less path on Latin,
+    mixed-script and CJK-bearing batches (the latter two must fall back
+    internally)."""
     import numpy as np
 
     from cld2_spark.kernels import text as T
     from cld2_spark.kernels.crosscheck import crosscheck_batch
-    from cld2_spark.kernels.detect import detect_batch
+    from cld2_spark.kernels.detect import GramStream
     from cld2_spark.kernels.model import default_model
 
     m = default_model()
@@ -157,10 +158,9 @@ def test_crosscheck_stream_reuse():
     ]
     for texts in batches:
         nb = T.normalize_batch(texts)
-        cache: dict = {}
-        detect_batch(texts, m, nb=nb, _export_cache=cache)
+        stream = GramStream.build(nb, m)
         base = crosscheck_batch(texts, m, nb=nb)
-        reused = crosscheck_batch(texts, m, nb=nb, stream_cache=cache or None)
+        reused = crosscheck_batch(texts, m, stream=stream)
         assert list(base["ft_lang"]) == list(reused["ft_lang"])
         assert np.allclose(base["ppl"], reused["ppl"])
         assert (base["n_grams"] == reused["n_grams"]).all()

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 import cld2_spark.kernels.detect as D
+from cld2_spark.kernels import text as T
 from cld2_spark.kernels.detect import (
     MIN_RELIABLE_KEEP_PERCENT, _remove_unreliable, detect_batch,
     predicted_filter, row_dedupe_filter)
@@ -85,8 +86,10 @@ def test_retry_noop_on_clean_reliable_text():
     t = ("several visitors remarked that the gardens were quiet during the "
          "morning hours and the fountains had been restored last spring by "
          "the city council after a long public consultation process.")
-    r1 = detect_batch([t], model, _retry=False)
-    r2 = detect_batch([t], model, _retry=True)
+    # pass 1 alone (the single-pass function) vs pass 1 + retry
+    stream = D.GramStream.build(T.normalize_batch([t]), model)
+    r1 = D._detect_pass(stream, model, repeats=False, best_effort=False)
+    r2 = detect_batch([t], model)
     assert r1["lang1"][0] == r2["lang1"][0] == "en"
     assert r1["pct1"][0] == r2["pct1"][0]
 

@@ -281,9 +281,8 @@ def main(write: bool = True) -> dict:
                                 {l: float(c) for l, c in tri_totals.items()})
     print(f"tri: {len(tri_counts)} distinct trigrams, {tri_table.n_buckets} buckets")
 
-    model = Cld2sModel(langs=langs, group_tables=group_tables, cjk_uni=None,
-                       quad_backoff=backoff_tables,
-                       tri=tri_table, words=None, cjk_bi=None,
+    model = Cld2sModel(langs=langs, group_tables=group_tables,
+                       quad_backoff=backoff_tables, tri=tri_table,
                        ref_word_delta=refs["word_delta"],
                        ref_word_distinct=refs["word_distinct"],
                        ref_cjk_bi=refs["cjk_bi"],

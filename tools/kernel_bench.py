@@ -1,38 +1,57 @@
 """Single-core langid-kernel micro-benchmark (the VERDICT 'rows/s' basis).
 
 Measures analyze_batch (langid + trigram cross-check + perplexity, the
-pipeline's Python stage) on 5,000 transcript turns derived from the
-benchmark's documents table (perfbench/data/documents.parquet, read only)
--- one process, no Spark. The batch goes through the same
-`kernel_slices` as the langid UDF, one kernel call per slice. Prints
-rows/s per run and how far the process's peak RSS (ru_maxrss) rose during
-that run, then the best run; use the BEST (steal noise on a shared VM only
-ever slows a run). Peak RSS is a high-water mark, so the first run's rise
-is the one that bounds a worker's memory.
+pipeline's Python stage) on two inputs of 5,000 rows each, one process
+per input, no Spark:
 
-Run:  python tools/kernel_bench.py [n_runs]
+  salad    transcript turns derived from the benchmark's documents table
+           (perfbench/data/documents.parquet, read only): word salad drawn
+           from a few dozen English tokens, so most quad probes miss
+  natural  rows drawn with a seeded generator from the in-repo CLD2 texts
+           (cld2_spark/model/corpus.jsonl and
+           tests/data/cld2_unittest_pairs.jsonl): half whole texts, half
+           fragments of at most 100 UTF-8 bytes cut at word boundaries
+
+Each batch goes through the same `kernel_slices` as the langid UDF, one
+kernel call per slice. Per input it prints rows/s per run and how far the
+process's peak RSS (ru_maxrss) rose during that run, then the best run;
+use the BEST (steal noise on a shared VM only ever slows a run). Peak RSS
+is a high-water mark, so the first run's rise is the one that bounds a
+worker's memory; each input runs in a fresh child process so its reading
+does not sit under the other input's peak. A last, untimed pass counts
+the rows detect pass 1 sent to the retry and the rows the bestEffort
+rescue took.
+
+Run:  python tools/kernel_bench.py [n_runs] [--seed S] [--input salad|natural|all]
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import resource
+import subprocess
 import sys
 import time
 from pathlib import Path
 
-import duckdb
+import numpy as np
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 DOCUMENTS = REPO / "perfbench" / "data" / "documents.parquet"
+NATURAL_SOURCES = (REPO / "cld2_spark" / "model" / "corpus.jsonl",
+                   REPO / "tests" / "data" / "cld2_unittest_pairs.jsonl")
 BATCH = 5000
+FRAGMENT_MAX_BYTES = 100
+FRAGMENT_MIN_BYTES = 12
+INPUTS = ("salad", "natural")
 
 
-def main() -> None:
-    n_runs = int(sys.argv[1]) if len(sys.argv) > 1 else 6
-    from cld2_spark.kernels.analyze import analyze_batch, kernel_slices
-    from cld2_spark.kernels.model import default_model
+def salad_texts() -> list[str]:
+    import duckdb
+
     from cld2_spark.sources.transcripts import transcripts_view_sql
 
     con = duckdb.connect()
@@ -41,9 +60,88 @@ def main() -> None:
     rows = con.sql("SELECT text FROM ("
                    + transcripts_view_sql("duckdb", "documents")
                    + f") LIMIT {BATCH}").fetchall()
-    texts = [r[0] or "" for r in rows]
+    return [r[0] or "" for r in rows]
+
+
+def fragments(text: str, rng: np.random.Generator) -> list[str]:
+    """Cut `text` at word boundaries into pieces of at most
+    FRAGMENT_MAX_BYTES, each aiming at a size drawn from `rng`. Words
+    longer than the bound (unspaced CJK runs) are cut by characters
+    first."""
+    words = []
+    for w in text.split():
+        # 4 bytes per char at most
+        step = (len(w) if len(w.encode("utf-8")) <= FRAGMENT_MAX_BYTES
+                else FRAGMENT_MAX_BYTES // 4)
+        words.extend(w[i:i + step] for i in range(0, len(w), step))
+    out: list[str] = []
+    cur: list[str] = []
+    size = 0
+    target = int(rng.integers(FRAGMENT_MIN_BYTES, FRAGMENT_MAX_BYTES + 1))
+    for w in words:
+        add = len(w.encode("utf-8")) + (1 if cur else 0)
+        if cur and size + add > target:
+            out.append(" ".join(cur))
+            cur, size = [], 0
+            target = int(rng.integers(FRAGMENT_MIN_BYTES,
+                                      FRAGMENT_MAX_BYTES + 1))
+            add -= 1
+        cur.append(w)
+        size += add
+    if cur:
+        out.append(" ".join(cur))
+    return out
+
+
+def natural_texts(seed: int) -> list[str]:
+    rng = np.random.default_rng(seed)
+    full = [json.loads(line)["text"] for path in NATURAL_SOURCES
+            for line in path.open(encoding="utf-8")]
+    frags = [f for t in full for f in fragments(t, rng)]
+    n_full = BATCH // 2
+    texts = ([full[i] for i in rng.integers(0, len(full), n_full)]
+             + [frags[i] for i in rng.integers(0, len(frags), BATCH - n_full)])
+    return [texts[i] for i in rng.permutation(BATCH)]
+
+
+def row_counts(texts: list[str], model) -> tuple[int, int]:
+    """(retried rows, rescued rows) of one pass over the slices: the rows
+    detect's retry pass re-scored and the rows analyze_batch handed to the
+    bestEffort rescue."""
+    import cld2_spark.kernels.analyze as A
+    import cld2_spark.kernels.detect as D
+
+    counts = {"retry": 0, "rescue": 0}
+    orig_pass, orig_detect = D._detect_pass, A.detect_batch
+
+    def counting_pass(stream, model, *, repeats, **kw):
+        if repeats:
+            counts["retry"] += stream.nb.n
+        return orig_pass(stream, model, repeats=repeats, **kw)
+
+    def counting_detect(texts, model=None, **kw):
+        if kw.get("best_effort"):
+            counts["rescue"] += len(texts)
+        return orig_detect(texts, model, **kw)
+
+    D._detect_pass, A.detect_batch = counting_pass, counting_detect
+    try:
+        for s in A.kernel_slices(texts):
+            A.analyze_batch(texts[s], model)
+    finally:
+        D._detect_pass, A.detect_batch = orig_pass, orig_detect
+    return counts["retry"], counts["rescue"]
+
+
+def run_input(name: str, n_runs: int, seed: int) -> None:
+    from cld2_spark.kernels.analyze import analyze_batch, kernel_slices
+    from cld2_spark.kernels.model import default_model
+
+    texts = salad_texts() if name == "salad" else natural_texts(seed)
     model = default_model()
     analyze_batch(texts[:500], model)  # warm: model load, numpy JIT caches
+    chars = sum(map(len, texts)) / len(texts)
+    print(f"[{name}] {len(texts)} rows, {chars:.0f} chars/row")
 
     best = float("inf")
     for i in range(n_runs):
@@ -54,10 +152,29 @@ def main() -> None:
         dt = time.monotonic() - t0
         grew = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss - rss0
         best = min(best, dt)
-        print(f"run {i}: {len(texts) / dt:.0f} rows/s, "
+        print(f"[{name}] run {i}: {len(texts) / dt:.0f} rows/s, "
               f"peak RSS +{grew / 1024:.1f} MB")
-    print(f"BEST: {len(texts) / best:.0f} rows/s "
-          f"({best:.2f}s / {len(texts)} turns)")
+    retried, rescued = row_counts(texts, model)
+    print(f"[{name}] BEST: {len(texts) / best:.0f} rows/s "
+          f"({best:.2f}s / {len(texts)} rows); retried rows {retried}, "
+          f"rescued rows {rescued}")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("n_runs", nargs="?", type=int, default=6)
+    ap.add_argument("--seed", type=int, default=0,
+                    help="seed of the natural input")
+    ap.add_argument("--input", choices=INPUTS + ("all",), default="all")
+    args = ap.parse_args()
+    if args.input != "all":
+        run_input(args.input, args.n_runs, args.seed)
+        return
+    for name in INPUTS:
+        # a fresh process per input: ru_maxrss is a process high-water mark
+        subprocess.run([sys.executable, __file__, str(args.n_runs),
+                        "--seed", str(args.seed), "--input", name],
+                       check=True)
 
 
 if __name__ == "__main__":
