@@ -982,8 +982,10 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
         nb_big = T.subset_norm_batch(nb, big)
         scripts_big = np.unique(nb_big.script[nb_big.letter])
         s_arr, s_rid = T.group_stream(nb_big, scripts_big)
+        # s_rid ascends: one searchsorted cuts every row's run
+        cut = np.searchsorted(s_rid, np.arange(len(big) + 1)).tolist()
         for j, i in enumerate(big.tolist()):
-            row = s_arr[s_rid == j]
+            row = s_arr[cut[j]:cut[j + 1]]
             # encode_utf8 pads with 32 NULs for windowed gathers; strip
             # them here or they count toward the 256-byte trigger gate
             # (and NUL is "predicted" by the zero-init table) and would

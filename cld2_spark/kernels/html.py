@@ -154,23 +154,3 @@ def html_to_text_batch(texts: list[str]) -> list[str]:
         out.append(expand_entities(t))
     return out
 
-
-def strip_html_pandas(s):
-    """Same chain over a pandas Series (oracle-of-the-oracle for tests)."""
-    import re
-
-    out = s.fillna("")
-    out = out.str.replace(r"(?s)<!--.*?-->", " ", regex=True)
-    out = out.str.replace(r"(?is)<script[^>]*>.*?</script>", " ", regex=True)
-    out = out.str.replace(r"(?is)<style[^>]*>.*?</style>", " ", regex=True)
-    out = out.str.replace(r"<[^>]*>", " ", regex=True)
-    for cp in _NUMERIC_RANGE:
-        out = out.str.replace(rf"&#{cp};", chr(cp), regex=True)
-        out = out.str.replace(re.compile(rf"&#[xX]0*{cp:x};"), chr(cp), regex=True)
-    for name, ch in NAMED_ENTITIES:
-        if name == "amp":
-            continue
-        out = out.str.replace(rf"&{name};", ch, regex=True)
-    out = out.str.replace(r"&amp;", "&", regex=True)
-    out = out.str.replace(r"  +", " ", regex=True)
-    return out

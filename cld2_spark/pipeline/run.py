@@ -11,6 +11,18 @@ North-rule requirements implemented here:
   - per-partition lineage + metrics: each bucket's manifest entry carries
     its row/keep/drop-reason counts (Observation metrics, lineage.py) and
     the model version; a run-level sidecar aggregates them.
+  - one verdict plan per call: `run_pipeline` is built once and each
+    commit group writes it filtered on its buckets. The filter is
+    deterministic, so Catalyst pushes it beneath the langid UDF to the
+    scan and a group scores only its own rows.
+  - SQL overlaps Python within a group: each group's write runs with the
+    Arrow batch bytes capped at ARROW_BATCH_BYTES, so a scan task sends
+    the UDF several batches and the JVM computes the rules and scrub of
+    batch k+1 while Python scores batch k. The cap is set around the
+    group writes only, and the caller's value is put back afterwards.
+
+The job changes no session setting it does not restore: the parquet sink
+sets dynamic partition overwrite on its own writer.
 
 At 100TB the same shape holds: the Iceberg table is partitioned by the same
 bucket expression, buckets map to partition pruning on read, and the
@@ -31,8 +43,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cld2_spark.pipeline.lineage import observed, write_metrics_sidecar
 from cld2_spark.pipeline.stages import run_pipeline
+from cld2_spark.session import scoped_conf
 
 BUCKET_COL = "bucket"
+
+# Arrow bytes per batch while a commit group is written (see the module
+# docstring). A group leaves each scan task a few thousand turns, one batch
+# under the session's 10,000-row bound; the value won a 128 KiB-4 MiB sweep
+# on the resumable benchmark (BENCH/BASELINE.md). Not session-wide: the
+# other queries' pandas UDFs keep the session's batching.
+ARROW_BATCH_BYTES = 512 * 1024
 
 
 def bucket_expr(n_buckets: int):
@@ -69,24 +89,23 @@ def run_resumable(spark: SparkSession, input_df: DataFrame, output_dir: str,
     when the session has an Iceberg catalog (pipeline/sink.py); the parquet
     layout used otherwise has identical per-bucket overwrite semantics.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     manifest = load_manifest(output_dir)
     done = set(int(b) for b in manifest["completed_buckets"])
     todo = [b for b in range(n_buckets) if b not in done]
 
     src = input_df.withColumn(BUCKET_COL, bucket_expr(n_buckets))
+    verdicts = run_pipeline(src, passthrough=(BUCKET_COL,))
     processed = 0
     from cld2_spark.kernels.model import default_model
     version = default_model().version
 
     for group_start in range(0, len(todo), buckets_per_commit):
         group = todo[group_start:group_start + buckets_per_commit]
-        part = src.where(F.col(BUCKET_COL).isin(group))
-        out = run_pipeline(part).withColumn(
-            BUCKET_COL, bucket_expr(n_buckets))
-        out, obs = observed(out)
+        out, obs = observed(verdicts.where(F.col(BUCKET_COL).isin(group)))
         from cld2_spark.pipeline.sink import write_bucketed
-        write_bucketed(out, output_dir, table=iceberg_table)
+        with scoped_conf(spark, "spark.sql.execution.arrow.maxBytesPerBatch",
+                         str(ARROW_BATCH_BYTES)):
+            write_bucketed(out, output_dir, table=iceberg_table)
         metrics = dict(obs.get)
         group_id = f"g{min(group)}"
         for b in group:

@@ -11,6 +11,7 @@ Configs chosen for the 100TB design point (SURVEY.md §4):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -50,6 +51,19 @@ def get_spark(app: str = "cld2_spark", cores: int | None = None,
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the body of a `with` block, then put the
+    caller's value back, also when the body raises. For a job-scoped
+    setting that must not leak into the rest of the session."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def ensure_parallelism(df, min_factor: int = 2):

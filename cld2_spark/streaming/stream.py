@@ -12,14 +12,12 @@ under the same watermark; no custom stateful operator is required.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 
 from cld2_spark.pipeline.stages import run_pipeline
+from cld2_spark.session import scoped_conf
 
 
-@contextmanager
 def _no_empty_trailing_batch(spark: SparkSession):
     """Disable no-data micro-batches for a FINITE availableNow replay.
 
@@ -33,13 +31,9 @@ def _no_empty_trailing_batch(spark: SparkSession):
     byte-identical sink. The long-running start_* entry points keep the
     engine default (their append-mode sinks DO depend on no-data
     emission). Conf is restored afterwards either way."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+    return scoped_conf(
+        spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+
 
 TRANSCRIPT_DDL = ("conv_id string, turn_idx int, role string, text string, "
                   "tool string, ts timestamp")

@@ -68,3 +68,69 @@ def test_write_bucketed_direct_call_preserves_other_buckets(spark, tmp_path):
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
     kept = {p.name for p in Path(d, "data").iterdir() if p.name.startswith("bucket=")}
     assert kept == {"bucket=0", "bucket=1"}
+
+
+def test_group_writes_cap_batch_bytes_and_score_only_their_rows(
+        spark, tmp_path, monkeypatch):
+    """Each commit-group write runs under the pipeline's Arrow byte bound,
+    and its frame comes from the one verdict plan with the bucket filter
+    pushed beneath ArrowEvalPython to the scan: above the UDF, every group
+    would score every row. The caller's session settings are back after a
+    normal return, an injected crash and a failing write."""
+    import re
+
+    import cld2_spark.pipeline.run as R
+    import cld2_spark.pipeline.sink as S
+    from cld2_spark.plans.inspect import formatted_plan
+
+    src = str(tmp_path / "in")
+    spark.createDataFrame(synth_transcripts_pandas(200)).write.parquet(src)
+    df = spark.read.parquet(src)
+    batch_key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    real_write = S.write_bucketed
+    seen = []
+    fail = {"on": False}
+
+    def recording_write(out, output_dir, table=None):
+        seen.append((spark.conf.get(batch_key), formatted_plan(out)))
+        if fail["on"]:
+            raise OSError("sink failed")
+        return real_write(out, output_dir, table=table)
+
+    monkeypatch.setattr(S, "write_bucketed", recording_write)
+    keys = {batch_key: "3m",
+            "spark.sql.sources.partitionOverwriteMode": "static"}
+    prior = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        run_resumable(spark, df, str(tmp_path / "a"), n_buckets=4,
+                      buckets_per_commit=2)
+        assert {k: spark.conf.get(k) for k in keys} == keys
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_resumable(spark, df, str(tmp_path / "b"), n_buckets=4,
+                          buckets_per_commit=2, fail_after_buckets=2)
+        assert {k: spark.conf.get(k) for k in keys} == keys
+        fail["on"] = True
+        with pytest.raises(OSError, match="sink failed"):
+            run_resumable(spark, df, str(tmp_path / "c"), n_buckets=4,
+                          buckets_per_commit=2)
+        assert {k: spark.conf.get(k) for k in keys} == keys
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+
+    assert len(seen) == 2 + 1 + 1
+    for batch_bytes, plan in seen:
+        assert int(batch_bytes) == R.ARROW_BATCH_BYTES
+        tree = plan.split("\n\n")[0].splitlines()
+        udf_lines = [i for i, ln in enumerate(tree) if "ArrowEvalPython" in ln]
+        assert len(udf_lines) == 1, plan
+        filt = re.findall(r"^\((\d+)\) Filter.*\nInput \[\d+\]: .*\n"
+                          r"Condition : (.*)$", plan, re.M)
+        bucket_ids = [n for n, cond in filt if "xxhash64(conv_id" in cond]
+        assert bucket_ids, plan
+        for n in bucket_ids:
+            filt_line = next(i for i, ln in enumerate(tree)
+                             if re.search(rf"Filter \({n}\)$", ln))
+            assert filt_line > udf_lines[0], plan

@@ -22,7 +22,15 @@ does not sit under the other input's peak. A last, untimed pass counts
 the rows detect pass 1 sent to the retry and the rows the bestEffort
 rescue took.
 
+With `--against DIR` it compares this tree's kernel with the one in the
+checkout DIR: per input, n_runs pairs of child processes score the same
+texts, alternating which tree runs first, each child reporting its best of
+three runs after a warm-up; it prints each side's median rows/s and every
+pair's ratio. On a shared VM the readings of one tree drift by a third
+between invocations, so an A/B needs both trees in one invocation.
+
 Run:  python tools/kernel_bench.py [n_runs] [--seed S] [--input salad|natural|all]
+      python tools/kernel_bench.py [n_pairs] --against DIR [--seed S] [--input ...]
 """
 
 from __future__ import annotations
@@ -30,8 +38,10 @@ from __future__ import annotations
 import argparse
 import json
 import resource
+import statistics
 import subprocess
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -133,8 +143,19 @@ def row_counts(texts: list[str], model) -> tuple[int, int]:
     return counts["retry"], counts["rescue"]
 
 
-def run_input(name: str, n_runs: int, seed: int) -> None:
+def pass_seconds(texts: list[str], model) -> float:
+    """One timed pass over `texts`, one kernel call per slice, as the
+    langid UDF makes them."""
     from cld2_spark.kernels.analyze import analyze_batch, kernel_slices
+
+    t0 = time.monotonic()
+    for s in kernel_slices(texts):
+        analyze_batch(texts[s], model)
+    return time.monotonic() - t0
+
+
+def run_input(name: str, n_runs: int, seed: int) -> None:
+    from cld2_spark.kernels.analyze import analyze_batch
     from cld2_spark.kernels.model import default_model
 
     texts = salad_texts() if name == "salad" else natural_texts(seed)
@@ -146,10 +167,7 @@ def run_input(name: str, n_runs: int, seed: int) -> None:
     best = float("inf")
     for i in range(n_runs):
         rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
-        t0 = time.monotonic()
-        for s in kernel_slices(texts):
-            analyze_batch(texts[s], model)
-        dt = time.monotonic() - t0
+        dt = pass_seconds(texts, model)
         grew = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss - rss0
         best = min(best, dt)
         print(f"[{name}] run {i}: {len(texts) / dt:.0f} rows/s, "
@@ -160,13 +178,77 @@ def run_input(name: str, n_runs: int, seed: int) -> None:
           f"rescued rows {rescued}")
 
 
+CHILD_RUNS = 3
+
+
+def child_run(root: str, texts_path: str) -> None:
+    """One side of an --against pair: score the texts with the cld2_spark
+    under `root` and print its best rows/s as a JSON line."""
+    sys.path.insert(0, root)
+    import cld2_spark
+    from cld2_spark.kernels.analyze import analyze_batch
+    from cld2_spark.kernels.model import default_model
+
+    texts = json.loads(Path(texts_path).read_text())
+    model = default_model()
+    analyze_batch(texts[:500], model)
+    best = min(pass_seconds(texts, model) for _ in range(CHILD_RUNS))
+    print(json.dumps({"package": cld2_spark.__file__,
+                      "rows_per_s": len(texts) / best}))
+
+
+def run_against(other: Path, names, n_pairs: int, seed: int) -> None:
+    trees = {"this": REPO, "against": other.resolve()}
+    for name in names:
+        texts = salad_texts() if name == "salad" else natural_texts(seed)
+        rates: dict[str, list[float]] = {side: [] for side in trees}
+        with tempfile.NamedTemporaryFile("w", suffix=".json") as f:
+            json.dump(texts, f)
+            f.flush()
+            for k in range(n_pairs):
+                order = list(trees) if k % 2 == 0 else list(trees)[::-1]
+                for side in order:
+                    out = subprocess.run(
+                        [sys.executable, __file__, "--child-root",
+                         str(trees[side]), "--texts", f.name],
+                        check=True, capture_output=True, text=True)
+                    rec = json.loads(out.stdout.splitlines()[-1])
+                    if not Path(rec["package"]).is_relative_to(trees[side]):
+                        raise RuntimeError(f"{side} child imported "
+                                           f"{rec['package']}")
+                    rates[side].append(rec["rows_per_s"])
+        ratios = [a / b for a, b in zip(rates["this"], rates["against"])]
+        print(f"[{name}] {len(texts)} rows, {n_pairs} pairs, best of "
+              f"{CHILD_RUNS} per child")
+        for side, tree in trees.items():
+            print(f"[{name}] {side} ({tree}): median "
+                  f"{statistics.median(rates[side]):.0f} rows/s "
+                  f"({' '.join(f'{r:.0f}' for r in rates[side])})")
+        print(f"[{name}] this/against per pair: "
+              f"{' '.join(f'{r:.3f}' for r in ratios)}; median "
+              f"{statistics.median(ratios):.3f}, this faster in "
+              f"{sum(r > 1 for r in ratios)}/{n_pairs}")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("n_runs", nargs="?", type=int, default=6)
+    ap.add_argument("n_runs", nargs="?", type=int, default=6,
+                    help="runs per input, or pairs per input with --against")
     ap.add_argument("--seed", type=int, default=0,
                     help="seed of the natural input")
     ap.add_argument("--input", choices=INPUTS + ("all",), default="all")
+    ap.add_argument("--against", type=Path, metavar="DIR",
+                    help="checkout whose cld2_spark to compare with")
+    ap.add_argument("--child-root", help=argparse.SUPPRESS)
+    ap.add_argument("--texts", help=argparse.SUPPRESS)
     args = ap.parse_args()
+    if args.child_root:
+        child_run(args.child_root, args.texts)
+        return
+    if args.against:
+        names = INPUTS if args.input == "all" else (args.input,)
+        run_against(args.against, names, args.n_runs, args.seed)
+        return
     if args.input != "all":
         run_input(args.input, args.n_runs, args.seed)
         return
