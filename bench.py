@@ -47,6 +47,22 @@ SCALING = os.environ.get("CLD2S_SCALING", "1") == "1"
 # both pairs recorded in BENCH/BASELINE.md.
 SCALE_N = int(os.environ.get("CLD2S_SCALE_N", "2"))
 
+# the driver-contract queries timed after the pipeline, in JSON key order
+# (tools/profile_queries.py profiles the same list)
+BENCH_QUERIES = [
+    "scrub_pii", "quality_flags", "conv_rollup", "pricing_summary",
+    "dedup_exact", "minhash_pairs", "token_stats", "ann_cosine",
+    "events_stream", "media_meta", "dedup_jaccard", "event_sessions",
+    "event_asof", "paragraph_dedup", "semdedup", "seq_pack", "decontam",
+    "dup_spans", "funnel", "events_stream_join", "audio_features",
+    "jpeg_features", "curation_pipeline", "video_features", "pq_ann",
+    "dedup_incremental_bloom", "dup_span_cuts", "gopher_quality",
+    "bpe_encode", "classifier_train", "zorder_stats", "lm_score",
+    "unigram_encode", "winnow_fingerprints", "heavy_hitters",
+    "textrank_keywords", "kcenter_select", "context_trim",
+    "wordpiece_encode", "conv_dedup", "gif_features", "rep_ngram_battery",
+]
+
 
 def _sf(sf_dir: str) -> float:
     name = Path(sf_dir).name
@@ -187,42 +203,7 @@ def main() -> None:
         pipe_sec = min(run_pipeline_timed(spark, df) for _ in range(2))
         queries["keep_drop_pipeline"] = round(pipe_sec, 3)
 
-        for name in ["scrub_pii", "quality_flags", "conv_rollup",
-                     "pricing_summary", "dedup_exact", "minhash_pairs",
-                     "token_stats", "ann_cosine",
-                     # round 4: streaming replay, media header decode,
-                     # word-gram jaccard dedup, sessionization
-                     "events_stream", "media_meta",
-                     "dedup_jaccard", "event_sessions", "event_asof",
-                     # round 5: paragraph dedup + doc reassembly,
-                     # kmeans+SemDeDup, sequence packing, decontamination
-                     "paragraph_dedup", "semdedup", "seq_pack",
-                     "decontam",
-                     # round 5 session 3: exact span dedup, funnel,
-                     # stream-stream join, PCM sample decode
-                     "dup_spans", "funnel", "events_stream_join",
-                     "audio_features", "jpeg_features",
-                     "curation_pipeline",
-                     # round 6: MJPEG-in-MP4 frame decode, PQ ADC search,
-                     # bloom-prefiltered incremental dedup, span cut
-                     # lists, composite Gopher filter
-                     "video_features", "pq_ann",
-                     "dedup_incremental_bloom", "dup_span_cuts",
-                     "gopher_quality",
-                     # round 6 session 4: distributed BPE train+encode,
-                     # integer-exact classifier training, z-order layout
-                     "bpe_encode", "classifier_train", "zorder_stats",
-                     "lm_score", "unigram_encode",
-                     # round 6 session 5: winnowing fingerprints,
-                     # count-min heavy hitters
-                     "winnow_fingerprints", "heavy_hitters",
-                     # round 6 session 6: TextRank keyword PageRank,
-                     # greedy k-center selection, context-window trim,
-                     # WordPiece encode, conversation dedup, GIF LZW
-                     # decode, repetition battery
-                     "textrank_keywords", "kcenter_select",
-                     "context_trim", "wordpiece_encode", "conv_dedup",
-                     "gif_features", "rep_ngram_battery"]:
+        for name in BENCH_QUERIES:
             queries[name] = round(time_query(E.queries()[name], spark, SF_DIR), 3)
     finally:
         spark.stop()

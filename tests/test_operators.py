@@ -632,8 +632,8 @@ def test_semdedup_recovers_planted_near_dups(spark):
     (vec_id, vec_id+1000000): a near-identical vector co-clusters with
     its original almost surely, so only genuine cluster-boundary cases
     may be missed."""
-    from __spark_entry__ import _q_semdedup
-    out = _q_semdedup(spark, "/root/testdata/sf0.01").toPandas()
+    import __spark_entry__ as E
+    out = E.queries()["semdedup"](spark, "/root/testdata/sf0.01").toPandas()
     assert (out["sim"] >= 0.98).all()
     planted = out[(out["b"] - out["a"]) == 1_000_000]
     n_planted_found = planted.shape[0]

@@ -38,6 +38,12 @@ import pyarrow.parquet as pq
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+# the driver queries' tokenizer training parameters, so each fixture
+# trains on exactly what its query trains on
+from __spark_entry__ import (BPE_NUM_MERGES, TOK_MAX_WORDS,  # noqa: E402
+                             TOK_MIN_COUNT, UNI_N_ITERS, UNI_VOCAB_SIZE,
+                             WP_NUM_MERGES)
+
 LANGID_FILE = "expected_langid_sf0_01.parquet"
 KEEP_DROP_FILE = "expected_keep_drop_sf0_01.parquet"
 SPANS_FILE = "expected_spans_sf0_01.parquet"
@@ -51,17 +57,8 @@ BPE_MERGES_FILE = "expected_bpe_merges_sf0_01.parquet"
 BPE_ENCODE_FILE = "expected_bpe_encode_sf0_01.parquet"
 UNI_VOCAB_FILE = "expected_unigram_vocab_sf0_01.parquet"
 UNI_ENCODE_FILE = "expected_unigram_encode_sf0_01.parquet"
-UNI_VOCAB_SIZE = 120
-UNI_N_ITERS = 2
 UNI_MAX_PIECE = 5
 UNI_SEED_MIN = 2
-
-# driver-query BPE parameters — MUST match __spark_entry__._q_bpe_*
-BPE_NUM_MERGES = 40
-BPE_MIN_COUNT = 2
-BPE_MAX_WORDS = 20_000
-# WordPiece shares the histogram bounds; MUST match _q_wordpiece_*
-WP_NUM_MERGES = 40
 WP_VOCAB_FILE = "expected_wordpiece_vocab_sf0_01.parquet"
 WP_ENCODE_FILE = "expected_wordpiece_encode_sf0_01.parquet"
 
@@ -174,8 +171,8 @@ def _bpe_fixtures(sf_dir: str) -> dict[str, pa.Table]:
     counts: Counter = Counter()
     for _, text in rows:
         counts.update(w for w in ws.split(text or "") if w)
-    hist = sorted(((w, c) for w, c in counts.items() if c >= BPE_MIN_COUNT),
-                  key=lambda kv: (-kv[1], kv[0]))[:BPE_MAX_WORDS]
+    hist = sorted(((w, c) for w, c in counts.items() if c >= TOK_MIN_COUNT),
+                  key=lambda kv: (-kv[1], kv[0]))[:TOK_MAX_WORDS]
 
     def apply_merge(syms, a, b):
         out, i = [], 0
@@ -261,8 +258,8 @@ def _wordpiece_fixtures(sf_dir: str) -> dict[str, pa.Table]:
     wc: Counter = Counter()
     for _, text in rows:
         wc.update(w for w in ws.split(text or "") if w)
-    hist = sorted(((w, c) for w, c in wc.items() if c >= BPE_MIN_COUNT),
-                  key=lambda kv: (-kv[1], kv[0]))[:BPE_MAX_WORDS]
+    hist = sorted(((w, c) for w, c in wc.items() if c >= TOK_MIN_COUNT),
+                  key=lambda kv: (-kv[1], kv[0]))[:TOK_MAX_WORDS]
 
     vocab = [([w[0]] + ["##" + ch for ch in w[1:]], c) for w, c in hist]
     alphabet = {s for syms, _ in vocab for s in syms}
@@ -364,8 +361,8 @@ def _unigram_fixtures(sf_dir: str) -> dict[str, pa.Table]:
     wc: Counter = Counter()
     for _, text in rows:
         wc.update(w for w in ws.split(text or "") if w)
-    hist = sorted(((w, c) for w, c in wc.items() if c >= BPE_MIN_COUNT),
-                  key=lambda kv: (-kv[1], kv[0]))[:BPE_MAX_WORDS]
+    hist = sorted(((w, c) for w, c in wc.items() if c >= TOK_MIN_COUNT),
+                  key=lambda kv: (-kv[1], kv[0]))[:TOK_MAX_WORDS]
 
     def better(a, b, total):
         left, right = a[0] * total ** b[1], b[0] * total ** a[1]

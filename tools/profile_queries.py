@@ -1,10 +1,14 @@
 """Per-query profiling harness (bench.py stays frozen; guide §1).
 
 For each named query: one warm run, then a timed noop-sink run inside its
-own job group so the Spark job count is attributable, plus the
-`.explain("formatted")` dump. Prints one JSON line per query:
+own job group, so its Spark jobs and their stages are attributable, plus
+the `.explain("formatted")` dump. The stages come from Spark's status
+store (live with the UI off); the slowest one and its task count find
+stages AQE has coalesced into too few tasks for their compute. Prints
+one JSON line per query:
 
-  {"query": name, "sec": t, "n_jobs": j, "warm_sec": t0}
+  {"query": name, "sec": t, "n_jobs": j, "warm_sec": t0,
+   "n_stages": s, "slowest_stage_s": d, "slowest_stage_tasks": n}
 
 Usage:
   python tools/profile_queries.py [query ...]        # default: bench list
@@ -22,28 +26,35 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import BENCH_QUERIES, CPUS, SF_DIR  # noqa: E402
+
 PLAN_DIR = os.environ.get("CLD2S_PROFILE_PLANS", "")
 SUFFIX = os.environ.get("CLD2S_PROFILE_SUFFIX", "before")
 
-BENCH_QUERIES = [
-    "scrub_pii", "quality_flags", "conv_rollup", "pricing_summary",
-    "dedup_exact", "minhash_pairs", "token_stats", "ann_cosine",
-    "events_stream", "media_meta", "dedup_jaccard", "event_sessions",
-    "event_asof", "paragraph_dedup", "semdedup", "seq_pack", "decontam",
-    "dup_spans", "funnel", "events_stream_join", "audio_features",
-    "jpeg_features", "curation_pipeline", "video_features", "pq_ann",
-    "dedup_incremental_bloom", "dup_span_cuts", "gopher_quality",
-    "bpe_encode", "classifier_train", "zorder_stats", "lm_score",
-    "unigram_encode", "winnow_fingerprints", "heavy_hitters",
-    "textrank_keywords", "kcenter_select", "context_trim",
-    "wordpiece_encode", "conv_dedup", "gif_features", "rep_ngram_battery",
-]
+
+def stage_record(sc, jobs: list[int]) -> dict:
+    """Stage count of `jobs` and their slowest stage (seconds, tasks),
+    over the last attempt of every stage that ran (skipped stages have
+    no submission time)."""
+    store = sc._jsc.sc().statusStore()
+    stages = {}
+    for j in jobs:
+        info = sc.statusTracker().getJobInfo(j)
+        for sid in (info.stageIds if info else ()):
+            st = store.lastStageAttempt(sid)
+            start, end = st.submissionTime(), st.completionTime()
+            if start.isDefined() and end.isDefined():
+                stages[sid] = ((end.get().getTime()
+                                - start.get().getTime()) / 1000.0,
+                               st.numTasks())
+    sec, tasks = max(stages.values(), default=(0.0, 0))
+    return {"n_stages": len(stages), "slowest_stage_s": round(sec, 3),
+            "slowest_stage_tasks": tasks}
 
 
 def main() -> None:
     import __spark_entry__ as E
+    from cld2_spark.operators.dedup import release_dedup_caches
     from cld2_spark.session import get_spark
 
     names = sys.argv[1:] or BENCH_QUERIES
@@ -53,15 +64,11 @@ def main() -> None:
     try:
         for name in names:
             fn = qs[name]
-            spark.sparkContext.setJobDescription(f"warm:{name}")
+            sc.setJobDescription(f"warm:{name}")
             t0 = time.monotonic()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             warm = time.monotonic() - t0
-            try:
-                from cld2_spark.operators.dedup import release_dedup_caches
-                release_dedup_caches(session=spark)
-            except Exception:
-                pass
+            release_dedup_caches(session=spark)
             if PLAN_DIR:
                 out = Path(REPO / PLAN_DIR)
                 out.mkdir(parents=True, exist_ok=True)
@@ -76,14 +83,11 @@ def main() -> None:
             sec = time.monotonic() - t0
             jobs = sc.statusTracker().getJobIdsForGroup(f"q:{name}")
             sc.setJobGroup("idle", "idle")
-            try:
-                from cld2_spark.operators.dedup import release_dedup_caches
-                release_dedup_caches(session=spark)
-            except Exception:
-                pass
+            release_dedup_caches(session=spark)
             print(json.dumps({"query": name, "sec": round(sec, 3),
                               "n_jobs": len(jobs),
-                              "warm_sec": round(warm, 3)}), flush=True)
+                              "warm_sec": round(warm, 3),
+                              **stage_record(sc, jobs)}), flush=True)
     finally:
         spark.stop()
 
