@@ -41,6 +41,15 @@ Conformance evidence without a reference codec in the container:
   B.1.1.5/F.1.2.3 and are exercised by fixtures whose entropy stream
   contains 0xFF bytes.
 
+The 8x8 DCT is computed in fixed-order IEEE arithmetic (_fdct/_idct),
+never by a BLAS matmul, so encoded bytes and decoded pixels are the same
+under every OpenBLAS kernel (a constant block with an odd level sits
+exactly on a quantization tie, where an FMA kernel's last-bit difference
+flips the rounding). All encoders share one coefficient step
+(_zigzag_coefs) and one header writer; the baseline layouts differ only
+in their sampling factors (_encode_baseline), the progressive ones only
+in their scan script (_encode_progressive).
+
 Reference parity note: CLD2 itself has no media path; this module exists
 for the training-pipeline multimodal mandate (SURVEY.md §2.13).
 """
@@ -85,6 +94,38 @@ AC_VALS = [
     0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA]
 
+# Annex K Table K.2 — chrominance quantization
+QTABLE_C = np.array([
+    [17, 18, 24, 47, 99, 99, 99, 99],
+    [18, 21, 26, 66, 99, 99, 99, 99],
+    [24, 26, 56, 99, 99, 99, 99, 99],
+    [47, 66, 99, 99, 99, 99, 99, 99],
+    [99, 99, 99, 99, 99, 99, 99, 99],
+    [99, 99, 99, 99, 99, 99, 99, 99],
+    [99, 99, 99, 99, 99, 99, 99, 99],
+    [99, 99, 99, 99, 99, 99, 99, 99]], dtype=np.int64)
+
+# Annex K Tables K.4/K.6 — chrominance DC/AC Huffman
+DC_BITS_C = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
+DC_VALS_C = list(range(12))
+AC_BITS_C = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
+AC_VALS_C = [
+    0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12,
+    0x41, 0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14,
+    0x42, 0x91, 0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15,
+    0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17,
+    0x18, 0x19, 0x1A, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37,
+    0x38, 0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A,
+    0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65,
+    0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
+    0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A,
+    0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
+    0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5,
+    0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
+    0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9,
+    0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
+    0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA]
+
 
 def _zigzag_order() -> np.ndarray:
     """The T.81 Figure A.6 zigzag scan, generated from the anti-diagonal
@@ -110,6 +151,48 @@ def _dct_matrix() -> np.ndarray:
 
 
 _DCT = _dct_matrix()
+
+
+def _ordered_matmul(m: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """m @ x for an 8x8 m and an (8, N) x in fixed-order IEEE arithmetic:
+    each output is the k = 0 product plus the k = 1..7 products added in
+    ascending k, one correctly rounded multiply and one add per term, so
+    no BLAS kernel, FMA or SIMD width can change a bit. This is the order
+    OpenBLAS's generic kernel sums in, so the result equals its matmul
+    bit for bit. A row of x that is zero everywhere is skipped: its
+    products are zero and leave every sum unchanged (up to the sign of a
+    zero, which rounding to an integer erases)."""
+    ks = np.flatnonzero(x.any(axis=1))
+    if not len(ks):
+        return np.zeros((8, x.shape[1]))
+    p = m.T[ks, :, None] * x[ks, None, :]   # p[k, i, c] = m[i, k] x[k, c]
+    acc = p[0]
+    for q in p[1:]:
+        acc += q
+    return acc
+
+
+def _sandwich(left: np.ndarray, x: np.ndarray, right: np.ndarray
+              ) -> np.ndarray:
+    """(left @ x) @ right for every block of an (n, 8, 8) stack. Both
+    products run over the whole batch laid out as one (8, 8n) matrix, so
+    each step is one long array op rather than one call per block."""
+    n = len(x)
+    x = np.asarray(x, dtype=np.float64).transpose(1, 0, 2).reshape(8, 8 * n)
+    y = _ordered_matmul(left, x)                           # y[i, (b, j)]
+    yt = y.reshape(8, n, 8).transpose(2, 1, 0).reshape(8, 8 * n)
+    z = _ordered_matmul(right.T, yt)                       # z[j, (b, i)]
+    return z.reshape(8, n, 8).transpose(1, 2, 0)
+
+
+def _fdct(blocks: np.ndarray) -> np.ndarray:
+    """Forward 2-D DCT of (n, 8, 8) level-shifted samples: D @ B @ D.T."""
+    return _sandwich(_DCT, blocks, _DCT.T)
+
+
+def _idct(coefs: np.ndarray) -> np.ndarray:
+    """Inverse 2-D DCT of (n, 8, 8) dequantized coefficients: D.T @ C @ D."""
+    return _sandwich(_DCT.T, coefs, _DCT)
 
 
 def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -171,86 +254,151 @@ def _split_restart_segments(scan: bytes, ri: int, n_mcus: int
     return segs
 
 
+# (DC codes, AC codes) per Huffman table id: 0 luminance, 1 chrominance
+_CODES = ((_canonical_codes(DC_BITS, DC_VALS),
+           _canonical_codes(AC_BITS, AC_VALS)),
+          (_canonical_codes(DC_BITS_C, DC_VALS_C),
+           _canonical_codes(AC_BITS_C, AC_VALS_C)))
+
+
+def _seg(marker: int, payload: bytes) -> bytes:
+    """One marker segment: marker, 2-byte length, payload (B.1.1.4)."""
+    return struct.pack(">HH", marker, len(payload) + 2) + payload
+
+
+# per Huffman/quantization table id (0 luminance, 1 chrominance): its
+# DQT segment and its DC + AC DHT segments
+_TABLE_SEGS = [
+    (_seg(0xFFDB, bytes([t]) + qt.reshape(64)[ZIGZAG].astype(np.uint8)
+          .tobytes()),
+     _seg(0xFFC4, bytes([t] + dc_bits + dc_vals))
+     + _seg(0xFFC4, bytes([0x10 | t] + ac_bits + ac_vals)))
+    for t, (qt, dc_bits, dc_vals, ac_bits, ac_vals) in enumerate((
+        (QTABLE, DC_BITS, DC_VALS, AC_BITS, AC_VALS),
+        (QTABLE_C, DC_BITS_C, DC_VALS_C, AC_BITS_C, AC_VALS_C)))]
+
+
+def _frame_header(sof: int, h: int, w: int, samps: list[tuple[int, int]],
+                  restart_interval: int = 0) -> bytes:
+    """SOI, DQT, DRI (when restart_interval > 0), SOFn and DHT of a 1- or
+    3-component frame at sampling factors `samps`: the first component
+    uses the Annex K luminance tables (id 0), the others the chrominance
+    tables (id 1)."""
+    segs = _TABLE_SEGS[:min(len(samps), 2)]
+    out = b"\xff\xd8" + b"".join(dqt for dqt, _ in segs)
+    if restart_interval:
+        out += _seg(0xFFDD, struct.pack(">H", restart_interval))
+    sof_payload = struct.pack(">BHHB", 8, h, w, len(samps))
+    for c, (hc, vc) in enumerate(samps):
+        sof_payload += bytes([c + 1, (hc << 4) | vc, min(c, 1)])
+    return out + _seg(sof, sof_payload) + b"".join(dht for _, dht in segs)
+
+
+def _sos(sels: list[tuple[int, int]], ss: int, se: int, ahal: int) -> bytes:
+    """SOS segment: (component id, Td << 4 | Ta) per scan component, then
+    Ss, Se and Ah << 4 | Al."""
+    return _seg(0xFFDA, bytes([len(sels)]) + bytes(sum(sels, ()))
+                + bytes([ss, se, ahal]))
+
+
+def _zigzag_coefs(plane: np.ndarray, rows: int, cols: int,
+                  qt: np.ndarray) -> np.ndarray:
+    """Quantized coefficients in zigzag order, one row per 8x8 block in
+    raster order, of a level-shifted plane edge-padded to rows x cols
+    blocks: one batched FDCT per plane, not one call per block."""
+    # edge replication by clamped indices (np.pad's edge mode, cheaper)
+    ri = np.minimum(np.arange(rows * 8), plane.shape[0] - 1)
+    ci = np.minimum(np.arange(cols * 8), plane.shape[1] - 1)
+    blocks = (plane[ri[:, None], ci].reshape(rows, 8, cols, 8)
+              .transpose(0, 2, 1, 3).reshape(-1, 8, 8))
+    coefs = np.round(_fdct(blocks) / qt).astype(np.int64)
+    return coefs.reshape(-1, 64)[:, ZIGZAG]
+
+
+def _put(bw: _BitWriter, codes: dict, sym: int, v: int, s: int) -> None:
+    """The Huffman code of `sym`, then v's s-bit amplitude (F.1.2.1)."""
+    bw.write(*codes[sym])
+    if s:
+        bw.write(v if v > 0 else v + (1 << s) - 1, s)
+
+
+def _emit_ac(bw: _BitWriter, vals: list[int], ac_codes: dict) -> None:
+    """Run/size-code a list of AC values (F.1.2.2): ZRL per 16 zeros
+    before a nonzero, and one EOB (EOBRUN = 1, always legal) when
+    trailing zeros remain. A baseline block passes zigzag 1..63, a
+    progressive first scan its point-transformed band."""
+    last = len(vals) - 1
+    while last >= 0 and not vals[last]:
+        last -= 1
+    run = 0
+    for v in vals[:last + 1]:
+        if not v:
+            run += 1
+            continue
+        while run > 15:
+            bw.write(*ac_codes[0xF0])
+            run -= 16
+        s = _csize(v)
+        _put(bw, ac_codes, (run << 4) | s, v, s)
+        run = 0
+    if last < len(vals) - 1:
+        bw.write(*ac_codes[0x00])
+
+
+def _encode_baseline(planes: list[np.ndarray], samps: list[tuple[int, int]],
+                     h: int, w: int, restart_interval: int) -> bytes:
+    """Baseline (SOF0) JPEG of level-shifted component planes at sampling
+    factors `samps`. FDCT, quantization and zigzag run once per plane
+    over its MCU-padded block grid; the MCU walk then entropy-codes the
+    precomputed rows in the T.81 A.2.3 interleave (per component, vc
+    rows of hc blocks) with per-component DC differencing.
+    `restart_interval` > 0 emits a DRI segment and byte-aligned RSTn
+    markers every that many MCUs (DC predictors reset, marker id cycling
+    D0-D7 per B.2.1.2)."""
+    hmax = max(hc for hc, _ in samps)
+    vmax = max(vc for _, vc in samps)
+    mrows, mcols = -(-h // (8 * vmax)), -(-w // (8 * hmax))
+    zzs = [_zigzag_coefs(pl, mrows * vc, mcols * hc,
+                         QTABLE_C if c else QTABLE).tolist()
+           for c, (pl, (hc, vc)) in enumerate(zip(planes, samps))]
+    bw = _BitWriter()
+    pieces: list[bytes] = []
+    prev = [0] * len(samps)
+    for m in range(mrows * mcols):
+        if restart_interval and m and m % restart_interval == 0:
+            pieces += [bw.flush(),
+                       bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])]
+            bw = _BitWriter()
+            prev = [0] * len(samps)
+        my, mx = divmod(m, mcols)
+        for c, (hc, vc) in enumerate(samps):
+            dc_codes, ac_codes = _CODES[min(c, 1)]
+            for byy in range(vc):
+                row = ((my * vc + byy) * mcols + mx) * hc
+                for zz in zzs[c][row:row + hc]:
+                    diff = zz[0] - prev[c]
+                    s = _csize(diff)
+                    _put(bw, dc_codes, s, diff, s)
+                    _emit_ac(bw, zz[1:], ac_codes)
+                    prev[c] = zz[0]
+    pieces.append(bw.flush())
+    sels = [(c + 1, 0x11 if c else 0) for c in range(len(samps))]
+    return (_frame_header(0xFFC0, h, w, samps, restart_interval)
+            + _sos(sels, 0, 63, 0) + b"".join(pieces) + b"\xff\xd9")
+
+
+def _gray_plane(pixels: np.ndarray):
+    """(planes, samps, h, w) of a uint8 (h, w) image: the level-shifted
+    single component."""
+    px = np.asarray(pixels, dtype=np.uint8)
+    return [px.astype(np.float64) - 128.0], [(1, 1)], *px.shape
+
+
 def encode_jpeg_gray(pixels: np.ndarray,
                      restart_interval: int = 0) -> bytes:
-    """Baseline grayscale JPEG of a uint8 (h, w) array: edge-replication
-    pad to 8x8 multiples, level shift, FDCT, Annex-K quantization,
-    zigzag, DC differencing, canonical Huffman entropy coding.
-    `restart_interval` > 0 emits a DRI segment and byte-aligned RSTn
-    markers every that many MCUs (DC predictor reset, marker id cycling
-    D0-D7 per B.2.1.2)."""
-    px = np.asarray(pixels, dtype=np.uint8)
-    h, w = px.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    padded = np.pad(px, ((0, ph - h), (0, pw - w)), mode="edge")
-    dc_codes = _canonical_codes(DC_BITS, DC_VALS)
-    ac_codes = _canonical_codes(AC_BITS, AC_VALS)
-    bw = _BitWriter()
-    prev_dc = 0
-    pieces: list[bytes] = []
-    n_done = 0
-    blocks = (padded.astype(np.float64) - 128.0).reshape(
-        ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3)
-    for by in range(ph // 8):
-        for bx in range(pw // 8):
-            if restart_interval and n_done and \
-                    n_done % restart_interval == 0:
-                pieces.append(bw.flush())
-                pieces.append(bytes([0xFF, 0xD0 +
-                                     (n_done // restart_interval - 1) % 8]))
-                bw = _BitWriter()
-                prev_dc = 0
-            n_done += 1
-            coef = _DCT @ blocks[by, bx] @ _DCT.T
-            q = np.round(coef / QTABLE).astype(np.int64)
-            zz = q.reshape(64)[ZIGZAG]
-            # DC: category + amplitude bits
-            diff = int(zz[0] - prev_dc)
-            prev_dc = int(zz[0])
-            s = _csize(diff)
-            c, ln = dc_codes[s]
-            bw.write(c, ln)
-            if s:
-                amp = diff if diff > 0 else diff + (1 << s) - 1
-                bw.write(amp, s)
-            # AC: run/size with ZRL and EOB
-            run = 0
-            last_nz = int(np.max(np.nonzero(zz)[0])) if np.any(zz[1:]) else 0
-            for i in range(1, 64):
-                v = int(zz[i])
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    c, ln = ac_codes[0xF0]     # ZRL
-                    bw.write(c, ln)
-                    run -= 16
-                s = _csize(v)
-                c, ln = ac_codes[(run << 4) | s]
-                bw.write(c, ln)
-                amp = v if v > 0 else v + (1 << s) - 1
-                bw.write(amp, s)
-                run = 0
-                if i == last_nz:
-                    break
-            if last_nz < 63:
-                c, ln = ac_codes[0x00]         # EOB
-                bw.write(c, ln)
-    pieces.append(bw.flush())
-    scan = b"".join(pieces)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    qz = QTABLE.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    dqt = seg(0xFFDB, b"\x00" + qz)
-    dri = (seg(0xFFDD, struct.pack(">H", restart_interval))
-           if restart_interval else b"")
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00")
-    dht = (seg(0xFFC4, b"\x00" + bytes(DC_BITS) + bytes(DC_VALS))
-           + seg(0xFFC4, b"\x10" + bytes(AC_BITS) + bytes(AC_VALS)))
-    sos = seg(0xFFDA, b"\x01\x01\x00\x00\x3f\x00")
-    return b"\xff\xd8" + dqt + dri + sof + dht + sos + scan + b"\xff\xd9"
+    """Baseline grayscale JPEG of a uint8 (h, w) array (_encode_baseline);
+    `restart_interval` > 0 adds DRI + RSTn every that many MCUs."""
+    return _encode_baseline(*_gray_plane(pixels), restart_interval)
 
 
 class _BitReader:
@@ -433,6 +581,21 @@ def _extend(v: int, s: int) -> int:
     return v - (1 << s) + 1 if s and v < (1 << (s - 1)) else v
 
 
+def _read_dqt(payload: bytes, qts: dict[int, np.ndarray]) -> bool:
+    """Parse a DQT segment's tables into qts {id: natural-order (8, 8)
+    table}; one segment may carry several. False for a 16-bit table,
+    which is out of profile."""
+    j = 0
+    while j < len(payload):
+        if payload[j] & 0xF0:
+            return False
+        t = np.zeros(64, dtype=np.int64)
+        t[ZIGZAG] = np.frombuffer(payload[j + 1:j + 65], dtype=np.uint8)
+        qts[payload[j] & 0x0F] = t.reshape(8, 8)
+        j += 65
+    return True
+
+
 def decode_jpeg_gray(buf: bytes) -> np.ndarray | None:
     """Decode a baseline single-component JPEG produced by any conformant
     encoder (not just encode_jpeg_gray): marker walk, DQT/SOF0/DHT from
@@ -462,15 +625,8 @@ def decode_jpeg_gray(buf: bytes) -> np.ndarray | None:
             (ln,) = struct.unpack_from(">H", buf, i + 2)
             payload = buf[i + 4:i + 2 + ln]
             if marker == 0xFFDB:
-                j = 0
-                while j < len(payload):
-                    if payload[j] & 0xF0:
-                        return None    # 16-bit table: out of profile
-                    t = np.zeros(64, dtype=np.int64)
-                    t[ZIGZAG] = np.frombuffer(
-                        payload[j + 1:j + 65], dtype=np.uint8)
-                    qts[payload[j] & 0x0F] = t.reshape(8, 8)
-                    j += 65
+                if not _read_dqt(payload, qts):
+                    return None
             elif marker == 0xFFC0:
                 prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
                 if prec != 8 or nc != 1:
@@ -527,12 +683,10 @@ def decode_jpeg_gray(buf: bytes) -> np.ndarray | None:
 
 def _idct_blocks(Z: np.ndarray, qt: np.ndarray) -> np.ndarray:
     """Dezigzag + dequantize + 2-D IDCT for a whole (n, 64) zigzag
-    matrix in three vectorized ops (one fancy index, one broadcast
-    multiply, two batched 8x8 matmuls) instead of per-block numpy calls."""
+    matrix, batched over all blocks instead of per-block numpy calls."""
     dense = np.zeros_like(Z)
     dense[:, ZIGZAG] = Z
-    coefs = dense.reshape(-1, 8, 8) * qt
-    return _DCT.T @ coefs @ _DCT
+    return _idct(dense.reshape(-1, 8, 8) * qt)
 
 
 def gray_fixture_pixels(media_id: int) -> np.ndarray:
@@ -589,38 +743,6 @@ def jpeg_feature_extract(df, id_col: str = "media_id",
 
 # ------------------------------------------------------------- color ----
 
-# Annex K Table K.2 — chrominance quantization
-QTABLE_C = np.array([
-    [17, 18, 24, 47, 99, 99, 99, 99],
-    [18, 21, 26, 66, 99, 99, 99, 99],
-    [24, 26, 56, 99, 99, 99, 99, 99],
-    [47, 66, 99, 99, 99, 99, 99, 99],
-    [99, 99, 99, 99, 99, 99, 99, 99],
-    [99, 99, 99, 99, 99, 99, 99, 99],
-    [99, 99, 99, 99, 99, 99, 99, 99],
-    [99, 99, 99, 99, 99, 99, 99, 99]], dtype=np.int64)
-
-# Annex K Tables K.4/K.6 — chrominance DC/AC Huffman
-DC_BITS_C = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
-DC_VALS_C = list(range(12))
-AC_BITS_C = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
-AC_VALS_C = [
-    0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12,
-    0x41, 0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14,
-    0x42, 0x91, 0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15,
-    0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17,
-    0x18, 0x19, 0x1A, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37,
-    0x38, 0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A,
-    0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65,
-    0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-    0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A,
-    0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-    0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5,
-    0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-    0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9,
-    0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
-    0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA]
-
 
 def rgb_to_ycbcr(rgb: np.ndarray) -> np.ndarray:
     """JFIF full-range RGB -> YCbCr (float64, unclipped)."""
@@ -645,107 +767,62 @@ def ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
                    0, 255).astype(np.uint8)
 
 
-def _encode_block(bw: _BitWriter, block: np.ndarray, qt: np.ndarray,
-                  prev_dc: int, dc_codes, ac_codes) -> int:
-    coef = _DCT @ block @ _DCT.T
-    q = np.round(coef / qt).astype(np.int64)
-    zz = q.reshape(64)[ZIGZAG]
-    diff = int(zz[0]) - prev_dc
-    s = _csize(diff)
-    c, ln = dc_codes[s]
-    bw.write(c, ln)
-    if s:
-        bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-    run = 0
-    last_nz = int(np.max(np.nonzero(zz)[0])) if np.any(zz[1:]) else 0
-    for i in range(1, 64):
-        v = int(zz[i])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            c, ln = ac_codes[0xF0]
-            bw.write(c, ln)
-            run -= 16
-        s = _csize(v)
-        c, ln = ac_codes[(run << 4) | s]
-        bw.write(c, ln)
-        bw.write(v if v > 0 else v + (1 << s) - 1, s)
-        run = 0
-        if i == last_nz:
-            break
-    if last_nz < 63:
-        c, ln = ac_codes[0x00]
-        bw.write(c, ln)
-    return int(zz[0])
+def _ycc_planes(rgb: np.ndarray, fx: int, fy: int):
+    """(planes, samps, h, w) of a uint8 (h, w, 3) RGB image for a layout
+    with chroma factors (fx, fy): level-shifted Y at the image dims plus
+    Cb/Cr box-averaged over fy x fx pixels. The image is edge-padded to
+    full MCU multiples BEFORE downsampling, so baseline and progressive
+    encoders see the same chroma edge samples and progressive-subsampled
+    decode equals baseline-subsampled decode bit for bit. The chroma
+    dims are exactly the raster block grid
+    (ceil(ceil(w/fx)/8)*8 == ceil(w/(8*fx))*8)."""
+    rgb = np.asarray(rgb, dtype=np.uint8)
+    h, w, _ = rgb.shape
+    mh, mw = 8 * fy, 8 * fx                    # MCU dims for these layouts
+    ph, pw = -(-h // mh) * mh, -(-w // mw) * mw
+    ycc = rgb_to_ycbcr(np.pad(rgb, ((0, ph - h), (0, pw - w), (0, 0)),
+                              mode="edge")) - 128.0
+    planes = [ycc[:h, :w, 0]]
+    for c in (1, 2):
+        acc = np.zeros((ph // fy, pw // fx))
+        for dy in range(fy):
+            for dx in range(fx):
+                acc += ycc[dy::fy, dx::fx, c]
+        planes.append(acc / (fx * fy))
+    return planes, [(fx, fy), (1, 1), (1, 1)], h, w
 
 
 def encode_jpeg_color(rgb: np.ndarray, restart_interval: int = 0) -> bytes:
-    """Baseline color JPEG at 4:4:4 (no chroma subsampling): RGB ->
-    YCbCr, interleaved Y/Cb/Cr MCUs of one 8x8 block each, luminance
-    tables for Y and chrominance tables for Cb/Cr (quant table ids 0/1,
-    Huffman table ids 0/1 per class) — the T.81 A.2.3 interleave order.
-    `restart_interval` > 0 emits DRI + RSTn every that many MCUs, all
-    three DC predictors reset at each marker."""
-    rgb = np.asarray(rgb, dtype=np.uint8)
-    h, w, _ = rgb.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    ycc = rgb_to_ycbcr(np.pad(rgb, ((0, ph - h), (0, pw - w), (0, 0)),
-                              mode="edge")) - 128.0
-    dc_l = _canonical_codes(DC_BITS, DC_VALS)
-    ac_l = _canonical_codes(AC_BITS, AC_VALS)
-    dc_c = _canonical_codes(DC_BITS_C, DC_VALS_C)
-    ac_c = _canonical_codes(AC_BITS_C, AC_VALS_C)
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    pieces: list[bytes] = []
-    n_done = 0
-    for by in range(ph // 8):
-        for bx in range(pw // 8):
-            if restart_interval and n_done and \
-                    n_done % restart_interval == 0:
-                pieces.append(bw.flush())
-                pieces.append(bytes([0xFF, 0xD0 +
-                                     (n_done // restart_interval - 1) % 8]))
-                bw = _BitWriter()
-                prev = [0, 0, 0]
-            n_done += 1
-            tile = ycc[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8]
-            for comp, (qt, dc, ac) in enumerate(
-                    [(QTABLE, dc_l, ac_l), (QTABLE_C, dc_c, ac_c),
-                     (QTABLE_C, dc_c, ac_c)]):
-                prev[comp] = _encode_block(
-                    bw, tile[:, :, comp], qt, prev[comp], dc, ac)
-    pieces.append(bw.flush())
-    scan = b"".join(pieces)
+    """Baseline color JPEG at 4:4:4 (no chroma subsampling): interleaved
+    Y/Cb/Cr MCUs of one 8x8 block each, luminance tables for Y and
+    chrominance tables for Cb/Cr. `restart_interval` > 0 emits DRI + RSTn
+    every that many MCUs, all three DC predictors reset at each marker."""
+    return _encode_baseline(*_ycc_planes(rgb, 1, 1), restart_interval)
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
 
-    qzl = QTABLE.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    qzc = QTABLE_C.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    dqt = seg(0xFFDB, b"\x00" + qzl) + seg(0xFFDB, b"\x01" + qzc)
-    if restart_interval:
-        dqt += seg(0xFFDD, struct.pack(">H", restart_interval))
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 3)
-              + b"\x01\x11\x00" + b"\x02\x11\x01" + b"\x03\x11\x01")
-    dht = (seg(0xFFC4, b"\x00" + bytes(DC_BITS) + bytes(DC_VALS))
-           + seg(0xFFC4, b"\x10" + bytes(AC_BITS) + bytes(AC_VALS))
-           + seg(0xFFC4, b"\x01" + bytes(DC_BITS_C) + bytes(DC_VALS_C))
-           + seg(0xFFC4, b"\x11" + bytes(AC_BITS_C) + bytes(AC_VALS_C)))
-    sos = seg(0xFFDA, b"\x03" + b"\x01\x00" + b"\x02\x11" + b"\x03\x11"
-              + b"\x00\x3f\x00")
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
+def encode_jpeg_420(rgb: np.ndarray) -> bytes:
+    """Baseline 4:2:0 — the camera/web layout: 16x16 MCUs of four Y
+    blocks (2x2) plus one Cb and one Cr block of 2x2-averaged chroma."""
+    return _encode_baseline(*_ycc_planes(rgb, 2, 2), 0)
 
+
+def encode_jpeg_422(rgb: np.ndarray) -> bytes:
+    """Baseline 4:2:2 — the broadcast/video-frame layout: 16x8 MCUs of
+    two Y blocks plus one Cb and one Cr block of 2x1-averaged chroma."""
+    return _encode_baseline(*_ycc_planes(rgb, 2, 1), 0)
+
+
+def encode_jpeg_411(rgb: np.ndarray) -> bytes:
+    """Baseline 4:1:1 — the DV/camcorder layout: 32x8 MCUs of four Y
+    blocks plus one Cb and one Cr block of 4x1-averaged chroma."""
+    return _encode_baseline(*_ycc_planes(rgb, 4, 1), 0)
 
 
 def decode_jpeg_color(buf: bytes) -> np.ndarray | None:
-    """Decode a baseline 4:4:4 color JPEG (3 components, all sampling
-    factors 1x1): returns uint8 (h, w, 3) RGB, or None for anything
+    """Decode a baseline 3-component color JPEG at 4:4:4, 4:2:0, 4:2:2
+    or 4:1:1: returns uint8 (h, w, 3) RGB, or None for anything
     unparseable / out of profile (grayscale goes to decode_jpeg_gray;
-    subsampled 4:2:0/4:2:2 streams are rejected, not misdecoded)."""
-    import struct as _struct
-
+    other sampling layouts are rejected, not misdecoded)."""
     try:
         if len(buf) < 4 or buf[:2] != b"\xff\xd8":
             return None
@@ -763,20 +840,13 @@ def decode_jpeg_color(buf: bytes) -> np.ndarray | None:
             marker = (buf[i] << 8) | buf[i + 1]
             if marker == 0xFFD9:
                 break
-            (ln,) = _struct.unpack_from(">H", buf, i + 2)
+            (ln,) = struct.unpack_from(">H", buf, i + 2)
             payload = buf[i + 4:i + 2 + ln]
             if marker == 0xFFDB:
-                j = 0
-                while j < len(payload):
-                    if payload[j] & 0xF0:
-                        return None
-                    t = np.zeros(64, dtype=np.int64)
-                    t[ZIGZAG] = np.frombuffer(
-                        payload[j + 1:j + 65], dtype=np.uint8)
-                    qts[payload[j] & 0x0F] = t.reshape(8, 8)
-                    j += 65
+                if not _read_dqt(payload, qts):
+                    return None
             elif marker == 0xFFC0:
-                prec, h, w, nc = _struct.unpack_from(">BHHB", payload, 0)
+                prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
                 if prec != 8 or nc != 3:
                     return None
                 samps = []
@@ -799,7 +869,7 @@ def decode_jpeg_color(buf: bytes) -> np.ndarray | None:
             elif marker == 0xFFC4:
                 huff.update(_decode_huff_tables(payload))
             elif marker == 0xFFDD:
-                (ri,) = _struct.unpack_from(">H", payload, 0)
+                (ri,) = struct.unpack_from(">H", payload, 0)
             elif marker == 0xFFDA:
                 ns = payload[0]
                 if ns != 3:
@@ -870,7 +940,7 @@ def decode_jpeg_color(buf: bytes) -> np.ndarray | None:
                 p = np.repeat(p, vmax // vc, axis=0)
             out[:, :, c] = p
         return ycbcr_to_rgb(out + 128.0)[:h, :w]
-    except (IndexError, KeyError, ValueError, _struct.error):
+    except (IndexError, KeyError, ValueError, struct.error):
         return None
 
 
@@ -928,161 +998,6 @@ def jpeg_color_feature_extract(df, id_col: str = "media_id",
     return df.mapInPandas(fn, schema)
 
 
-def encode_jpeg_420(rgb: np.ndarray) -> bytes:
-    """Baseline color JPEG with 4:2:0 chroma subsampling — the layout
-    virtually every camera/web JPEG uses: 16x16 MCUs of four Y blocks
-    (2x2) plus one Cb and one Cr block from 2x2 box-averaged chroma."""
-    rgb = np.asarray(rgb, dtype=np.uint8)
-    h, w, _ = rgb.shape
-    ph, pw = -(-h // 16) * 16, -(-w // 16) * 16
-    ycc = rgb_to_ycbcr(np.pad(rgb, ((0, ph - h), (0, pw - w), (0, 0)),
-                              mode="edge")) - 128.0
-    yp = ycc[:, :, 0]
-    # 2x2 box-filter chroma downsample
-    sub = [(ycc[0::2, 0::2, c] + ycc[1::2, 0::2, c]
-            + ycc[0::2, 1::2, c] + ycc[1::2, 1::2, c]) / 4.0
-           for c in (1, 2)]
-    dc_l = _canonical_codes(DC_BITS, DC_VALS)
-    ac_l = _canonical_codes(AC_BITS, AC_VALS)
-    dc_c = _canonical_codes(DC_BITS_C, DC_VALS_C)
-    ac_c = _canonical_codes(AC_BITS_C, AC_VALS_C)
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    for my in range(ph // 16):
-        for mx in range(pw // 16):
-            for byy in range(2):          # four Y blocks, raster order
-                for bxx in range(2):
-                    y0, x0 = my * 16 + byy * 8, mx * 16 + bxx * 8
-                    prev[0] = _encode_block(
-                        bw, yp[y0:y0 + 8, x0:x0 + 8], QTABLE,
-                        prev[0], dc_l, ac_l)
-            for c in (0, 1):              # one Cb, one Cr block
-                y0, x0 = my * 8, mx * 8
-                prev[c + 1] = _encode_block(
-                    bw, sub[c][y0:y0 + 8, x0:x0 + 8], QTABLE_C,
-                    prev[c + 1], dc_c, ac_c)
-    scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    qzl = QTABLE.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    qzc = QTABLE_C.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    dqt = seg(0xFFDB, b"\x00" + qzl) + seg(0xFFDB, b"\x01" + qzc)
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 3)
-              + b"\x01\x22\x00" + b"\x02\x11\x01" + b"\x03\x11\x01")
-    dht = (seg(0xFFC4, b"\x00" + bytes(DC_BITS) + bytes(DC_VALS))
-           + seg(0xFFC4, b"\x10" + bytes(AC_BITS) + bytes(AC_VALS))
-           + seg(0xFFC4, b"\x01" + bytes(DC_BITS_C) + bytes(DC_VALS_C))
-           + seg(0xFFC4, b"\x11" + bytes(AC_BITS_C) + bytes(AC_VALS_C)))
-    sos = seg(0xFFDA, b"\x03" + b"\x01\x00" + b"\x02\x11" + b"\x03\x11"
-              + b"\x00\x3f\x00")
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
-
-
-def encode_jpeg_422(rgb: np.ndarray) -> bytes:
-    """Baseline color JPEG with 4:2:2 chroma subsampling (Y 2x1, chroma
-    1x1 — the broadcast/video-frame layout): 16x8 MCUs of two Y blocks
-    side by side plus one Cb and one Cr block from 2x1 box-averaged
-    chroma. Closes the 'rejected cleanly' gap: decode_jpeg_color's
-    sampling-factor-general MCU walk handles it once whitelisted."""
-    rgb = np.asarray(rgb, dtype=np.uint8)
-    h, w, _ = rgb.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 16) * 16
-    ycc = rgb_to_ycbcr(np.pad(rgb, ((0, ph - h), (0, pw - w), (0, 0)),
-                              mode="edge")) - 128.0
-    yp = ycc[:, :, 0]
-    # 2x1 box-filter chroma downsample (horizontal only)
-    sub = [(ycc[:, 0::2, c] + ycc[:, 1::2, c]) / 2.0 for c in (1, 2)]
-    dc_l = _canonical_codes(DC_BITS, DC_VALS)
-    ac_l = _canonical_codes(AC_BITS, AC_VALS)
-    dc_c = _canonical_codes(DC_BITS_C, DC_VALS_C)
-    ac_c = _canonical_codes(AC_BITS_C, AC_VALS_C)
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    for my in range(ph // 8):
-        for mx in range(pw // 16):
-            for bxx in range(2):          # two Y blocks, left to right
-                y0, x0 = my * 8, mx * 16 + bxx * 8
-                prev[0] = _encode_block(
-                    bw, yp[y0:y0 + 8, x0:x0 + 8], QTABLE,
-                    prev[0], dc_l, ac_l)
-            for c in (0, 1):              # one Cb, one Cr block
-                y0, x0 = my * 8, mx * 8
-                prev[c + 1] = _encode_block(
-                    bw, sub[c][y0:y0 + 8, x0:x0 + 8], QTABLE_C,
-                    prev[c + 1], dc_c, ac_c)
-    scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    qzl = QTABLE.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    qzc = QTABLE_C.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    dqt = seg(0xFFDB, b"\x00" + qzl) + seg(0xFFDB, b"\x01" + qzc)
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 3)
-              + b"\x01\x21\x00" + b"\x02\x11\x01" + b"\x03\x11\x01")
-    dht = (seg(0xFFC4, b"\x00" + bytes(DC_BITS) + bytes(DC_VALS))
-           + seg(0xFFC4, b"\x10" + bytes(AC_BITS) + bytes(AC_VALS))
-           + seg(0xFFC4, b"\x01" + bytes(DC_BITS_C) + bytes(DC_VALS_C))
-           + seg(0xFFC4, b"\x11" + bytes(AC_BITS_C) + bytes(AC_VALS_C)))
-    sos = seg(0xFFDA, b"\x03" + b"\x01\x00" + b"\x02\x11" + b"\x03\x11"
-              + b"\x00\x3f\x00")
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
-
-
-def encode_jpeg_411(rgb: np.ndarray) -> bytes:
-    """Baseline color JPEG with 4:1:1 chroma subsampling (Y 4x1, chroma
-    1x1 — the DV/camcorder layout): 32x8 MCUs of four Y blocks side by
-    side plus one Cb and one Cr block from 4x1 box-averaged chroma.
-    The last baseline sampling layout; decode_jpeg_color's sampling-
-    factor-general MCU walk handles it once whitelisted."""
-    rgb = np.asarray(rgb, dtype=np.uint8)
-    h, w, _ = rgb.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 32) * 32
-    ycc = rgb_to_ycbcr(np.pad(rgb, ((0, ph - h), (0, pw - w), (0, 0)),
-                              mode="edge")) - 128.0
-    yp = ycc[:, :, 0]
-    # 4x1 box-filter chroma downsample (horizontal only)
-    sub = [(ycc[:, 0::4, c] + ycc[:, 1::4, c]
-            + ycc[:, 2::4, c] + ycc[:, 3::4, c]) / 4.0 for c in (1, 2)]
-    dc_l = _canonical_codes(DC_BITS, DC_VALS)
-    ac_l = _canonical_codes(AC_BITS, AC_VALS)
-    dc_c = _canonical_codes(DC_BITS_C, DC_VALS_C)
-    ac_c = _canonical_codes(AC_BITS_C, AC_VALS_C)
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    for my in range(ph // 8):
-        for mx in range(pw // 32):
-            for bxx in range(4):          # four Y blocks, left to right
-                y0, x0 = my * 8, mx * 32 + bxx * 8
-                prev[0] = _encode_block(
-                    bw, yp[y0:y0 + 8, x0:x0 + 8], QTABLE,
-                    prev[0], dc_l, ac_l)
-            for c in (0, 1):              # one Cb, one Cr block
-                y0, x0 = my * 8, mx * 8
-                prev[c + 1] = _encode_block(
-                    bw, sub[c][y0:y0 + 8, x0:x0 + 8], QTABLE_C,
-                    prev[c + 1], dc_c, ac_c)
-    scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    qzl = QTABLE.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    qzc = QTABLE_C.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    dqt = seg(0xFFDB, b"\x00" + qzl) + seg(0xFFDB, b"\x01" + qzc)
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 3)
-              + b"\x01\x41\x00" + b"\x02\x11\x01" + b"\x03\x11\x01")
-    dht = (seg(0xFFC4, b"\x00" + bytes(DC_BITS) + bytes(DC_VALS))
-           + seg(0xFFC4, b"\x10" + bytes(AC_BITS) + bytes(AC_VALS))
-           + seg(0xFFC4, b"\x01" + bytes(DC_BITS_C) + bytes(DC_VALS_C))
-           + seg(0xFFC4, b"\x11" + bytes(AC_BITS_C) + bytes(AC_VALS_C)))
-    sos = seg(0xFFDA, b"\x03" + b"\x01\x00" + b"\x02\x11" + b"\x03\x11"
-              + b"\x00\x3f\x00")
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
-
-
 # ---- progressive JPEG (SOF2) ----------------------------------------------
 # Progressive scans split the zigzag spectrum across multiple SOS scans
 # (T.81 G.1): a DC scan (Ss=Se=0) then AC band scans (Ss..Se), with the
@@ -1096,145 +1011,16 @@ def encode_jpeg_411(rgb: np.ndarray) -> bytes:
 PROG_BANDS = ((1, 5), (6, 63))   # AC scans after the DC scan
 
 
-def encode_jpeg_progressive_gray(pixels: np.ndarray) -> bytes:
-    """Spectral-selection progressive grayscale JPEG: SOF2 + three scans
-    (DC coefficients; AC 1-5; AC 6-63). Each AC scan codes band-empty
-    blocks as single EOBs (EOBRUN=1 — always legal) so the decoder's
-    EOBRUN path is exercised without a run accumulator here."""
-    px = np.asarray(pixels, dtype=np.uint8)
-    h, w = px.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    padded = np.pad(px, ((0, ph - h), (0, pw - w)), mode="edge")
-    blocks = (padded.astype(np.float64) - 128.0).reshape(
-        ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-    coefs = np.round((_DCT @ blocks @ _DCT.T) / QTABLE).astype(np.int64)
-    zz = coefs.reshape(-1, 64)[:, ZIGZAG]   # natural -> zigzag order
-    dc_codes = _canonical_codes(DC_BITS, DC_VALS)
-    ac_codes = _canonical_codes(AC_BITS, AC_VALS)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    # scan 1: DC, differential like baseline
-    bw = _BitWriter()
-    prev = 0
-    for b in range(len(zz)):
-        diff = int(zz[b, 0]) - prev
-        prev = int(zz[b, 0])
-        s = _csize(diff)
-        c, ln = dc_codes[s]
-        bw.write(c, ln)
-        if s:
-            bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-    scans = [(0, 0, bw.flush())]
-    # AC band scans
-    for ss, se in PROG_BANDS:
-        bw = _BitWriter()
-        for b in range(len(zz)):
-            band = zz[b, ss:se + 1]
-            nz = np.flatnonzero(band)
-            if len(nz) == 0:
-                c, ln = ac_codes[0x00]      # EOB (EOBRUN=1)
-                bw.write(c, ln)
-                continue
-            run = 0
-            for k in range(len(band)):
-                v = int(band[k])
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    c, ln = ac_codes[0xF0]
-                    bw.write(c, ln)
-                    run -= 16
-                s = _csize(v)
-                c, ln = ac_codes[(run << 4) | s]
-                bw.write(c, ln)
-                bw.write(v if v > 0 else v + (1 << s) - 1, s)
-                run = 0
-            if nz[-1] != len(band) - 1:
-                c, ln = ac_codes[0x00]      # EOB for the band tail
-                bw.write(c, ln)
-        scans.append((ss, se, bw.flush()))
-
-    qzl = QTABLE.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    out = b"\xff\xd8" + seg(0xFFDB, b"\x00" + qzl)
-    out += seg(0xFFC2, struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00")
-    out += (seg(0xFFC4, b"\x00" + bytes(DC_BITS) + bytes(DC_VALS))
-            + seg(0xFFC4, b"\x10" + bytes(AC_BITS) + bytes(AC_VALS)))
-    for ss, se, scan in scans:
-        out += seg(0xFFDA, b"\x01\x01" + (b"\x00" if ss == 0 else b"\x10")
-                   + struct.pack(">BBB", ss, se, 0))
-        out += scan
-    return out + b"\xff\xd9"
-
-
-def _emit_dc_first_scan(bw: _BitWriter, zzs: list, dc_codes_list: list,
-                        al: int) -> None:
-    """DC first scan at Al (interleaved when len(zzs) > 1, all 1x1):
-    arithmetic-shift point transform, per-component differencing."""
-    prevs = [0] * len(zzs)
-    for b in range(len(zzs[0])):
-        for ci, zz in enumerate(zzs):
-            v = int(zz[b, 0]) >> al              # arithmetic shift (T.81)
-            diff = v - prevs[ci]
-            prevs[ci] = v
-            s = _csize(diff)
-            c, ln = dc_codes_list[ci][s]
-            bw.write(c, ln)
-            if s:
-                bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-
-
-def _emit_dc_refine_scan(bw: _BitWriter, zzs: list, al: int) -> None:
-    for b in range(len(zzs[0])):
-        for zz in zzs:
-            bw.write((int(zz[b, 0]) >> al) & 1, 1)
-
-
-def _emit_ac_first_scan(bw: _BitWriter, zz: np.ndarray, ac_codes: dict,
-                        ss: int, se: int, al: int) -> None:
-    """AC first scan at Al: magnitude point transform (truncate toward
-    zero), run/size with per-block EOB (EOBRUN=1 — always legal)."""
-    for b in range(len(zz)):
-        band = zz[b, ss:se + 1]
-        t = np.sign(band) * (np.abs(band) >> al)
-        nz = np.flatnonzero(t)
-        if len(nz) == 0:
-            c, ln = ac_codes[0x00]
-            bw.write(c, ln)
-            continue
-        run = 0
-        for k in range(int(nz[-1]) + 1):
-            v = int(t[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                c, ln = ac_codes[0xF0]
-                bw.write(c, ln)
-                run -= 16
-            s = _csize(v)
-            c, ln = ac_codes[(run << 4) | s]
-            bw.write(c, ln)
-            bw.write(v if v > 0 else v + (1 << s) - 1, s)
-            run = 0
-        if nz[-1] != len(band) - 1:
-            c, ln = ac_codes[0x00]
-            bw.write(c, ln)
-
-
 def _emit_ac_refine_scan(bw: _BitWriter, zz: np.ndarray, ac_codes: dict,
                          ss: int, se: int, al: int) -> None:
     """AC refinement (Ah = Al+1), T.81 G.1.2.3 correction-bit order."""
-    for b in range(len(zz)):
-        band = zz[b, ss:se + 1]
-        absv = (np.abs(band) >> al).astype(np.int64)
-        ones = np.flatnonzero(absv == 1)
-        eob = int(ones[-1]) if len(ones) else -1
+    band = zz[:, ss:se + 1]
+    for absv, neg in zip((np.abs(band) >> al).tolist(), (band < 0).tolist()):
+        eob = len(absv) - 1              # the last newly-nonzero position
+        while eob >= 0 and absv[eob] != 1:
+            eob -= 1
         run, pending = 0, []
-        for k in range(len(band)):
-            t = int(absv[k])
+        for k, t in enumerate(absv):
             if t == 0:
                 run += 1
                 continue
@@ -1242,8 +1028,7 @@ def _emit_ac_refine_scan(bw: _BitWriter, zz: np.ndarray, ac_codes: dict,
             # while a newly-nonzero still follows (k <= eob) —
             # otherwise the run folds into the EOB
             while run > 15 and k <= eob:
-                c, ln = ac_codes[0xF0]
-                bw.write(c, ln)
+                bw.write(*ac_codes[0xF0])
                 for bit in pending:
                     bw.write(bit, 1)
                 pending = []
@@ -1251,16 +1036,14 @@ def _emit_ac_refine_scan(bw: _BitWriter, zz: np.ndarray, ac_codes: dict,
             if t > 1:                    # history: correction bit
                 pending.append(t & 1)
                 continue
-            c, ln = ac_codes[(run << 4) | 1]
-            bw.write(c, ln)
-            bw.write(1 if band[k] > 0 else 0, 1)
+            bw.write(*ac_codes[(run << 4) | 1])
+            bw.write(0 if neg[k] else 1, 1)
             for bit in pending:
                 bw.write(bit, 1)
             pending = []
             run = 0
         if run > 0 or pending:           # EOB (EOBRUN=1) + flush
-            c, ln = ac_codes[0x00]
-            bw.write(c, ln)
+            bw.write(*ac_codes[0x00])
             for bit in pending:
                 bw.write(bit, 1)
 
@@ -1279,57 +1062,6 @@ SA_SCRIPT = (
     ("ac", 1, 63, 1, 0),
 )
 
-
-def encode_jpeg_progressive_sa_gray(pixels: np.ndarray) -> bytes:
-    """Progressive grayscale JPEG with SUCCESSIVE APPROXIMATION (T.81
-    G.1.2.2/G.1.2.3), libjpeg's standard 6-scan script (SA_SCRIPT).
-
-    First scans send point-transformed coefficients (DC: arithmetic
-    shift; AC: magnitude shift, sign reapplied); refinement scans send
-    one bit per already-nonzero coefficient (buffered and flushed after
-    the next emitted symbol, exactly the spec's correction-bit order)
-    and code newly-nonzero coefficients as size-1 symbols with a raw
-    sign bit. Every scan reorganizes the SAME quantized coefficients,
-    so the full decode equals the baseline round trip EXACTLY."""
-    px = np.asarray(pixels, dtype=np.uint8)
-    h, w = px.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    padded = np.pad(px, ((0, ph - h), (0, pw - w)), mode="edge")
-    blocks = (padded.astype(np.float64) - 128.0).reshape(
-        ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-    coefs = np.round((_DCT @ blocks @ _DCT.T) / QTABLE).astype(np.int64)
-    zz = coefs.reshape(-1, 64)[:, ZIGZAG]
-    dc_codes = _canonical_codes(DC_BITS, DC_VALS)
-    ac_codes = _canonical_codes(AC_BITS, AC_VALS)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    scans = []
-    for kind, ss, se, ah, al in SA_SCRIPT:
-        bw = _BitWriter()
-        if kind == "dc" and ah == 0:
-            _emit_dc_first_scan(bw, [zz], [dc_codes], al)
-        elif kind == "dc":
-            _emit_dc_refine_scan(bw, [zz], al)
-        elif ah == 0:
-            _emit_ac_first_scan(bw, zz, ac_codes, ss, se, al)
-        else:
-            _emit_ac_refine_scan(bw, zz, ac_codes, ss, se, al)
-        scans.append((ss, se, ah, al, bw.flush()))
-
-    qzl = QTABLE.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    out = b"\xff\xd8" + seg(0xFFDB, b"\x00" + qzl)
-    out += seg(0xFFC2, struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00")
-    out += (seg(0xFFC4, b"\x00" + bytes(DC_BITS) + bytes(DC_VALS))
-            + seg(0xFFC4, b"\x10" + bytes(AC_BITS) + bytes(AC_VALS)))
-    for ss, se, ah, al, scan in scans:
-        out += seg(0xFFDA, b"\x01\x01" + (b"\x00" if ss == 0 else b"\x10")
-                   + struct.pack(">BBB", ss, se, (ah << 4) | al))
-        out += scan
-    return out + b"\xff\xd9"
-
-
 # libjpeg's standard progressive script for 3 components
 # (jcparam.c jpeg_simple_progression): interleaved-DC MSBs, coarse Y AC
 # band, full chroma AC, Y AC tail, one refinement per bit plane.
@@ -1347,33 +1079,27 @@ SA_SCRIPT_COLOR = (
 )
 
 
-def _encode_jpeg_progressive_ycc(planes, samps, h, w) -> bytes:
-    """Shared SOF2 color encoder core: per-component level-shifted YCC
-    planes at their TRUE sample dims -> libjpeg's 10-scan script
-    (SA_SCRIPT_COLOR). Interleaved DC scans walk the MCU grid with
-    DUMMY blocks (diff 0 / refinement bit 0) at edges per A.2.4; AC
-    scans walk each component's own raster block grid."""
+def _encode_progressive(planes: list[np.ndarray],
+                        samps: list[tuple[int, int]], h: int, w: int,
+                        script) -> bytes:
+    """Progressive (SOF2) JPEG of level-shifted component planes at their
+    TRUE sample dims, one scan per `script` entry (kind, comps, Ss, Se,
+    Ah, Al). Each component is coded over its own raster block grid;
+    interleaved DC scans walk the MCU grid with DUMMY blocks (diff 0 /
+    refinement bit 0) at its edges per A.2.4, AC scans are
+    single-component (B.2.3). First scans send point-transformed values
+    (DC: arithmetic shift; AC: magnitude shift, sign reapplied, EOBRUN =
+    1 per band-empty block); refinement scans follow T.81 G.1.2.3. Every
+    scan reorganizes the SAME quantized coefficients as the baseline
+    encoders, so the full decode equals the baseline round trip EXACTLY.
+    """
     hmax = max(sx for sx, _ in samps)
     vmax = max(sy for _, sy in samps)
     zzs, grids = [], []
-    for ci, (pl, qt) in enumerate(zip(planes,
-                                      (QTABLE, QTABLE_C, QTABLE_C))):
-        ch, cw = pl.shape
-        bh, bw_ = -(-ch // 8), -(-cw // 8)
-        grids.append((bh, bw_))
-        pad = np.pad(pl, ((0, bh * 8 - ch), (0, bw_ * 8 - cw)),
-                     mode="edge")
-        blocks = pad.reshape(bh, 8, bw_, 8).transpose(0, 2, 1, 3)\
-                    .reshape(-1, 8, 8)
-        coefs = np.round((_DCT @ blocks @ _DCT.T) / qt).astype(np.int64)
-        zzs.append(coefs.reshape(-1, 64)[:, ZIGZAG])
+    for c, pl in enumerate(planes):
+        grids.append((-(-pl.shape[0] // 8), -(-pl.shape[1] // 8)))
+        zzs.append(_zigzag_coefs(pl, *grids[c], QTABLE_C if c else QTABLE))
     mcu_rows, mcu_cols = -(-h // (8 * vmax)), -(-w // (8 * hmax))
-    dc_codes = [_canonical_codes(DC_BITS, DC_VALS),
-                _canonical_codes(DC_BITS_C, DC_VALS_C),
-                _canonical_codes(DC_BITS_C, DC_VALS_C)]
-    ac_codes = [_canonical_codes(AC_BITS, AC_VALS),
-                _canonical_codes(AC_BITS_C, AC_VALS_C),
-                _canonical_codes(AC_BITS_C, AC_VALS_C)]
 
     def dc_positions(comps):
         for my in range(mcu_rows):
@@ -1387,114 +1113,76 @@ def _encode_jpeg_progressive_ycc(planes, samps, h, w) -> bytes:
                             yield ci, (r * bw_ + col
                                        if r < bh and col < bw_ else -1)
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    scans = []
-    for kind, comps, ss, se, ah, al in SA_SCRIPT_COLOR:
+    out = _frame_header(0xFFC2, h, w, samps)
+    for kind, comps, ss, se, ah, al in script:
         bw = _BitWriter()
-        if kind == "dc" and ah == 0:
+        if kind == "dc":
+            dcs = [(zzs[c][:, 0] >> al).tolist() for c in comps]
             prevs = [0] * len(comps)
             for ci, b in dc_positions(comps):
-                # dummy blocks code diff 0 (predictor unchanged)
-                v = (int(zzs[comps[ci]][b, 0]) >> al) if b >= 0 \
-                    else prevs[ci]
+                if ah:                 # refinement: bit Al, 0 for a dummy
+                    bw.write(dcs[ci][b] & 1 if b >= 0 else 0, 1)
+                    continue
+                # a dummy block codes diff 0 (predictor unchanged)
+                v = dcs[ci][b] if b >= 0 else prevs[ci]
                 diff = v - prevs[ci]
                 prevs[ci] = v
-                s_ = _csize(diff)
-                c_, ln = dc_codes[comps[ci]][s_]
-                bw.write(c_, ln)
-                if s_:
-                    bw.write(diff if diff > 0 else diff + (1 << s_) - 1,
-                             s_)
-        elif kind == "dc":
-            for ci, b in dc_positions(comps):
-                bw.write((int(zzs[comps[ci]][b, 0]) >> al) & 1
-                         if b >= 0 else 0, 1)
+                s = _csize(diff)
+                _put(bw, _CODES[min(comps[ci], 1)][0], s, diff, s)
         elif ah == 0:
-            _emit_ac_first_scan(bw, zzs[comps[0]], ac_codes[comps[0]],
-                                ss, se, al)
+            band = zzs[comps[0]][:, ss:se + 1]
+            ac_codes = _CODES[min(comps[0], 1)][1]
+            for vals in (np.sign(band) * (np.abs(band) >> al)).tolist():
+                _emit_ac(bw, vals, ac_codes)
         else:
-            _emit_ac_refine_scan(bw, zzs[comps[0]], ac_codes[comps[0]],
-                                 ss, se, al)
-        scans.append((comps, ss, se, ah, al, bw.flush()))
-
-    qzl = QTABLE.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    qzc = QTABLE_C.reshape(64)[ZIGZAG].astype(np.uint8).tobytes()
-    out = (b"\xff\xd8" + seg(0xFFDB, b"\x00" + qzl)
-           + seg(0xFFDB, b"\x01" + qzc))
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    for c, (hc, vc) in enumerate(samps):
-        sof += bytes([c + 1, (hc << 4) | vc, 0 if c == 0 else 1])
-    out += seg(0xFFC2, sof)
-    out += (seg(0xFFC4, b"\x00" + bytes(DC_BITS) + bytes(DC_VALS))
-            + seg(0xFFC4, b"\x10" + bytes(AC_BITS) + bytes(AC_VALS))
-            + seg(0xFFC4, b"\x01" + bytes(DC_BITS_C) + bytes(DC_VALS_C))
-            + seg(0xFFC4, b"\x11" + bytes(AC_BITS_C) + bytes(AC_VALS_C)))
-    for comps, ss, se, ah, al, scan in scans:
-        hdr = bytes([len(comps)])
-        for c in comps:
-            hdr += bytes([c + 1, (0 if c == 0 else 0x11)])
-        hdr += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xFFDA, hdr) + scan
+            _emit_ac_refine_scan(bw, zzs[comps[0]],
+                                 _CODES[min(comps[0], 1)][1], ss, se, al)
+        # chroma uses table set 1; a grayscale AC scan names DC table 1,
+        # which an AC scan never reads
+        td_ta0 = 0x10 if ss and len(samps) == 1 else 0
+        sels = [(c + 1, 0x11 if c else td_ta0) for c in comps]
+        out += _sos(sels, ss, se, (ah << 4) | al) + bw.flush()
     return out + b"\xff\xd9"
 
 
-def _ycc_planes(rgb: np.ndarray, fx: int, fy: int):
-    """Level-shifted Y + box-downsampled chroma planes for a layout with
-    chroma factors (fx, fy). The image is edge-padded to full MCU
-    multiples BEFORE downsampling — the same edge content the baseline
-    encoders use — so the chroma edge blocks carry identical samples
-    and progressive-subsampled decode equals baseline-subsampled decode
-    bit for bit. The resulting chroma dims are exactly the raster block
-    grid (ceil(ceil(w/fx)/8)*8 == ceil(w/(8*fx))*8)."""
-    rgb = np.asarray(rgb, dtype=np.uint8)
-    h, w, _ = rgb.shape
-    mh, mw = 8 * fy, 8 * fx                    # MCU dims for these layouts
-    ph, pw = -(-h // mh) * mh, -(-w // mw) * mw
-    ycc = rgb_to_ycbcr(np.pad(rgb, ((0, ph - h), (0, pw - w), (0, 0)),
-                              mode="edge")) - 128.0
-    planes = [ycc[:h, :w, 0]]
-    for c in (1, 2):
-        acc = np.zeros((ph // fy, pw // fx))
-        for dy in range(fy):
-            for dx in range(fx):
-                acc += ycc[dy::fy, dx::fx, c]
-        planes.append(acc / (fx * fy))
-    return planes, h, w
+def encode_jpeg_progressive_gray(pixels: np.ndarray) -> bytes:
+    """Spectral-selection progressive grayscale JPEG: SOF2 + three scans
+    (DC coefficients; AC 1-5; AC 6-63), band-empty blocks coded as single
+    EOBs (EOBRUN=1) so the decoder's EOBRUN path is exercised."""
+    script = [("dc", (0,), 0, 0, 0, 0)] + [
+        ("ac", (0,), ss, se, 0, 0) for ss, se in PROG_BANDS]
+    return _encode_progressive(*_gray_plane(pixels), script)
+
+
+def encode_jpeg_progressive_sa_gray(pixels: np.ndarray) -> bytes:
+    """Progressive grayscale JPEG with SUCCESSIVE APPROXIMATION (T.81
+    G.1.2.2/G.1.2.3), libjpeg's standard 6-scan script (SA_SCRIPT)."""
+    script = [(kind, (0,), *rest) for kind, *rest in SA_SCRIPT]
+    return _encode_progressive(*_gray_plane(pixels), script)
 
 
 def encode_jpeg_progressive_color(rgb: np.ndarray) -> bytes:
     """Progressive (SOF2) 4:4:4 COLOR JPEG — libjpeg's standard 10-scan
-    script: interleaved 3-component DC scans, single-component AC band
-    scans (B.2.3), successive approximation in both. Same quantized
-    coefficients as encode_jpeg_color, so decode equals the baseline
-    color round trip EXACTLY."""
-    planes, h, w = _ycc_planes(rgb, 1, 1)
-    return _encode_jpeg_progressive_ycc(planes, [(1, 1)] * 3, h, w)
+    script (SA_SCRIPT_COLOR): interleaved 3-component DC scans,
+    single-component AC band scans, successive approximation in both."""
+    return _encode_progressive(*_ycc_planes(rgb, 1, 1), SA_SCRIPT_COLOR)
 
 
 def encode_jpeg_progressive_420(rgb: np.ndarray) -> bytes:
     """Progressive 4:2:0 — what `cjpeg -progressive` emits for a web
     photo: SOF2 + chroma subsampling + interleaved-DC dummy blocks at
     MCU edges + per-component AC raster scans."""
-    planes, h, w = _ycc_planes(rgb, 2, 2)
-    return _encode_jpeg_progressive_ycc(
-        planes, [(2, 2), (1, 1), (1, 1)], h, w)
+    return _encode_progressive(*_ycc_planes(rgb, 2, 2), SA_SCRIPT_COLOR)
 
 
 def encode_jpeg_progressive_422(rgb: np.ndarray) -> bytes:
     """Progressive 4:2:2 (broadcast layout)."""
-    planes, h, w = _ycc_planes(rgb, 2, 1)
-    return _encode_jpeg_progressive_ycc(
-        planes, [(2, 1), (1, 1), (1, 1)], h, w)
+    return _encode_progressive(*_ycc_planes(rgb, 2, 1), SA_SCRIPT_COLOR)
 
 
 def encode_jpeg_progressive_411(rgb: np.ndarray) -> bytes:
     """Progressive 4:1:1 (DV layout)."""
-    planes, h, w = _ycc_planes(rgb, 4, 1)
-    return _encode_jpeg_progressive_ycc(
-        planes, [(4, 1), (1, 1), (1, 1)], h, w)
+    return _encode_progressive(*_ycc_planes(rgb, 4, 1), SA_SCRIPT_COLOR)
 
 
 def _decode_progressive_coefs(buf: bytes):
@@ -1533,15 +1221,8 @@ def _decode_progressive_coefs(buf: bytes):
             (ln,) = struct.unpack_from(">H", buf, i + 2)
             payload = buf[i + 4:i + 2 + ln]
             if marker == 0xFFDB:
-                j = 0
-                while j < len(payload):
-                    if payload[j] & 0xF0:
-                        return None
-                    t = np.zeros(64, dtype=np.int64)
-                    t[ZIGZAG] = np.frombuffer(
-                        payload[j + 1:j + 65], dtype=np.uint8)
-                    qts[payload[j] & 0x0F] = t.reshape(8, 8)
-                    j += 65
+                if not _read_dqt(payload, qts):
+                    return None
             elif marker == 0xFFC2:
                 prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
                 if prec != 8 or nc not in (1, 3):

@@ -279,7 +279,12 @@ def run_click_purchase_join_stream(spark: SparkSession, events_path: str,
             raise TimeoutError(
                 f"click/purchase join replay did not finish in "
                 f"{timeout_sec}s")
-    return (spark.read.parquet(f"{out_dir}/batch=*")
+    # an explicit directory list, not a `batch=*` glob: Spark's
+    # FileStreamSink metadata probe takes a glob as a literal path and
+    # logs a FileNotFoundException stack trace on every read
+    batch_dirs = sorted(d for d in os.listdir(out_dir)
+                        if d.startswith("batch="))
+    return (spark.read.parquet(*(f"{out_dir}/{d}" for d in batch_dirs))
             .select(F.col("c_user").alias("user_id"), "click_id",
                     F.unix_micros(F.col("click_ts").cast("timestamp"))
                     .alias("click_us"),

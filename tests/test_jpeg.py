@@ -145,6 +145,35 @@ def test_quant_table_survives_the_file():
     assert (dec == ref).all()
 
 
+def test_exact_dct_equals_the_plain_loop():
+    """_fdct/_idct sum each 8-term product in ascending k from the k = 0
+    product. CPython float arithmetic is one IEEE multiply and one add
+    per term, so a plain loop in that order is an exact reference that
+    no BLAS kernel enters. The sparse batch has coefficient rows and
+    columns that are zero in every block, which the transform skips."""
+    from cld2_spark.operators.jpeg import _DCT, _fdct, _idct
+
+    def dot(a, b, i, j):
+        acc = a[i][0] * b[0][j]
+        for k in range(1, 8):      # not sum(): 3.12+ compensates floats
+            acc += a[i][k] * b[k][j]
+        return acc
+
+    def loop(left, x, right):
+        def mm(a, b):
+            return [[dot(a, b, i, j) for j in range(8)] for i in range(8)]
+        return [mm(mm(left.tolist(), b), right.tolist()) for b in x.tolist()]
+
+    rng = np.random.default_rng(5)
+    px = rng.integers(0, 256, (6, 8, 8)) - 128.0
+    px[0] = 1.0                     # a flat block: DC-only coefficients
+    coefs = (rng.integers(-40, 40, (6, 8, 8)) * QTABLE).astype(np.float64)
+    coefs[:, 3:, :] = 0
+    coefs[:, :, 5:] = 0
+    assert _fdct(px).tolist() == loop(_DCT, px, _DCT.T)
+    assert _idct(coefs).tolist() == loop(_DCT.T, coefs, _DCT)
+
+
 def test_color_roundtrip_error_bounded():
     from cld2_spark.operators.jpeg import (color_fixture_pixels,
                                            decode_jpeg_color,
