@@ -55,20 +55,16 @@ def kernel_slices(texts: list[str]) -> Iterator[slice]:
         lo, base = hi, int(end[hi - 1])
 
 
-def analyze_batch(texts: list[str], model: Cld2sModel | None = None,
-                  is_plain_text: bool = True) -> dict[str, np.ndarray]:
+def analyze_batch(texts: list[str],
+                  model: Cld2sModel | None = None) -> dict[str, np.ndarray]:
     if model is None:
         from .model import default_model
         model = default_model()
-    if not is_plain_text:
-        # S3/S4 pre-pass: tag strip + FULL verbatim entity table (html.py)
-        from .html import html_to_text_batch
-        texts = html_to_text_batch(texts)
     nb = T.normalize_batch(texts)
     # the slice's gram stream, built once: pass 1 scores it, the rescue a
     # row selection of it, and the cross-check reads its compressed stream
     stream = GramStream.build(nb, model)
-    out = detect_batch(texts, model, nb=nb, stream=stream)
+    out = detect_batch(texts, model, stream=stream)
     # bestEffort rescue for short refused/unreliable rows: the answer
     # fields adopt the bestEffort guess, is_reliable stays False (the
     # honest flag: it IS a guess), and `be_ok` tells the decision stage
@@ -79,8 +75,8 @@ def analyze_batch(texts: list[str], model: Cld2sModel | None = None,
     out["be_ok"] = np.zeros(nb.n, dtype=bool)
     if short.any():
         rows = np.flatnonzero(short)
-        be = detect_batch([texts[i] for i in rows.tolist()], model,
-                          best_effort=True, stream=stream.select(rows))
+        be = detect_batch(None, model, best_effort=True,
+                          stream=stream.select(rows))
         ok = (be["summary_lang"] != "un") & be["is_reliable"]
         ridx = rows[ok]
         out["summary_lang"][ridx] = be["summary_lang"][ok]

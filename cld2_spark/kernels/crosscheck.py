@@ -55,21 +55,17 @@ def char_trigrams(arr: np.ndarray, rid_s: np.ndarray,
 
 
 def crosscheck_batch(texts: list[str], model: Cld2sModel | None = None,
-                     nb: T.NormBatch | None = None,
                      stream: GramStream | None = None) -> dict[str, np.ndarray]:
     """Returns per-row: ft_lang (code), ft_score (int), ppl (float), n_grams.
 
-    `nb` (normalize_batch of `texts`) or the detector's `stream` over it
-    skips normalizing here; a built stream's compressed stream and buffer
-    are used as they are when they cover exactly the batch's scripts."""
+    The detector's `stream` over normalize_batch of `texts` skips
+    normalizing here; a built stream's compressed stream and buffer are
+    used as they are when they cover exactly the batch's scripts."""
     if model is None:
         from .model import default_model
         model = default_model()
     tri = model.tri
-    if stream is not None:
-        nb = stream.nb
-    elif nb is None:
-        nb = T.normalize_batch(texts)
+    nb = T.normalize_batch(texts) if stream is None else stream.nb
     n = nb.n
     L = len(model.langs)
 

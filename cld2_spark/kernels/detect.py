@@ -403,8 +403,8 @@ def _pad_slots(langs: np.ndarray, qprobs: np.ndarray, width: int):
 
 
 def _score_hits(g_rid, langs3, qprobs3, gram_bytes, chunk_size, n_rows, n_langs, acc,
-                hint_lid=None, whack_map=None, closeset=None,
-                gpos=None, span_sink=None, distinct_mask=None, seg_rid=None):
+                *, seg_rid, hint_lid=None, whack_map=None, closeset=None,
+                gpos=None, span_sink=None, distinct_mask=None):
     """Chunked scatter-add scoring: the Tote/DocTote pipeline (A1-A3).
 
     g_rid must be sorted ascending. Chunk winner takes the chunk's byte span;
@@ -425,24 +425,21 @@ def _score_hits(g_rid, langs3, qprobs3, gram_bytes, chunk_size, n_rows, n_langs,
     -- persists across scriptspans of a document, compact_lang_det_impl.cc
     :1768 "carries state across scriptspans", so it resets per row here).
     A distinct hit therefore counts twice in its own chunk (once linear,
-    once from the ring), exactly like the reference. `seg_rid` (when
-    given) supplies the CHUNKING identity -- one id per contiguous
-    (row, script) run, ascending -- so a single call can score several
-    scripts' interleaved hit streams with per-run chunks (the reference's
-    per-scriptspan chunking) while the ring persists across runs of a
-    row: the reference's ONE "othr" ring bank shared across all
-    non-Latin scripts of a document (scoreonescriptspan.h:124-147).
-    Without seg_rid, chunking is per row (single-script streams:
-    identical semantics).
+    once from the ring), exactly like the reference. `seg_rid` supplies
+    the CHUNKING identity -- one id per contiguous (row, script) run,
+    ascending -- so a single call can score several scripts' interleaved
+    hit streams with per-run chunks (the reference's per-scriptspan
+    chunking) while the ring persists across runs of a row: the
+    reference's ONE "othr" ring bank shared across all non-Latin scripts
+    of a document (scoreonescriptspan.h:124-147). A single-script stream
+    passes its row ids (one run per row). `acc` is any 3-sequence of
+    (n_rows, n_langs) byte/score/reliability totals.
     """
     bytes_rl, score_rl, relw_rl = acc
     N = len(g_rid)
     if N == 0:
         return
-    if seg_rid is None:
-        key, n_keys = g_rid, n_rows
-    else:
-        key, n_keys = seg_rid, int(seg_rid[-1]) + 1
+    key, n_keys = seg_rid, int(seg_rid[-1]) + 1
     cnt_all = np.bincount(key, minlength=n_keys).astype(np.int32)  # hits per key
     present = cnt_all > 0
     firsts = np.zeros(n_keys, dtype=np.int32)
@@ -483,19 +480,15 @@ def _score_hits(g_rid, langs3, qprobs3, gram_bytes, chunk_size, n_rows, n_langs,
     s1 = np.empty(n_chunks, dtype=np.int32)
     s2 = np.empty(n_chunks, dtype=np.int32)
     cr = np.repeat(np.flatnonzero(present), chunks_row[present])  # chunk -> key
-    if seg_rid is None:
-        crow = cr                              # chunk -> row (same space)
-    else:
-        key_row = np.zeros(n_keys, dtype=np.int64)
-        key_row[key] = g_rid                   # each run belongs to one row
-        crow = key_row[cr]
+    # chunk -> row: each run belongs to one row, its first hit's
+    crow = g_rid[np.minimum(firsts, N - 1)][cr].astype(np.int64)
     # byte/gram totals per chunk come from the REAL hit stream only (ring
     # re-adds below carry no bytes and are not counted as grams, matching
     # AddScoreCount which counts base hits only, scoreonescriptspan.cc:232)
     cb = np.bincount(cid, weights=gram_bytes, minlength=n_chunks).astype(np.int32)
     cg = np.bincount(cid, weights=is_byte, minlength=n_chunks).astype(np.int32)
 
-    ring_ext = None  # mask of injected ring hits (excluded from W3/W4 below)
+    lin = slice(None)  # the linear (non-ring) hits, all W3 slides over
     if distinct_mask is not None and distinct_mask.any() and n_chunks:
         # W5 exact: per chunk, re-add the langprobs of the last <=4 distinct
         # hits seen so far in this ROW's stream (the 4-entry ring; persists
@@ -507,13 +500,8 @@ def _score_hits(g_rid, langs3, qprobs3, gram_bytes, chunk_size, n_rows, n_langs,
         hi_c = np.searchsorted(cid, np.arange(1, n_chunks + 1)) - 1
         r_c = cum_d[hi_c]                      # distinct hits through chunk end
         cum_d_ex = np.concatenate((np.zeros(1, dtype=np.int64), cum_d))
-        if seg_rid is None:
-            row_firsts = firsts
-        else:
-            rcnt = np.bincount(g_rid, minlength=n_rows).astype(np.int64)
-            row_firsts = np.zeros(n_rows, dtype=np.int64)
-            np.cumsum(rcnt[:-1], out=row_firsts[1:])
-        d_row0 = cum_d_ex[row_firsts[crow]]    # distinct hits before the row
+        # distinct hits before the chunk's row (g_rid ascends)
+        d_row0 = cum_d_ex[np.searchsorted(g_rid, crow)]
         ex_cid, ex_src = [], []
         for k in range(1, 5):
             j = r_c - k
@@ -531,11 +519,10 @@ def _score_hits(g_rid, langs3, qprobs3, gram_bytes, chunk_size, n_rows, n_langs,
                 [gram_bytes, np.zeros(len(ec), dtype=gram_bytes.dtype)])
             if gpos is not None:
                 gpos = np.concatenate([gpos, np.full(len(ec), -1, dtype=gpos.dtype)])
-            ring_ext = np.zeros(len(cid), dtype=bool)
-            ring_ext[N:] = True
             order = np.argsort(cid, kind="stable")
+            lin = order < N
             cid, langs3, qprobs3 = cid[order], langs3[order], qprobs3[order]
-            gram_bytes, ring_ext = gram_bytes[order], ring_ext[order]
+            gram_bytes = gram_bytes[order]
             if gpos is not None:
                 gpos = gpos[order]
             lang_j = [np.ascontiguousarray(langs3[:, j]) for j in range(n_slots)]
@@ -622,25 +609,18 @@ def _score_hits(g_rid, langs3, qprobs3, gram_bytes, chunk_size, n_rows, n_langs,
     # between the two adjacent chunks (the reference's cs->bytes shift,
     # internal/scoreonescriptspan.cc:836-845) -- so with spans requested
     # the doc percents shift exactly as the reference's do.
-    if span_sink is not None and gpos is not None:
+    if span_sink is not None:
         smin = np.full(n_chunks, np.iinfo(np.int64).max, dtype=np.int64)
         smax = np.full(n_chunks, -1, dtype=np.int64)
         bidx = np.flatnonzero((gram_bytes > 0) & (gpos >= 0))
         if len(bidx):
             np.minimum.at(smin, cid[bidx], gpos[bidx])
             np.maximum.at(smax, cid[bidx], gpos[bidx])
-        if ring_ext is not None:
-            # W3 slides over hitbuffer->linear, which never contains ring
-            # re-adds (they live in ScoringContext, not the hit stream)
-            keep_h = ~ring_ext
-            _sharpen_boundaries(cid[keep_h], cr, win, scored, langs3[keep_h],
-                                qprobs3[keep_h], gram_bytes[keep_h],
-                                gpos[keep_h], closeset, n_chunks, smin, smax,
-                                cb)
-        else:
-            _sharpen_boundaries(cid, cr, win, scored, langs3, qprobs3,
-                                gram_bytes, gpos, closeset, n_chunks, smin,
-                                smax, cb)
+        # W3 slides over hitbuffer->linear, which never contains ring
+        # re-adds (they live in ScoringContext, not the hit stream)
+        _sharpen_boundaries(cid[lin], cr, win, scored, langs3[lin],
+                            qprobs3[lin], gram_bytes[lin], gpos[lin],
+                            closeset, n_chunks, smin, smax, cb)
         span_sink.append((crow[scored], win[scored], smin[scored], smax[scored]))
 
     # flat weighted bincounts instead of 2D np.add.at (same 6-15x win);
@@ -654,8 +634,7 @@ def _score_hits(g_rid, langs3, qprobs3, gram_bytes, chunk_size, n_rows, n_langs,
 
 
 def _sharpen_boundaries(cid, cr, win, scored, langs3, qprobs3, gram_bytes,
-                        gpos, closeset, n_chunks, smin, smax,
-                        cb=None) -> None:
+                        gpos, closeset, n_chunks, smin, smax, cb) -> None:
     """W3 boundary sharpening (SharpenBoundaries / BetterBoundary,
     internal/scoreonescriptspan.cc:780-845,671-774): at each chunk boundary
     where the winner changed (and the two winners are not in the same close
@@ -666,9 +645,9 @@ def _sharpen_boundaries(cid, cr, win, scored, langs3, qprobs3, gram_bytes,
     positive and a negative diff required in the window -- the reference's
     has_plus/has_minus guard). Runs only when a chunk vector is requested,
     like the reference (`if (vec != NULL)` in ProcessHitBuffer:1095-1103).
-    When `cb` is given, the chunk byte counts feeding the doc tote move
-    with the boundary (cs->bytes -= new_offset - old_offset; prior chunk
-    += same, scoreonescriptspan.cc:836-845) in gram-byte units -- so a
+    The chunk byte counts `cb` feeding the doc tote move with the
+    boundary (cs->bytes -= new_offset - old_offset; prior chunk += same,
+    scoreonescriptspan.cc:836-845) in gram-byte units -- so a
     spans-requested run's percents shift exactly like the reference's,
     while detection without spans stays unchanged by construction."""
     if n_chunks < 2:
@@ -712,19 +691,18 @@ def _sharpen_boundaries(cid, cr, win, scored, langs3, qprobs3, gram_bytes,
         if r.max() <= 0:
             continue  # keep the original boundary
         b = lo + int(np.argmax(r)) + 4
-        if cb is not None:
-            # byte shift (reference :836-845): bytes between the old
-            # boundary (first hit of chunk c) and the new one move between
-            # the two chunks; rightward move credits the prior chunk
-            old = int(starts[c])
-            if b > old:
-                moved = int(gram_bytes[old:b].sum())
-                cb[c] -= moved
-                cb[c - 1] += moved
-            elif b < old:
-                moved = int(gram_bytes[b:old].sum())
-                cb[c] += moved
-                cb[c - 1] -= moved
+        # byte shift (reference :836-845): bytes between the old boundary
+        # (first hit of chunk c) and the new one move between the two
+        # chunks; rightward move credits the prior chunk
+        old = int(starts[c])
+        if b > old:
+            moved = int(gram_bytes[old:b].sum())
+            cb[c] -= moved
+            cb[c - 1] += moved
+        elif b < old:
+            moved = int(gram_bytes[b:old].sum())
+            cb[c] += moved
+            cb[c - 1] -= moved
         starts_u[c] = b
         gsl = gpos[sl]
         vb = (gram_bytes[sl] > 0) & (gsl >= 0)
@@ -734,98 +712,66 @@ def _sharpen_boundaries(cid, cr, win, scored, langs3, qprobs3, gram_bytes,
             smin[c] = gsl[b - lo:][right].min()
 
 
-def _merge_hits(hits: list[tuple]) -> tuple:
-    """Concatenate hit streams (row, pos, langs, qprobs, gram_bytes,
-    distinct mask or None) into one, slot-padded and ordered by (row,
-    pos); the stable sort keeps earlier streams first at equal keys."""
-    width = max(x[2].shape[1] for x in hits)
-    padded = [_pad_slots(x[2], x[3], width) for x in hits]
-    rid = np.concatenate([x[0] for x in hits])
-    pos = np.concatenate([x[1] for x in hits])
-    order = np.lexsort((pos, rid))
-    dmask = np.concatenate([x[5] if x[5] is not None
-                            else np.zeros(len(x[0]), dtype=bool)
-                            for x in hits])[order]
-    return (rid[order], pos[order],
-            np.concatenate([p[0] for p in padded])[order],
-            np.concatenate([p[1] for p in padded])[order],
-            np.concatenate([x[4] for x in hits])[order],
-            dmask if dmask.any() else None)
+def _seed_hits(hits: list[tuple], gid: int, n_rows: int) -> tuple:
+    """The W2 seed of one script's hits: per row of its gram stream
+    (hits[0]), one qprob-1 hit for the script's default language
+    (DefaultLangProb, internal/scoreonescriptspan.cc:848-851), so sparse
+    or unseen text falls back to the script default, never to lang id 0.
+    It sits at the row's first hit of the script: put first in
+    concatenation order, the stable (row, pos) sort keeps it ahead of
+    that hit, in its script's first chunk of the row."""
+    first = np.full(n_rows, np.iinfo(np.int64).max)
+    for rid, pos, *_ in reversed(hits):   # ends on the gram stream's rows
+        rows, idx = _sorted_unique(rid, return_index=True)
+        first[rows] = np.minimum(first[rows], pos[idx])
+    k = len(rows)
+    return (rows, first[rows], np.full((k, 1), gid, dtype=np.uint8),
+            np.ones((k, 1), dtype=np.uint8), np.zeros(k, dtype=np.int32), None)
 
 
-def _score_ring_bank(streams, orig_s, n_rows, n_langs, acc, hint_lid,
-                     whack_map, closeset, span_sink) -> None:
-    """Score script hit streams that share ONE W5 ring bank.
+def _score_bank(scripts: list[tuple], chunk_size: int, tote: np.ndarray,
+                span_sink: list | None, **kw) -> None:
+    """Score the hits of the scripts that share ONE W5 ring bank: the one
+    caller of _score_hits.
 
-    The reference keeps exactly two distinct-boost rings per document:
-    one for Latin and one shared by every other script
+    `scripts` holds per script (hits, seed language id or None); hits is
+    a list of (row, pos in nb.cp, langs, qprobs, gram bytes, distinct
+    mask or None) tuples, each ordered by (row, pos), the gram stream
+    first. The reference keeps exactly two distinct-boost rings per
+    document: one for Latin and one shared by every other script
     (ScoringContext::distinct_boost_ othr bank,
     internal/scoreonescriptspan.h:124-147) -- so a Greek distinct word's
-    boost persists into a following Cyrillic span until evicted. A single
-    stream (Latin's, or one non-Latin script's) scores with per-row
-    chunks; multiple streams merge in stream position order with
-    per-(row, script-run) chunking (the reference's per-scriptspan chunks)
-    and a per-row ring (the shared bank)."""
-    if not streams:
+    boost persists into a following Cyrillic span until evicted. The
+    merged CJK pass is a bank of its own. All hits merge in (row, pos)
+    order; chunking is per (row, script) run (the reference's
+    per-scriptspan chunks) and the ring per row (the bank)."""
+    if not scripts:
         return
-    if len(streams) == 1:
-        s_rid, s_pos, langs3, qprobs3, s_gb, dmask = streams[0]
-        gpos = None
-        if span_sink is not None:
-            safe = np.clip(s_pos, 0, len(orig_s) - 1)
-            gpos = np.where(s_pos >= 0, orig_s[safe], np.int64(-1))
-        _score_hits(s_rid, langs3, qprobs3, s_gb, QUAD_CHUNK, n_rows,
-                    n_langs, acc, hint_lid=hint_lid, whack_map=whack_map,
-                    closeset=closeset, gpos=gpos,
-                    span_sink=span_sink, distinct_mask=dmask)
-        return
-    width = max(st[2].shape[1] for st in streams)
-    rids, poss, ls, qs, gbs, dms, scr = [], [], [], [], [], [], []
-    for k, (s_rid, s_pos, langs3, qprobs3, s_gb, dmask) in enumerate(streams):
-        s_pos = s_pos.astype(np.int64, copy=True)
-        seeds = s_pos < 0
-        if seeds.any():
-            # a W2 seed must ride with ITS script's first chunk of the
-            # row: give it the row's first real-hit position in this
-            # stream (the stable merge keeps it ahead of that hit)
-            first_pos = np.full(n_rows, -1, dtype=np.int64)
-            real = np.flatnonzero(~seeds)
-            uniq, first = _sorted_unique(s_rid[real], return_index=True)
-            first_pos[uniq] = s_pos[real[first]]
-            s_pos[seeds] = first_pos[s_rid[seeds]]
-        pl, pq = _pad_slots(langs3, qprobs3, width)
-        rids.append(s_rid)
-        poss.append(s_pos)
-        ls.append(pl)
-        qs.append(pq)
-        gbs.append(s_gb)
-        dms.append(dmask if dmask is not None
-                   else np.zeros(len(s_rid), dtype=bool))
-        scr.append(np.full(len(s_rid), k, dtype=np.int16))
-    g_rid = np.concatenate(rids)
-    all_pos = np.concatenate(poss)
-    langs3 = np.concatenate(ls)
-    qprobs3 = np.concatenate(qs)
-    s_gb = np.concatenate(gbs)
-    dmask = np.concatenate(dms)
-    scrs = np.concatenate(scr)
-    order = np.lexsort((all_pos, g_rid))  # stable: seeds stay ahead
-    g_rid, all_pos = g_rid[order], all_pos[order]
-    langs3, qprobs3 = langs3[order], qprobs3[order]
-    s_gb, dmask, scrs = s_gb[order], dmask[order], scrs[order]
-    if not dmask.any():
-        dmask = None
-    change = np.ones(len(g_rid), dtype=bool)
-    change[1:] = (g_rid[1:] != g_rid[:-1]) | (scrs[1:] != scrs[:-1])
-    seg = np.cumsum(change, dtype=np.int64) - 1
-    gpos = None
-    if span_sink is not None:
-        safe = np.clip(all_pos, 0, len(orig_s) - 1)
-        gpos = np.where(all_pos >= 0, orig_s[safe], np.int64(-1))
-    _score_hits(g_rid, langs3, qprobs3, s_gb, QUAD_CHUNK, n_rows, n_langs,
-                acc, hint_lid=hint_lid, whack_map=whack_map,
-                closeset=closeset, gpos=gpos,
-                span_sink=span_sink, distinct_mask=dmask, seg_rid=seg)
+    n_rows = tote.shape[1]
+    hits, scr = [], []
+    for k, (s_hits, seed_gid) in enumerate(scripts):
+        if seed_gid is not None:
+            s_hits = [_seed_hits(s_hits, seed_gid, n_rows), *s_hits]
+        hits += s_hits
+        scr.append(np.full(sum(len(h[0]) for h in s_hits), k, dtype=np.int16))
+    width = max(h[2].shape[1] for h in hits)
+    padded = [_pad_slots(h[2], h[3], width) for h in hits]
+    rid = np.concatenate([h[0] for h in hits])
+    pos = np.concatenate([h[1] for h in hits])
+    # one stable sort by (row, pos): equal keys keep concatenation order
+    order = np.lexsort((pos, rid))
+    rid, scr = rid[order], np.concatenate(scr)[order]
+    run = np.ones(len(rid), dtype=bool)
+    run[1:] = (rid[1:] != rid[:-1]) | (scr[1:] != scr[:-1])
+    langs, qprobs, gb, dmask = (np.concatenate(a)[order] for a in (
+        [p[0] for p in padded], [p[1] for p in padded], [h[4] for h in hits],
+        [np.zeros(len(h[0]), dtype=bool) if h[5] is None else h[5]
+         for h in hits]))
+    gpos = pos[order] if span_sink is not None else None
+    del padded, pos, scr, order   # freed before the scoring peak
+    _score_hits(rid, langs, qprobs, gb, chunk_size, n_rows, tote.shape[2],
+                tote[:3], seg_rid=np.cumsum(run, dtype=np.int32) - 1,
+                gpos=gpos, span_sink=span_sink, distinct_mask=dmask, **kw)
 
 
 @dataclass
@@ -910,9 +856,8 @@ class GramStream:
         return quad_hash_v2(self.buf, self.bs[idx], self.tri3[idx])
 
 
-def detect_batch(texts: list[str], model: Cld2sModel | None = None,
-                 return_raw: bool = False, nb: T.NormBatch | None = None,
-                 hints: list | None = None,
+def detect_batch(texts: list[str] | None, model: Cld2sModel | None = None,
+                 return_raw: bool = False, hints: list | None = None,
                  return_spans: bool = False, best_effort: bool = False,
                  score_as_quads: bool = False, is_plain_text: bool = True,
                  stream: GramStream | None = None) -> dict[str, np.ndarray]:
@@ -933,8 +878,9 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
     suppression (kCLDFlagRepeats semantics) and that result is final
     (kCLDFlagFinish).
 
-    `nb` (normalize_batch of `texts`) or `stream` (GramStream.build over
-    it, with the same score_as_quads) skips that work here.
+    A `stream` (GramStream.build over normalize_batch of `texts`, with the
+    same score_as_quads, or a row selection of one) skips that work here;
+    `texts` is then read only by the HTML pre-pass and may be None.
     """
     if model is None:
         from .model import default_model
@@ -944,11 +890,10 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
         # strip tags, expand the FULL verbatim entity table (html.py)
         from .html import html_to_text_batch
         texts = html_to_text_batch(texts)
-        nb = stream = None
+        stream = None
     if stream is None:
-        stream = GramStream.build(
-            T.normalize_batch(texts) if nb is None else nb, model,
-            score_as_quads)
+        stream = GramStream.build(T.normalize_batch(texts), model,
+                                  score_as_quads)
     # a selection's positions address its built stream, not its own rows
     assert stream.rows is None or not return_spans, "spans need a built stream"
     nb = stream.nb
@@ -1047,12 +992,10 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
     nb = stream.nb
     n = nb.n
     L = len(model.langs)
-    # int32 is safe: every sum is bounded by TEXT_LIMIT (160KB) * 100
-    bytes_rl = np.zeros((n, L), dtype=np.int32)
-    score_rl = np.zeros((n, L), dtype=np.int32)
-    relw_rl = np.zeros((n, L), dtype=np.int32)
-    onebytes_rl = np.zeros((n, L), dtype=np.int32)  # RTypeOne portion (A4)
-    acc = (bytes_rl, score_rl, relw_rl)
+    # the tote: bytes, score, reliability-weighted bytes and the RTypeOne
+    # byte portion (A4) per (row, language); int32 is safe: every sum is
+    # bounded by TEXT_LIMIT (160KB) * 100
+    tote = np.zeros((4, n, L), dtype=np.int32)
 
     closeset = np.zeros(L, dtype=np.int16)
     for si, cs_langs in enumerate(CLOSE_SETS, start=1):
@@ -1091,10 +1034,7 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
         rows = np.flatnonzero(b)
         # A4: score = bytes, reliability 100 (ScoreEntireScriptSpan,
         # internal/scoreonescriptspan.cc:1132-1160)
-        bytes_rl[rows, lid] += b[rows]
-        score_rl[rows, lid] += b[rows]
-        relw_rl[rows, lid] += 100 * b[rows]
-        onebytes_rl[rows, lid] += b[rows]
+        tote[:, rows, lid] += np.array([[1], [1], [100], [1]]) * b[rows]
         if span_sink is not None and len(rows):
             idx = np.flatnonzero(mask)
             smin = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
@@ -1104,9 +1044,18 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
             span_sink.append((rows, np.full(len(rows), lid, dtype=np.int64),
                               smin[rows], smax[rows]))
 
+    # the ring banks, scored in this order by _score_bank: per script its
+    # hit tuples and W2 seed language. Latin's bank is its own
+    # (scoreonescriptspan.h:124-147 keeps latn separate from the shared
+    # othr bank)
+    latn: list[tuple] = []
+    othr: list[tuple] = []
+    banks = [(latn, QUAD_CHUNK), (othr, QUAD_CHUNK)]
+
     # RTypeMany scripts: ONE compressed stream for all groups; grams are
     # dispatched to their script's table by first-char script (replaces
-    # CLD2's per-scriptspan loop with a batched pass)
+    # CLD2's per-scriptspan loop with a batched pass). Hit positions are
+    # mapped to nb.cp (orig_s ascends, so their order is kept).
     if len(stream.g_rid):
         scr_s, orig_s = stream.scr_s, stream.orig_s
         w_rid, wh40, pair40, wpos = (stream.w_rid, stream.wh40,
@@ -1119,7 +1068,7 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
         g_rid, h, gb, pos = (stream.g_rid[kidx], stream.h[kidx],
                              stream.gb[kidx], stream.pos[kidx])
         g_script = scr_s[pos]
-        nl_streams: list[tuple] = []  # non-Latin: shared "othr" ring bank
+        pos = orig_s[pos]
         for s in stream.many:
             m = g_script == s
             if not m.any():
@@ -1142,24 +1091,11 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
                 _, bl3, bq3 = bt.probe(stream.backoff_hash(kidx[m][miss]))
                 langs3[miss] = bl3
                 qprobs3[miss] = np.minimum(bq3, BACKOFF_MAX_QPROB)
-            s_rid = g_rid[m]
             # J5/J6: merge word + word-pair hits into the quad hit
             # stream before chunking (LinearizeAll analogue,
             # internal/scoreonescriptspan.cc:856-975); word hits carry
             # no bytes (delta votes only)
-            hits = [(s_rid, pos[m], langs3, qprobs3, gb[m], None)]
-            # W2 seed: every span contributes one qprob-1 hit for the
-            # script's default language (DefaultLangProb,
-            # internal/scoreonescriptspan.cc:848-851) so sparse/unseen
-            # text falls back to the script default, never to lang id 0
-            seed_gid = model.lang_id.get(ut.DEFAULT_LANG[s] or "")
-            if seed_gid is not None:
-                rows_s = _sorted_unique(s_rid)
-                k = len(rows_s)
-                hits.append((rows_s, np.full(k, -1, dtype=np.int32),
-                             np.full((k, 1), seed_gid, dtype=np.uint8),
-                             np.ones((k, 1), dtype=np.uint8),
-                             np.zeros(k, dtype=np.int32), None))
+            hits = [(g_rid[m], pos[m], langs3, qprobs3, gb[m], None)]
             if model.ref_word_delta is not None and len(w_rid):
                 wm = scr_s[wpos] == s
                 keep_w = repeat_filter(wh40, w_rid) & wm
@@ -1192,7 +1128,6 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
                     # stream ~2x
                     wl, wq = wl[fnd], wq[fnd]
                     rows_w = w_rid[sel][fnd]
-                    wpos_f = wpos[sel][fnd]
                     for j in range(wl.shape[1]):
                         ev = (wq[:, j] > 0) & (wl[:, j] < L)
                         if ev.any():
@@ -1202,16 +1137,10 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
                     # found slot can still decode to all-zero
                     # qprobs and must not evict
                     hitmask = (wq > 0).any(axis=1) if dis else None
-                    hits.append((rows_w, wpos_f, wl, wq, zero, hitmask))
-            if latin:
-                # Latin ring bank is its own (scoreonescriptspan.h:
-                # 124-147 keeps latn separate from the shared othr bank)
-                _score_ring_bank([_merge_hits(hits)], orig_s, n, L, acc,
-                                 hint_lid, whack_map, closeset, span_sink)
-            else:
-                nl_streams.append(_merge_hits(hits))
-        _score_ring_bank(nl_streams, orig_s, n, L, acc, hint_lid,
-                         whack_map, closeset, span_sink)
+                    hits.append((rows_w, orig_s[wpos[sel][fnd]], wl, wq,
+                                 zero, hitmask))
+            (latn if latin else othr).append(
+                (hits, model.lang_id.get(ut.DEFAULT_LANG[s] or "")))
 
     # CJK pass: unigram hits (J3) + adjacent-pair bigram delta hits (J4)
     # merged into one chunk stream: unigrams via the flattened CjkUni DFA,
@@ -1225,8 +1154,8 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
             cps = nb.cp[idx]
             g_rid = nb.rid[idx]
             found, langs3, qprobs3 = model.ref_cjk_uni.probe(cps)
-            streams = [(g_rid, idx.astype(np.int64), langs3, qprobs3,
-                        u8len[idx].astype(np.int32), None)]
+            hits = [(g_rid, idx, langs3, qprobs3,
+                     u8len[idx].astype(np.int32), None)]
             if len(idx) > 1 and model.ref_cjk_bi is not None:
                 adj = (idx[1:] == idx[:-1] + 1) & (g_rid[1:] == g_rid[:-1])
                 if adj.any():
@@ -1238,29 +1167,19 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
                     blen = boff[a + 2] - bstart  # two chars, <= 8 bytes
                     bih = bi_hash_v2(buf, bstart, blen)
                     _, bl3, bq3 = model.ref_cjk_bi.probe_quad(bih, latin=False)
-                    streams.append((g_rid[a], idx[a].astype(np.int64), bl3,
-                                    bq3, np.zeros(len(a), dtype=np.int32),
-                                    None))
-            # W2 seed: default language of merged-CJK (ULScript_Hani) is
-            # JAPANESE (internal/generated_ulscript.cc:480), qprob 1
-            seed_gid = model.lang_id.get("ja")
-            if seed_gid is not None:
-                rows_c = _sorted_unique(g_rid)
-                k = len(rows_c)
-                streams.append((rows_c, np.full(k, -1, dtype=np.int64),
-                                np.full((k, 1), seed_gid, dtype=np.uint8),
-                                np.ones((k, 1), dtype=np.uint8),
-                                np.zeros(k, dtype=np.int32), None))
-            g_rid, cpos, langs3, qprobs3, gb, _ = _merge_hits(streams)
-            _score_hits(g_rid, langs3, qprobs3, gb, UNI_CHUNK, n, L, acc,
-                        hint_lid=hint_lid, whack_map=whack_map,
-                        closeset=closeset,
-                        gpos=cpos if span_sink is not None else None,
-                        span_sink=span_sink)
+                    hits.append((g_rid[a], idx[a], bl3, bq3,
+                                 np.zeros(len(a), dtype=np.int32), None))
+            # the W2 seed of merged CJK (ULScript_Hani) is JAPANESE
+            # (internal/generated_ulscript.cc:480)
+            banks.append(([(hits, model.lang_id.get("ja"))], UNI_CHUNK))
+
+    for scripts, chunk_size in banks:
+        _score_bank(scripts, chunk_size, tote, span_sink, hint_lid=hint_lid,
+                    whack_map=whack_map, closeset=closeset)
 
     if return_raw:
-        return {"bytes_rl": bytes_rl, "score_rl": score_rl, "relw_rl": relw_rl,
-                "onebytes_rl": onebytes_rl}
+        return dict(zip(("bytes_rl", "score_rl", "relw_rl", "onebytes_rl"),
+                        tote))
 
     if hint_lid is not None:
         # a hinted close-set member zeroes its set complement for that row
@@ -1268,13 +1187,10 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
         #  applied as ZeroPSLang internal/scoreonescriptspan.cc:39-42)
         for hid, others in whack_map.items():
             rows = np.flatnonzero((hint_lid[0] == hid).any(axis=1))
-            for mat in (bytes_rl, score_rl, relw_rl, onebytes_rl):
-                mat[np.ix_(rows, others)] = 0
+            tote[:, rows[:, None], others] = 0
 
-    _refine_close_pairs(model, bytes_rl, score_rl, relw_rl, onebytes_rl)
-    out = _extract(nb, model, bytes_rl, score_rl, relw_rl, onebytes_rl, word_ev,
-                   best_effort=best_effort)
-    return out
+    _refine_close_pairs(model, tote)
+    return _extract(nb, model, tote, word_ev, best_effort)
 
 
 def _build_spans(nb, model, sink) -> dict[str, np.ndarray]:
@@ -1338,32 +1254,34 @@ def _build_spans(nb, model, sink) -> dict[str, np.ndarray]:
             "span_lang": lang_arr[langs[g_first]]}
 
 
-def _refine_close_pairs(model, bytes_rl, score_rl, relw_rl, onebytes_rl) -> None:
+def _refine_close_pairs(model, tote) -> None:
     """A8: within each statistically-close set, move every member's totals
-    into the per-row in-set winner (vectorized RefineScoredClosePairs)."""
+    into the per-row in-set winner (vectorized RefineScoredClosePairs).
+    `tote` is _detect_pass's (4, n, L) bytes/score/relw/onebytes array."""
     for langs in CLOSE_SETS:
         ids = [model.lang_id[c] for c in langs if c in model.lang_id]
         if len(ids) < 2:
             continue
         cols = np.array(ids)
-        sub = bytes_rl[:, cols]
+        sub = tote[0][:, cols]
         active = (sub > 0).sum(axis=1) >= 2
         if not active.any():
             continue
         rows = np.flatnonzero(active)
         win = cols[np.argmax(sub[rows], axis=1)]
-        for mat in (bytes_rl, score_rl, relw_rl, onebytes_rl):
-            total = mat[np.ix_(rows, cols)].sum(axis=1)
-            mat[np.ix_(rows, cols)] = 0
-            mat[rows, win] = total
+        total = tote[:, rows[:, None], cols].sum(axis=2)
+        tote[:, rows[:, None], cols] = 0
+        tote[:, rows, win] = total
 
 
-def _remove_unreliable(model, bytes_rl, score_rl, relw_rl, onebytes_rl) -> None:
+def _remove_unreliable(model, tote) -> None:
     """P7: RemoveUnreliableLanguages (internal/compact_lang_det_impl.cc:
     997-1101), vectorized. Unreliable langs (rel% < 41) first try to merge
     into their closest-alt language (kClosestAltLanguage, :252-427; e.g.
     da -> no at 36% correlation), taking the higher of the two reliability
-    percents floored at 41; remaining unreliable langs are deleted."""
+    percents floored at 41; remaining unreliable langs are deleted.
+    `tote` is _detect_pass's (4, n, L) bytes/score/relw/onebytes array."""
+    bytes_rl, relw_rl = tote[0], tote[2]
     # sparse working set: a row carries only a handful of scored languages,
     # so all reliability math runs on the nonzero entries, never on the
     # full (n, L) matrices (bandwidth: the full-matrix form measurably
@@ -1405,23 +1323,14 @@ def _remove_unreliable(model, bytes_rl, score_rl, relw_rl, onebytes_rl) -> None:
             frm = np.where(into_lang, a, langs)
             newpct = np.maximum(np.maximum(rel_l, rel_a),
                                 MIN_RELIABLE_KEEP_PERCENT)
-            newbytes = bytes_rl[rows, langs] + bytes_rl[rows, a]
-            newscore = score_rl[rows, langs] + score_rl[rows, a]
-            newone = onebytes_rl[rows, langs] + onebytes_rl[rows, a]
-            bytes_rl[rows, frm] = 0
-            score_rl[rows, frm] = 0
-            onebytes_rl[rows, frm] = 0
-            relw_rl[rows, frm] = 0
-            bytes_rl[rows, to] = newbytes
-            score_rl[rows, to] = newscore
-            onebytes_rl[rows, to] = newone
-            relw_rl[rows, to] = newpct * newbytes
+            new = tote[:, rows, langs] + tote[:, rows, a]
+            new[2] = newpct * new[0]
+            tote[:, rows, frm] = 0
+            tote[:, rows, to] = new
     b0 = bytes_rl[rows0, langs0]
     relpct0 = relw_rl[rows0, langs0] // np.maximum(b0, 1)
     kill = (b0 > 0) & (relpct0 < MIN_RELIABLE_KEEP_PERCENT)
-    kr, kl = rows0[kill], langs0[kill]
-    for mat in (bytes_rl, score_rl, relw_rl, onebytes_rl):
-        mat[kr, kl] = 0
+    tote[:, rows0[kill], langs0[kill]] = 0
 
 
 def _top3_percent(bytes_rl, tt):
@@ -1456,11 +1365,11 @@ def _top3_percent(bytes_rl, tt):
     return order, b3, p1, p2, p3
 
 
-def _extract(nb, model, bytes_rl, score_rl, relw_rl, onebytes_rl,
-             word_ev=None, best_effort=False) -> dict[str, np.ndarray]:
+def _extract(nb, model, tote, word_ev, best_effort) -> dict[str, np.ndarray]:
     """The reference post-pass (internal/compact_lang_det_impl.cc:1960-2105):
     extract -> convergence test -> RemoveUnreliableLanguages -> re-extract
-    -> CalcSummaryLang, fully vectorized.
+    -> CalcSummaryLang, fully vectorized, over _detect_pass's (4, n, L)
+    bytes/score/relw/onebytes tote.
 
     word_ev (n, L) bool: languages with at least one reference word-table
     hit in the row; gates the boilerplate demotion (see below).
@@ -1469,6 +1378,7 @@ def _extract(nb, model, bytes_rl, score_rl, relw_rl, onebytes_rl,
     skip RemoveUnreliableLanguages (:1998-2000) and skip the
     percent-below-threshold -> UNKNOWN gate in CalcSummaryLang (:1493), so
     short / low-confidence rows return the best guess instead of `un`."""
+    bytes_rl, relw_rl = tote[0], tote[2]
     n, L = bytes_rl.shape
     r = np.arange(n)
     # denominator: pre-removal totals (ExtractLangEtc receives the
@@ -1492,11 +1402,9 @@ def _extract(nb, model, bytes_rl, score_rl, relw_rl, onebytes_rl,
     # (skipped under bestEffort: "if (!FlagBestEffort(flags))
     #  RemoveUnreliableLanguages(...)" internal/compact_lang_det_impl.cc:1998)
     if not best_effort:
-        _remove_unreliable(model, bytes_rl, score_rl, relw_rl, onebytes_rl)
+        _remove_unreliable(model, tote)
     order, b3, p1, p2, p3 = _top3_percent(bytes_rl, tt)
-    s3 = np.stack([score_rl[r, order[:, j]] for j in range(3)], axis=1)
-    w3 = np.stack([relw_rl[r, order[:, j]] for j in range(3)], axis=1)
-    o3 = np.stack([onebytes_rl[r, order[:, j]] for j in range(3)], axis=1)
+    s3, w3, o3 = tote[1:, r[:, None], order]
 
     # per-lang reliability percent = relw / bytes
     bsafe = np.maximum(b3, 1)
@@ -1549,10 +1457,7 @@ def _extract(nb, model, bytes_rl, score_rl, relw_rl, onebytes_rl,
     # so without this gate a fluke chunk winner can steal the document
     # (measured: en->sr on the adwords snippet). Word tables ARE the
     # reference's own, so this uses full-strength evidence.
-    if word_ev is not None:
-        l2_backed = word_ev[r, np.maximum(l2_raw, 0)]
-    else:
-        l2_backed = np.ones(n, dtype=bool)
+    l2_backed = word_ev[r, np.maximum(l2_raw, 0)]
 
     # English-boilerplate demotion: en + big-enough X => X
     cond_en = ((l1_raw == en) & (l2_raw >= 0) & (l2_raw != en)

@@ -119,7 +119,7 @@ def group_stream_with_script(nb: NormBatch, script_ids: np.ndarray):
     text), so a single pass can serve several script groups."""
     if len(nb.cp) == 0:
         e = np.zeros(0, dtype=np.uint32)
-        return e, nb.rid, nb.script, e.astype(np.int64)
+        return e, nb.rid, nb.script, e.astype(np.int32)
     lut = np.zeros(ut.N_SCRIPTS, dtype=bool)
     lut[script_ids] = True
     in_group = nb.letter & lut[nb.script]
@@ -130,7 +130,7 @@ def group_stream_with_script(nb: NormBatch, script_ids: np.ndarray):
     prev_sp[1:] = is_sp[:-1]
     keep = ~(is_sp & prev_sp)
     keep[0] = True
-    orig = np.flatnonzero(keep).astype(np.int64)
+    orig = np.flatnonzero(keep).astype(np.int32)
     return arr[keep], nb.rid[keep], nb.script[keep], orig
 
 

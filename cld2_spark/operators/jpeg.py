@@ -672,7 +672,7 @@ def decode_jpeg_gray(buf: bytes) -> np.ndarray | None:
                 br = _BitReader(segs[row // ri])
                 prev_dc = 0
             prev_dc = _decode_block_zz(br, dc_t, ac_t, prev_dc, Z, row)
-        blocks = _idct_blocks(Z, qt)
+        (blocks,) = _idct_blocks([Z], [qt])
         out = (blocks.reshape(nby, nbx, 8, 8)
                .transpose(0, 2, 1, 3).reshape(ph, pw))
         return np.clip(np.round(out + 128.0), 0, 255).astype(
@@ -681,12 +681,22 @@ def decode_jpeg_gray(buf: bytes) -> np.ndarray | None:
         return None
 
 
-def _idct_blocks(Z: np.ndarray, qt: np.ndarray) -> np.ndarray:
-    """Dezigzag + dequantize + 2-D IDCT for a whole (n, 64) zigzag
-    matrix, batched over all blocks instead of per-block numpy calls."""
-    dense = np.zeros_like(Z)
-    dense[:, ZIGZAG] = Z
-    return _idct(dense.reshape(-1, 8, 8) * qt)
+def _idct_blocks(Zs: list[np.ndarray], qts: list[np.ndarray]
+                 ) -> list[np.ndarray]:
+    """Dezigzag + dequantize each component's (n, 64) zigzag matrix with
+    its table, then ONE 2-D IDCT over the blocks of all components (a
+    small image's IDCT is mostly fixed NumPy overhead per call), split
+    back into one (n, 8, 8) stack per component. Each block's IDCT is
+    independent of its batch (the batch decides only which all-zero
+    coefficient rows _ordered_matmul skips, which changes at most the
+    sign of a zero), so the pixels equal per-component calls."""
+    dense = []
+    for Z, qt in zip(Zs, qts):
+        d = np.zeros_like(Z)
+        d[:, ZIGZAG] = Z
+        dense.append(d.reshape(-1, 8, 8) * qt)
+    blocks = _idct(np.concatenate(dense))
+    return np.split(blocks, np.cumsum([len(Z) for Z in Zs[:-1]]))
 
 
 def gray_fixture_pixels(media_id: int) -> np.ndarray:
@@ -899,9 +909,10 @@ def decode_jpeg_color(buf: bytes) -> np.ndarray | None:
             return None
         br = _BitReader(segs[0])
         # entropy pass fills one (n_blocks, 64) zigzag matrix per
-        # component; dezigzag/dequant/IDCT run BATCHED per component
-        # (_idct_blocks), and the MCU-interleaved block order maps onto
-        # the plane with a pure reshape/transpose — no per-block scatter
+        # component; dezigzag/dequant run per component and the IDCT
+        # once over all of them (_idct_blocks), and the MCU-interleaved
+        # block order maps onto the plane with a pure reshape/transpose —
+        # no per-block scatter
         Zs = [np.zeros((n_mcu * hc * vc, 64), dtype=np.int64)
               for hc, vc in samps]
         prev = [0, 0, 0]
@@ -924,8 +935,8 @@ def decode_jpeg_color(buf: bytes) -> np.ndarray | None:
                 prev[c] = p
                 rows[c] = r
         planes = []
-        for c, (hc, vc) in enumerate(samps):
-            blocks = _idct_blocks(Zs[c], qts[comp_q[c]])
+        all_blocks = _idct_blocks(Zs, [qts[q] for q in comp_q])
+        for blocks, (hc, vc) in zip(all_blocks, samps):
             # block index = ((my*W + mx)*vc + byy)*hc + bxx; plane row
             # my*vc + byy, col mx*hc + bxx -> one transpose
             planes.append(blocks.reshape(H, W, vc, hc, 8, 8)
@@ -1439,11 +1450,11 @@ def _progressive_planes(buf: bytes, want_nc: int):
     hmax = max(sx for sx, _ in samps)
     vmax = max(sy for _, sy in samps)
     planes = []
-    for c, (hc, vc) in enumerate(samps):
+    all_blocks = _idct_blocks(Zs, [qts[q] for q in comp_qs])
+    for blocks, (hc, vc) in zip(all_blocks, samps):
         cw = -(-(w * hc) // hmax)
         ch = -(-(h * vc) // vmax)
         bh, bw_ = -(-ch // 8), -(-cw // 8)
-        blocks = _idct_blocks(Zs[c], qts[comp_qs[c]])
         plane = (blocks.reshape(bh, bw_, 8, 8)
                  .transpose(0, 2, 1, 3).reshape(bh * 8, bw_ * 8))[:ch, :cw]
         if hc < hmax:

@@ -17,11 +17,12 @@ from cld2_spark.kernels.detect import _score_hits
 def _run(g_rid, langs, qprobs, gbytes, dmask, n_rows=1, n_langs=4,
          chunk_size=2):
     acc = tuple(np.zeros((n_rows, n_langs), dtype=np.int32) for _ in range(3))
-    _score_hits(np.asarray(g_rid, dtype=np.int32),
+    g_rid = np.asarray(g_rid, dtype=np.int32)
+    _score_hits(g_rid,
                 np.asarray(langs, dtype=np.uint8).reshape(-1, 1),
                 np.asarray(qprobs, dtype=np.uint8).reshape(-1, 1),
                 np.asarray(gbytes, dtype=np.int32),
-                chunk_size, n_rows, n_langs, acc,
+                chunk_size, n_rows, n_langs, acc, seg_rid=g_rid,
                 distinct_mask=np.asarray(dmask, dtype=bool))
     return acc  # (bytes_rl, score_rl, relw_rl)
 
@@ -85,8 +86,9 @@ def test_no_distinct_mask_matches_mask_of_false():
             np.asarray(langs, dtype=np.uint8).reshape(-1, 1),
             np.asarray(qprob, dtype=np.uint8).reshape(-1, 1),
             np.asarray(gbyte, dtype=np.int32), 2, 1, 4)
-    _score_hits(*args, acc_a, distinct_mask=None)
-    _score_hits(*args, acc_b, distinct_mask=np.zeros(6, dtype=bool))
+    _score_hits(*args, acc_a, seg_rid=args[0], distinct_mask=None)
+    _score_hits(*args, acc_b, seg_rid=args[0],
+                distinct_mask=np.zeros(6, dtype=bool))
     for a, b in zip(acc_a, acc_b):
         np.testing.assert_array_equal(a, b)
 
@@ -204,7 +206,7 @@ def test_seg_rid_fuzz_matches_simulator():
 
 
 def test_mixed_nonlatin_row_end_to_end():
-    """The merged othr-bank path (detect._score_othr_bank): a row mixing
+    """The merged othr-bank path (detect._score_bank): a row mixing
     two non-Latin alphabetic scripts still detects both languages, and the
     result is stable against single-script rows in the same batch."""
     import json
@@ -238,7 +240,8 @@ def test_ring_matches_slow_simulator_fuzz():
         cs = int(rng.choice([2, 3, 4, 5]))  # small sizes exercise runt merge
         acc = tuple(np.zeros((n_rows, 8), dtype=np.int32) for _ in range(3))
         _score_hits(g_rid, langs.reshape(-1, 1), qprob.reshape(-1, 1),
-                    gbyte, cs, n_rows, 8, acc, distinct_mask=dmask)
+                    gbyte, cs, n_rows, 8, acc, seg_rid=g_rid,
+                    distinct_mask=dmask)
         want = _ring_reference_scores(g_rid, langs, qprob, gbyte, dmask,
                                       n_rows, 8, cs)
         np.testing.assert_array_equal(

@@ -159,7 +159,7 @@ def test_crosscheck_stream_reuse():
     for texts in batches:
         nb = T.normalize_batch(texts)
         stream = GramStream.build(nb, m)
-        base = crosscheck_batch(texts, m, nb=nb)
+        base = crosscheck_batch(texts, m)
         reused = crosscheck_batch(texts, m, stream=stream)
         assert list(base["ft_lang"]) == list(reused["ft_lang"])
         assert np.allclose(base["ppl"], reused["ppl"])

@@ -232,8 +232,8 @@ def test_best_effort_rescue_selection_equivalence():
             sel, GramStream.build(T.subset_norm_batch(nb, rows), model))
         sub = [texts[i] for i in rows]
         a = detect_batch(sub, model, best_effort=True, stream=sel)
-        b = detect_batch(sub, model, nb=T.subset_norm_batch(nb, rows),
-                         best_effort=True)
+        fresh = GramStream.build(T.subset_norm_batch(nb, rows), model)
+        b = detect_batch(sub, model, best_effort=True, stream=fresh)
         for k in ("summary_lang", "summary_pct", "rel1", "is_reliable",
                   "lang1", "lang2", "pct1", "pct2"):
             np.testing.assert_array_equal(a[k], b[k], err_msg=k)

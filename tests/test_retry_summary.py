@@ -102,14 +102,12 @@ def test_closest_alt_merge_da_into_no():
     da, no = model.lang_id["da"], model.lang_id["no"]
     assert model.closest_alt[da] == no  # table parsed correctly
     L = len(model.langs)
-    bytes_rl = np.zeros((1, L), dtype=np.int64)
-    score_rl = np.zeros((1, L), dtype=np.int64)
-    relw_rl = np.zeros((1, L), dtype=np.int64)
-    one_rl = np.zeros((1, L), dtype=np.int64)
+    tote = np.zeros((4, 1, L), dtype=np.int64)
+    bytes_rl, score_rl, relw_rl, one_rl = tote
     bytes_rl[0, da], relw_rl[0, da] = 100, 30 * 100   # unreliable da
     bytes_rl[0, no], relw_rl[0, no] = 200, 80 * 200   # reliable no
     score_rl[0, da], score_rl[0, no] = 50, 400
-    _remove_unreliable(model, bytes_rl, score_rl, relw_rl, one_rl)
+    _remove_unreliable(model, tote)
     assert bytes_rl[0, da] == 0                        # merged away
     assert bytes_rl[0, no] == 300                      # bytes combined
     assert relw_rl[0, no] // bytes_rl[0, no] >= MIN_RELIABLE_KEEP_PERCENT
@@ -120,10 +118,10 @@ def test_unreliable_without_alt_is_deleted():
     model = default_model()
     ja = model.lang_id["ja"]                           # closest alt: none
     L = len(model.langs)
-    mats = [np.zeros((1, L), dtype=np.int64) for _ in range(4)]
-    bytes_rl, score_rl, relw_rl, one_rl = mats
+    tote = np.zeros((4, 1, L), dtype=np.int64)
+    bytes_rl, score_rl, relw_rl, one_rl = tote
     bytes_rl[0, ja], relw_rl[0, ja] = 100, 20 * 100    # rel 20% < 41
-    _remove_unreliable(model, bytes_rl, score_rl, relw_rl, one_rl)
+    _remove_unreliable(model, tote)
     assert bytes_rl[0, ja] == 0
 
 
@@ -241,7 +239,7 @@ def test_w3_byte_shift_moves_doc_bytes():
     def run(spans):
         acc = tuple(np.zeros((1, 4), dtype=np.int32) for _ in range(3))
         sink = [] if spans else None
-        _score_hits(g_rid, langs, qprob, gbyte, 8, 1, 4, acc,
+        _score_hits(g_rid, langs, qprob, gbyte, 8, 1, 4, acc, seg_rid=g_rid,
                     gpos=gpos if spans else None, span_sink=sink)
         return acc[0]  # bytes_rl
 

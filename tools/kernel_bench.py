@@ -131,7 +131,7 @@ def row_counts(texts: list[str], model) -> tuple[int, int]:
 
     def counting_detect(texts, model=None, **kw):
         if kw.get("best_effort"):
-            counts["rescue"] += len(texts)
+            counts["rescue"] += kw["stream"].nb.n
         return orig_detect(texts, model, **kw)
 
     D._detect_pass, A.detect_batch = counting_pass, counting_detect

@@ -1,8 +1,10 @@
 """Per-query profiling harness (bench.py stays frozen; guide §1).
 
-For each named query: one warm run, then a timed noop-sink run inside its
-own job group, so its Spark jobs and their stages are attributable, plus
-the `.explain("formatted")` dump. The stages come from Spark's status
+For each named query: one warm run, then a timed noop-sink run whose Spark
+jobs are every job id above the last one seen before it (ids rise
+monotonically per SparkContext, so this also catches a streaming query's
+micro-batches, which run on the stream's thread under its own job group),
+plus the `.explain("formatted")` dump. The stages come from Spark's status
 store (live with the UI off); the slowest one and its task count find
 stages AQE has coalesced into too few tasks for their compute. Prints
 one JSON line per query:
@@ -30,6 +32,12 @@ from bench import BENCH_QUERIES, CPUS, SF_DIR  # noqa: E402
 
 PLAN_DIR = os.environ.get("CLD2S_PROFILE_PLANS", "")
 SUFFIX = os.environ.get("CLD2S_PROFILE_SUFFIX", "before")
+
+
+def job_ids(sc) -> list[int]:
+    """The id of every job in Spark's status store."""
+    jobs = sc._jsc.sc().statusStore().jobsList(None)   # a Scala Seq
+    return [jobs.apply(i).jobId() for i in range(jobs.length())]
 
 
 def stage_record(sc, jobs: list[int]) -> dict:
@@ -77,12 +85,12 @@ def main() -> None:
                         spark._jvm.org.apache.spark.sql.execution
                         .ExplainMode.fromString("formatted"))
                 (out / f"{name}_{SUFFIX}.txt").write_text(plan)
-            sc.setJobGroup(f"q:{name}", name)
+            sc.setJobDescription(f"q:{name}")
+            last = max(job_ids(sc), default=-1)
             t0 = time.monotonic()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             sec = time.monotonic() - t0
-            jobs = sc.statusTracker().getJobIdsForGroup(f"q:{name}")
-            sc.setJobGroup("idle", "idle")
+            jobs = [j for j in job_ids(sc) if j > last]
             release_dedup_caches(session=spark)
             print(json.dumps({"query": name, "sec": round(sec, 3),
                               "n_jobs": len(jobs),
