@@ -58,12 +58,12 @@ from cld2_spark.operators.gif import (encode_gif_fixture,
                                       gif_frame_features)
 from cld2_spark.operators.graph import textrank_keywords, textrank_oracle_sql
 from cld2_spark.operators.jpeg import (
-    color_fixture_pixels, decode_jpeg_progressive_gray, encode_jpeg_411,
-    encode_jpeg_420, encode_jpeg_422, encode_jpeg_color, encode_jpeg_gray,
-    encode_jpeg_progressive_420, encode_jpeg_progressive_color,
-    encode_jpeg_progressive_gray, encode_jpeg_progressive_sa_gray,
-    gray_fixture_pixels, jpeg_color_feature_extract, jpeg_feature_extract,
-    jpeg_gray_features)
+    GRAY_FEATURE_COLS, color_fixture_pixels, decode_jpeg_progressive_gray,
+    encode_jpeg_411, encode_jpeg_420, encode_jpeg_422, encode_jpeg_color,
+    encode_jpeg_gray, encode_jpeg_progressive_420,
+    encode_jpeg_progressive_color, encode_jpeg_progressive_gray,
+    encode_jpeg_progressive_sa_gray, gray_fixture_pixels,
+    jpeg_color_feature_extract, jpeg_feature_extract, jpeg_gray_features)
 from cld2_spark.operators.layout import zorder_stats, zorder_stats_oracle_sql
 from cld2_spark.operators.multimodal import (
     MEDIA_SCHEMA, decode_audio_meta, decode_image_meta, decode_video_meta,
@@ -655,15 +655,11 @@ def _q_jpeg_progressive_features(spark, sf_dir):
                 px = decode_jpeg_progressive_gray(buf)
                 if px is not None:
                     rows.append((int(i),) + jpeg_gray_features(px))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "px_sum", "px_sumsq",
-                "px_min", "px_max", "h0", "h1", "h2", "h3"])
+            yield pd.DataFrame(rows, columns=list(GRAY_FEATURE_COLS))
 
     return (ensure_parallelism(spark.table("documents").select("doc_id"))
-            .mapInPandas(run, "media_id long, width long, height long, "
-                              "px_sum long, px_sumsq long, px_min long, "
-                              "px_max long, h0 long, h1 long, h2 long, "
-                              "h3 long"))
+            .mapInPandas(run, ", ".join(f"{c} long"
+                                        for c in GRAY_FEATURE_COLS)))
 
 
 def _q_jpeg_color_features(spark, sf_dir):

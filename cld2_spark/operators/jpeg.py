@@ -1,35 +1,36 @@
-"""Baseline JPEG (ITU-T T.81) grayscale codec in pure numpy — no image
-library. Closes the JPEG half of the "pixel-level features are stubbed"
-gap the same way the PNG path did (multimodal.decode_png_pixels): the
-container has no codecs, so the repo carries its own spec-conformant
-implementation of the public byte format.
+"""JPEG (ITU-T T.81) codec in pure numpy — no image library: baseline
+(SOF0) and progressive (SOF2), grayscale and YCbCr color. Closes the
+JPEG half of the "pixel-level features are stubbed" gap the same way
+the PNG path did (multimodal.decode_png_pixels): the container has no
+codecs, so the repo carries its own spec-conformant implementation of
+the public byte format.
 
-Scope: baseline DCT (SOF0), 8-bit precision, DRI/RSTn restart
-intervals (encode + decode, baseline gray and color), five profiles:
-single-component grayscale (encode_jpeg_gray/decode_jpeg_gray) and
-3-component YCbCr color at 4:4:4 (encode_jpeg_color), 4:2:0 — the
-camera/web layout, 16x16 MCUs of four Y blocks + box-averaged Cb/Cr
-(encode_jpeg_420) — 4:2:2 — the broadcast/video layout, 16x8 MCUs
-of two Y blocks + horizontally box-averaged Cb/Cr (encode_jpeg_422) —
-and 4:1:1 — the DV/camcorder layout, 32x8 MCUs (encode_jpeg_411).
-decode_jpeg_color handles all four color layouts with ONE
-sampling-factor-general MCU walk (T.81 A.2.3 interleave, replicate
-upsample). PROGRESSIVE (SOF2) is supported in FULL: both profiles —
-spectral selection AND successive approximation (Ah/Al != 0, T.81
-G.1.2.2/G.1.2.3, libjpeg's standard scan scripts incl. AC
-correction-bit refinement) — for grayscale AND multi-component color
-at every baseline sampling layout (4:4:4/4:2:0/4:2:2/4:1:1:
-interleaved DC scans with A.2.4 dummy blocks at MCU edges,
-single-component AC scans over each component's own raster grid per
-B.2.3). Progressive reorganizes the same quantized coefficients, so
-its decode equals the baseline round trip EXACTLY (pinned in pytest
-and by the shared driver oracles). Out of scope (rejected cleanly,
-never misdecoded): arithmetic coding, 12-bit precision, lossless and
-hierarchical modes, progressive restart intervals.
+Scope: 8-bit precision, five sampling layouts — single-component
+grayscale and 3-component YCbCr at 4:4:4, 4:2:0 (the camera/web
+layout, 16x16 MCUs), 4:2:2 (broadcast/video, 16x8 MCUs) and 4:1:1
+(DV/camcorder, 32x8 MCUs) — each baseline (encode_jpeg_gray/_color/
+_420/_422/_411, DRI/RSTn restart intervals for gray and 4:4:4) and
+progressive with spectral selection AND successive approximation
+(encode_jpeg_progressive_*, libjpeg's standard scan scripts, AC
+correction-bit refinement, T.81 G.1.2.2/G.1.2.3). Progressive
+reorganizes the same quantized coefficients, so its decode equals the
+baseline round trip EXACTLY (pinned in pytest and by the shared driver
+oracles). Out of scope (rejected cleanly, never misdecoded): arithmetic
+coding, 12-bit precision, lossless and hierarchical modes, progressive
+restart intervals.
+
+The four public decoders are wrappers of one path (_decode): one marker
+parser (_parse_jpeg) for both frame types, two entropy walks — the
+baseline MCU walk (_baseline_coefs over _decode_segment_zz) and the
+progressive scan walk (_progressive_coefs) — that write each block to
+its row in its component's raster grid, and one plane assembler
+(batched dequantize + IDCT, replicate upsample, clip or YCbCr -> RGB).
+Interleaved scans of either mode walk the MCU grid of _scan_order,
+whose blocks past a component's raster grid are A.2.4 dummies.
 
 Conformance evidence without a reference codec in the container:
 - encoder and decoder are independent directions of the spec sharing
-  only constant tables — the decoder parses DQT/SOF0/DHT from the FILE
+  only constant tables — the decoder parses DQT/SOFn/DHT from the FILE
   (canonical Huffman reconstruction per F.2.2.3), never from the
   encoder's in-memory tables, so a table-emission bug breaks round-trip;
 - the zigzag order is GENERATED from the anti-diagonal walk rather than
@@ -59,6 +60,7 @@ from __future__ import annotations
 import re
 import struct
 from functools import lru_cache
+from typing import NamedTuple
 
 import numpy as np
 
@@ -140,6 +142,9 @@ def _zigzag_order() -> np.ndarray:
 
 
 ZIGZAG = _zigzag_order()
+# the inverse permutation: zz[_DEZIGZAG] is zigzag-ordered zz in natural
+# (row-major) order
+_DEZIGZAG = np.argsort(ZIGZAG)
 
 
 def _dct_matrix() -> np.ndarray:
@@ -240,17 +245,17 @@ _RST_SPLIT = re.compile(b"\xff[\xd0-\xd7]")
 
 
 def _split_restart_segments(scan: bytes, ri: int, n_mcus: int
-                            ) -> list[bytes] | None:
+                            ) -> list[bytes]:
     """Split entropy data at RSTn markers (B.2.1.2). Unambiguous: a real
     0xFF inside entropy data is always stuffed to FF00, so FF D0-D7 can
-    only be a restart marker. Returns None when the segment count does
-    not match ceil(n_mcus / ri) — a malformed stream, not a profile gap.
+    only be a restart marker. Raises ValueError when the segment count
+    does not match ceil(n_mcus / ri) — a malformed stream.
     """
-    segs = _RST_SPLIT.split(scan)
     if ri <= 0:
         return [scan]
+    segs = _RST_SPLIT.split(scan)
     if len(segs) != -(-n_mcus // ri):
-        return None
+        raise ValueError("restart segment count")
     return segs
 
 
@@ -402,33 +407,25 @@ def encode_jpeg_gray(pixels: np.ndarray,
 
 
 class _BitReader:
+    """MSB-first reader over one scan's (or restart segment's) entropy-
+    coded bytes."""
+
     def __init__(self, data: bytes) -> None:
         # un-stuff FF00 -> FF once, up front
-        self.data = data.replace(b"\xff\x00", b"\xff")
+        data = data.replace(b"\xff\x00", b"\xff")
         self.pos = 0    # bit position
-        self.nbits = 8 * len(self.data)
-        # 4 zero pad bytes so the inlined 40-bit window read in
-        # _decode_block_zz never slices short near end-of-stream (the
-        # nbits check still rejects actual over-reads)
-        self.pdata = self.data + b"\x00\x00\x00\x00"
+        self.nbits = 8 * len(data)
+        # 4 zero pad bytes so the 40-bit window read by symbol() and
+        # _decode_segment_zz never slices short near end-of-stream (the
+        # nbits checks still reject actual over-reads)
+        self.data = data + b"\x00\x00\x00\x00"
 
     def read_bit(self) -> int:
-        byte = self.data[self.pos >> 3]
-        bit = (byte >> (7 - (self.pos & 7))) & 1
+        if self.pos >= self.nbits:
+            raise ValueError("bit stream exhausted")
+        bit = (self.data[self.pos >> 3] >> (7 - (self.pos & 7))) & 1
         self.pos += 1
         return bit
-
-    def peek16(self) -> int:
-        """The next 16 bits (zero-padded past end-of-data) WITHOUT
-        consuming them — the Huffman LUT key. A valid final symbol may be
-        shorter than 16 bits; _read_symbol checks the consumed length
-        against nbits so zero-padding can never fabricate data."""
-        bp = self.pos >> 3
-        chunk = self.data[bp:bp + 4]
-        if len(chunk) < 4:
-            chunk = chunk + b"\x00" * (4 - len(chunk))
-        v = int.from_bytes(chunk, "big")
-        return (v >> (16 - (self.pos & 7))) & 0xFFFF
 
     def read_bits(self, n: int) -> int:
         if n == 0:
@@ -442,52 +439,53 @@ class _BitReader:
         self.pos += n
         return (v >> (8 * need - off - n)) & ((1 << n) - 1)
 
-
-class _HuffTable:
-    """Canonical Huffman table with a 16-bit-peek decode LUT: one lookup
-    replaces the per-bit tree walk (codes are <=16 bits, T.81 F.2.2.3).
-    The LUTs are `bytes` (not ndarrays): CPython indexes bytes to a plain
-    int with no numpy-scalar boxing, ~3x faster in the hot loop. `map`
-    keeps the {(length, code): symbol} form for tests/debugging."""
-
-    __slots__ = ("map", "lut_sym", "lut_len")
-
-    def __init__(self, table: dict[tuple[int, int], int]) -> None:
-        self.map = table
-        sym = np.zeros(1 << 16, dtype=np.uint8)
-        ln_arr = np.zeros(1 << 16, dtype=np.uint8)
-        for (ln, code), s in table.items():
-            start = code << (16 - ln)
-            span = 1 << (16 - ln)
-            sym[start:start + span] = s
-            ln_arr[start:start + span] = ln
-        self.lut_sym = sym.tobytes()
-        self.lut_len = ln_arr.tobytes()
+    def symbol(self, table: tuple[bytes, bytes]) -> int:
+        """One Huffman symbol: the LUT key is the next 16 bits, taken from
+        the same 40-bit window _decode_segment_zz reads. A valid final code
+        may be shorter than 16 bits; its length is checked against nbits,
+        so the zero pad never fabricates data."""
+        lens, syms = table
+        pos = self.pos
+        bp = pos >> 3
+        idx = (int.from_bytes(self.data[bp:bp + 5], "big")
+               >> (24 - (pos & 7))) & 0xFFFF
+        ln = lens[idx]
+        if ln == 0 or pos + ln > self.nbits:
+            raise ValueError("invalid Huffman code")
+        self.pos = pos + ln
+        return syms[idx]
 
 
 @lru_cache(maxsize=256)
-def _huff_table_cached(defn: bytes) -> _HuffTable:
-    """LUT construction is ~100x the cost of decoding one small image's
-    blocks, and real corpora reuse a handful of tables (our encoder's,
-    Annex K's, libjpeg's defaults) across millions of files — so tables
-    are memoized by their exact DHT definition bytes (bits + vals)."""
-    bits = list(defn[:16])
-    nvals = sum(bits)
-    vals = list(defn[16:16 + nvals])
-    table = {}
+def _huff_table_cached(defn: bytes) -> tuple[bytes, bytes]:
+    """A canonical Huffman table's decode LUTs (code lengths, symbols),
+    keyed by the next 16 bits: one lookup replaces the per-bit tree walk
+    (codes are <=16 bits, T.81 F.2.2.3). Codes are assigned canonically
+    (C.2); a code of length ln owns the 2^(16 - ln) keys it prefixes.
+    The LUTs are `bytes` (not ndarrays): CPython indexes bytes to a plain
+    int with no numpy-scalar boxing, ~3x faster in the hot loop.
+    Construction is ~100x the cost of decoding one small image's blocks,
+    and real corpora reuse a handful of tables (our encoder's, Annex K's,
+    libjpeg's defaults) across millions of files — so tables are
+    memoized by their exact DHT definition bytes (bits + vals)."""
+    bits, vals = defn[:16], defn[16:]
+    syms = np.zeros(1 << 16, dtype=np.uint8)
+    lens = np.zeros(1 << 16, dtype=np.uint8)
     code = 0
     k = 0
     for ln in range(1, 17):
+        span = 1 << (16 - ln)
         for _ in range(bits[ln - 1]):
-            table[(ln, code)] = vals[k]
+            syms[code * span:(code + 1) * span] = vals[k]
+            lens[code * span:(code + 1) * span] = ln
             code += 1
             k += 1
         code <<= 1
-    return _HuffTable(table)
+    return lens.tobytes(), syms.tobytes()
 
 
-def _decode_huff_tables(payload: bytes) -> dict[int, _HuffTable]:
-    """DHT payload -> {table_class<<4|id: _HuffTable} (canonical
+def _decode_huff_tables(payload: bytes) -> dict[int, tuple[bytes, bytes]]:
+    """DHT payload -> {table_class<<4|id: LUTs} (canonical
     reconstruction, F.2.2.3). One DHT segment may carry multiple tables
     back to back."""
     out = {}
@@ -500,185 +498,228 @@ def _decode_huff_tables(payload: bytes) -> dict[int, _HuffTable]:
     return out
 
 
-def _read_symbol(br: _BitReader, table: _HuffTable) -> int:
-    idx = br.peek16()
-    ln = table.lut_len[idx]
-    if ln == 0 or br.pos + ln > br.nbits:
-        raise ValueError("invalid Huffman code")
-    br.pos += ln
-    return table.lut_sym[idx]
-
-
-def _decode_block_zz(br: _BitReader, dc_t: _HuffTable, ac_t: _HuffTable,
-                     prev_dc: int, Z: np.ndarray, row: int) -> int:
-    """Entropy-decode ONE block's zigzag coefficients into Z[row]
-    (T.81 F.2.2: DC diff then run-length AC), returning the new DC
-    predictor. This is the bit-serial floor of JPEG decode, so the loop
-    is hand-inlined: each symbol reads a single 40-bit window that covers
-    the <=16-bit Huffman code AND its <=11-bit value bits (off<=7 +
-    16 + 11 = 34 < 40), one int.from_bytes per coefficient."""
-    data = br.pdata
-    pos = br.pos
+def _decode_segment_zz(seg: bytes, order: list[tuple[int, int]],
+                       luts: list[tuple]) -> None:
+    """Entropy-decode one restart segment of a baseline scan (the whole
+    scan without restarts): for each (component, row) of `order` in
+    turn, one block's zigzag coefficients into that component's Z[row]
+    (T.81 F.2.2: DC diff then run-length AC), the DC predictors starting
+    at 0 (E.2.4). `luts` holds per component its (DC code lengths, DC
+    symbols, AC code lengths, AC symbols, Z). This is the bit-serial
+    floor of JPEG decode, so the loop is hand-inlined: each symbol reads
+    a single 40-bit window that covers the <=16-bit Huffman code AND its
+    <=11-bit value bits (off<=7 + 16 + 11 = 34 < 40), one int.from_bytes
+    per coefficient."""
+    br = _BitReader(seg)
+    data = br.data
     nbits = br.nbits
-    dlen = dc_t.lut_len
-    dsym = dc_t.lut_sym
-    alen = ac_t.lut_len
-    asym = ac_t.lut_sym
-    # DC
-    bp = pos >> 3
-    off = pos & 7
-    v = int.from_bytes(data[bp:bp + 5], "big")
-    idx = (v >> (24 - off)) & 0xFFFF
-    ln = dlen[idx]
-    if ln == 0 or pos + ln > nbits:
-        raise ValueError("invalid Huffman code")
-    s = dsym[idx]
-    pos += ln
-    if s:
-        if pos + s > nbits:
-            raise ValueError("bit stream exhausted")
-        val = (v >> (40 - off - ln - s)) & ((1 << s) - 1)
-        pos += s
-        if val < (1 << (s - 1)):
-            val += 1 - (1 << s)
-        prev_dc += val
-    Z[row, 0] = prev_dc
-    k = 1
-    while k < 64:
+    pos = 0
+    prev = [0] * len(luts)
+    for c, row in order:
+        dlen, dsym, alen, asym, Z = luts[c]
+        # DC
         bp = pos >> 3
         off = pos & 7
         v = int.from_bytes(data[bp:bp + 5], "big")
         idx = (v >> (24 - off)) & 0xFFFF
-        ln = alen[idx]
+        ln = dlen[idx]
         if ln == 0 or pos + ln > nbits:
             raise ValueError("invalid Huffman code")
-        rs = asym[idx]
+        s = dsym[idx]
         pos += ln
-        if rs == 0:            # EOB
-            break
-        if rs == 0xF0:         # ZRL
-            k += 16
-            continue
-        k += rs >> 4
-        s = rs & 0x0F
-        if k > 63:
-            raise ValueError("AC index overrun")
-        if s:  # s==0 outside EOB/ZRL: malformed, but decode as 0 like
-               # the reference loop did (read_bits(0) -> _extend -> 0)
+        if s:
             if pos + s > nbits:
                 raise ValueError("bit stream exhausted")
             val = (v >> (40 - off - ln - s)) & ((1 << s) - 1)
             pos += s
             if val < (1 << (s - 1)):
                 val += 1 - (1 << s)
-            Z[row, k] = val
-        k += 1
-    br.pos = pos
-    return prev_dc
+            prev[c] += val
+        Z[row, 0] = prev[c]
+        k = 1
+        while k < 64:
+            bp = pos >> 3
+            off = pos & 7
+            v = int.from_bytes(data[bp:bp + 5], "big")
+            idx = (v >> (24 - off)) & 0xFFFF
+            ln = alen[idx]
+            if ln == 0 or pos + ln > nbits:
+                raise ValueError("invalid Huffman code")
+            rs = asym[idx]
+            pos += ln
+            if rs == 0:            # EOB
+                break
+            if rs == 0xF0:         # ZRL
+                k += 16
+                continue
+            k += rs >> 4
+            s = rs & 0x0F
+            if k > 63:
+                raise ValueError("AC index overrun")
+            if s:  # s==0 outside EOB/ZRL: malformed, but decode as 0 like
+                   # the reference loop did (read_bits(0) -> _extend -> 0)
+                if pos + s > nbits:
+                    raise ValueError("bit stream exhausted")
+                val = (v >> (40 - off - ln - s)) & ((1 << s) - 1)
+                pos += s
+                if val < (1 << (s - 1)):
+                    val += 1 - (1 << s)
+                Z[row, k] = val
+            k += 1
 
 
 def _extend(v: int, s: int) -> int:
     return v - (1 << s) + 1 if s and v < (1 << (s - 1)) else v
 
 
-def _read_dqt(payload: bytes, qts: dict[int, np.ndarray]) -> bool:
+def _read_dqt(payload: bytes, qts: dict[int, np.ndarray]) -> None:
     """Parse a DQT segment's tables into qts {id: natural-order (8, 8)
-    table}; one segment may carry several. False for a 16-bit table,
-    which is out of profile."""
+    table}; one segment may carry several. A 16-bit table is out of
+    profile."""
     j = 0
     while j < len(payload):
         if payload[j] & 0xF0:
-            return False
-        t = np.zeros(64, dtype=np.int64)
-        t[ZIGZAG] = np.frombuffer(payload[j + 1:j + 65], dtype=np.uint8)
-        qts[payload[j] & 0x0F] = t.reshape(8, 8)
+            raise ValueError("16-bit quantization table")
+        zz = np.frombuffer(payload[j + 1:j + 65], dtype=np.uint8)
+        qts[payload[j] & 0x0F] = zz[_DEZIGZAG].astype(np.int64).reshape(8, 8)
         j += 65
-    return True
 
 
-def decode_jpeg_gray(buf: bytes) -> np.ndarray | None:
-    """Decode a baseline single-component JPEG produced by any conformant
-    encoder (not just encode_jpeg_gray): marker walk, DQT/SOF0/DHT from
-    the file, Huffman entropy decode, dequantize, dezigzag, IDCT.
-    Returns a uint8 (h, w) array, or None for anything unparseable or
-    outside the supported profile (progressive and color go to their
-    own decoders). DRI/RSTn restart intervals are decoded (predictor
-    reset + byte-aligned segment per E.2.4).
-    """
-    try:
-        if len(buf) < 4 or buf[:2] != b"\xff\xd8":
-            return None
-        qts: dict[int, np.ndarray] = {}
-        dims = None
-        comp_q = 0
-        td = ta = 0
-        ri = 0
-        huff: dict[int, dict[tuple[int, int], int]] = {}
-        i = 2
-        scan = None
-        while i + 4 <= len(buf):
-            if buf[i] != 0xFF:
-                return None
-            marker = (buf[i] << 8) | buf[i + 1]
-            if marker == 0xFFD9:
+class _Frame(NamedTuple):
+    """One SOF0 or SOF2 frame as its markers define it (T.81 B.2)."""
+    progressive: bool
+    h: int
+    w: int
+    samps: list[tuple[int, int]]   # (H, V) sampling factors, SOF order
+    qts: list[np.ndarray]          # each component's quantization table
+    ri: int                        # DRI restart interval, 0 without one
+    # (component indices, Td<<4|Ta per component, Ss, Se, Ah, Al,
+    #  the Huffman tables in force at the SOS, entropy-coded bytes)
+    scans: list[tuple]
+
+
+# sampling factors of the supported frames: gray, 4:4:4, 4:2:0, 4:2:2
+# and 4:1:1 (chroma 1x1); anything else is rejected, not misdecoded
+_LAYOUTS = ([(1, 1)], [(1, 1)] * 3, [(2, 2), (1, 1), (1, 1)],
+            [(2, 1), (1, 1), (1, 1)], [(4, 1), (1, 1), (1, 1)])
+
+# the marker that ends a scan's entropy-coded bytes: FF followed by
+# anything but a stuffed 00 (B.1.1.5) or a restart marker (B.2.1.2)
+_SCAN_END = re.compile(b"\xff[^\x00\xd0-\xd7]")
+
+
+def _parse_jpeg(buf: bytes) -> _Frame:
+    """The one marker walk of every decoder: DQT, SOF0/SOF2, DHT, DRI
+    and each SOS with its entropy-coded bytes, which run to the next
+    marker that is not a stuffed FF00 or an RSTn. A baseline frame stops
+    at its first SOS; a progressive one reads scans up to EOI. Each scan
+    keeps the Huffman tables defined before its SOS. One rule for every
+    mode: SOS selectors must name SOF components, a baseline scan
+    carries every component in SOF order, and a one-component frame's
+    sampling factors read as 1x1 (A.2.2). Raises ValueError (or an
+    IndexError / struct.error on a short segment) for anything outside
+    the profile: other SOF types, precision != 8, a component count
+    other than 1 or 3, a layout not in _LAYOUTS, 16-bit tables."""
+    if buf[:2] != b"\xff\xd8":
+        raise ValueError("no SOI")
+    qts: dict[int, np.ndarray] = {}
+    huff: dict[int, tuple[bytes, bytes]] = {}
+    ri = 0
+    sof = None
+    scans: list[tuple] = []
+    i = 2
+    while i + 4 <= len(buf):
+        if buf[i] != 0xFF:
+            raise ValueError("marker expected")
+        marker = (buf[i] << 8) | buf[i + 1]
+        if marker == 0xFFD9:
+            break
+        (ln,) = struct.unpack_from(">H", buf, i + 2)
+        payload = buf[i + 4:i + 2 + ln]
+        i += 2 + ln
+        if marker == 0xFFDB:
+            _read_dqt(payload, qts)
+        elif marker in (0xFFC0, 0xFFC2):
+            prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
+            if prec != 8 or nc not in (1, 3) or len(payload) < 6 + 3 * nc:
+                raise ValueError("frame out of profile")
+            samps = [(1, 1)] if nc == 1 else [
+                (hv >> 4, hv & 0x0F) for hv in payload[7:6 + 3 * nc:3]]
+            if samps not in _LAYOUTS:
+                raise ValueError("sampling layout out of profile")
+            sof = (marker == 0xFFC2, h, w, payload[6:6 + 3 * nc:3], samps,
+                   payload[8:6 + 3 * nc:3])
+        elif marker in (0xFFC1, 0xFFC3):
+            raise ValueError("extended/lossless frame")
+        elif marker == 0xFFC4:
+            huff = {**huff, **_decode_huff_tables(payload)}
+        elif marker == 0xFFDD:
+            (ri,) = struct.unpack_from(">H", payload, 0)
+        elif marker == 0xFFDA:
+            if sof is None:
+                raise ValueError("SOS before SOF")
+            progressive, ids = sof[0], sof[3]
+            ns = payload[0]
+            sels = payload[1:1 + 2 * ns:2]
+            # bytes.index raises ValueError for an id the SOF lacks
+            comps = [ids.index(cid) for cid in sels]
+            ss, se, ahal = payload[1 + 2 * ns:4 + 2 * ns]
+            if not progressive and sels != ids:
+                raise ValueError("baseline scan lacks SOF components")
+            m = _SCAN_END.search(buf, i)
+            end = m.start() if m else len(buf)
+            scans.append((comps, payload[2:2 + 2 * ns:2], ss, se, ahal >> 4,
+                          ahal & 0x0F, huff, buf[i:end]))
+            if not progressive:
                 break
-            (ln,) = struct.unpack_from(">H", buf, i + 2)
-            payload = buf[i + 4:i + 2 + ln]
-            if marker == 0xFFDB:
-                if not _read_dqt(payload, qts):
-                    return None
-            elif marker == 0xFFC0:
-                prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
-                if prec != 8 or nc != 1:
-                    return None        # color / high precision: stubbed
-                comp_q = payload[8]    # the component's Tq selector
-                dims = (h, w)
-            elif marker in (0xFFC1, 0xFFC2, 0xFFC3):
-                return None            # extended/progressive/lossless
-            elif marker == 0xFFC4:
-                huff.update(_decode_huff_tables(payload))
-            elif marker == 0xFFDD:
-                (ri,) = struct.unpack_from(">H", payload, 0)
-            elif marker == 0xFFDA:
-                if payload[0] != 1:    # Ns: single-component scan only
-                    return None
-                td, ta = payload[2] >> 4, payload[2] & 0x0F
-                scan = buf[i + 2 + ln:]
-                break
-            i += 2 + ln
-        if scan is None or dims is None or comp_q not in qts \
-                or td not in huff or (0x10 | ta) not in huff:
-            return None
-        qt = qts[comp_q]
-        h, w = dims
-        if h == 0 or w == 0:
-            return None
-        end = scan.rfind(b"\xff\xd9")
-        if end >= 0:
-            scan = scan[:end]
-        ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-        nby, nbx = ph // 8, pw // 8
-        segs = _split_restart_segments(scan, ri, nby * nbx)
-        if segs is None:
-            return None
-        # entropy pass fills one (n_blocks, 64) zigzag matrix; dezigzag,
-        # dequantize and IDCT then run BATCHED over all blocks at once
-        Z = np.zeros((nby * nbx, 64), dtype=np.int64)
-        dc_t, ac_t = huff[td], huff[0x10 | ta]
-        br = _BitReader(segs[0])
-        prev_dc = 0
-        for row in range(nby * nbx):
-            if ri and row and row % ri == 0:   # restart boundary (E.2.4)
-                br = _BitReader(segs[row // ri])
-                prev_dc = 0
-            prev_dc = _decode_block_zz(br, dc_t, ac_t, prev_dc, Z, row)
-        (blocks,) = _idct_blocks([Z], [qt])
-        out = (blocks.reshape(nby, nbx, 8, 8)
-               .transpose(0, 2, 1, 3).reshape(ph, pw))
-        return np.clip(np.round(out + 128.0), 0, 255).astype(
-            np.uint8)[:h, :w]
-    except (IndexError, ValueError, struct.error):
-        return None
+            i = end
+    if sof is None or not scans:
+        raise ValueError("no frame or no scan")
+    progressive, h, w, _, samps, tqs = sof
+    if h == 0 or w == 0:
+        raise ValueError("empty frame")
+    return _Frame(progressive, h, w, samps, [qts[q] for q in tqs], ri,
+                  scans)
+
+
+def _scan_order(f: _Frame, comps: list[int], grids: list[tuple[int, int]]
+                ) -> list[tuple[int, int]]:
+    """(index into comps, raster row) of every block of a scan, in coding
+    order. A one-component scan walks its component's raster grid
+    (A.2.2); an interleaved one walks the MCU grid, vc rows of hc blocks
+    per component (A.2.3), where a block outside its component's raster
+    grid is a dummy (A.2.4) with row -1 (the spare last row of Z)."""
+    if len(comps) == 1:
+        bh, bw = grids[comps[0]]
+        return [(0, b) for b in range(bh * bw)]
+    hmax, vmax = f.samps[0]     # in every _LAYOUTS entry Y's are largest
+    order = []
+    for my in range(-(-f.h // (8 * vmax))):
+        for mx in range(-(-f.w // (8 * hmax))):
+            for ci, c in enumerate(comps):
+                hc, vc = f.samps[c]
+                bh, bw = grids[c]
+                for r in range(my * vc, my * vc + vc):
+                    for col in range(mx * hc, mx * hc + hc):
+                        order.append((ci, r * bw + col
+                                      if r < bh and col < bw else -1))
+    return order
+
+
+def _baseline_coefs(f: _Frame, grids: list[tuple[int, int]],
+                    Zs: list[np.ndarray]) -> None:
+    """Entropy-decode a baseline frame's one scan (1 or 3 components)
+    into Zs in the _scan_order MCU walk, one restart interval (E.2.4) at
+    a time."""
+    comps, tdtas, _, _, _, _, huff, data = f.scans[0]
+    luts = [(*huff[t >> 4], *huff[0x10 | (t & 0x0F)], Zs[c])
+            for c, t in zip(comps, tdtas)]
+    order = _scan_order(f, comps, grids)
+    bpm = sum(hc * vc for hc, vc in f.samps) if len(comps) > 1 else 1
+    segs = _split_restart_segments(data, f.ri, len(order) // bpm)
+    step = f.ri * bpm or len(order)
+    for s, seg in enumerate(segs):
+        _decode_segment_zz(seg, order[s * step:(s + 1) * step], luts)
 
 
 def _idct_blocks(Zs: list[np.ndarray], qts: list[np.ndarray]
@@ -690,13 +731,72 @@ def _idct_blocks(Zs: list[np.ndarray], qts: list[np.ndarray]
     independent of its batch (the batch decides only which all-zero
     coefficient rows _ordered_matmul skips, which changes at most the
     sign of a zero), so the pixels equal per-component calls."""
-    dense = []
-    for Z, qt in zip(Zs, qts):
-        d = np.zeros_like(Z)
-        d[:, ZIGZAG] = Z
-        dense.append(d.reshape(-1, 8, 8) * qt)
-    blocks = _idct(np.concatenate(dense))
-    return np.split(blocks, np.cumsum([len(Z) for Z in Zs[:-1]]))
+    blocks = _idct(np.concatenate([Z[:, _DEZIGZAG].reshape(-1, 8, 8) * qt
+                                   for Z, qt in zip(Zs, qts)]))
+    out, start = [], 0
+    for Z in Zs:
+        out.append(blocks[start:start + len(Z)])
+        start += len(Z)
+    return out
+
+
+def _decode(buf: bytes, progressive: bool, nc: int) -> np.ndarray | None:
+    """The one decode path: parse, entropy-decode each component into its
+    raster block grid (the true-dims geometry of A.2.4), then one plane
+    assembler — batched dequantize + IDCT, each grid laid out as a plane
+    and replicate-upsampled to the image's sampling — then clip (gray) or
+    YCbCr -> RGB (color), cropped to (h, w). None unless the file is a
+    `progressive` frame of `nc` components that decodes cleanly."""
+    try:
+        f = _parse_jpeg(buf)
+        if f.progressive != progressive or len(f.samps) != nc:
+            return None
+        hmax, vmax = f.samps[0]     # in every _LAYOUTS entry Y's are largest
+        # (block rows, block cols) of each component's raster grid:
+        # ceil(ceil(h * vc / vmax) / 8) == ceil(h * vc / (8 * vmax))
+        grids = [(-(-f.h * vc // (8 * vmax)), -(-f.w * hc // (8 * hmax)))
+                 for hc, vc in f.samps]
+        # every block costs at least one bit of some scan, so a frame
+        # larger than its scans can code is corrupt: rejected before its
+        # coefficient matrices are allocated
+        if sum(bh * bw for bh, bw in grids) > 8 * sum(
+                len(scan[-1]) for scan in f.scans):
+            return None
+        # one spare last row per matrix takes the dummy blocks (row -1)
+        Zs = [np.zeros((bh * bw + 1, 64), dtype=np.int64)
+              for bh, bw in grids]
+        (_progressive_coefs if progressive else _baseline_coefs)(
+            f, grids, Zs)
+        planes = []
+        for blocks, (bh, bw), (hc, vc) in zip(
+                _idct_blocks([Z[:-1] for Z in Zs], f.qts), grids, f.samps):
+            p = (blocks.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3)
+                 .reshape(bh * 8, bw * 8))
+            if hc < hmax:
+                p = np.repeat(p, hmax // hc, axis=1)
+            if vc < vmax:
+                p = np.repeat(p, vmax // vc, axis=0)
+            planes.append(p)
+    except (IndexError, KeyError, ValueError, struct.error):
+        return None
+    if nc == 1:
+        px = planes[0] + 128.0
+        return np.rint(px, out=px).clip(0, 255, out=px).astype(
+            np.uint8)[:f.h, :f.w]
+    return ycbcr_to_rgb(np.stack([p[:f.h, :f.w] for p in planes], axis=-1)
+                        + 128.0)
+
+
+def decode_jpeg_gray(buf: bytes) -> np.ndarray | None:
+    """Decode a baseline single-component JPEG produced by any conformant
+    encoder (not just encode_jpeg_gray): marker walk, DQT/SOF0/DHT from
+    the file, Huffman entropy decode, dequantize, dezigzag, IDCT.
+    Returns a uint8 (h, w) array, or None for anything unparseable or
+    outside the supported profile (progressive and color go to their
+    own decoders). DRI/RSTn restart intervals are decoded (predictor
+    reset + byte-aligned segment per E.2.4).
+    """
+    return _decode(buf, False, 1)
 
 
 def gray_fixture_pixels(media_id: int) -> np.ndarray:
@@ -711,6 +811,11 @@ def gray_fixture_pixels(media_id: int) -> np.ndarray:
     # triangle wave: continuous (no 255->0 wrap edges), so quantized-DCT
     # ringing stays small and the round-trip error bound is meaningful
     return np.abs(((a * x + b * y + media_id) % 510) - 255).astype(np.uint8)
+
+
+# the columns of a gray feature row: media_id, then jpeg_gray_features
+GRAY_FEATURE_COLS = ("media_id", "width", "height", "px_sum", "px_sumsq",
+                     "px_min", "px_max", "h0", "h1", "h2", "h3")
 
 
 def jpeg_gray_features(px: np.ndarray) -> tuple[int, ...]:
@@ -732,10 +837,6 @@ def jpeg_feature_extract(df, id_col: str = "media_id",
     the production scale-out is rows-across-executors, not SIMD."""
     import pandas as pd
 
-    schema = ("media_id long, width long, height long, px_sum long, "
-              "px_sumsq long, px_min long, px_max long, "
-              "h0 long, h1 long, h2 long, h3 long")
-
     def fn(batches):
         for pdf in batches:
             rows = []
@@ -744,11 +845,10 @@ def jpeg_feature_extract(df, id_col: str = "media_id",
                 if px is None:
                     continue
                 rows.append((int(mid),) + jpeg_gray_features(px))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "px_sum", "px_sumsq",
-                "px_min", "px_max", "h0", "h1", "h2", "h3"])
+            yield pd.DataFrame(rows, columns=list(GRAY_FEATURE_COLS))
 
-    return df.mapInPandas(fn, schema)
+    return df.mapInPandas(fn, ", ".join(f"{c} long"
+                                        for c in GRAY_FEATURE_COLS))
 
 
 # ------------------------------------------------------------- color ----
@@ -833,126 +933,7 @@ def decode_jpeg_color(buf: bytes) -> np.ndarray | None:
     or 4:1:1: returns uint8 (h, w, 3) RGB, or None for anything
     unparseable / out of profile (grayscale goes to decode_jpeg_gray;
     other sampling layouts are rejected, not misdecoded)."""
-    try:
-        if len(buf) < 4 or buf[:2] != b"\xff\xd8":
-            return None
-        qts: dict[int, np.ndarray] = {}
-        huff: dict[int, dict[tuple[int, int], int]] = {}
-        dims = None
-        comp_q: list[int] = []
-        scan = None
-        ri = 0
-        comp_huff: list[tuple[int, int]] = []
-        i = 2
-        while i + 4 <= len(buf):
-            if buf[i] != 0xFF:
-                return None
-            marker = (buf[i] << 8) | buf[i + 1]
-            if marker == 0xFFD9:
-                break
-            (ln,) = struct.unpack_from(">H", buf, i + 2)
-            payload = buf[i + 4:i + 2 + ln]
-            if marker == 0xFFDB:
-                if not _read_dqt(payload, qts):
-                    return None
-            elif marker == 0xFFC0:
-                prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
-                if prec != 8 or nc != 3:
-                    return None
-                samps = []
-                for c in range(3):
-                    samp = payload[6 + 3 * c + 1]
-                    samps.append((samp >> 4, samp & 0x0F))
-                    comp_q.append(payload[6 + 3 * c + 2])
-                # supported layouts: 4:4:4 (all 1x1), 4:2:0 (Y 2x2),
-                # 4:2:2 (Y 2x1) and 4:1:1 (Y 4x1), chroma 1x1; anything
-                # else is out of profile (the MCU walk below is sampling-
-                # factor-general: a layout is a whitelist entry + fixtures)
-                if samps not in ([(1, 1)] * 3,
-                                 [(2, 2), (1, 1), (1, 1)],
-                                 [(2, 1), (1, 1), (1, 1)],
-                                 [(4, 1), (1, 1), (1, 1)]):
-                    return None
-                dims = (h, w)
-            elif marker in (0xFFC1, 0xFFC2, 0xFFC3):
-                return None
-            elif marker == 0xFFC4:
-                huff.update(_decode_huff_tables(payload))
-            elif marker == 0xFFDD:
-                (ri,) = struct.unpack_from(">H", payload, 0)
-            elif marker == 0xFFDA:
-                ns = payload[0]
-                if ns != 3:
-                    return None
-                for c in range(3):
-                    td_ta = payload[2 + 2 * c]
-                    comp_huff.append((td_ta >> 4, td_ta & 0x0F))
-                scan = buf[i + 2 + ln:]
-                break
-            i += 2 + ln
-        if scan is None or dims is None or len(comp_q) != 3:
-            return None
-        h, w = dims
-        if h == 0 or w == 0:
-            return None
-        end = scan.rfind(b"\xff\xd9")
-        if end >= 0:
-            scan = scan[:end]
-        hmax = max(s[0] for s in samps)
-        vmax = max(s[1] for s in samps)
-        mcu_w, mcu_h = 8 * hmax, 8 * vmax
-        ph, pw = -(-h // mcu_h) * mcu_h, -(-w // mcu_w) * mcu_w
-        H, W = ph // mcu_h, pw // mcu_w
-        n_mcu = H * W
-        segs = _split_restart_segments(scan, ri, n_mcu)
-        if segs is None:
-            return None
-        br = _BitReader(segs[0])
-        # entropy pass fills one (n_blocks, 64) zigzag matrix per
-        # component; dezigzag/dequant run per component and the IDCT
-        # once over all of them (_idct_blocks), and the MCU-interleaved
-        # block order maps onto the plane with a pure reshape/transpose —
-        # no per-block scatter
-        Zs = [np.zeros((n_mcu * hc * vc, 64), dtype=np.int64)
-              for hc, vc in samps]
-        prev = [0, 0, 0]
-        rows = [0, 0, 0]
-        tabs = [(huff[td], huff[0x10 | ta]) for td, ta in comp_huff]
-        bpm = [hc * vc for hc, vc in samps]
-        for m in range(n_mcu):
-            if ri and m and m % ri == 0:       # restart boundary (E.2.4)
-                br = _BitReader(segs[m // ri])
-                prev = [0, 0, 0]
-            # T.81 A.2.3 interleave: per component, vc x hc blocks
-            for c in range(3):
-                dc_t, ac_t = tabs[c]
-                Z = Zs[c]
-                r = rows[c]
-                p = prev[c]
-                for _ in range(bpm[c]):
-                    p = _decode_block_zz(br, dc_t, ac_t, p, Z, r)
-                    r += 1
-                prev[c] = p
-                rows[c] = r
-        planes = []
-        all_blocks = _idct_blocks(Zs, [qts[q] for q in comp_q])
-        for blocks, (hc, vc) in zip(all_blocks, samps):
-            # block index = ((my*W + mx)*vc + byy)*hc + bxx; plane row
-            # my*vc + byy, col mx*hc + bxx -> one transpose
-            planes.append(blocks.reshape(H, W, vc, hc, 8, 8)
-                          .transpose(0, 2, 4, 1, 3, 5)
-                          .reshape(H * vc * 8, W * hc * 8))
-        out = np.zeros((ph, pw, 3), dtype=np.float64)
-        for c, (hc, vc) in enumerate(samps):
-            p = planes[c]
-            if hc < hmax:
-                p = np.repeat(p, hmax // hc, axis=1)   # replicate upsample
-            if vc < vmax:
-                p = np.repeat(p, vmax // vc, axis=0)
-            out[:, :, c] = p
-        return ycbcr_to_rgb(out + 128.0)[:h, :w]
-    except (IndexError, KeyError, ValueError, struct.error):
-        return None
+    return _decode(buf, False, 3)
 
 
 def color_fixture_pixels(media_id: int) -> np.ndarray:
@@ -1196,273 +1177,127 @@ def encode_jpeg_progressive_411(rgb: np.ndarray) -> bytes:
     return _encode_progressive(*_ycc_planes(rgb, 4, 1), SA_SCRIPT_COLOR)
 
 
-def _decode_progressive_coefs(buf: bytes):
-    """Shared progressive (SOF2) scan walker for 1 or 3 components at
-    the baseline sampling layouts (gray, 4:4:4, 4:2:0, 4:2:2, 4:1:1):
-    parses every SOS and accumulates zigzag coefficients across scans.
-
-    DC scans may be interleaved (Ns = nc) or single-component; AC scans
-    are single-component by spec (B.2.3). Per T.81 A.2.4 each component
-    owns TWO block geometries: the raster grid derived from the true
-    image dims (what AC scans and the output walk) and the MCU-padded
-    grid (what interleaved DC scans walk — edge positions outside the
-    raster grid are DUMMY blocks that are entropy-coded but discarded,
-    predictor updates included). Handles all four scan kinds
-    (first/refinement x DC/AC, successive approximation included).
-    Returns (Zs, qts, comp_qs, dims, samps) or None."""
-    try:
-        if len(buf) < 4 or buf[:2] != b"\xff\xd8":
-            return None
-        qts: dict[int, np.ndarray] = {}
-        comp_qs: list[int] = []
-        comp_ids: list[int] = []
-        samps: list[tuple[int, int]] = []
-        dims = None
-        nc = 0
-        huff: dict[int, _HuffTable] = {}
-        scans = []   # ([comp], [tdta], ss, se, ah, al, data)
-        i = 2
-        progressive = False
-        while i + 4 <= len(buf):
-            if buf[i] != 0xFF:
-                return None
-            marker = (buf[i] << 8) | buf[i + 1]
-            if marker == 0xFFD9:
-                break
-            (ln,) = struct.unpack_from(">H", buf, i + 2)
-            payload = buf[i + 4:i + 2 + ln]
-            if marker == 0xFFDB:
-                if not _read_dqt(payload, qts):
-                    return None
-            elif marker == 0xFFC2:
-                prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
-                if prec != 8 or nc not in (1, 3):
-                    return None
-                for c in range(nc):
-                    comp_ids.append(payload[6 + 3 * c])
-                    samp = payload[6 + 3 * c + 1]
-                    samps.append((samp >> 4, samp & 0x0F))
-                    comp_qs.append(payload[6 + 3 * c + 2])
-                if samps not in ([(1, 1)],
-                                 [(1, 1)] * 3,
-                                 [(2, 2), (1, 1), (1, 1)],
-                                 [(2, 1), (1, 1), (1, 1)],
-                                 [(4, 1), (1, 1), (1, 1)]):
-                    return None
-                dims = (h, w)
-                progressive = True
-            elif marker in (0xFFC0, 0xFFC1, 0xFFC3):
-                return None       # baseline/lossless go to the other paths
-            elif marker == 0xFFC4:
-                huff.update(_decode_huff_tables(payload))
-            elif marker == 0xFFDD:
-                return None
-            elif marker == 0xFFDA:
-                ns = payload[0]
-                comps, tdtas = [], []
-                for c in range(ns):
-                    cid = payload[1 + 2 * c]
-                    if cid not in comp_ids:
-                        return None
-                    comps.append(comp_ids.index(cid))
-                    tdtas.append(payload[2 + 2 * c])
-                ss, se, ahal = (payload[1 + 2 * ns], payload[2 + 2 * ns],
-                                payload[3 + 2 * ns])
-                ah, al = ahal >> 4, ahal & 0x0F
-                if ah != 0 and ah != al + 1:
-                    return None   # malformed successive-approx sequence
-                if ss != 0 and ns != 1:
-                    return None   # AC scans are single-component (B.2.3)
-                if ss == 0 and ns not in (1, nc):
-                    return None
-                # scan data runs to the next marker (FF xx with xx != 00)
-                j = i + 2 + ln
-                k = j
-                while k + 1 < len(buf):
-                    if buf[k] == 0xFF and buf[k + 1] not in (0x00,):
-                        break
-                    k += 1
-                scans.append((comps, tdtas, ss, se, ah, al, buf[j:k]))
-                i = k
-                continue
-            i += 2 + ln
-        if not progressive or dims is None or not scans \
-                or any(q not in qts for q in comp_qs):
-            return None
-        h, w = dims
-        if h == 0 or w == 0:
-            return None
-        hmax = max(sx for sx, _ in samps)
-        vmax = max(sy for _, sy in samps)
-        # raster grid per component (true-dims geometry, A.2.4)
-        grids = []
-        for hc, vc in samps:
-            cw = -(-(w * hc) // hmax)
-            ch = -(-(h * vc) // vmax)
-            grids.append((-(-ch // 8), -(-cw // 8)))   # (block rows, cols)
-        mcu_rows, mcu_cols = -(-h // (8 * vmax)), -(-w // (8 * hmax))
-        Zs = [np.zeros((bh * bw, 64), dtype=np.int64) for bh, bw in grids]
-        band_seen = [np.zeros(64, dtype=bool) for _ in range(nc)]
-        for comps, tdtas, ss, se, ah, al, data in scans:
-            for c in comps:
-                if ah == 0:
-                    band_seen[c][ss:se + 1] = True
-                elif not band_seen[c][ss:se + 1].all():
-                    return None   # refinement before any first scan
-            br = _BitReader(data)
-            interleaved = ss == 0 and len(comps) > 1
-
-            def _dc_positions():
-                """(ci, flat raster index | -1 for dummy) in scan order."""
-                if interleaved:
-                    for my in range(mcu_rows):
-                        for mx in range(mcu_cols):
-                            for ci, c in enumerate(comps):
-                                hc, vc = samps[c]
-                                bh, bw_ = grids[c]
-                                for byy in range(vc):
-                                    for bxx in range(hc):
-                                        r = my * vc + byy
-                                        col = mx * hc + bxx
-                                        if r < bh and col < bw_:
-                                            yield ci, r * bw_ + col
-                                        else:
-                                            yield ci, -1
-                else:
-                    bh, bw_ = grids[comps[0]]
-                    for b in range(bh * bw_):
-                        yield 0, b
-
-            if ss == 0 and ah == 0:           # DC first scan (Al >= 0)
-                if se != 0:
-                    return None
-                dc_ts = [huff.get(t >> 4) for t in tdtas]
-                if any(t is None for t in dc_ts):
-                    return None
+def _progressive_coefs(f: _Frame, grids: list[tuple[int, int]],
+                       Zs: list[np.ndarray]) -> None:
+    """Accumulate the zigzag coefficients of every scan of a progressive
+    frame into Zs, all four scan kinds (first/refinement x DC/AC,
+    successive approximation included, T.81 G.1.2). DC scans may be
+    interleaved (Ns = nc) or single-component and walk _scan_order —
+    interleaved ones through the MCU grid with its dummy blocks, decoded
+    and discarded with their predictor updates (A.2.4). AC scans are
+    single-component (B.2.3) over the component's raster grid. Raises
+    ValueError for a malformed scan sequence: a refinement before its
+    band's first scan, a bad Ah/Al pair or band, restart intervals (out
+    of profile)."""
+    if f.ri:
+        raise ValueError("progressive restart intervals")
+    band_seen = [np.zeros(64, dtype=bool) for _ in f.samps]
+    for comps, tdtas, ss, se, ah, al, huff, data in f.scans:
+        if ah != 0 and ah != al + 1:
+            raise ValueError("malformed successive-approximation sequence")
+        if not (ss == se == 0 and len(comps) in (1, len(f.samps))
+                or 1 <= ss <= se <= 63 and len(comps) == 1):
+            raise ValueError("bad scan band or component count")
+        for c in comps:
+            if ah == 0:
+                band_seen[c][ss:se + 1] = True
+            elif not band_seen[c][ss:se + 1].all():
+                raise ValueError("refinement before any first scan")
+        br = _BitReader(data)
+        if ss == 0:
+            Zc = [Zs[c] for c in comps]
+            if ah == 0:                   # DC first scan (Al >= 0)
+                dc_ts = [huff[t >> 4] for t in tdtas]
                 prevs = [0] * len(comps)
-                for ci, b in _dc_positions():
-                    s_ = _read_symbol(br, dc_ts[ci])
+                for ci, b in _scan_order(f, comps, grids):
+                    s_ = br.symbol(dc_ts[ci])
+                    if s_ > 15:
+                        # no precision has such a category (F.1.2.1);
+                        # it would overflow the int64 coefficients
+                        raise ValueError("DC category above 15")
                     if s_:
                         prevs[ci] += _extend(br.read_bits(s_), s_)
-                    if b >= 0:
-                        Zs[comps[ci]][b, 0] = prevs[ci] << al
-            elif ss == 0:                     # DC refinement: 1 raw bit
-                if se != 0:
-                    return None
-                for ci, b in _dc_positions():
-                    bit = br.read_bit()
-                    if bit and b >= 0:
-                        Zs[comps[ci]][b, 0] |= 1 << al
-            elif ah == 0:                     # AC first scan (Al >= 0)
-                Z = Zs[comps[0]]
-                nb = len(Z)
-                ac_t = huff.get(0x10 | (tdtas[0] & 0x0F))
-                if ac_t is None or not (1 <= ss <= se <= 63):
-                    return None
-                eobrun = 0
-                for b in range(nb):
-                    if eobrun > 0:
-                        eobrun -= 1
-                        continue
-                    k = ss
+                    Zc[ci][b, 0] = prevs[ci] << al
+            else:                         # DC refinement: 1 raw bit
+                for ci, b in _scan_order(f, comps, grids):
+                    if br.read_bit():
+                        Zc[ci][b, 0] |= 1 << al
+            continue
+        Z = Zs[comps[0]]
+        nb = len(Z) - 1                   # the spare last row is no block
+        ac_t = huff[0x10 | (tdtas[0] & 0x0F)]
+        if ah == 0:                       # AC first scan (Al >= 0)
+            eobrun = 0
+            for b in range(nb):
+                if eobrun > 0:
+                    eobrun -= 1
+                    continue
+                k = ss
+                while k <= se:
+                    rs = br.symbol(ac_t)
+                    r, s_ = rs >> 4, rs & 0x0F
+                    if s_ == 0:
+                        if r == 15:       # ZRL
+                            k += 16
+                            continue
+                        # EOB with EOBRUN = 2^r + bits - 1 MORE blocks
+                        eobrun = (1 << r) - 1
+                        if r:
+                            eobrun += br.read_bits(r)
+                        break
+                    k += r
+                    if k > se:
+                        raise ValueError("band overrun")
+                    Z[b, k] = _extend(br.read_bits(s_), s_) << al
+                    k += 1
+            continue
+        p1, m1 = 1 << al, -(1 << al)      # AC refinement (Ah = Al+1)
+
+        def _correct(b: int, k: int) -> None:
+            # T.81 G.1.2.3: one correction bit per nonzero-history
+            # coefficient; append p1 toward its sign when bit=1 and bit
+            # Al not yet set
+            if br.read_bit() and (int(Z[b, k]) & p1) == 0:
+                Z[b, k] += p1 if Z[b, k] >= 0 else m1
+
+        eobrun = 0
+        for b in range(nb):
+            k = ss
+            if eobrun == 0:
+                while k <= se:
+                    rs = br.symbol(ac_t)
+                    r, s_ = rs >> 4, rs & 0x0F
+                    newval = 0
+                    if s_:
+                        if s_ != 1:
+                            raise ValueError("bad refine size")
+                        newval = p1 if br.read_bit() else m1
+                    elif r != 15:         # EOB: run of ended blocks
+                        eobrun = 1 << r
+                        if r:
+                            eobrun += br.read_bits(r)
+                        break
+                    # advance: corrections on nonzero history, r counts
+                    # down over zero-history slots
                     while k <= se:
-                        rs = _read_symbol(br, ac_t)
-                        r, s_ = rs >> 4, rs & 0x0F
-                        if s_ == 0:
-                            if r == 15:       # ZRL
-                                k += 16
-                                continue
-                            # EOB with EOBRUN = 2^r + bits - 1 MORE blocks
-                            eobrun = (1 << r) - 1
-                            if r:
-                                eobrun += br.read_bits(r)
-                            break
-                        k += r
-                        if k > se:
-                            raise ValueError("band overrun")
-                        Z[b, k] = _extend(br.read_bits(s_), s_) << al
-                        k += 1
-            else:                             # AC refinement (Ah = Al+1)
-                Z = Zs[comps[0]]
-                nb = len(Z)
-                ac_t = huff.get(0x10 | (tdtas[0] & 0x0F))
-                if ac_t is None or not (1 <= ss <= se <= 63):
-                    return None
-                p1, m1 = 1 << al, -(1 << al)
-
-                def _correct(b: int, k: int) -> None:
-                    # T.81 G.1.2.3: one correction bit per nonzero-
-                    # history coefficient; append p1 toward its sign
-                    # when bit=1 and bit Al not yet set
-                    if br.read_bit() and (int(Z[b, k]) & p1) == 0:
-                        Z[b, k] += p1 if Z[b, k] >= 0 else m1
-
-                eobrun = 0
-                for b in range(nb):
-                    k = ss
-                    if eobrun == 0:
-                        while k <= se:
-                            rs = _read_symbol(br, ac_t)
-                            r, s_ = rs >> 4, rs & 0x0F
-                            newval = 0
-                            if s_:
-                                if s_ != 1:
-                                    raise ValueError("bad refine size")
-                                newval = p1 if br.read_bit() else m1
-                            elif r != 15:     # EOB: run of ended blocks
-                                eobrun = 1 << r
-                                if r:
-                                    eobrun += br.read_bits(r)
+                        if Z[b, k] != 0:
+                            _correct(b, k)
+                        else:
+                            if r == 0:
                                 break
-                            # advance: corrections on nonzero history,
-                            # r counts down over zero-history slots
-                            while k <= se:
-                                if Z[b, k] != 0:
-                                    _correct(b, k)
-                                else:
-                                    if r == 0:
-                                        break
-                                    r -= 1
-                                k += 1
-                            if newval and k <= se:
-                                Z[b, k] = newval
-                            k += 1
-                    if eobrun > 0:
-                        # rest of this block (and whole following
-                        # blocks) only refine existing coefficients
-                        while k <= se:
-                            if Z[b, k] != 0:
-                                _correct(b, k)
-                            k += 1
-                        eobrun -= 1
-        return Zs, qts, comp_qs, dims, samps
-    except (IndexError, ValueError, struct.error):
-        return None
-
-
-def _progressive_planes(buf: bytes, want_nc: int):
-    got = _decode_progressive_coefs(buf)
-    if got is None:
-        return None
-    Zs, qts, comp_qs, (h, w), samps = got
-    if len(samps) != want_nc:
-        return None
-    hmax = max(sx for sx, _ in samps)
-    vmax = max(sy for _, sy in samps)
-    planes = []
-    all_blocks = _idct_blocks(Zs, [qts[q] for q in comp_qs])
-    for blocks, (hc, vc) in zip(all_blocks, samps):
-        cw = -(-(w * hc) // hmax)
-        ch = -(-(h * vc) // vmax)
-        bh, bw_ = -(-ch // 8), -(-cw // 8)
-        plane = (blocks.reshape(bh, bw_, 8, 8)
-                 .transpose(0, 2, 1, 3).reshape(bh * 8, bw_ * 8))[:ch, :cw]
-        if hc < hmax:
-            plane = np.repeat(plane, hmax // hc, axis=1)
-        if vc < vmax:
-            plane = np.repeat(plane, vmax // vc, axis=0)
-        planes.append(plane[:h, :w])
-    return planes, (h, w)
+                            r -= 1
+                        k += 1
+                    if newval and k <= se:
+                        Z[b, k] = newval
+                    k += 1
+            if eobrun > 0:
+                # rest of this block (and whole following blocks) only
+                # refine existing coefficients
+                while k <= se:
+                    if Z[b, k] != 0:
+                        _correct(b, k)
+                    k += 1
+                eobrun -= 1
 
 
 def decode_jpeg_progressive_gray(buf: bytes) -> np.ndarray | None:
@@ -1470,13 +1305,8 @@ def decode_jpeg_progressive_gray(buf: bytes) -> np.ndarray | None:
     AND successive approximation — by multi-scan coefficient
     accumulation, then one batched dequant/IDCT. Returns None for
     baseline files and anything malformed (refinement before first
-    scan, bad SA sequence, unknown sampling layout)."""
-    got = _progressive_planes(buf, 1)
-    if got is None:
-        return None
-    planes, (h, w) = got
-    return np.clip(np.round(planes[0] + 128.0), 0, 255).astype(
-        np.uint8)[:h, :w]
+    scan, bad SA sequence)."""
+    return _decode(buf, True, 1)
 
 
 def decode_jpeg_progressive_color(buf: bytes) -> np.ndarray | None:
@@ -1486,9 +1316,4 @@ def decode_jpeg_progressive_color(buf: bytes) -> np.ndarray | None:
     component AC band scans over each component's OWN raster block grid
     (B.2.3), successive approximation in both. Returns uint8 (h, w, 3)
     RGB or None."""
-    got = _progressive_planes(buf, 3)
-    if got is None:
-        return None
-    planes, (h, w) = got
-    ycc = np.stack(planes, axis=-1) + 128.0
-    return ycbcr_to_rgb(ycc)[:h, :w]
+    return _decode(buf, True, 3)

@@ -501,3 +501,87 @@ def test_subsampled_progressive_equals_subsampled_baseline():
             assert np.array_equal(
                 decode_jpeg_progressive_color(pe(rgb)),
                 decode_jpeg_color(be(rgb))), (pe.__name__, h, w)
+
+
+# ---- one decode path: the rules every decoder shares --------------------
+
+def test_sos_selector_must_name_a_sof_component():
+    """An SOS component selector is an id the SOF declares (T.81
+    B.2.3); a scan naming an id the frame lacks is rejected by the
+    baseline decoders as it is by the progressive ones."""
+    from cld2_spark.operators.jpeg import (color_fixture_pixels,
+                                           decode_jpeg_color,
+                                           encode_jpeg_color)
+    gray = bytearray(encode_jpeg_gray(gray_fixture_pixels(5)))
+    assert decode_jpeg_gray(bytes(gray)) is not None
+    gray[gray.find(b"\xff\xda") + 5] = 9         # the one selector
+    assert decode_jpeg_gray(bytes(gray)) is None
+    color = bytearray(encode_jpeg_color(color_fixture_pixels(5)))
+    assert decode_jpeg_color(bytes(color)) is not None
+    color[color.find(b"\xff\xda") + 9] = 9       # the Cr selector
+    assert decode_jpeg_color(bytes(color)) is None
+
+
+def test_one_component_sampling_factors_read_as_1x1():
+    """A one-component frame's MCU is one block whatever its SOF
+    sampling byte says (T.81 A.2.2): baseline and progressive decode
+    such a file to the same pixels."""
+    from cld2_spark.operators.jpeg import (decode_jpeg_progressive_gray,
+                                           encode_jpeg_progressive_gray)
+    px = gray_fixture_pixels(8)
+    for enc, dec in ((encode_jpeg_gray, decode_jpeg_gray),
+                     (encode_jpeg_progressive_gray,
+                      decode_jpeg_progressive_gray)):
+        buf = bytearray(enc(px))
+        want = dec(bytes(buf))
+        i = max(buf.find(b"\xff\xc0"), buf.find(b"\xff\xc2"))
+        assert buf[i + 11] == 0x11
+        buf[i + 11] = 0x22
+        got = dec(bytes(buf))
+        assert got is not None and np.array_equal(got, want)
+
+
+def test_each_scan_uses_the_huffman_tables_before_its_sos():
+    """Tables may be redefined between progressive scans (libjpeg's
+    optimized tables are): each scan decodes with the tables defined
+    before its SOS, not with the file's last definition."""
+    from cld2_spark.operators.jpeg import (DC_BITS_C, DC_VALS_C,
+                                           decode_jpeg_progressive_gray,
+                                           encode_jpeg_progressive_gray)
+    buf = encode_jpeg_progressive_gray(gray_fixture_pixels(6))
+    want = decode_jpeg_progressive_gray(buf)
+    payload = bytes([0x00] + DC_BITS_C + DC_VALS_C)   # DC table 0
+    dht = b"\xff\xc4" + struct.pack(">H", len(payload) + 2) + payload
+    second_sos = buf.find(b"\xff\xda", buf.find(b"\xff\xda") + 2)
+    redefined = buf[:second_sos] + dht + buf[second_sos:]
+    got = decode_jpeg_progressive_gray(redefined)
+    assert got is not None and np.array_equal(got, want)
+
+
+def test_progressive_scan_runs_to_the_end_of_a_cut_file():
+    """A scan's entropy data runs to the next marker, or to the end of
+    the buffer when none follows: a progressive file without its EOI
+    decodes in full, and one cut at a scan boundary decodes its first
+    scans."""
+    from cld2_spark.operators.jpeg import (decode_jpeg_progressive_gray,
+                                           encode_jpeg_progressive_sa_gray)
+    px = gray_fixture_pixels(10)
+    buf = encode_jpeg_progressive_sa_gray(px)
+    assert buf.endswith(b"\xff\xd9")
+    assert np.array_equal(decode_jpeg_progressive_gray(buf[:-2]),
+                          decode_jpeg_progressive_gray(buf))
+    partial = decode_jpeg_progressive_gray(buf[:buf.rfind(b"\xff\xda")])
+    assert partial is not None and partial.shape == px.shape
+
+
+def test_dc_category_above_15_is_rejected_not_raised():
+    """A DHT DC value above 15 exists at no precision; a progressive
+    DC scan that decodes one returns None instead of overflowing the
+    int64 coefficients."""
+    from cld2_spark.operators.jpeg import (decode_jpeg_progressive_gray,
+                                           encode_jpeg_progressive_sa_gray)
+    buf = bytearray(encode_jpeg_progressive_sa_gray(gray_fixture_pixels(13)))
+    dht = buf.find(b"\xff\xc4")
+    assert buf[dht + 4] == 0x00                  # the DC table comes first
+    buf[dht + 4 + 17 + 4] = 97                   # category 4 -> 97
+    assert decode_jpeg_progressive_gray(bytes(buf)) is None

@@ -112,11 +112,45 @@ def test_mp4_walkers_never_crash_on_arbitrary_bytes(buf):
 def test_jpeg_decoders_never_crash_on_arbitrary_bytes(buf):
     from cld2_spark.operators.jpeg import (decode_jpeg_color,
                                            decode_jpeg_gray,
+                                           decode_jpeg_progressive_color,
                                            decode_jpeg_progressive_gray)
     for fn in (decode_jpeg_gray, decode_jpeg_color,
-               decode_jpeg_progressive_gray):
+               decode_jpeg_progressive_gray, decode_jpeg_progressive_color):
         out = fn(buf)
         assert out is None or out.dtype == np.uint8
+
+
+def _real_jpegs():
+    """One real file per decoder profile: baseline gray with restart
+    intervals, baseline 4:2:0, progressive successive-approximation gray
+    and progressive 4:2:0."""
+    from cld2_spark.operators import jpeg as J
+    gray, rgb = J.gray_fixture_pixels(3), J.color_fixture_pixels(7)
+    return (J.encode_jpeg_gray(gray, restart_interval=2),
+            J.encode_jpeg_420(rgb),
+            J.encode_jpeg_progressive_sa_gray(gray),
+            J.encode_jpeg_progressive_420(rgb))
+
+
+@settings(max_examples=150, deadline=None)
+@given(bytes_st, st.integers(min_value=0, max_value=4096))
+def test_spliced_real_jpegs_never_crash(buf, at):
+    """Splice arbitrary bytes INTO real JPEGs (valid SOI, so the marker
+    parser runs on corrupt headers, tables and entropy data) — every
+    decoder must return None or a uint8 image."""
+    from cld2_spark.operators.jpeg import (decode_jpeg_color,
+                                           decode_jpeg_gray,
+                                           decode_jpeg_progressive_color,
+                                           decode_jpeg_progressive_gray)
+    for real in _real_jpegs():
+        base = bytearray(real)
+        off = 2 + at % (len(base) - 2)
+        base[off:off + len(buf)] = buf
+        for fn in (decode_jpeg_gray, decode_jpeg_color,
+                   decode_jpeg_progressive_gray,
+                   decode_jpeg_progressive_color):
+            out = fn(bytes(base))
+            assert out is None or out.dtype == np.uint8
 
 
 @settings(max_examples=100, deadline=None)
