@@ -62,7 +62,8 @@ def analyze_batch(texts: list[str],
         model = default_model()
     nb = T.normalize_batch(texts)
     # the slice's gram stream, built once: pass 1 scores it, the rescue a
-    # row selection of it, and the cross-check reads its compressed stream
+    # row selection of it, and the squeeze trigger and the cross-check
+    # read its letter stream
     stream = GramStream.build(nb, model)
     out = detect_batch(texts, model, stream=stream)
     # bestEffort rescue for short refused/unreliable rows: the answer
@@ -83,7 +84,7 @@ def analyze_batch(texts: list[str],
         out["summary_pct"][ridx] = be["summary_pct"][ok]
         out["rel1"][ridx] = be["rel1"][ok]
         out["be_ok"][ridx] = True
-    cc = crosscheck_batch(texts, model, stream=stream)
+    cc = crosscheck_batch(stream, model)
     out["ft_lang"] = cc["ft_lang"]
     out["ppl"] = cc["ppl"]
     out["tri_grams"] = cc["n_grams"]

@@ -14,10 +14,9 @@ detector: different gram order, different table).
     Natural text in any trained language scores low; junk/markup scores
     high. Thresholded into drop reason 'high_perplexity'.
 
-Vectorized end-to-end: one compressed letter stream per batch, one hash
-pass, one table probe, two scatter-adds. Under analyze_batch the letter
-stream is the detector's own (detect.GramStream) whenever the detector's
-script set is all of the batch's scripts; otherwise it is compressed here.
+Vectorized end-to-end: one compressed letter stream per batch (the
+detector's GramStream.letters), one hash pass, one table probe, two
+scatter-adds.
 """
 
 from __future__ import annotations
@@ -34,55 +33,32 @@ PERPLEXITY_THRESHOLD = 9.5
 MIN_GRAMS_FOR_PPL = 4  # fewer trigrams -> no perplexity verdict (too short)
 
 
-def char_trigrams(arr: np.ndarray, rid_s: np.ndarray,
-                  buf: np.ndarray | None = None):
-    """All 3-letter windows (no spaces) in a compressed stream. `buf` (the
-    stream's padded UTF-8 encoding) may be supplied by a caller that
-    already has it; it MUST be encode_utf8(arr)."""
-    n = len(arr)
-    if n < 3:
+def char_trigrams(arr: np.ndarray, rid_s: np.ndarray):
+    """All 3-letter windows (no spaces) in a compressed stream: their row
+    ids, and start bytes and byte lengths in T.encode_utf8(arr)."""
+    if len(arr) < 3:
         z = np.zeros(0, dtype=np.int64)
-        return z, z, z, np.zeros(32, dtype=np.uint8)
+        return z, z, z
     is_letter = arr != T.SPACE
     ok = is_letter[:-2] & is_letter[1:-1] & is_letter[2:]
     pos = np.flatnonzero(ok)
     boff = T.utf8_offsets(arr)
     byte_start = boff[pos]
-    byte_len = boff[pos + 3] - byte_start
-    if buf is None:
-        buf = T.encode_utf8(arr)
-    return rid_s[pos], byte_start, byte_len, buf
+    return rid_s[pos], byte_start, boff[pos + 3] - byte_start
 
 
-def crosscheck_batch(texts: list[str], model: Cld2sModel | None = None,
-                     stream: GramStream | None = None) -> dict[str, np.ndarray]:
-    """Returns per-row: ft_lang (code), ft_score (int), ppl (float), n_grams.
-
-    The detector's `stream` over normalize_batch of `texts` skips
-    normalizing here; a built stream's compressed stream and buffer are
-    used as they are when they cover exactly the batch's scripts."""
+def crosscheck_batch(stream: GramStream,
+                     model: Cld2sModel | None = None) -> dict[str, np.ndarray]:
+    """Returns per-row: ft_lang (code), ft_score (int), ppl (float), n_grams,
+    scored over the letters of every script of the detector's `stream`."""
     if model is None:
         from .model import default_model
         model = default_model()
     tri = model.tri
-    nb = T.normalize_batch(texts) if stream is None else stream.nb
-    n = nb.n
+    n = stream.nb.n
     L = len(model.langs)
-
-    # one stream over ALL letters regardless of script
-    all_scripts = stream.present if stream is not None \
-        else T.present_scripts(nb)
-    buf0 = None
-    if (stream is not None and stream.rows is None
-            and stream.many == all_scripts.tolist()):
-        # the detector's RTypeMany stream covered exactly these scripts
-        # (all-Latin batches, the common case): its compressed stream and
-        # encoded buffer ARE ours (identical keep logic, asserted by
-        # test_crosscheck_stream_reuse)
-        arr, rid_s, buf0 = stream.arr, stream.rid_s, stream.buf
-    else:
-        arr, rid_s = T.group_stream(nb, all_scripts.astype(np.uint8))
-    g_rid, bs, bl, buf = char_trigrams(arr, rid_s, buf=buf0)
+    arr, rid_s, buf = stream.letters
+    g_rid, bs, bl = char_trigrams(arr, rid_s)
 
     n_grams = np.zeros(n, dtype=np.int64)
     surprise = np.zeros(n, dtype=np.int64)

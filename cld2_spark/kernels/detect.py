@@ -34,12 +34,13 @@ Known deviations from the C++ (documented for the judge):
 from __future__ import annotations
 
 from dataclasses import dataclass, replace
+from functools import cached_property
 
 import numpy as np
 
 from . import text as T
 from . import unicode_tables as ut
-from .hashes import quad_hash_v2
+from .hashes import octa_hash_40, pair_hash, quad_hash_v2
 from .model import Cld2sModel
 
 QUAD_CHUNK = 20   # quads per scored chunk (internal/scoreonescriptspan.h:91)
@@ -94,31 +95,6 @@ CJK_SCRIPTS = np.array([ut.SCRIPT_ID[s] for s in ("Hani", "Hira", "Kata", "Bopo"
                        dtype=np.uint8)
 
 
-def _word_walk(arr: np.ndarray):
-    """Shared word-walk over a compressed letter stream: the intermediates
-    every gram extractor needs (space mask, word ids/starts/lengths, UTF-8
-    offsets, encoded buffer). Computed ONCE and consumed by the quad and
-    word extractors below. Returns None for a wordless stream."""
-    n = len(arr)
-    is_sp = arr == T.SPACE
-    prev_sp = np.empty_like(is_sp)
-    prev_sp[0] = True
-    prev_sp[1:] = is_sp[:-1]
-    word_start = (~is_sp) & prev_sp
-    if not word_start.any():
-        return None
-    wid = (np.cumsum(word_start, dtype=np.int32) - 1)    # word id per char
-    idx = np.arange(n, dtype=np.int32)
-    wstart = idx[word_start]                             # (n_words,)
-    # the compressed stream is single-space separated with a trailing
-    # space, so each word's length is the gap to the next word start
-    # minus its separator (one diff; no mask-gather + bincount pass)
-    wlen = (np.diff(wstart, append=np.int32(n)) - 1).astype(np.int32)
-    boff = T.utf8_offsets(arr)
-    buf = T.encode_utf8(arr)
-    return is_sp, wid, idx, wstart, wlen, boff, buf
-
-
 def _sorted_unique(a: np.ndarray, return_index: bool = False):
     """np.unique for an ALREADY-SORTED array: one neighbor compare
     instead of a re-sort (the hit-stream row ids are sorted by
@@ -132,73 +108,6 @@ def _sorted_unique(a: np.ndarray, return_index: bool = False):
         idx = np.flatnonzero(first)
         return a[idx], idx
     return a[first]
-
-
-def _empty_quads():
-    z = np.zeros(0, dtype=np.int64)
-    return z, z, z, np.zeros(32, dtype=np.uint8), z, z, z
-
-
-def _quads_from_walk(walk, arr, rid_s, vowel_skip):
-    """Quadgram outputs from a precomputed word walk (see quad_grams)."""
-    is_sp, wid, idx, wstart, wlen, boff, buf = walk
-    o = idx - wstart[wid]                                # offset in word
-    L = wlen[wid]
-    # streams are built from the lower table + SPACE, both < MAX_CP by
-    # construction (normalize_batch maps astral chars to SPACE), so the
-    # LUT gather needs no clip pass
-    skip = _VOWEL_LUT[arr] if vowel_skip \
-        else np.zeros(len(arr), dtype=bool)
-    gram = (~is_sp) & ((o == 0) | ((o <= L - 4) & ~skip))
-    pos = idx[gram]
-    glen = np.where(o[gram] == 0, np.minimum(L[gram], 4), np.int32(4))
-    return _quad_outputs(pos, glen, boff, buf, rid_s)
-
-
-def _quad_outputs(pos, glen, boff, buf, rid_s):
-    """(pos, glen) char-domain grams -> the quad_grams output tuple."""
-    byte_start = boff[pos]
-    byte_len = np.minimum(boff[pos + glen] - byte_start, 12)
-    # J2 backoff key: byte length of the gram's <=3-char prefix (the second
-    # lookup table is probed with the prefix-trigram hash on a main-table
-    # miss; see GetQuadHits dual probe, internal/cldutil.cc:355-362)
-    tri_len = np.minimum(boff[pos + np.minimum(glen, 3)] - byte_start, 12)
-    g_rid = rid_s[pos]
-    # non-overlapping byte coverage per gram (chunk byte spans, W1 analogue):
-    # distance to next gram start within the same row; last gram -> own len
-    gram_bytes = np.empty(len(pos), dtype=np.int32)
-    if len(pos):
-        gram_bytes[:-1] = byte_start[1:] - byte_start[:-1]
-        gram_bytes[-1] = byte_len[-1]
-        row_end = np.empty(len(pos), dtype=bool)
-        row_end[:-1] = g_rid[1:] != g_rid[:-1]
-        row_end[-1] = True
-        gram_bytes[row_end] = byte_len[row_end]
-    return g_rid, byte_start, byte_len, buf, gram_bytes, pos, tri_len
-
-
-def quad_grams(arr: np.ndarray, rid_s: np.ndarray, vowel_skip: bool = True):
-    """Extract quadgram positions from a compressed letter stream.
-
-    Returns (g_rid, byte_start, byte_len, buf, gram_bytes, pos, tri_len)
-    where buf is the stream's padded UTF-8 buffer and tri_len is the byte
-    length of each gram's <=3-char prefix (the J2 backoff probe key).
-
-    vowel_skip=False disables the mid-word vowel-start skip (TRAINING
-    only): the trained gram set becomes a strict superset of what
-    inference probes, which measurably raises the table hit rate on
-    unseen text (+1 held-out case) at zero inference cost. Gram selection mirrors the reference's
-    per-word walk (GetQuadHits internal/cldutil.cc:315-405): one gram per
-    letter position, mid-word vowel starts skipped (kAdvanceOneCharSpaceVowel
-    internal/cldutil_shared.h:462-486), short words produce one whole-word
-    gram, pre/post-space bits sensed from the real spaces in the stream.
-    The reference's literal stride-2 walk was measured as an alternative
-    and not chosen (PARITY.md F6, BENCH/BASELINE.md).
-    """
-    walk = _word_walk(arr) if len(arr) else None
-    if walk is None:
-        return _empty_quads()
-    return _quads_from_walk(walk, arr, rid_s, vowel_skip)
 
 
 # hint prior weights (J8/K3, internal/compact_lang_det_hint_code.cc:31-32):
@@ -272,34 +181,77 @@ def resolve_hints(model, hints: list) -> tuple[np.ndarray, np.ndarray]:
     return ids, ws
 
 
-def word_grams(arr: np.ndarray, rid_s: np.ndarray):
-    """Extract whole-word grams from a compressed letter stream (J5: the
-    octagram word path, GetOctaHits internal/cldutil.cc:416-533). Words are
-    hashed with the bit-exact OctaHash40 (<=24 bytes, space-sensed pre/post
-    bits); word-pair hashes (J6, PairHash) combine consecutive words.
+def grams(arr: np.ndarray, rid_s: np.ndarray, vowel_skip: bool = True):
+    """The quadgrams and words of a compressed letter stream, from ONE word
+    walk (space mask, word starts/lengths, UTF-8 offsets, encoded buffer).
 
-    Returns (w_rid, h40, pair40, pos) -- raw 40-bit OctaHash40 values;
-    pair40 is 0 for the first word of each row and for identical-word
-    pairs ("Do not look up a pair of identical words",
+    Returns (quads, words). quads = (g_rid, byte_start, byte_len, buf,
+    gram_bytes, pos, tri_len): buf is T.encode_utf8(arr), gram_bytes each
+    gram's non-overlapping byte coverage, pos its start in arr and tri_len
+    the byte length of its <=3-char prefix (the J2 backoff probe key).
+    Gram selection mirrors the reference's per-word walk (GetQuadHits
+    internal/cldutil.cc:315-405): one gram per letter position, mid-word
+    vowel starts skipped (kAdvanceOneCharSpaceVowel
+    internal/cldutil_shared.h:462-486), short words produce one whole-word
+    gram, pre/post-space bits sensed from the real spaces in the stream.
+    The reference's literal stride-2 walk was measured as an alternative
+    and not chosen (PARITY.md F6, BENCH/BASELINE.md).
+
+    vowel_skip=False disables the mid-word vowel-start skip (TRAINING
+    only): its quads are a superset of the vowel_skip=True quads, so the
+    trained gram set covers every gram inference probes, which measurably
+    raises the table hit rate on unseen text (+1 held-out case) at zero
+    inference cost. The words do not depend on it.
+
+    words = (w_rid, h40, pair40, pos) (J5: the octagram word path,
+    GetOctaHits internal/cldutil.cc:416-533): each word's bit-exact
+    OctaHash40 (<=24 bytes, space-sensed pre/post bits) and the J6
+    PairHash with the previous word, 0 for the first word of each row and
+    for identical-word pairs ("Do not look up a pair of identical words",
     internal/cldutil.cc:470-475). Words are truncated to 8 letters
     (charcount <= 8 walk, internal/cldutil.cc:515-518).
     """
-    walk = _word_walk(arr) if len(arr) else None
-    if walk is None:
+    n = len(arr)
+    buf = T.encode_utf8(arr)
+    is_sp = arr == T.SPACE
+    word_start = ~is_sp
+    word_start[1:] &= is_sp[:-1]
+    if not word_start.any():
         z = np.zeros(0, dtype=np.int64)
-        return z, z.astype(np.uint64), z.astype(np.uint64), z
-    return _words_from_walk(walk, rid_s)
+        zu = z.astype(np.uint64)
+        return (z, z, z, buf, z, z, z), (z, zu, zu, z)
+    wid = (np.cumsum(word_start, dtype=np.int32) - 1)    # word id per char
+    idx = np.arange(n, dtype=np.int32)
+    wstart = idx[word_start]                             # (n_words,)
+    # the compressed stream is single-space separated with a trailing
+    # space, so each word's length is the gap to the next word start
+    # minus its separator (one diff; no mask-gather + bincount pass)
+    wlen = (np.diff(wstart, append=np.int32(n)) - 1).astype(np.int32)
+    boff = T.utf8_offsets(arr)
 
+    o = idx - wstart[wid]                                # offset in word
+    L = wlen[wid]
+    # streams are built from the lower table + SPACE, both < MAX_CP by
+    # construction (normalize_batch maps astral chars to SPACE), so the
+    # LUT gather needs no clip pass
+    skip = _VOWEL_LUT[arr] if vowel_skip else np.zeros(n, dtype=bool)
+    gram = (~is_sp) & ((o == 0) | ((o <= L - 4) & ~skip))
+    pos = idx[gram]
+    glen = np.where(o[gram] == 0, np.minimum(L[gram], 4), np.int32(4))
+    byte_start = boff[pos]
+    byte_len = np.minimum(boff[pos + glen] - byte_start, 12)
+    tri_len = np.minimum(boff[pos + np.minimum(glen, 3)] - byte_start, 12)
+    g_rid = rid_s[pos]
+    # chunk byte spans (W1 analogue): distance to the next gram start
+    # within the same row; a row's last gram covers its own length
+    gram_bytes = np.empty(len(pos), dtype=np.int32)
+    gram_bytes[:-1] = byte_start[1:] - byte_start[:-1]
+    row_end = np.ones(len(pos), dtype=bool)
+    row_end[:-1] = g_rid[1:] != g_rid[:-1]
+    gram_bytes[row_end] = byte_len[row_end]
 
-def _words_from_walk(walk, rid_s):
-    """Word/word-pair outputs from a precomputed word walk (see
-    word_grams)."""
-    from .hashes import octa_hash_40, pair_hash
-
-    _, _, _, wstart, wlen, boff, buf = walk
-    wl8 = np.minimum(wlen, 8)
     bstart = boff[wstart]
-    blen = np.minimum(boff[wstart + wl8] - bstart, 24)
+    blen = np.minimum(boff[wstart + np.minimum(wlen, 8)] - bstart, 24)
     h40 = octa_hash_40(buf, bstart, blen)
     w_rid = rid_s[wstart]
     pair = np.zeros(len(wstart), dtype=np.uint64)
@@ -308,25 +260,8 @@ def _words_from_walk(walk, rid_s):
         same_row = w_rid[1:] == w_rid[:-1]
         diff_word = h40[1:] != h40[:-1]
         pair[1:] = np.where(same_row & diff_word, p40, 0)
-    return w_rid, h40, pair, wstart
-
-
-def quad_and_word_grams(arr: np.ndarray, rid_s: np.ndarray):
-    """quad_grams + word_grams sharing ONE word walk over the stream.
-
-    The two extractors share the word walk (space mask, word ids/lengths),
-    the UTF-8 offset table and the encoded buffer -- recomputing them was
-    ~40% of the two functions' combined cost. Each extractor's rules live
-    in exactly one place (_quads_from_walk / _words_from_walk); outputs
-    are identical to calling quad_grams and word_grams separately
-    (asserted by tests/test_hashes.py fuzz)."""
-    z = np.zeros(0, dtype=np.int64)
-    zu = z.astype(np.uint64)
-    walk = _word_walk(arr) if len(arr) else None
-    if walk is None:
-        return _empty_quads(), (z, zu, zu, z)
-    return (_quads_from_walk(walk, arr, rid_s, True),
-            _words_from_walk(walk, rid_s))
+    return ((g_rid, byte_start, byte_len, buf, gram_bytes, pos, tri_len),
+            (w_rid, h40, pair, wstart))
 
 
 def row_dedupe_filter(h: np.ndarray, g_rid: np.ndarray) -> np.ndarray:
@@ -782,9 +717,9 @@ class GramStream:
     The compressed letter stream covers the slice's quad-scored scripts
     (`many`); its quads and words are extracted and hashed once. Detect
     pass 1 scores the whole stream; the O6 retry and analyze's bestEffort
-    rescue score `select(rows)` of it; the cross-check reads the compressed
-    stream and buffer of a built stream when its own script set is the
-    same. Rows are space-delimited in the stream and every gram, hash and
+    rescue score `select(rows)` of it; the cross-check and the O8 squeeze
+    trigger read its all-script letter stream, `letters`. Rows are
+    space-delimited in the stream and every gram, hash and
     filter is row-local, so a row selection scores exactly like a stream
     built from scratch on the selected rows (tests/test_retry_cache.py).
     A selection shares the built stream's character arrays and buffer
@@ -799,10 +734,10 @@ class GramStream:
     rid_s: np.ndarray     # row id per stream char
     scr_s: np.ndarray     # script id per stream char
     orig_s: np.ndarray    # position in nb.cp per stream char
-    buf: np.ndarray       # T.encode_utf8(arr) (only its padding if wordless)
+    buf: np.ndarray       # T.encode_utf8(arr)
     g_rid: np.ndarray     # per quad: row id (ascending)
     h: np.ndarray         # per quad: QuadHashV2
-    gb: np.ndarray        # per quad: byte coverage (see _quad_outputs)
+    gb: np.ndarray        # per quad: byte coverage (see grams)
     pos: np.ndarray       # per quad: start in arr
     bs: np.ndarray        # per quad: start byte in buf
     tri3: np.ndarray      # per quad: bytes of its <=3-char prefix (J2 key)
@@ -825,12 +760,22 @@ class GramStream:
             else (ut.RTYPE_MANY,)
         many = [s for s in present.tolist() if ut.RTYPE[s] in quad_rtypes
                 and ut.SCRIPTS[s][0] in model.group_tables]
-        arr, rid_s, scr_s, orig_s = T.group_stream_with_script(
+        arr, rid_s, scr_s, orig_s = T.letter_stream(
             nb, np.array(many, dtype=np.uint8))
-        quads, w = quad_and_word_grams(arr, rid_s)
-        g_rid, bs, bl, buf, gb, pos, tri3 = quads
+        (g_rid, bs, bl, buf, gb, pos, tri3), w = grams(arr, rid_s)
         return cls(nb, present, many, arr, rid_s, scr_s, orig_s, buf, g_rid,
                    quad_hash_v2(buf, bs, bl), gb, pos, bs, tri3, *w)
+
+    @cached_property
+    def letters(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """The letter stream of ALL `present` scripts: (codepoints, row
+        ids, T.encode_utf8 buffer). A built stream that covers every
+        present script (all-Latin slices, the common case) is its own;
+        any other stream compresses its nb here, once."""
+        if self.rows is None and self.many == self.present.tolist():
+            return self.arr, self.rid_s, self.buf
+        arr, rid_s, _, _ = T.letter_stream(self.nb, self.present)
+        return arr, rid_s, T.encode_utf8(arr)
 
     def select(self, rows: np.ndarray) -> GramStream:
         """Rows `rows` (ascending) of this stream, with no re-gramming or
@@ -921,21 +866,20 @@ def detect_batch(texts: list[str] | None, model: Cld2sModel | None = None,
     if len(big):
         from .squeeze import cheap_squeeze, squeeze_trigger_test
         # trigger + squeeze operate on the row's letters+spaces stream
-        # (the reference's scriptspan form), not the raw text. Only the
-        # big rows are streamed -- a whole-batch group_stream here
-        # measurably slowed batches containing one long row.
-        nb_big = T.subset_norm_batch(nb, big)
-        scripts_big = np.unique(nb_big.script[nb_big.letter])
-        s_arr, s_rid = T.group_stream(nb_big, scripts_big)
-        # s_rid ascends: one searchsorted cuts every row's run
-        cut = np.searchsorted(s_rid, np.arange(len(big) + 1)).tolist()
-        for j, i in enumerate(big.tolist()):
-            row = s_arr[cut[j]:cut[j + 1]]
+        # (the reference's scriptspan form), not the raw text: its run of
+        # the slice's letter stream plus ONE leading space, whatever its
+        # neighbours. The char before a row's run is always a space (the
+        # previous run's last char, or the stream's leading space), and
+        # rid_s ascends, so one searchsorted cuts every run.
+        arr, rid_s, _ = stream.letters
+        lo = np.maximum(np.searchsorted(rid_s, big) - 1, 0).tolist()
+        hi = np.searchsorted(rid_s, big + 1).tolist()
+        for i, a, b in zip(big.tolist(), lo, hi):
             # encode_utf8 pads with 32 NULs for windowed gathers; strip
             # them here or they count toward the 256-byte trigger gate
             # (and NUL is "predicted" by the zero-init table) and would
             # ride into the squeezed retry text
-            sbuf = T.encode_utf8(row)[:-32].tobytes()
+            sbuf = T.encode_utf8(arr[a:b])[:-32].tobytes()
             if squeeze_trigger_test(sbuf):
                 squeeze[i] = True
                 squeezed_text[i] = cheap_squeeze(

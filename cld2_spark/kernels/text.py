@@ -112,53 +112,29 @@ def present_scripts(nb: NormBatch) -> np.ndarray:
     return np.flatnonzero(np.bincount(nb.script, weights=nb.letter) > 0)
 
 
-def group_stream_with_script(nb: NormBatch, script_ids: np.ndarray):
-    """Like group_stream but also returns the per-kept-char script ids and
-    the kept chars' ORIGINAL positions in nb.cp (the OffsetMap analogue,
-    internal/offsetmap.h:25-45 -- lets chunk spans map back to the source
-    text), so a single pass can serve several script groups."""
+def letter_stream(nb: NormBatch, script_ids: np.ndarray):
+    """Compress the batch to the letters of `script_ids` + single-space
+    separators.
+
+    Equivalent to CLD2's per-scriptspan letter stream ("collapse non-letters
+    to single space", internal/getonescriptspan.cc:799-1027) but computed for
+    a whole batch in one pass. Returns (codepoints, row ids, script ids,
+    positions in nb.cp) per kept char; the positions are the OffsetMap
+    analogue (internal/offsetmap.h:25-45) that maps chunk spans back to the
+    source text. The stream always starts with a space and every row
+    boundary is a space, so grams never cross rows.
+    """
     if len(nb.cp) == 0:
         e = np.zeros(0, dtype=np.uint32)
         return e, nb.rid, nb.script, e.astype(np.int32)
     lut = np.zeros(ut.N_SCRIPTS, dtype=bool)
     lut[script_ids] = True
-    in_group = nb.letter & lut[nb.script]
-    arr = np.where(in_group, nb.lower, SPACE)
+    arr = np.where(nb.letter & lut[nb.script], nb.lower, SPACE)
     is_sp = arr == SPACE
-    prev_sp = np.empty_like(is_sp)
-    prev_sp[0] = False
-    prev_sp[1:] = is_sp[:-1]
-    keep = ~(is_sp & prev_sp)
-    keep[0] = True
+    keep = np.ones(len(arr), dtype=bool)  # position 0: the leading space
+    keep[1:] = ~(is_sp[1:] & is_sp[:-1])
     orig = np.flatnonzero(keep).astype(np.int32)
     return arr[keep], nb.rid[keep], nb.script[keep], orig
-
-
-def group_stream(nb: NormBatch, script_ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Compress the batch to one group's letters + single-space separators.
-
-    Equivalent to CLD2's per-scriptspan letter stream ("collapse non-letters
-    to single space", internal/getonescriptspan.cc:799-1027) but computed for
-    a whole batch in one pass. Returns (codepoints, row_ids); the stream
-    always starts with a space and every row boundary is a space, so grams
-    never cross rows.
-    """
-    if len(nb.cp) == 0:
-        return np.zeros(0, dtype=np.uint32), nb.rid
-    if len(script_ids) == 1:
-        in_group = nb.letter & (nb.script == script_ids[0])
-    else:
-        lut = np.zeros(ut.N_SCRIPTS, dtype=bool)
-        lut[script_ids] = True
-        in_group = nb.letter & lut[nb.script]
-    arr = np.where(in_group, nb.lower, SPACE)
-    is_sp = arr == SPACE
-    prev_sp = np.empty_like(is_sp)
-    prev_sp[0] = False  # keep position 0 (the global leading space)
-    prev_sp[1:] = is_sp[:-1]
-    keep = ~(is_sp & prev_sp)
-    keep[0] = True
-    return arr[keep], nb.rid[keep]
 
 
 def utf8_offsets(arr: np.ndarray) -> np.ndarray:
@@ -201,7 +177,7 @@ def take_rows(rid: np.ndarray, rows: np.ndarray, lead: int = 0):
 
 def subset_norm_batch(nb: NormBatch, rows: np.ndarray) -> NormBatch:
     """Row-subset of a NormBatch, equal to normalize_batch of the subset
-    texts (used by detect.GramStream.select and the squeeze trigger).
+    texts (used by detect.GramStream.select).
 
     Why equality holds: the joined stream is ' ' t0 ' ' t1 ' ' ... with
     each row owning its chars + ONE trailing space (row 0 additionally

@@ -70,12 +70,12 @@ def test_empty_gram_is_zero():
     assert hashes.bi_hash_v2(buf, s, z)[0] == 0
 
 
-def test_quad_and_word_grams_matches_separate():
-    """The fused extractor must equal quad_grams + word_grams exactly."""
+def test_grams_vowel_skip_superset():
+    """grams(vowel_skip=False), the training walk, yields every quad the
+    inference walk does (by row and position) and the same words."""
     import numpy as np
     from cld2_spark.kernels import text as T
-    from cld2_spark.kernels.detect import (quad_and_word_grams, quad_grams,
-                                           word_grams)
+    from cld2_spark.kernels.detect import grams
     rng = np.random.default_rng(5)
     samples = [
         "the quick brown fox jumps over the lazy dog",
@@ -87,14 +87,17 @@ def test_quad_and_word_grams_matches_separate():
         " ".join("".join(rng.choice(list("abcdefgéè "), size=rng.integers(1, 12)))
                  for _ in range(50)),
     ]
+    grew = False
     for s in samples:
         nb = T.normalize_batch([s, s[::-1], "test row"])
         scripts = np.unique(nb.script[nb.letter])
-        arr, rid_s = T.group_stream(nb, scripts)
-        q, w = quad_and_word_grams(arr, rid_s)
-        q2 = quad_grams(arr, rid_s)
-        w2 = word_grams(arr, rid_s)
-        for a, b in zip(q, q2):
-            np.testing.assert_array_equal(a, b)
+        arr, rid_s, _, _ = T.letter_stream(nb, scripts)
+        (q_rid, *_, q_pos, _), w = grams(arr, rid_s)
+        (t_rid, *_, t_pos, _), w2 = grams(arr, rid_s, vowel_skip=False)
+        inference = set(zip(q_rid.tolist(), q_pos.tolist()))
+        training = set(zip(t_rid.tolist(), t_pos.tolist()))
+        assert inference <= training
+        grew |= len(training) > len(inference)
         for a, b in zip(w, w2):
             np.testing.assert_array_equal(a, b)
+    assert grew

@@ -138,15 +138,14 @@ def test_empty_input_runs_through_pipeline(spark):
 
 
 def test_crosscheck_stream_reuse():
-    """analyze_batch hands the detector's gram stream to the cross-check,
-    which reads its compressed stream when the script sets coincide;
-    results must be IDENTICAL to the stream-less path on Latin,
-    mixed-script and CJK-bearing batches (the latter two must fall back
-    internally)."""
+    """GramStream.letters, the letter stream the cross-check and the
+    squeeze trigger read, must equal a fresh letter_stream over the
+    stream's present scripts plus its UTF-8 buffer, for a built stream
+    (all-Latin ones reuse their own arrays) and for a row selection, on
+    Latin, mixed-script and CJK-bearing batches."""
     import numpy as np
 
     from cld2_spark.kernels import text as T
-    from cld2_spark.kernels.crosscheck import crosscheck_batch
     from cld2_spark.kernels.detect import GramStream
     from cld2_spark.kernels.model import default_model
 
@@ -156,14 +155,18 @@ def test_crosscheck_stream_reuse():
         ["hello world", "Ελληνικά κείμενο εδώ", "привет мир как дела"],
         ["hello world", "これは日本語のテキストです", "mixed 中文 and english"],
     ]
+    reused = []
     for texts in batches:
-        nb = T.normalize_batch(texts)
-        stream = GramStream.build(nb, m)
-        base = crosscheck_batch(texts, m)
-        reused = crosscheck_batch(texts, m, stream=stream)
-        assert list(base["ft_lang"]) == list(reused["ft_lang"])
-        assert np.allclose(base["ppl"], reused["ppl"])
-        assert (base["n_grams"] == reused["n_grams"]).all()
+        built = GramStream.build(T.normalize_batch(texts), m)
+        for stream in (built, built.select(np.array([1]))):
+            arr, rid_s, buf = stream.letters
+            want, want_rid, _, _ = T.letter_stream(stream.nb, stream.present)
+            np.testing.assert_array_equal(arr, want)
+            np.testing.assert_array_equal(rid_s, want_rid)
+            np.testing.assert_array_equal(buf, T.encode_utf8(want))
+            reused.append(arr is stream.arr)
+    # the one shortcut: only the all-Latin built stream is its own
+    assert reused == [True, False, False, False, False, False]
 
 
 # Rule edge cases: whitespace variants (trim strips only ' ', Java's \s

@@ -7,7 +7,7 @@ batch-composition effects.
 """
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from cld2_spark.kernels.analyze import analyze_batch
 from cld2_spark.kernels.detect import detect_batch
@@ -37,22 +37,32 @@ def test_detect_never_crashes_and_is_well_formed(texts):
     assert (res["summary_pct"] >= 0).all() and (res["summary_pct"] <= 100).all()
 
 
+FR = ("Le gouvernement a annoncé mardi une série de mesures destinées à "
+      "soutenir les entreprises touchées par la crise, notamment un report "
+      "des charges sociales et un prêt garanti par l'État pour les petites "
+      "et moyennes entreprises. ")
+EN = ("The committee met on Tuesday to discuss the annual budget and agreed "
+      "to postpone the final vote until the next session of parliament. ")
+
+
 @settings(max_examples=30, deadline=None)
 @given(st.text(alphabet=st.characters(blacklist_categories=("Cs",), max_codepoint=0xFFFF),
                max_size=200),
        st.integers(min_value=0, max_value=10))
+# a >2 KB row whose squeeze-trigger verdict hangs on the leading space of
+# its letter stream: it must get that space after a >2 KB neighbour too
+@example(text="ab " * 45 + (FR + EN) * 6, pad=1)
 def test_batch_position_independence(text, pad):
     """A text's verdict must not depend on its batch neighbors (the core
-    requirement for deterministic distributed execution)."""
-    filler = ["hello world example text"] * pad
-    alone = detect_batch([text])
-    batched = detect_batch(filler + [text] + filler)
-    i = pad
-    assert alone["lang1"][0] == batched["lang1"][i]
-    assert alone["summary_lang"][0] == batched["summary_lang"][i]
-    assert alone["pct1"][0] == batched["pct1"][i]
-    assert alone["rel1"][0] == batched["rel1"][i]
-    assert alone["is_reliable"][0] == batched["is_reliable"][i]
+    requirement for deterministic distributed execution), whether or not
+    a neighbour is long enough for the squeeze trigger."""
+    filler = ["lorem ipsum " * 200] + ["hello world example text"] * pad
+    i = len(filler)
+    for fn in (detect_batch, analyze_batch):
+        alone = fn([text])
+        batched = fn(filler + [text] + filler)
+        for k in ("lang1", "summary_lang", "pct1", "rel1", "is_reliable"):
+            assert alone[k][0] == batched[k][i], (fn.__name__, k)
 
 
 @settings(max_examples=20, deadline=None)

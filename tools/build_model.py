@@ -38,7 +38,7 @@ sys.path.insert(0, str(REPO))
 from cld2_spark.kernels import text as T                 # noqa: E402
 from cld2_spark.kernels import unicode_tables as ut      # noqa: E402
 from cld2_spark.kernels.detect import (  # noqa: E402
-    detect_batch, quad_grams, repeat_filter)
+    detect_batch, grams, repeat_filter)
 from cld2_spark.kernels.crosscheck import char_trigrams  # noqa: E402
 from cld2_spark.kernels.hashes import quad_hash_v2       # noqa: E402
 from cld2_spark.kernels.model import (  # noqa: E402
@@ -224,11 +224,11 @@ def main(write: bool = True) -> dict:
         nb = T.normalize_batch([train_text(snip)])
         # identical extraction to inference: one stream over all scorable
         # scripts, grams dispatched by first-char script
-        arr, rid_s, scr_s, _orig = T.group_stream_with_script(nb, many_all)
+        arr, rid_s, scr_s, _orig = T.letter_stream(nb, many_all)
         # TRAIN without the mid-word vowel skip: trained grams are a strict
-        # superset of what inference probes (quad_grams vowel_skip doc),
+        # superset of what inference probes (grams vowel_skip doc),
         # raising the unseen-text hit rate at zero inference cost
-        g_rid, bs, bl, buf, gb, pos, tri_len = quad_grams(
+        (g_rid, bs, bl, buf, gb, pos, tri_len), _ = grams(
             arr, rid_s, vowel_skip=False)
         if len(g_rid) == 0:
             continue
@@ -268,12 +268,11 @@ def main(write: bool = True) -> dict:
             continue
         lid = lang_id[lang]
         nb = T.normalize_batch([train_text(snip)])
-        all_scripts = np.unique(nb.script[nb.letter])
-        arr, rid_s = T.group_stream(nb, all_scripts.astype(np.uint8))
-        g_rid, bs, bl, buf = char_trigrams(arr, rid_s)
+        arr, rid_s, _, _ = T.letter_stream(nb, T.present_scripts(nb))
+        g_rid, bs, bl = char_trigrams(arr, rid_s)
         if len(g_rid) == 0:
             continue
-        hs = quad_hash_v2(buf, bs, np.minimum(bl, 12))
+        hs = quad_hash_v2(T.encode_utf8(arr), bs, np.minimum(bl, 12))
         for h in hs.tolist():
             tri_counts[h][lid] += 1
         tri_totals[lid] += len(hs)

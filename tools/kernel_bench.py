@@ -19,8 +19,8 @@ use the BEST (steal noise on a shared VM only ever slows a run). Peak RSS
 is a high-water mark, so the first run's rise is the one that bounds a
 worker's memory; each input runs in a fresh child process so its reading
 does not sit under the other input's peak. A last, untimed pass counts
-the rows detect pass 1 sent to the retry and the rows the bestEffort
-rescue took.
+the rows detect pass 1 sent to the retry, the rows the bestEffort rescue
+took, and the rows over 2 KB the squeeze trigger tested and squeezed.
 
 With `--against DIR` it compares this tree's kernel with the one in the
 checkout DIR: per input, n_runs pairs of child processes score the same
@@ -114,15 +114,18 @@ def natural_texts(seed: int) -> list[str]:
     return [texts[i] for i in rng.permutation(BATCH)]
 
 
-def row_counts(texts: list[str], model) -> tuple[int, int]:
-    """(retried rows, rescued rows) of one pass over the slices: the rows
-    detect's retry pass re-scored and the rows analyze_batch handed to the
-    bestEffort rescue."""
+def row_counts(texts: list[str], model) -> dict[str, int]:
+    """Row counts of one pass over the slices: the rows detect's retry
+    pass re-scored, the rows analyze_batch handed to the bestEffort
+    rescue, the rows the squeeze trigger tested (those over 2 KB) and the
+    rows it fired on."""
     import cld2_spark.kernels.analyze as A
     import cld2_spark.kernels.detect as D
+    import cld2_spark.kernels.squeeze as S
 
-    counts = {"retry": 0, "rescue": 0}
+    counts = {"retry": 0, "rescue": 0, "tested": 0, "squeezed": 0}
     orig_pass, orig_detect = D._detect_pass, A.detect_batch
+    orig_trigger = S.squeeze_trigger_test
 
     def counting_pass(stream, model, *, repeats, **kw):
         if repeats:
@@ -134,13 +137,21 @@ def row_counts(texts: list[str], model) -> tuple[int, int]:
             counts["rescue"] += kw["stream"].nb.n
         return orig_detect(texts, model, **kw)
 
+    def counting_trigger(sbuf):
+        fired = orig_trigger(sbuf)
+        counts["tested"] += 1
+        counts["squeezed"] += bool(fired)
+        return fired
+
     D._detect_pass, A.detect_batch = counting_pass, counting_detect
+    S.squeeze_trigger_test = counting_trigger
     try:
         for s in A.kernel_slices(texts):
             A.analyze_batch(texts[s], model)
     finally:
         D._detect_pass, A.detect_batch = orig_pass, orig_detect
-    return counts["retry"], counts["rescue"]
+        S.squeeze_trigger_test = orig_trigger
+    return counts
 
 
 def pass_seconds(texts: list[str], model) -> float:
@@ -172,10 +183,11 @@ def run_input(name: str, n_runs: int, seed: int) -> None:
         best = min(best, dt)
         print(f"[{name}] run {i}: {len(texts) / dt:.0f} rows/s, "
               f"peak RSS +{grew / 1024:.1f} MB")
-    retried, rescued = row_counts(texts, model)
+    c = row_counts(texts, model)
     print(f"[{name}] BEST: {len(texts) / best:.0f} rows/s "
-          f"({best:.2f}s / {len(texts)} rows); retried rows {retried}, "
-          f"rescued rows {rescued}")
+          f"({best:.2f}s / {len(texts)} rows); retried rows {c['retry']}, "
+          f"rescued rows {c['rescue']}, squeeze-tested rows {c['tested']} "
+          f"(squeezed {c['squeezed']})")
 
 
 CHILD_RUNS = 3
