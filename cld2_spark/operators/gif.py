@@ -27,11 +27,11 @@ at next_code == 2^width (encoder one step later), 4096-entry cap.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cld2_spark.operators.multimodal import _media_stage
 
 PALETTE_SIZE = 16
 GIF_MAX_CODE = 4096
@@ -272,36 +272,31 @@ def decode_gif_pixels(buf: bytes) -> np.ndarray | None:
 
 # ------------------------------------------------------------- features ----
 
+def _gif_row(buf: bytes) -> tuple[int, ...] | None:
+    """(width, height, sum_r, sum_g, sum_b, wsum_r) of a GIF's decoded
+    first image, or None when it does not decode. wsum_r weights each
+    red value by its raster position (order sensitive, so a de-interlace
+    bug cannot cancel out in the sums)."""
+    px = decode_gif_pixels(buf)
+    if px is None:
+        return None
+    h, w = px.shape[:2]
+    chan = px.astype(np.int64)
+    posw = np.arange(h * w, dtype=np.int64)
+    return (w, h, int(chan[..., 0].sum()), int(chan[..., 1].sum()),
+            int(chan[..., 2].sum()),
+            int((chan[..., 0].reshape(-1) * posw).sum()))
+
+
 def gif_frame_features(media: DataFrame, id_col: str = "media_id",
                        payload_col: str = "payload") -> DataFrame:
-    """Integer-exact per-image features over REAL GIF decode: dims,
-    per-channel sums, and a raster-POSITION-weighted red sum (order
-    sensitive, so a de-interlace bug cannot cancel out in the sums).
-    One mapInPandas stage; per-row Python is inherent to LZW's serial
-    bit stream (same disclosure as the JPEG entropy scan)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                px = decode_gif_pixels(bytes(payload))
-                if px is None:
-                    continue
-                h, w = px.shape[:2]
-                chan = px.astype(np.int64)
-                posw = np.arange(h * w, dtype=np.int64)
-                rows.append((int(mid), w, h,
-                             int(chan[..., 0].sum()),
-                             int(chan[..., 1].sum()),
-                             int(chan[..., 2].sum()),
-                             int((chan[..., 0].reshape(-1) * posw).sum())))
-            yield pd.DataFrame(rows, columns=[
-                id_col, "width", "height", "sum_r", "sum_g", "sum_b",
-                "wsum_r"])
-
-    return media.mapInPandas(
-        run, f"{id_col} long, width long, height long, sum_r long, "
-             f"sum_g long, sum_b long, wsum_r long")
+    """Integer-exact per-image features over REAL GIF decode (_gif_row).
+    One mapInPandas stage; a NULL payload is dropped like any other
+    undecodable one. Per-row Python is inherent to LZW's serial bit
+    stream (same disclosure as the JPEG entropy scan)."""
+    return _media_stage(media, _gif_row, [
+        id_col, "width", "height", "sum_r", "sum_g", "sum_b", "wsum_r"],
+        id_col, payload_col)
 
 
 def gif_features_oracle_sql(table: str = "documents",

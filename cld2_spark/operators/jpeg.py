@@ -802,15 +802,11 @@ def decode_jpeg_gray(buf: bytes) -> np.ndarray | None:
 def gray_fixture_pixels(media_id: int) -> np.ndarray:
     """Deterministic grayscale test image for media_id: a diagonal ramp
     with id-dependent slope/phase (smooth -> small quantization error,
-    non-trivial AC coefficients). Dims exercise non-multiple-of-8 crops."""
-    h = 8 * (2 + media_id % 3) + media_id % 5
-    w = 8 * (2 + media_id % 4) + media_id % 7
-    a = 1 + media_id % 5
-    b = 1 + media_id % 3
-    y, x = np.mgrid[0:h, 0:w]
-    # triangle wave: continuous (no 255->0 wrap edges), so quantized-DCT
-    # ringing stays small and the round-trip error bound is meaningful
-    return np.abs(((a * x + b * y + media_id) % 510) - 255).astype(np.uint8)
+    non-trivial AC coefficients). Dims exercise non-multiple-of-8 crops.
+    It is frame 0 of the MJPEG video fixture."""
+    from cld2_spark.operators.multimodal import video_frame_pixels
+
+    return video_frame_pixels(media_id, 0)
 
 
 # the columns of a gray feature row: media_id, then jpeg_gray_features
@@ -835,20 +831,14 @@ def jpeg_feature_extract(df, id_col: str = "media_id",
     Per-row Python is inherent here — entropy decoding is bit-serial by
     design (each Huffman symbol's position depends on all previous ones);
     the production scale-out is rows-across-executors, not SIMD."""
-    import pandas as pd
+    from cld2_spark.operators.multimodal import _media_stage
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf[id_col], pdf[payload_col]):
-                px = decode_jpeg_gray(bytes(buf)) if buf is not None else None
-                if px is None:
-                    continue
-                rows.append((int(mid),) + jpeg_gray_features(px))
-            yield pd.DataFrame(rows, columns=list(GRAY_FEATURE_COLS))
+    def row(buf: bytes) -> tuple[int, ...] | None:
+        px = decode_jpeg_gray(buf)
+        return None if px is None else jpeg_gray_features(px)
 
-    return df.mapInPandas(fn, ", ".join(f"{c} long"
-                                        for c in GRAY_FEATURE_COLS))
+    return _media_stage(df, row, list(GRAY_FEATURE_COLS), id_col,
+                        payload_col)
 
 
 # ------------------------------------------------------------- color ----
@@ -965,29 +955,18 @@ def jpeg_color_feature_extract(df, id_col: str = "media_id",
     4:2:2) with a progressive (SOF2) fallback, the profile sniff a real
     ingest pipeline does — and emit integer-exact per-channel features
     (undecodable rows dropped)."""
-    import pandas as pd
+    from cld2_spark.operators.multimodal import _media_stage
 
-    cols = ["media_id", "width", "height",
-            "r_sum", "r_min", "r_max", "g_sum", "g_min", "g_max",
-            "b_sum", "b_min", "b_max"]
-    schema = ", ".join(f"{c} long" for c in cols)
+    def row(buf: bytes) -> tuple[int, ...] | None:
+        px = decode_jpeg_color(buf)
+        if px is None:
+            px = decode_jpeg_progressive_color(buf)
+        return None if px is None else jpeg_color_features(px)
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf[id_col], pdf[payload_col]):
-                px = None
-                if buf is not None:
-                    b = bytes(buf)
-                    px = decode_jpeg_color(b)
-                    if px is None:
-                        px = decode_jpeg_progressive_color(b)
-                if px is None:
-                    continue
-                rows.append((int(mid),) + jpeg_color_features(px))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(fn, schema)
+    return _media_stage(df, row, [
+        "media_id", "width", "height", "r_sum", "r_min", "r_max",
+        "g_sum", "g_min", "g_max", "b_sum", "b_min", "b_max"],
+        id_col, payload_col)
 
 
 # ---- progressive JPEG (SOF2) ----------------------------------------------

@@ -26,6 +26,11 @@ Payload-level decode is REAL for every format this module ships:
   the repo JPEG codec decodes each one (`mp4_sample_table` /
   `mjpeg_video_features`).
 
+The per-row decode stages (JPEG, GIF, MJPEG, thumbnails, MP4 headers)
+are each one `_media_stage`, with one NULL rule and one row-to-frame
+rule. Each container format has one writer and one reader: `_png_file`,
+`_wav_file` / `_riff_chunks`, `_box` / `_box_path`.
+
 The only non-decoding path left is `_decode_payload_batch`'s generic
 16-dim nibble-histogram embedding for UNRECOGNIZED formats — a stable
 fallback feature, not a stand-in for a missing codec. Compressed-codec
@@ -35,7 +40,10 @@ ship; it would slot in behind the same mapInPandas boundary.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterator
+from itertools import accumulate
 
 import numpy as np
 import pandas as pd
@@ -62,6 +70,30 @@ FEATURE_SCHEMA = StructType([
 ])
 
 FEATURE_DIM = 16
+
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def _media_stage(df: DataFrame, row_fn: Callable[[bytes], tuple | None],
+                 columns: list[str], id_col: str, payload_col: str,
+                 schema=None) -> DataFrame:
+    """One mapInPandas stage of per-row payload decodes. For each Arrow
+    batch every payload becomes `bytes`, a NULL one b"" (which every
+    decoder rejects); `row_fn(payload)` returns the row's values after
+    the id, or None to drop the row. The rows of a batch become one
+    frame with `columns` (id first); `schema` defaults to all long."""
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid, buf in zip(pdf[id_col], pdf[payload_col]):
+                out = row_fn(b"" if buf is None else bytes(buf))
+                if out is not None:
+                    rows.append((mid, *out))
+            yield pd.DataFrame(rows, columns=columns)
+
+    return df.mapInPandas(
+        fn, schema or ", ".join(f"{c} long" for c in columns))
 
 
 def _decode_payload_batch(payload: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -152,9 +184,6 @@ def encode_png_pixels(pixels: np.ndarray, filter_type: int = 0) -> bytes:
     actual zlib-compressed, filtered scanlines (every scanline uses
     `filter_type` 0..4, exercising each defilter path). Public format
     knowledge + stdlib zlib only."""
-    import struct
-    import zlib
-
     px = np.asarray(pixels, dtype=np.uint8)
     if px.ndim == 2:
         px = px[:, :, None]
@@ -189,13 +218,19 @@ def encode_png_pixels(pixels: np.ndarray, filter_type: int = 0) -> bytes:
         lines.append(bytes([filter_type])
                      + (enc & 0xFF).astype(np.uint8).tobytes())
         prev = cur
-    idat = zlib.compress(b"".join(lines))
-    ihdr = struct.pack(">II5B", w, h, 8, ctype, 0, 0, 0)
-    out = [_PNG_SIG]
-    for typ, data in ((b"IHDR", ihdr), (b"IDAT", idat), (b"IEND", b"")):
-        out.append(struct.pack(">I", len(data)) + typ + data
-                   + struct.pack(">I", zlib.crc32(typ + data)))
-    return b"".join(out)
+    return _png_file(w, h, ctype, (b"IDAT", zlib.compress(b"".join(lines))))
+
+
+def _png_file(width: int, height: int, ctype: int,
+              *chunks: tuple[bytes, bytes]) -> bytes:
+    """PNG bytes: signature, an 8-bit non-interlaced IHDR of color type
+    `ctype`, the given (type, data) chunks, IEND; each chunk with its
+    length and CRC."""
+    ihdr = struct.pack(">II5B", width, height, 8, ctype, 0, 0, 0)
+    return _PNG_SIG + b"".join(
+        struct.pack(">I", len(data)) + typ + data
+        + struct.pack(">I", zlib.crc32(typ + data))
+        for typ, data in ((b"IHDR", ihdr), *chunks, (b"IEND", b"")))
 
 
 def feature_pixels(media_id: int) -> np.ndarray:
@@ -219,8 +254,6 @@ def decode_png_pixels(buf: bytes) -> np.ndarray | None:
     non-interlaced. Returns (h, w, channels) uint8, or None when the
     payload is not such a PNG (those rows keep the disclosed
     placeholder feature)."""
-    import zlib
-
     if buf is None or len(buf) < 8 or buf[:8] != _PNG_SIG:
         return None
     i, n = 8, len(buf)
@@ -319,9 +352,6 @@ def png_pixel_features(px: np.ndarray) -> np.ndarray:
 
 # ---- real image-header codec (public byte formats, no libraries) --------
 
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
 def _arrow_binary(payload):
     """Normalize any payload container (pa.Array from mapInArrow,
     pd.Series from mapInPandas, plain list) to an Arrow binary array.
@@ -342,38 +372,43 @@ def _arrow_binary(payload):
     return pa.array(payload, type=pa.large_binary())
 
 
+def _arrow_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 value offsets, uint8 values) of an Arrow binary or
+    large_binary array, read from its buffers without copying values."""
+    import pyarrow as pa
+
+    odt = np.int32 if pa.types.is_binary(arr.type) else np.int64
+    offs = np.frombuffer(arr.buffers()[1],
+                         odt)[arr.offset:arr.offset + len(arr) + 1]
+    vbuf = arr.buffers()[2]
+    vals = (np.frombuffer(vbuf, np.uint8) if vbuf is not None
+            else np.zeros(0, np.uint8))
+    return offs.astype(np.int64), vals
+
+
 def _head_matrix(arr, width: int) -> tuple[np.ndarray, np.ndarray]:
     """(n, width) uint8 matrix of each value's first `width` bytes
     (zero-padded) + int64 lengths, from an Arrow binary array: one
     C-level binary_slice compacts the heads (payload BODIES are never
     copied), then a reshape when uniform or a masked gather otherwise.
     Zero per-row Python — the vectorized-decoder batch shape."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     n = len(arr)
-    odt = np.int32 if pa.types.is_binary(arr.type) else np.int64
-    offs = np.frombuffer(arr.buffers()[1], odt)[arr.offset:arr.offset + n + 1]
-    lens = np.diff(offs).astype(np.int64, copy=False)
+    lens = np.diff(_arrow_buffers(arr)[0])
     if arr.null_count:
         valid = pc.is_valid(arr).to_numpy(zero_copy_only=False)
         lens = np.where(valid, lens, 0)
 
-    heads = pc.binary_slice(arr, 0, width)
-    hdt = np.int32 if pa.types.is_binary(heads.type) else np.int64
-    hoffs = np.frombuffer(heads.buffers()[1],
-                          hdt)[heads.offset:heads.offset + n + 1]
-    hbuf = heads.buffers()[2]
-    hdata = (np.frombuffer(hbuf, np.uint8) if hbuf is not None
-             else np.zeros(0, np.uint8))
+    hoffs, hdata = _arrow_buffers(pc.binary_slice(arr, 0, width))
     hl = np.diff(hoffs)
     if n and (hl == width).all():
         return (hdata[hoffs[0]:hoffs[0] + n * width]
                 .reshape(n, width), lens)
     m = np.zeros((n, width), dtype=np.uint8)
     if hdata.size:
-        idx = np.minimum(hoffs[:-1, None].astype(np.int64)
-                         + np.arange(width), hdata.size - 1)
+        idx = np.minimum(hoffs[:-1, None] + np.arange(width),
+                         hdata.size - 1)
         np.copyto(m, hdata[idx], where=np.arange(width) < hl[:, None])
     return m, lens
 
@@ -388,16 +423,8 @@ def encode_image_fixture(img_id: int, width: int, height: int,
     the given dimensions. PNG chunks carry correct CRCs; JPEG carries
     JFIF APP0 + SOF0; GIF89a carries the logical screen descriptor.
     Deterministic -- used for tests and the driver `media_meta` fixture."""
-    import struct
-    import zlib
-
     if fmt == "png":
-        ihdr = struct.pack(">II5B", width, height, 8, 2, 0, 0, 0)
-        out = [_PNG_SIG]
-        for typ, data in ((b"IHDR", ihdr), (b"IEND", b"")):
-            out.append(struct.pack(">I", len(data)) + typ + data
-                       + struct.pack(">I", zlib.crc32(typ + data)))
-        return b"".join(out)
+        return _png_file(width, height, 2)
     if fmt == "gif":
         return (b"GIF89a" + struct.pack("<HH", width, height)
                 + b"\x00\x00\x00" + b"\x3b")
@@ -481,8 +508,7 @@ def parse_image_meta_batch(payload) -> tuple[np.ndarray, np.ndarray,
     v4b = m.view(">u4")   # (n, 6) big-endian u32 columns
     v2l = m.view("<u2")   # (n, 12) little-endian u16 columns
     code = np.zeros(n, dtype=np.int8)
-    w = np.full(n, -1, dtype=np.int64)
-    h = np.full(n, -1, dtype=np.int64)
+    w, h = np.full((2, n), -1, dtype=np.int64)
 
     is_png = ((lens >= 24) & (v4l[:, 0] == _u32(_PNG_SIG[:4]))
               & (v4l[:, 1] == _u32(_PNG_SIG[4:]))
@@ -511,37 +537,65 @@ def encode_wav_fixture(sample_rate: int, channels: int, n_samples: int,
     """Minimal fully well-formed PCM WAV file (RIFF + fmt + data chunks,
     zeroed samples) -- the RIFF/WAVE byte layout is public format
     knowledge, no audio library involved."""
-    import struct
+    return _wav_file(channels, sample_rate, bits,
+                     b"\x00" * (n_samples * (channels * bits // 8)))
 
+
+def _wav_file(channels: int, sample_rate: int, bits: int,
+              data: bytes) -> bytes:
+    """RIFF/WAVE bytes of one 16-byte PCM 'fmt ' chunk and one 'data'
+    chunk holding `data`."""
     block = channels * bits // 8
-    data_size = n_samples * block
     fmt = struct.pack("<HHIIHH", 1, channels, sample_rate,
                       sample_rate * block, block, bits)
     chunks = (b"WAVE"
               + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-              + b"data" + struct.pack("<I", data_size) + b"\x00" * data_size)
+              + b"data" + struct.pack("<I", len(data)) + data)
     return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+
+
+def _riff_chunks(buf: bytes):
+    """Yield (chunk id, data offset, declared size) for each chunk of a
+    RIFF/WAVE buffer in file order (chunks are word-aligned); nothing
+    when the buffer is not RIFF/WAVE. Sizes are not clipped."""
+    if buf is None or len(buf) < 12 or buf[:4] != b"RIFF" \
+            or buf[8:12] != b"WAVE":
+        return
+    i = 12
+    while i + 8 <= len(buf):
+        size = int.from_bytes(buf[i + 4:i + 8], "little")
+        yield buf[i:i + 4], i + 8, size
+        i += 8 + size + (size & 1)
+
+
+def _wav_head(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray,
+                            np.ndarray, np.ndarray]:
+    """The canonical PCM WAV layout over a batch's 44-byte head matrix:
+    'fmt ' (size 16) at offset 12, a 'data' chunk header at offset 36.
+    Returns (head matrix, lengths, is-RIFF/WAVE mask, canonical mask,
+    declared data size); canonical rows have every field at a fixed
+    offset."""
+    m, lens = _head_matrix(arr, 44)
+    v4l = m.view("<u4")   # (n, 11) copy-free little-endian u32 columns
+    is_riff = ((lens >= 12) & (v4l[:, 0] == _u32(b"RIFF"))
+               & (v4l[:, 2] == _u32(b"WAVE")))
+    canonical = (is_riff & (lens >= 44) & (v4l[:, 3] == _u32(b"fmt "))
+                 & (v4l[:, 4] == 16) & (v4l[:, 9] == _u32(b"data")))
+    return m, lens, is_riff, canonical, v4l[:, 10].astype(np.int64)
 
 
 def parse_wav_meta(buf: bytes) -> tuple[int, int, int] | None:
     """(sample_rate, channels, duration_ms) from a RIFF/WAVE header via
-    the standard chunk walk (word-aligned chunk sizes); None when the
+    the standard chunk walk; the last 'data' chunk wins. None when the
     payload is not a parseable WAV."""
-    if buf is None or len(buf) < 12 or buf[:4] != b"RIFF" \
-            or buf[8:12] != b"WAVE":
-        return None
-    i = 12
     sr = ch = byte_rate = data_size = None
-    while i + 8 <= len(buf):
-        cid = buf[i:i + 4]
-        size = int.from_bytes(buf[i + 4:i + 8], "little")
-        if cid == b"fmt " and i + 20 <= len(buf):
-            ch = int.from_bytes(buf[i + 10:i + 12], "little")
-            sr = int.from_bytes(buf[i + 12:i + 16], "little")
-            byte_rate = int.from_bytes(buf[i + 16:i + 20], "little")
+    for cid, off, size in _riff_chunks(buf):
+        if cid == b"fmt " and off + 12 <= len(buf):
+            ch = int.from_bytes(buf[off + 2:off + 4], "little")
+            sr = int.from_bytes(buf[off + 4:off + 8], "little")
+            byte_rate = int.from_bytes(buf[off + 8:off + 12], "little")
         elif cid == b"data":
             data_size = size
-        i += 8 + size + (size & 1)
     if not sr or data_size is None or not byte_rate:
         return None
     return sr, ch, data_size * 1000 // byte_rate
@@ -559,22 +613,14 @@ def parse_wav_meta_batch(payload) -> tuple[np.ndarray, np.ndarray,
     non-WAV rows yield -1s. Returns (sample_rate, channels, duration_ms)
     int32 arrays."""
     arr = _arrow_binary(payload)
-    m, lens = _head_matrix(arr, 44)
+    m, lens, is_riff, canonical, data_size = _wav_head(arr)
+    # data must be the LAST chunk the scalar walk would see
+    canonical &= 44 + data_size + (data_size & 1) >= lens
     n = len(lens)
     # copy-free view columns (all canonical WAV fields are 4/2-aligned)
     v4l = m.view("<u4")   # (n, 11)
     v2l = m.view("<u2")   # (n, 22)
-    sr = np.full(n, -1, dtype=np.int64)
-    ch = np.full(n, -1, dtype=np.int64)
-    dur = np.full(n, -1, dtype=np.int64)
-
-    is_riff = ((lens >= 12) & (v4l[:, 0] == _u32(b"RIFF"))
-               & (v4l[:, 2] == _u32(b"WAVE")))
-    data_size = v4l[:, 10].astype(np.int64)
-    canonical = (is_riff & (lens >= 44) & (v4l[:, 3] == _u32(b"fmt "))
-                 & (v4l[:, 4] == 16) & (v4l[:, 9] == _u32(b"data"))
-                 # data must be the LAST chunk the scalar walk would see
-                 & (44 + data_size + (data_size & 1) >= lens))
+    sr, ch, dur = np.full((3, n), -1, dtype=np.int64)
     c_sr = v4l[:, 6].astype(np.int64)
     c_rate = v4l[:, 7].astype(np.int64)
     ok = canonical & (c_sr > 0) & (c_rate > 0)
@@ -606,21 +652,29 @@ def decode_audio_meta(df: DataFrame, id_col: str = "media_id",
     arrow→pandas object materialization of the payloads at all; only
     non-canonical RIFF rows fall back to the scalar chunk walk. Non-WAV
     rows yield -1s."""
+    return _header_stage(df, parse_wav_meta_batch, AUDIO_META_SCHEMA,
+                         id_col, payload_col)
+
+
+def _header_stage(df: DataFrame, parse_batch, schema: StructType,
+                  id_col: str, payload_col: str) -> DataFrame:
+    """mapInArrow stage of a whole-batch header parser: each raw Arrow
+    payload column goes to `parse_batch` zero-copy, and the arrays it
+    returns become the columns after the id, typed by `schema`."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fields = to_arrow_schema(schema)
 
     def fn(batches):
         for rb in batches:
-            sr, ch, dur = parse_wav_meta_batch(
-                rb.column(rb.schema.get_field_index(payload_col)))
+            cols = parse_batch(rb.column(payload_col))
             yield pa.RecordBatch.from_arrays(
-                [rb.column(rb.schema.get_field_index(id_col)),
-                 pa.array(sr, type=pa.int32()),
-                 pa.array(ch, type=pa.int32()),
-                 pa.array(dur, type=pa.int32())],
-                names=["media_id", "sample_rate", "channels",
-                       "duration_ms"])
+                [rb.column(id_col)] + [pa.array(c, type=f.type) for c, f
+                                       in zip(cols, list(fields)[1:])],
+                names=fields.names)
 
-    return df.mapInArrow(fn, schema=AUDIO_META_SCHEMA)
+    return df.mapInArrow(fn, schema=schema)
 
 
 # ---- real video-container codec (ISO BMFF / MP4, public byte format) ----
@@ -636,26 +690,38 @@ def encode_mp4_fixture(width: int, height: int, duration_ms: int,
     duration is stored in `timescale` units (duration_ms * timescale /
     1000 -- callers pick values that divide exactly so the round-trip is
     integer-exact). Deterministic; no media library involved."""
-    import struct
-
-    def box(typ: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(payload)) + typ + payload
-
-    dur_units = duration_ms * timescale // 1000
-    matrix = struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0,
-                         0x40000000)
-    mvhd = box(b"mvhd", struct.pack(">B3xIIII", 0, 0, 0, timescale,
-                                    dur_units)
-               + struct.pack(">IHH8x", 0x00010000, 0x0100, 0)
-               + matrix + b"\x00" * 24 + struct.pack(">I", 2))
-    tkhd = box(b"tkhd", struct.pack(">B3BIII4xI8x", 0, 0, 0, 7, 0, 0, 1,
-                                    dur_units)
-               + struct.pack(">HHH2x", 0, 0, 0) + matrix
-               + struct.pack(">II", width << 16, height << 16))
-    moov = box(b"moov", mvhd + box(b"trak", tkhd))
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2")
+    mvhd, tkhd = _movie_headers(width, height, timescale,
+                                duration_ms * timescale // 1000)
+    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2")
     # an empty mdat after moov, like a faststart file
-    return ftyp + moov + box(b"mdat", b"")
+    return (ftyp + _box(b"moov", mvhd + _box(b"trak", tkhd))
+            + _box(b"mdat", b""))
+
+
+def _box(typ: bytes, payload: bytes, flags: int | None = None) -> bytes:
+    """One ISO BMFF box; with `flags`, a full box (version 0 + flags)."""
+    if flags is not None:
+        payload = struct.pack(">I", flags) + payload
+    return struct.pack(">I", 8 + len(payload)) + typ + payload
+
+
+_UNITY_MATRIX = struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0,
+                            0x40000000)
+
+
+def _movie_headers(width: int, height: int, timescale: int,
+                   dur_units: int) -> tuple[bytes, bytes]:
+    """(mvhd, tkhd) version-0 boxes: the movie timescale and duration,
+    then track 1 (enabled, in movie and preview) with that duration and
+    16.16-fixed width/height."""
+    mvhd = _box(b"mvhd", struct.pack(">IIII", 0, 0, timescale, dur_units)
+                + struct.pack(">IHH8x", 0x00010000, 0x0100, 0)
+                + _UNITY_MATRIX + b"\x00" * 24 + struct.pack(">I", 2),
+                flags=0)
+    tkhd = _box(b"tkhd", struct.pack(">III4xI8x", 0, 0, 1, dur_units)
+                + struct.pack(">HHH2x", 0, 0, 0) + _UNITY_MATRIX
+                + struct.pack(">II", width << 16, height << 16), flags=7)
+    return mvhd, tkhd
 
 
 def _walk_boxes(buf: bytes, i: int, end: int):
@@ -678,6 +744,18 @@ def _walk_boxes(buf: bytes, i: int, end: int):
         i += size
 
 
+def _box_path(buf: bytes, path: bytes, start: int = 0,
+              end: int | None = None):
+    """Yield (payload_start, payload_end) of every box reached by the
+    slash-separated type path (b"moov/trak/tkhd") under buf[start:end],
+    in file order."""
+    head, _, rest = path.partition(b"/")
+    for typ, s, e in _walk_boxes(buf, start,
+                                 len(buf) if end is None else end):
+        if typ == head:
+            yield from (_box_path(buf, rest, s, e) if rest else [(s, e)])
+
+
 def parse_mp4_meta(buf: bytes) -> tuple[int, int, int] | None:
     """(width, height, duration_ms) from an MP4/ISO-BMFF header, or None
     when the payload is not a parseable container. The box walk skips
@@ -690,34 +768,30 @@ def parse_mp4_meta(buf: bytes) -> tuple[int, int, int] | None:
     if buf[4:8] not in (b"ftyp", b"moov", b"free", b"mdat", b"wide",
                         b"skip", b"styp"):
         return None
-    w = h = -1
-    dur_ms = -1
-    for typ, s, e in _walk_boxes(buf, 0, len(buf)):
-        if typ != b"moov":
+    moov = next(_box_path(buf, b"moov"), None)  # one movie box per file
+    if moov is None:
+        return None
+    w = h = dur_ms = -1
+    for s, e in _box_path(buf, b"mvhd", *moov):
+        if e - s < 20:
             continue
-        for t2, s2, e2 in _walk_boxes(buf, s, e):
-            if t2 == b"mvhd" and e2 - s2 >= 20:
-                ver = buf[s2]
-                if ver == 1 and e2 - s2 >= 32:
-                    tsc = int.from_bytes(buf[s2 + 20:s2 + 24], "big")
-                    dur = int.from_bytes(buf[s2 + 24:s2 + 32], "big")
-                else:
-                    tsc = int.from_bytes(buf[s2 + 12:s2 + 16], "big")
-                    dur = int.from_bytes(buf[s2 + 16:s2 + 20], "big")
-                if tsc:
-                    dur_ms = dur * 1000 // tsc
-            elif t2 == b"trak" and w < 0:
-                for t3, s3, e3 in _walk_boxes(buf, s2, e2):
-                    if t3 == b"tkhd" and e3 - s3 >= 84:
-                        ver = buf[s3]
-                        off = s3 + (88 if ver == 1 else 76)
-                        if off + 8 <= e3:
-                            tw = int.from_bytes(buf[off:off + 4], "big") >> 16
-                            th = int.from_bytes(buf[off + 4:off + 8],
-                                                "big") >> 16
-                            if tw and th:  # audio tracks carry 0x0
-                                w, h = tw, th
-        break  # one movie box per file
+        # version 1: 64-bit times, so timescale and duration sit later
+        tsc, dur = (struct.unpack_from(">IQ", buf, s + 20)
+                    if buf[s] == 1 and e - s >= 32
+                    else struct.unpack_from(">II", buf, s + 12))
+        if tsc:
+            dur_ms = dur * 1000 // tsc
+    for trak in _box_path(buf, b"trak", *moov):
+        for s, e in _box_path(buf, b"tkhd", *trak):
+            if e - s < 84:
+                continue
+            off = s + (88 if buf[s] == 1 else 76)
+            if off + 8 <= e:
+                tw, th = (v >> 16 for v in struct.unpack_from(">II", buf, off))
+                if tw and th:  # audio tracks carry 0x0
+                    w, h = tw, th
+        if w >= 0:
+            break  # the first track with video dims
     if dur_ms < 0 and w < 0:
         return None
     return w, h, dur_ms
@@ -736,20 +810,9 @@ def decode_video_meta(df: DataFrame, id_col: str = "media_id",
     """Arrow-batched MP4 header decode; non-MP4 rows yield -1s. Per-row
     cost is O(#boxes) (mdat skipped by size), so the stage stays linear
     in row count even when payloads are large."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [parse_mp4_meta(b) or (-1, -1, -1)
-                     for b in pdf[payload_col]]
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                "width": np.array([m[0] for m in metas], dtype=np.int32),
-                "height": np.array([m[1] for m in metas], dtype=np.int32),
-                "duration_ms": np.array([m[2] for m in metas],
-                                        dtype=np.int32),
-            })
-
-    return df.mapInPandas(fn, schema=VIDEO_META_SCHEMA)
+    return _media_stage(df, lambda buf: parse_mp4_meta(buf) or (-1, -1, -1),
+                        VIDEO_META_SCHEMA.names, id_col, payload_col,
+                        VIDEO_META_SCHEMA)
 
 
 IMAGE_META_SCHEMA = StructType([
@@ -767,20 +830,8 @@ def decode_image_meta(df: DataFrame, id_col: str = "media_id",
     the vectorized head-matrix fast path zero-copy from the Arrow
     buffers (no per-row Python, no pandas object conversion); only
     JPEG rows walk markers row-by-row, bounded to the first 64 KB."""
-    import pyarrow as pa
-
-    def fn(batches):
-        for rb in batches:
-            fmts, w, h = parse_image_meta_batch(
-                rb.column(rb.schema.get_field_index(payload_col)))
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(rb.schema.get_field_index(id_col)),
-                 pa.array(fmts, type=pa.string()),
-                 pa.array(w, type=pa.int32()),
-                 pa.array(h, type=pa.int32())],
-                names=["media_id", "fmt", "width", "height"])
-
-    return df.mapInArrow(fn, schema=IMAGE_META_SCHEMA)
+    return _header_stage(df, parse_image_meta_batch, IMAGE_META_SCHEMA,
+                         id_col, payload_col)
 
 
 def synth_media(spark, n: int = 64) -> DataFrame:
@@ -821,33 +872,8 @@ def pcm_sawtooth(media_id: int, n: int) -> np.ndarray:
 def encode_wav_pcm_fixture(media_id: int, sample_rate: int = 8000) -> bytes:
     """Well-formed mono 16-bit PCM WAV whose data chunk carries the
     deterministic pcm_sawtooth waveform (n = rate/100 + id%50 samples)."""
-    import struct
-
     n = sample_rate // 100 + media_id % 50
-    data = pcm_sawtooth(media_id, n).tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
-    chunks = (b"WAVE"
-              + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-              + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
-
-
-def _wav_data_span(buf: bytes) -> tuple[int, int] | None:
-    """(offset, size) of the first data chunk via the RIFF chunk walk;
-    None if the payload is not a RIFF/WAVE container."""
-    import struct
-
-    if buf is None or len(buf) < 12 or buf[:4] != b"RIFF" \
-            or buf[8:12] != b"WAVE":
-        return None
-    i = 12
-    while i + 8 <= len(buf):
-        cid = buf[i:i + 4]
-        (size,) = struct.unpack_from("<I", buf, i + 4)
-        if cid == b"data":
-            return i + 8, min(size, len(buf) - i - 8)
-        i += 8 + size + (size & 1)  # chunks are word-aligned
-    return None
+    return _wav_file(1, sample_rate, 16, pcm_sawtooth(media_id, n).tobytes())
 
 
 def pcm_sample_features_batch(payload) -> tuple[np.ndarray, np.ndarray,
@@ -863,31 +889,19 @@ def pcm_sample_features_batch(payload) -> tuple[np.ndarray, np.ndarray,
     byte, one int16 view reinterprets them, and np.add.reduceat /
     np.maximum.reduceat segment-aggregate per row (cross-row sign flips
     are masked at the segment boundaries). Non-canonical RIFF rows fall
-    back to the scalar chunk walk, byte-identical by construction."""
-    import pyarrow as pa
-
+    back to the scalar chunk walk (the first 'data' chunk, clipped to the
+    buffer), byte-identical by construction."""
     arr = _arrow_binary(payload)
     n = len(arr)
     ns = np.full(n, -1, dtype=np.int64)
     pk, en, zc = ns.copy(), ns.copy(), ns.copy()
     if n == 0:
         return ns, pk, en, zc
-    m, lens = _head_matrix(arr, 44)
-    v4l = m.view("<u4")
-    is_riff = ((lens >= 12) & (v4l[:, 0] == _u32(b"RIFF"))
-               & (v4l[:, 2] == _u32(b"WAVE")))
-    data_size = v4l[:, 10].astype(np.int64)
-    canonical = (is_riff & (lens >= 44) & (v4l[:, 3] == _u32(b"fmt "))
-                 & (v4l[:, 4] == 16) & (v4l[:, 9] == _u32(b"data")))
+    _, lens, is_riff, canonical, data_size = _wav_head(arr)
     nsamp = np.maximum(np.minimum(data_size, lens - 44), 0) // 2
     ci = np.flatnonzero(canonical & (nsamp > 0))
     if ci.size:
-        odt = np.int32 if pa.types.is_binary(arr.type) else np.int64
-        offs = (np.frombuffer(arr.buffers()[1], odt)
-                [arr.offset:arr.offset + n + 1].astype(np.int64))
-        vbuf = arr.buffers()[2]
-        vals = (np.frombuffer(vbuf, np.uint8) if vbuf is not None
-                else np.zeros(0, np.uint8))
+        offs, vals = _arrow_buffers(arr)
         seg = 2 * nsamp[ci]
         cum = np.concatenate(([0], np.cumsum(seg)))
         within = (np.arange(int(cum[-1]), dtype=np.int64)
@@ -905,10 +919,9 @@ def pcm_sample_features_batch(payload) -> tuple[np.ndarray, np.ndarray,
         ns[ci] = nsamp[ci]
     for i in np.flatnonzero(is_riff & ~canonical):
         buf = arr[i].as_py()
-        span = _wav_data_span(buf)
-        if span is None:
-            continue
-        off, size = span
+        off, size = next(((off, min(size, len(buf) - off))
+                          for cid, off, size in _riff_chunks(buf)
+                          if cid == b"data"), (0, 0))
         s = np.frombuffer(buf, dtype="<i2", offset=off,
                           count=size // 2).astype(np.int64)
         if len(s) == 0:
@@ -934,8 +947,6 @@ def wav_sample_features(df: DataFrame, id_col: str = "media_id",
     pcm_sample_features_batch (one gather + reduceat segment aggregates,
     zero per-row Python); only non-canonical RIFF variants pay the scalar
     chunk walk."""
-    import pandas as pd
-
     schema = ("media_id long, n_samples long, peak long, energy long, "
               "zero_crossings long")
 
@@ -967,7 +978,8 @@ def video_frame_pixels(media_id: int, frame_idx: int) -> np.ndarray:
     triangle ramp whose phase advances 17 units per frame, i.e. constant-
     velocity translation, so the inter-frame motion feature is non-trivial
     and exactly reproducible. Triangle (not sawtooth) so there is no
-    255->0 wrap edge to ring under quantized DCT (see jpeg.py notes)."""
+    255->0 wrap edge to ring under quantized DCT, and quantization error
+    stays small. Frame 0 is jpeg.gray_fixture_pixels."""
     h = 8 * (2 + media_id % 3) + media_id % 5
     w = 8 * (2 + media_id % 4) + media_id % 7
     a = 1 + media_id % 5
@@ -985,24 +997,15 @@ def encode_mjpeg_mp4_fixture(media_id: int, n_frames: int) -> bytes:
     (mdat first so stco's absolute offsets are computable in one pass).
     10 fps at timescale 1000 -> stts delta 100; tkhd carries the frame
     dims so parse_mp4_meta sees the same geometry."""
-    import struct
-
     from cld2_spark.operators.jpeg import encode_jpeg_gray
 
     frames = [encode_jpeg_gray(video_frame_pixels(media_id, fi))
               for fi in range(n_frames)]
     sizes = [len(f) for f in frames]
-    px0 = video_frame_pixels(media_id, 0)
-    height, width = px0.shape
+    height, width = video_frame_pixels(media_id, 0).shape
 
-    def box(typ: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(payload)) + typ + payload
-
-    def full(typ: bytes, payload: bytes, flags: int = 0) -> bytes:
-        return box(typ, struct.pack(">I", flags) + payload)
-
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isommjpg")
-    mdat = box(b"mdat", b"".join(frames))
+    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isommjpg")
+    mdat = _box(b"mdat", b"".join(frames))
     mdat_data_off = len(ftyp) + 8          # absolute offset of frame 0
 
     k = -(-n_frames // 2)                  # chunk 1 holds ceil(n/2) frames
@@ -1017,44 +1020,36 @@ def encode_mjpeg_mp4_fixture(media_id: int, n_frames: int) -> bytes:
     # VisualSampleEntry 'jpeg' (14496-12 12.1.3): 6 reserved + dref idx,
     # 16 pre_defined/reserved, dims, 72dpi 16.16 resolutions, frame_count,
     # 32-byte compressorname, depth 24, pre_defined -1
-    sample_entry = box(
+    sample_entry = _box(
         b"jpeg",
         b"\x00" * 6 + struct.pack(">H", 1) + b"\x00" * 16
         + struct.pack(">HH", width, height)
         + struct.pack(">IIIH", 0x00480000, 0x00480000, 0, 1)
         + b"\x00" * 32 + struct.pack(">Hh", 24, -1))
-    stsd = full(b"stsd", struct.pack(">I", 1) + sample_entry)
-    stts = full(b"stts", struct.pack(">III", 1, n_frames, 100))
-    stsc = full(b"stsc", struct.pack(">I", len(stsc_entries))
-                + b"".join(struct.pack(">III", *e) for e in stsc_entries))
-    stsz = full(b"stsz", struct.pack(">II", 0, n_frames)
-                + b"".join(struct.pack(">I", s) for s in sizes))
-    stco = full(b"stco", struct.pack(">I", len(chunk_offsets))
-                + b"".join(struct.pack(">I", o) for o in chunk_offsets))
-    stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
+    stsd = _box(b"stsd", struct.pack(">I", 1) + sample_entry, flags=0)
+    stts = _box(b"stts", struct.pack(">III", 1, n_frames, 100), flags=0)
+    stsc = _box(b"stsc", struct.pack(">I", len(stsc_entries))
+                + b"".join(struct.pack(">III", *e) for e in stsc_entries),
+                flags=0)
+    stsz = _box(b"stsz", struct.pack(">II", 0, n_frames)
+                + b"".join(struct.pack(">I", s) for s in sizes), flags=0)
+    stco = _box(b"stco", struct.pack(">I", len(chunk_offsets))
+                + b"".join(struct.pack(">I", o) for o in chunk_offsets),
+                flags=0)
+    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
 
-    vmhd = full(b"vmhd", struct.pack(">HHHH", 0, 0, 0, 0), flags=1)
-    dinf = box(b"dinf", full(b"dref", struct.pack(">I", 1)
-                             + full(b"url ", b"", flags=1)))
-    minf = box(b"minf", vmhd + dinf + stbl)
+    vmhd = _box(b"vmhd", struct.pack(">HHHH", 0, 0, 0, 0), flags=1)
+    dinf = _box(b"dinf", _box(b"dref", struct.pack(">I", 1)
+                              + _box(b"url ", b"", flags=1), flags=0))
+    minf = _box(b"minf", vmhd + dinf + stbl)
     dur_units = n_frames * 100
-    mdhd = full(b"mdhd", struct.pack(">IIII", 0, 0, 1000, dur_units)
-                + struct.pack(">HH", 0x55C4, 0))
-    hdlr = full(b"hdlr", struct.pack(">I", 0) + b"vide" + b"\x00" * 12
-                + b"mjpeg\x00")
-    mdia = box(b"mdia", mdhd + hdlr + minf)
-
-    matrix = struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0,
-                         0x40000000)
-    mvhd = box(b"mvhd", struct.pack(">B3xIIII", 0, 0, 0, 1000, dur_units)
-               + struct.pack(">IHH8x", 0x00010000, 0x0100, 0)
-               + matrix + b"\x00" * 24 + struct.pack(">I", 2))
-    tkhd = box(b"tkhd", struct.pack(">B3BIII4xI8x", 0, 0, 0, 7, 0, 0, 1,
-                                    dur_units)
-               + struct.pack(">HHH2x", 0, 0, 0) + matrix
-               + struct.pack(">II", width << 16, height << 16))
-    moov = box(b"moov", mvhd + box(b"trak", tkhd + mdia))
-    return ftyp + mdat + moov
+    mdhd = _box(b"mdhd", struct.pack(">IIII", 0, 0, 1000, dur_units)
+                + struct.pack(">HH", 0x55C4, 0), flags=0)
+    hdlr = _box(b"hdlr", struct.pack(">I", 0) + b"vide" + b"\x00" * 12
+                + b"mjpeg\x00", flags=0)
+    mdia = _box(b"mdia", mdhd + hdlr + minf)
+    mvhd, tkhd = _movie_headers(width, height, 1000, dur_units)
+    return ftyp + mdat + _box(b"moov", mvhd + _box(b"trak", tkhd + mdia))
 
 
 def mp4_sample_table(buf: bytes) -> list[tuple[int, int]] | None:
@@ -1067,72 +1062,43 @@ def mp4_sample_table(buf: bytes) -> list[tuple[int, int]] | None:
     O(#boxes + #samples); mdat is skipped by its size field."""
     if buf is None or len(buf) < 16:
         return None
-    for typ, s, e in _walk_boxes(buf, 0, len(buf)):
-        if typ != b"moov":
+    for trak in _box_path(buf, b"moov/trak"):
+        stbls = list(_box_path(buf, b"mdia/minf/stbl", *trak))
+        if not stbls:
             continue
-        for t2, s2, e2 in _walk_boxes(buf, s, e):
-            if t2 != b"trak":
-                continue
-            stbl_span = None
-            for t3, s3, e3 in _walk_boxes(buf, s2, e2):
-                if t3 != b"mdia":
-                    continue
-                for t4, s4, e4 in _walk_boxes(buf, s3, e3):
-                    if t4 != b"minf":
-                        continue
-                    for t5, s5, e5 in _walk_boxes(buf, s4, e4):
-                        if t5 == b"stbl":
-                            stbl_span = (s5, e5)
-            if stbl_span is None:
-                continue
-            sizes = offsets = runs = None
-            for t, s0, e0 in _walk_boxes(buf, *stbl_span):
-                if t == b"stsz" and e0 - s0 >= 12:
-                    fixed = int.from_bytes(buf[s0 + 4:s0 + 8], "big")
-                    cnt = int.from_bytes(buf[s0 + 8:s0 + 12], "big")
-                    if fixed:
-                        sizes = [fixed] * cnt
-                    elif e0 - s0 >= 12 + 4 * cnt:
-                        sizes = [int.from_bytes(
-                            buf[s0 + 12 + 4 * i:s0 + 16 + 4 * i], "big")
-                            for i in range(cnt)]
-                elif t == b"stco" and e0 - s0 >= 8:
-                    cnt = int.from_bytes(buf[s0 + 4:s0 + 8], "big")
-                    if e0 - s0 >= 8 + 4 * cnt:
-                        offsets = [int.from_bytes(
-                            buf[s0 + 8 + 4 * i:s0 + 12 + 4 * i], "big")
-                            for i in range(cnt)]
-                elif t == b"stsc" and e0 - s0 >= 8:
-                    cnt = int.from_bytes(buf[s0 + 4:s0 + 8], "big")
-                    if e0 - s0 >= 8 + 12 * cnt:
-                        runs = [(int.from_bytes(
-                                    buf[s0 + 8 + 12 * i:s0 + 12 + 12 * i],
-                                    "big"),
-                                 int.from_bytes(
-                                    buf[s0 + 12 + 12 * i:s0 + 16 + 12 * i],
-                                    "big"))
-                                for i in range(cnt)]
-            if not sizes or not offsets or not runs:
-                continue  # a non-video (or fragmented) track: try next trak
-            samples: list[tuple[int, int]] = []
-            si = 0
-            for ci, coff in enumerate(offsets, start=1):
-                spc = 0
-                for first, cnt in runs:
-                    if first <= ci:
-                        spc = cnt
-                    else:
-                        break
-                off = coff
-                for _ in range(spc):
-                    if si >= len(sizes):
-                        break
-                    samples.append((off, sizes[si]))
-                    off += sizes[si]
-                    si += 1
-            if si != len(sizes):
-                return None  # chunk map does not cover every sample
-            return samples
+        sizes = offsets = runs = None
+        for t, s0, e0 in _walk_boxes(buf, *stbls[-1]):
+            if t == b"stsz" and e0 - s0 >= 12:
+                fixed, cnt = struct.unpack_from(">II", buf, s0 + 4)
+                if fixed:
+                    sizes = [fixed] * cnt
+                elif e0 - s0 >= 12 + 4 * cnt:
+                    sizes = struct.unpack_from(f">{cnt}I", buf, s0 + 12)
+            elif t == b"stco" and e0 - s0 >= 8:
+                (cnt,) = struct.unpack_from(">I", buf, s0 + 4)
+                if e0 - s0 >= 8 + 4 * cnt:
+                    offsets = struct.unpack_from(f">{cnt}I", buf, s0 + 8)
+            elif t == b"stsc" and e0 - s0 >= 8:
+                (cnt,) = struct.unpack_from(">I", buf, s0 + 4)
+                if e0 - s0 >= 8 + 12 * cnt:
+                    u = struct.unpack_from(f">{3 * cnt}I", buf, s0 + 8)
+                    runs = list(zip(u[0::3], u[1::3]))
+        if not sizes or not offsets or not runs:
+            continue  # a non-video (or fragmented) track: try next trak
+        samples: list[tuple[int, int]] = []
+        si = 0
+        for ci, coff in enumerate(offsets, start=1):
+            spc = 0
+            for first, cnt in runs:
+                if first > ci:
+                    break
+                spc = cnt
+            take = sizes[si:si + spc]  # contiguous from the chunk offset
+            samples += zip(accumulate(take, initial=coff), take)
+            si += len(take)
+        if si != len(sizes):
+            return None  # chunk map does not cover every sample
+        return samples
     return None
 
 
@@ -1161,8 +1127,7 @@ def mjpeg_video_features(buf: bytes) -> tuple[int, ...] | None:
             return None
         frames.append(px.astype(np.int64))
     v = np.stack(frames)
-    motion = sum(int(np.abs(frames[i] - frames[i - 1]).sum())
-                 for i in range(1, len(frames)))
+    motion = int(np.abs(np.diff(v, axis=0)).sum())
     return (len(frames), v.shape[2], v.shape[1], int(v.sum()),
             int((v * v).sum()), int(v.min()), int(v.max()), motion)
 
@@ -1175,24 +1140,9 @@ def video_frame_features(df: DataFrame, id_col: str = "media_id",
     jpeg.py); work is O(payload bytes) per row and rows scale across
     executors -- at true video scale a native codec swaps in behind this
     same mapInPandas boundary without touching the plan."""
-    import pandas as pd
-
-    schema = ("media_id long, n_frames long, width long, height long, "
-              "px_sum long, px_sumsq long, px_min long, px_max long, "
-              "motion long")
-
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf[id_col], pdf[payload_col]):
-                feat = mjpeg_video_features(buf)
-                if feat is not None:
-                    rows.append((int(mid),) + feat)
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "n_frames", "width", "height", "px_sum",
-                "px_sumsq", "px_min", "px_max", "motion"])
-
-    return df.mapInPandas(fn, schema)
+    return _media_stage(df, mjpeg_video_features, [
+        "media_id", "n_frames", "width", "height", "px_sum", "px_sumsq",
+        "px_min", "px_max", "motion"], id_col, payload_col)
 
 
 def box_resize_luma(px: np.ndarray, th: int = 8, tw: int = 8) -> np.ndarray:
@@ -1226,21 +1176,14 @@ def image_thumbnails(df: DataFrame, id_col: str = "media_id",
     defilter) -> exact integer box resize -> (media_id, width, height,
     thumb array<bigint> of th*tw luma cells, row-major). Non-PNG /
     undecodable rows are dropped."""
-    import pandas as pd
 
-    schema = f"{id_col} long, width long, height long, thumb array<bigint>"
+    def row(buf: bytes) -> tuple | None:
+        px = decode_png_pixels(buf)
+        if px is None:
+            return None
+        return (px.shape[1], px.shape[0],
+                box_resize_luma(px, th, tw).reshape(-1).tolist())
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf[id_col], pdf[payload_col]):
-                px = decode_png_pixels(buf) if buf is not None else None
-                if px is None:
-                    continue
-                t = box_resize_luma(px, th, tw)
-                rows.append((int(mid), px.shape[1], px.shape[0],
-                             [int(x) for x in t.reshape(-1)]))
-            yield pd.DataFrame(rows, columns=[id_col, "width", "height",
-                                              "thumb"])
-
-    return df.mapInPandas(fn, schema)
+    return _media_stage(
+        df, row, [id_col, "width", "height", "thumb"], id_col, payload_col,
+        f"{id_col} long, width long, height long, thumb array<bigint>")

@@ -127,12 +127,15 @@ def test_all_jpeg_batch_still_correct():
 
 def _scalar_pcm_features(bufs):
     """Per-row reference for pcm_sample_features_batch (the original
-    loop: RIFF walk + frombuffer + direct numpy aggregates)."""
-    from cld2_spark.operators.multimodal import _wav_data_span
+    loop: RIFF walk to the first data chunk, clipped to the buffer +
+    frombuffer + direct numpy aggregates)."""
+    from cld2_spark.operators.multimodal import _riff_chunks
     out = []
     for buf in bufs:
         row = (-1, -1, -1, -1)
-        span = _wav_data_span(buf) if buf is not None else None
+        span = next(((off, min(size, len(buf) - off))
+                     for cid, off, size in _riff_chunks(buf)
+                     if cid == b"data"), None)
         if span is not None:
             off, size = span
             s = np.frombuffer(buf, dtype="<i2", offset=off,

@@ -745,9 +745,9 @@ def test_wav_sample_features_decode_true(spark):
     from cld2_spark.operators.multimodal import (encode_wav_pcm_fixture,
                                                  pcm_sawtooth,
                                                  wav_sample_features,
-                                                 _wav_data_span)
+                                                 _riff_chunks)
     good = encode_wav_pcm_fixture(7)
-    off, _ = _wav_data_span(good)
+    off = next(off for cid, off, _ in _riff_chunks(good) if cid == b"data")
     bad = bytearray(good)
     bad[off + 1] ^= 0x40  # flip a high bit of sample 0
     rows = [(7, bytes(good)), (8, bytes(bad)), (9, b"not a wav at all")]

@@ -445,6 +445,26 @@ def _unigram_fixtures(sf_dir: str) -> dict[str, pa.Table]:
     return {UNI_VOCAB_FILE: vocab_tbl, UNI_ENCODE_FILE: enc_tbl}
 
 
+def _doc_ids(sf_dir: str) -> np.ndarray:
+    """The documents table's doc_ids, ascending, as int64."""
+    con = duckdb.connect()
+    ids = con.execute(
+        "SELECT doc_id FROM read_parquet("
+        f"'{sf_dir}/documents.parquet') ORDER BY doc_id").df()["doc_id"]
+    con.close()
+    return ids.to_numpy(np.int64)
+
+
+def _int64_table(ids: np.ndarray, names: list[str],
+                 rows: np.ndarray) -> pa.Table:
+    """media_id, then one int64 column per name from the columns of
+    the (len(ids), len(names)) matrix `rows`."""
+    cols = {"media_id": pa.array(ids, type=pa.int64())}
+    for i, name in enumerate(names):
+        cols[name] = pa.array(rows[:, i], type=pa.int64())
+    return pa.table(cols)
+
+
 def _video_features_fixture(sf_dir: str) -> pa.Table:
     """Expected `video_features` rows: doc_id -> MJPEG-in-MP4 fixture
     (2-4 baseline-JPEG frames, two-chunk sample table) -> sample-table
@@ -453,21 +473,14 @@ def _video_features_fixture(sf_dir: str) -> pa.Table:
     from cld2_spark.operators.multimodal import (encode_mjpeg_mp4_fixture,
                                                  mjpeg_video_features)
 
-    con = duckdb.connect()
-    ids = con.execute(
-        "SELECT doc_id FROM read_parquet("
-        f"'{sf_dir}/documents.parquet') ORDER BY doc_id").df()["doc_id"]
-    con.close()
+    ids = _doc_ids(sf_dir)
     names = ["n_frames", "width", "height", "px_sum", "px_sumsq",
              "px_min", "px_max", "motion"]
     rows = np.zeros((len(ids), len(names)), dtype=np.int64)
     for j, did in enumerate(ids):
         buf = encode_mjpeg_mp4_fixture(int(did), 2 + int(did) % 3)
         rows[j] = mjpeg_video_features(buf)
-    cols = {"media_id": pa.array(ids.astype(np.int64), type=pa.int64())}
-    for i, name in enumerate(names):
-        cols[name] = pa.array(rows[:, i], type=pa.int64())
-    return pa.table(cols)
+    return _int64_table(ids, names, rows)
 
 
 def _jpeg_color_fixture(sf_dir: str) -> pa.Table:
@@ -483,11 +496,7 @@ def _jpeg_color_fixture(sf_dir: str) -> pa.Table:
                                            encode_jpeg_color,
                                            jpeg_color_features)
 
-    con = duckdb.connect()
-    ids = con.execute(
-        "SELECT doc_id FROM read_parquet("
-        f"'{sf_dir}/documents.parquet') ORDER BY doc_id").df()["doc_id"]
-    con.close()
+    ids = _doc_ids(sf_dir)
     names = ["width", "height", "r_sum", "r_min", "r_max",
              "g_sum", "g_min", "g_max", "b_sum", "b_min", "b_max"]
     rows = np.zeros((len(ids), len(names)), dtype=np.int64)
@@ -502,10 +511,7 @@ def _jpeg_color_fixture(sf_dir: str) -> pa.Table:
         enc = encode_jpeg_411 if did % 12 == 5 else encs[did % 3]
         px = decode_jpeg_color(enc(color_fixture_pixels(did)))
         rows[j] = jpeg_color_features(px)
-    cols = {"media_id": pa.array(ids.astype(np.int64), type=pa.int64())}
-    for i, name in enumerate(names):
-        cols[name] = pa.array(rows[:, i], type=pa.int64())
-    return pa.table(cols)
+    return _int64_table(ids, names, rows)
 
 
 def _jpeg_features_fixture(sf_dir: str) -> pa.Table:
@@ -519,21 +525,14 @@ def _jpeg_features_fixture(sf_dir: str) -> pa.Table:
                                            gray_fixture_pixels,
                                            jpeg_gray_features)
 
-    con = duckdb.connect()
-    ids = con.execute(
-        "SELECT doc_id FROM read_parquet("
-        f"'{sf_dir}/documents.parquet') ORDER BY doc_id").df()["doc_id"]
-    con.close()
-    cols_names = ["width", "height", "px_sum", "px_sumsq", "px_min",
-                  "px_max", "h0", "h1", "h2", "h3"]
-    rows = np.zeros((len(ids), 10), dtype=np.int64)
+    ids = _doc_ids(sf_dir)
+    names = ["width", "height", "px_sum", "px_sumsq", "px_min",
+             "px_max", "h0", "h1", "h2", "h3"]
+    rows = np.zeros((len(ids), len(names)), dtype=np.int64)
     for j, did in enumerate(ids):
         px = decode_jpeg_gray(encode_jpeg_gray(gray_fixture_pixels(int(did))))
         rows[j] = jpeg_gray_features(px)
-    cols = {"media_id": pa.array(ids.astype(np.int64), type=pa.int64())}
-    for i, name in enumerate(cols_names):
-        cols[name] = pa.array(rows[:, i], type=pa.int64())
-    return pa.table(cols)
+    return _int64_table(ids, names, rows)
 
 
 def _media_features_fixture(sf_dir: str) -> pa.Table:
@@ -546,18 +545,14 @@ def _media_features_fixture(sf_dir: str) -> pa.Table:
                                                  feature_pixels,
                                                  png_pixel_features)
 
-    con = duckdb.connect()
-    ids = con.execute(
-        "SELECT doc_id FROM read_parquet("
-        f"'{sf_dir}/documents.parquet') ORDER BY doc_id").df()["doc_id"]
-    con.close()
+    ids = _doc_ids(sf_dir)
     feats = np.zeros((len(ids), 16), dtype=np.float32)
     n_bytes = np.zeros(len(ids), dtype=np.int64)
     for j, did in enumerate(ids):
         px = feature_pixels(did)
         n_bytes[j] = len(encode_png_pixels(px, filter_type=int(did) % 5))
         feats[j] = png_pixel_features(px)
-    cols = {"media_id": pa.array(ids.astype(np.int64), type=pa.int64()),
+    cols = {"media_id": pa.array(ids, type=pa.int64()),
             "n_bytes": pa.array(n_bytes, type=pa.int64())}
     for i in range(16):
         cols[f"f{i}"] = pa.array(feats[:, i], type=pa.float32())
@@ -598,11 +593,7 @@ def _thumbnails_fixture(sf_dir: str) -> pa.Table:
                                                  encode_png_pixels,
                                                  feature_pixels)
 
-    con = duckdb.connect()
-    ids = con.execute(
-        "SELECT doc_id FROM read_parquet("
-        f"'{sf_dir}/documents.parquet') ORDER BY doc_id").df()["doc_id"]
-    con.close()
+    ids = _doc_ids(sf_dir)
     mids, ws, hs, thumbs = [], [], [], []
     for did in ids:
         px = feature_pixels(int(did))
