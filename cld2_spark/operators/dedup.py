@@ -11,12 +11,17 @@ Scale notes (100TB design point):
     derived by affine maps modulo a Mersenne prime (standard MinHash
     practice), so the dominant cost is cheap JVM arithmetic, not 12 digest
     calls per shingle.
-  - band-bucket size cap (both pair operators): a band key shared by D
-    near-identical docs would otherwise yield D^2 candidate pairs --
-    boilerplate-heavy corpora (exactly what dedup targets) make one bucket
-    quadratic. Buckets larger than `bucket_cap` are star-reduced: every
-    member pairs only with the bucket's min id (linear, still connects the
-    duplicate group transitively through its representative).
+  - itemset_jaccard_pairs is the one inverted-index candidate path
+    (df-cap stop pruning, `min_common`, exact verify): ngram_jaccard_pairs
+    and conv_dedup_pairs only build the per-entity item sets. Every exact
+    Jaccard verdict, there and in minhash_lsh_pairs, is _jaccard_verify.
+  - band-bucket size cap (the minhash, simhash and embedding pair
+    operators): a band key shared by D near-identical docs would otherwise
+    yield D^2 candidate pairs -- boilerplate-heavy corpora (exactly what
+    dedup targets) make one bucket quadratic. Buckets larger than
+    `bucket_cap` are star-reduced: every member pairs only with the
+    bucket's min id (linear, still connects the duplicate group
+    transitively through its representative).
   - simhash_pairs: 62-bit fingerprint banded into 4 sub-keys (pigeonhole:
     hamming<=3 pairs share at least one). The fingerprint is two 31-bit
     polynomial rolling hashes over codepoints, combined -- chosen over a
@@ -56,6 +61,11 @@ SIMHASH_BANDS = [(0, 0xFFFF), (16, 0xFFFF), (32, 0x7FFF), (47, 0x7FFF)]
 
 _SHINGLES = ("transform(sequence(1, greatest(length({col}) - {k1}, 1)), "
              "i -> substring({col}, i, {k}))")
+# whitespace-normalized lowercase tokens (word n-grams and token windows),
+# in Spark SQL and in the DuckDB replays
+_TOKENS = "split(trim(regexp_replace(lower({col}), '\\\\s+', ' ')), ' ')"
+_TOKENS_DUCK = ("string_split(trim(regexp_replace(lower({col}), '\\s+', ' ', "
+                "'g')), ' ')")
 
 # DataFrames persisted by the operators below (ADVICE r2 #1): each new
 # invocation releases the previous invocation's cached blocks FOR THE SAME
@@ -119,6 +129,14 @@ def _shingles_expr(col: str, k: int = SHINGLE_K) -> str:
     return _SHINGLES.format(col=col, k=k, k1=k - 1)
 
 
+def _shingle_hash_set_expr(col: str, k: int = SHINGLE_K) -> str:
+    """The distinct 60-bit hashes of a text column's distinct k-shingles:
+    ONE md5 per distinct shingle, the set both minhash operators read."""
+    sh = f"array_distinct({_shingles_expr(col, k)})"
+    return (f"array_distinct(transform({sh}, "
+            f"s -> {shingle_hash_expr('s', 'spark')}))")
+
+
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the lowest-id row per exact text hash. One shuffle."""
     h = F.md5(F.col(text_col))
@@ -156,25 +174,25 @@ def minhash_band_exprs(dialect: str, hs_col: str = "hs",
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       n_bands: int = N_BANDS, k: int = SHINGLE_K,
-                       with_minima: bool = False) -> DataFrame:
+                       n_bands: int = N_BANDS,
+                       k: int = SHINGLE_K) -> DataFrame:
     """Per-row LSH band signatures: each band = r=3 affine-minhash minima
     joined with '_', so a band collision implies jaccard**3-probability
     agreement (keeps vocabulary-overlap noise out of the candidate set).
     MinHash over distinct shingles equals MinHash over the multiset (min is
     duplicate-invariant), so the base hash is computed once per distinct
-    shingle. with_minima=True adds `mh`: the full 12-value signature array
-    (useful for signature-level similarity estimates downstream; the pairs
-    operator itself does not consume it -- see minhash_lsh_pairs)."""
-    sh = f"array_distinct({_shingles_expr(text_col, k)})"
-    hs = f"transform({sh}, s -> {shingle_hash_expr('s', 'spark')})"
-    out = df.withColumn("__hs", F.expr(hs))
+    shingle."""
+    out = df.withColumn("__hs", F.expr(_shingle_hash_set_expr(text_col, k)))
     for b, expr in enumerate(minhash_band_exprs("spark", "__hs", n_bands)):
         out = out.withColumn(f"band{b}", F.expr(expr))
-    if with_minima:
-        mins = minhash_min_exprs("spark", "__hs", ROWS_PER_BAND * n_bands)
-        out = out.withColumn("mh", F.expr("array(" + ", ".join(mins) + ")"))
     return out.drop("__hs")
+
+
+def _co_members(rel: DataFrame, key: str) -> DataFrame:
+    """(key, a, b): every two ids sharing a key of (key, id), a < b."""
+    x = rel.select(key, F.col("id").alias("a"))
+    y = rel.select(key, F.col("id").alias("b"))
+    return x.join(y, key).where(F.col("a") < F.col("b"))
 
 
 def capped_band_pairs(stacked: DataFrame, bucket_cap: int = BUCKET_CAP) -> DataFrame:
@@ -201,16 +219,27 @@ def capped_band_pairs(stacked: DataFrame, bucket_cap: int = BUCKET_CAP) -> DataF
              .agg(F.count(F.lit(1)).alias("c"), F.min("id").alias("m")))
     small_keys = stats.where(F.col("c") <= bucket_cap).select("band_key")
     big_keys = stats.where(F.col("c") > bucket_cap).select("band_key", "m")
-    sm = stacked.join(small_keys, "band_key")
-    x = sm.select(F.col("band_key"), F.col("id").alias("a"))
-    y = sm.select(F.col("band_key"), F.col("id").alias("b"))
-    small = (x.join(y, "band_key")
-             .where(F.col("a") < F.col("b"))
-             .select("a", "b"))
+    small = _co_members(stacked.join(small_keys, "band_key"),
+                        "band_key").select("a", "b")
     big = (stacked.join(big_keys, "band_key")
            .where(F.col("id") > F.col("m"))
            .select(F.col("m").alias("a"), F.col("id").alias("b")))
     return small.unionAll(big).distinct()
+
+
+def _jaccard_verify(cand: DataFrame, sets: DataFrame,
+                    min_jaccard_pct: int) -> DataFrame:
+    """Exact Jaccard of each candidate pair (a, b) over the (id, s) sets,
+    jacc_pct = floor(100 * |sa & sb| / |sa | sb|), kept at or above the
+    floor; extra candidate columns (`common`) pass through."""
+    sa, sb = sets.alias("sa"), sets.alias("sb")
+    inter = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s")))
+    union = F.size(F.col("sa.s")) + F.size(F.col("sb.s")) - inter
+    return (cand.join(sa, F.col("a") == F.col("sa.id"))
+            .join(sb, F.col("b") == F.col("sb.id"))
+            .select(*cand.columns,
+                    F.floor(inter * 100 / union).cast("int").alias("jacc_pct"))
+            .where(F.col("jacc_pct") >= min_jaccard_pct))
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -235,9 +264,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     prefilter (per-band collision probability J^3)."""
     release_dedup_caches(session=df.sparkSession)
     base = df.select(id_col, text_col).where(F.length(text_col) >= k)
-    sh = f"array_distinct({_shingles_expr(text_col, k)})"
-    hs = (f"array_distinct(transform({sh}, "
-          f"s -> {shingle_hash_expr('s', 'spark')}))")
     # ONE shingle+md5 pass feeds everything: the distinct-hash sets are
     # persisted first and BOTH the band keys and the verify join read
     # them from cache. The affine band minima over the distinct-hash SET
@@ -246,8 +272,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     # so deriving bands from `s` is bit-identical to hashing the
     # shingles again -- and saves the operator's single most expensive
     # expression (per-shingle md5) a full second evaluation.
-    sets = _persist_tracked(
-        base.select(F.col(id_col).alias("id"), F.expr(hs).alias("s")))
+    sets = _persist_tracked(base.select(
+        F.col(id_col).alias("id"),
+        F.expr(_shingle_hash_set_expr(text_col, k)).alias("s")))
     # posexplode, NOT a 4-way union of selects: a union re-evaluates the
     # band-minimum subtree once per branch; exploding an array of the
     # band columns scans the cached hash sets exactly once
@@ -258,26 +285,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
         .alias("pos", "bk")
     ).select(F.concat_ws("|", F.col("pos"), F.col("bk")).alias("band_key"), "id")
     cand = _spread_pairs(capped_band_pairs(stacked, bucket_cap))
-    sa, sb = sets.alias("sa"), sets.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s")))
-    union = F.size(F.col("sa.s")) + F.size(F.col("sb.s")) - inter
-    return (cand.join(sa, F.col("a") == F.col("sa.id"))
-            .join(sb, F.col("b") == F.col("sb.id"))
-            .select("a", "b", F.floor(inter * 100 / union).cast("int").alias("jacc_pct"))
-            .where(F.col("jacc_pct") >= min_jaccard_pct))
-
-
-def _word_gram_hash_expr(text_col: str, n: int) -> tuple[str, str]:
-    """(row_filter, hash_array_expr) for distinct word-n-gram hashes of a
-    text column -- whitespace-normalized lowercase tokens, n-grams joined
-    with single spaces, each hashed with the shared 60-bit md5 hash."""
-    tk = (f"split(trim(regexp_replace(lower({text_col}), '\\\\s+', ' ')), ' ')"
-          )
-    grams = (f"transform(sequence(1, size({tk}) - {n - 1}), "
-             f"i -> concat_ws(' ', slice({tk}, i, {n})))")
-    hs = (f"array_distinct(transform({grams}, "
-          f"g -> {shingle_hash_expr('g', 'spark')}))")
-    return f"size({tk}) >= {n}", hs
+    return _jaccard_verify(cand, sets, min_jaccard_pct)
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
@@ -303,34 +311,16 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     pruning loses only that gram's candidate evidence -- true duplicates
     share many non-hot grams and still reach min_common. The verify join
     ships int64 hash arrays, same as minhash_lsh_pairs."""
-    release_dedup_caches(session=df.sparkSession)
-    row_filter, hs = _word_gram_hash_expr(text_col, n)
-    base = df.select(id_col, text_col).where(F.expr(row_filter))
-    sets = _persist_tracked(
-        base.select(F.col(id_col).alias("id"), F.expr(hs).alias("s")))
-    tok = sets.select("id", F.explode("s").alias("h"))
-    keep = (tok.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
-            .where((F.col("c") >= 2) & (F.col("c") <= df_cap))
-            .select("h"))
-    tok2 = tok.join(keep, "h")
-    x = tok2.select("h", F.col("id").alias("a"))
-    y = tok2.select("h", F.col("id").alias("b"))
-    # NO _spread_pairs here: the df-cap + min_common inverted-index
-    # prefilter already thins candidates to near the true-pair count, so
-    # the verify stage is light and the extra exchange costs more than
-    # it buys (measured 1.6 s -> 1.9 s WITH the spread at sf0.1);
-    # contrast minhash_lsh_pairs, whose band collisions are bulky.
-    cand = (x.join(y, "h").where(F.col("a") < F.col("b"))
-            .groupBy("a", "b").agg(F.count(F.lit(1)).alias("common"))
-            .where(F.col("common") >= min_common))
-    sa, sb = sets.alias("sa"), sets.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s")))
-    union = F.size(F.col("sa.s")) + F.size(F.col("sb.s")) - inter
-    return (cand.join(sa, F.col("a") == F.col("sa.id"))
-            .join(sb, F.col("b") == F.col("sb.id"))
-            .select("a", "b", F.col("common").cast("int").alias("common"),
-                    F.floor(inter * 100 / union).cast("int").alias("jacc_pct"))
-            .where(F.col("jacc_pct") >= min_jaccard_pct))
+    # n-grams joined with single spaces, each hashed with the shared
+    # 60-bit md5 hash
+    tk = _TOKENS.format(col=text_col)
+    grams = (f"transform(sequence(1, size({tk}) - {n - 1}), "
+             f"i -> concat_ws(' ', slice({tk}, i, {n})))")
+    hs = f"transform({grams}, g -> {shingle_hash_expr('g', 'spark')})"
+    sets = (df.where(F.expr(f"size({tk}) >= {n}"))
+            .select(F.col(id_col).alias("id"), F.expr(hs).alias("s")))
+    return itemset_jaccard_pairs(sets, min_common=min_common, df_cap=df_cap,
+                                 min_jaccard_pct=min_jaccard_pct)
 
 
 def simhash62_batch(texts: list[str]) -> np.ndarray:
@@ -421,10 +411,6 @@ def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return (cand.join(fa, "a").join(fb, "b")
             .select("a", "b", ham.alias("hamming"))
             .where(F.col("hamming") <= max_hamming))
-
-
-# Backwards-compatible alias (round-1 name)
-simhash64_batch = simhash62_batch
 
 
 def connected_components(pairs: DataFrame, id_a: str = "a", id_b: str = "b",
@@ -539,6 +525,20 @@ def connected_components(pairs: DataFrame, id_a: str = "a", id_b: str = "b",
         edges.unpersist()
 
 
+def _span_windows(df: DataFrame, text_col: str, id_col: str,
+                  w: int) -> DataFrame:
+    """(id, start, span_hash): one row per w-token window (1-based first
+    token, md5 over the space-joined window) of each doc of >= w tokens."""
+    tk = _TOKENS.format(col=text_col)
+    wins = (f"transform(sequence(1, size({tk}) - {w - 1}), "
+            f"i -> named_struct('i', i, 'h', "
+            f"md5(array_join(slice({tk}, i, {w}), ' '))))")
+    return (df.where(F.expr(f"size({tk}) >= {w}"))
+            .select(F.col(id_col), F.explode(F.expr(wins)).alias("wn"))
+            .select(id_col, F.col("wn.i").alias("start"),
+                    F.col("wn.h").alias("span_hash")))
+
+
 def duplicated_spans(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", w: int = 16) -> DataFrame:
     """Exact duplicated-substring detection at token-window granularity
@@ -562,13 +562,7 @@ def duplicated_spans(df: DataFrame, text_col: str = "text",
     keys instead of 32-byte hex strings (4x less shuffle volume) --
     everything downstream is hash-agnostic.
     """
-    tk = (f"split(trim(regexp_replace(lower({text_col}), '\\\\s+', ' ')), "
-          f"' ')")
-    wins = (f"transform(sequence(1, size({tk}) - {w - 1}), "
-            f"i -> md5(array_join(slice({tk}, i, {w}), ' ')))")
-    rows = (df.where(F.expr(f"size({tk}) >= {w}"))
-            .select(F.col(id_col), F.explode(F.expr(wins)).alias("span_hash")))
-    return (rows.groupBy("span_hash")
+    return (_span_windows(df, text_col, id_col, w).groupBy("span_hash")
             .agg(F.countDistinct(id_col).alias("n_docs"),
                  F.count(F.lit(1)).alias("n_occ"),
                  F.min(id_col).alias("first_doc"))
@@ -582,8 +576,7 @@ def duplicated_spans_duck_sql(w: int = 16, table: str = "dup_docs",
     range() is end-exclusive, so the last window start is len-w+1).
     Returns CTE bodies + SELECT without a leading WITH so callers can
     splice it after their own CTE prelude (dup_docs lives there)."""
-    tk = (f"string_split(trim(regexp_replace(lower({text_col}), "
-          f"'\\s+', ' ', 'g')), ' ')")
+    tk = _TOKENS_DUCK.format(col=text_col)
     return (
         f"ds_t AS (SELECT {id_col}, {tk} AS toks FROM {table}), "
         f"ds_w AS (SELECT {id_col}, unnest(list_transform("
@@ -612,11 +605,17 @@ def incremental_dedup(batch: DataFrame, seen: DataFrame,
     the full curated text never moves. The anti join shuffles on the
     hash, both sides uniform by construction, so AQE needs no skew
     handling; when the curated hash set fits executor memory it
-    broadcast-anti-joins and the batch side never shuffles at all. This
-    is also the natural place for a Bloom prefilter (build on the seen
-    hashes, filter the batch map-side, anti-join only survivors) -- the
-    exact anti join stays as the verify stage, so results are identical.
+    broadcast-anti-joins and the batch side never shuffles at all.
+    incremental_dedup_bloom is the same operator with a Bloom prefilter
+    in front of the anti join.
     """
+    bh, sh = _content_hashes(batch, seen, text_col, id_col)
+    return _keep_min(bh.join(sh, "text_hash", "left_anti"), id_col)
+
+
+def _content_hashes(batch: DataFrame, seen: DataFrame, text_col: str,
+                    id_col: str) -> tuple[DataFrame, DataFrame]:
+    """The batch's (id, text_hash) rows and seen's DISTINCT text hashes."""
     # NULL texts are excluded on BOTH sides: a NULL hash can never equal
     # anything (left_anti would silently keep such rows while a SQL NOT IN
     # oracle would return nothing), so the contract is NULL-free by rule
@@ -624,7 +623,11 @@ def incremental_dedup(batch: DataFrame, seen: DataFrame,
           .select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash")))
     sh = (seen.where(F.col(text_col).isNotNull())
           .select(F.md5(F.col(text_col)).alias("text_hash")).distinct())
-    fresh = bh.join(sh, "text_hash", "left_anti")
+    return bh, sh
+
+
+def _keep_min(fresh: DataFrame, id_col: str) -> DataFrame:
+    """(keep_id, text_hash, n_copies): min id and copies per content hash."""
     return (fresh.groupBy("text_hash")
             .agg(F.min(id_col).alias("keep_id"),
                  F.count(F.lit(1)).alias("n_copies"))
@@ -640,8 +643,6 @@ def _bloom_positions(h_u64: "np.ndarray", n_bits: int, k: int):
     hashing: pos_i = (h1 + i*h2) mod n_bits with h1/h2 the hash halves
     (h2 forced odd). Pure uint64 arithmetic — reproducible identically
     on the JVM-hashed values wherever numpy runs."""
-    import numpy as np
-
     h1 = h_u64 & np.uint64(0xFFFFFFFF)
     h2 = (h_u64 >> np.uint64(32)) | np.uint64(1)
     return [((h1 + np.uint64(i) * h2) % np.uint64(n_bits)).astype(np.int64)
@@ -653,7 +654,7 @@ def incremental_dedup_bloom(batch: DataFrame, seen: DataFrame,
                             id_col: str = "doc_id",
                             n_bits: int = BLOOM_BITS_DEFAULT,
                             n_hashes: int = BLOOM_HASHES) -> DataFrame:
-    """incremental_dedup with the Bloom prefilter its docstring promises:
+    """incremental_dedup with a Bloom prefilter in front of its anti join:
     OUTPUT-IDENTICAL to the exact path (the exact anti join remains the
     verify stage — Bloom false positives only travel to it, never into
     the result), but the batch side that reaches the shuffle shrinks to
@@ -673,63 +674,43 @@ def incremental_dedup_bloom(batch: DataFrame, seen: DataFrame,
     run one bloom pass per partition, or skip the prefilter — the exact
     anti join is always correct without it.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    sh = (seen.where(F.col(text_col).isNotNull())
-          .select(F.md5(F.col(text_col)).alias("text_hash")).distinct()
-          .select("text_hash", F.xxhash64("text_hash").alias("h")))
-    pos_exprs = []
-    for i in range(n_hashes):
-        # JVM-side signed arithmetic replayed on unsigned halves:
-        # h1 = low 32 bits, h2 = (high 32 bits) | 1 — both non-negative
-        # in int64, so the modulo matches numpy's uint64 result exactly
-        pos_exprs.append(
-            f"pmod((h & 4294967295L) + {i}L * ((h >> 32) & 4294967295L "
-            f"| 1L), {n_bits}L)")
-    words = (sh.select(F.explode(F.array(
+    bh, sh = _content_hashes(batch, seen, text_col, id_col)
+    # JVM-side signed arithmetic replayed on unsigned halves:
+    # h1 = low 32 bits, h2 = (high 32 bits) | 1 — both non-negative
+    # in int64, so the modulo matches numpy's uint64 result exactly
+    pos_exprs = [f"pmod((h & 4294967295L) + {i}L * ((h >> 32) & 4294967295L "
+                 f"| 1L), {n_bits}L)" for i in range(n_hashes)]
+    words = (sh.select(F.xxhash64("text_hash").alias("h"))
+             .select(F.explode(F.array(
                  *[F.expr(p) for p in pos_exprs])).alias("pos"))
              .select((F.col("pos") / 64).cast("long").alias("word"),
                      F.expr("shiftleft(1L, CAST(pos % 64 AS INT))")
                      .alias("bit"))
              .groupBy("word")
              .agg(F.expr("bit_or(bit)").alias("bits")))
-    rows = words.collect()                       # bounded: <= n_bits/64
     bitmap = np.zeros(n_bits // 64, dtype=np.int64)
-    for r in rows:
+    for r in words.collect():                    # bounded: <= n_bits/64
         bitmap[r["word"]] = r["bits"]
-    bitmap_u = bitmap.view(np.uint64)
-    sc = batch.sparkSession.sparkContext
-    bc = sc.broadcast(bitmap_u)
-    nb, k = n_bits, n_hashes
+    bc = batch.sparkSession.sparkContext.broadcast(bitmap.view(np.uint64))
 
-    @pandas_udf("boolean")
+    @F.pandas_udf("boolean")
     def maybe_seen(h: pd.Series) -> pd.Series:
         bm = bc.value
         arr = h.to_numpy(np.int64).view(np.uint64)
         hit = np.ones(len(arr), dtype=bool)
-        for p in _bloom_positions(arr, nb, k):
+        for p in _bloom_positions(arr, n_bits, n_hashes):
             w = bm[p >> 6]
             hit &= (w >> (p.astype(np.uint64) & np.uint64(63))
                     & np.uint64(1)).astype(bool)
         return pd.Series(hit)
 
-    bh = (batch.where(F.col(text_col).isNotNull())
-          .select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
-          .withColumn("h", F.xxhash64("text_hash")))
     # definitely-unseen rows skip the anti join entirely; maybe-seen rows
     # (true dups + FP residue) go through the exact verify
-    bh = bh.withColumn("maybe", maybe_seen(F.col("h")))
+    bh = bh.withColumn("maybe", maybe_seen(F.xxhash64("text_hash")))
     fresh_sure = bh.where(~F.col("maybe")).select(id_col, "text_hash")
     candidates = bh.where(F.col("maybe")).select(id_col, "text_hash")
-    verified = candidates.join(sh.select("text_hash"),
-                               "text_hash", "left_anti")
-    fresh = fresh_sure.unionByName(verified)
-    return (fresh.groupBy("text_hash")
-            .agg(F.min(id_col).alias("keep_id"),
-                 F.count(F.lit(1)).alias("n_copies"))
-            .select("keep_id", "text_hash", "n_copies"))
+    verified = candidates.join(sh, "text_hash", "left_anti")
+    return _keep_min(fresh_sure.unionByName(verified), id_col)
 
 
 def duplicated_span_cuts(df: DataFrame, text_col: str = "text",
@@ -748,21 +729,9 @@ def duplicated_span_cuts(df: DataFrame, text_col: str = "text",
     hash partitioning the aggregate just produced (no extra exchange on
     AQE). Interval merging is a per-document window function — state
     bounded by document length, never corpus-wide."""
-    tk = (f"split(trim(regexp_replace(lower({text_col}), '\\\\s+', ' ')), "
-          f"' ')")
-    wins = (f"transform(sequence(1, size({tk}) - {w - 1}), "
-            f"i -> named_struct('i', i, 'h', "
-            f"md5(array_join(slice({tk}, i, {w}), ' '))))")
-    rows = (df.where(F.expr(f"size({tk}) >= {w}"))
-            .select(F.col(id_col), F.explode(F.expr(wins)).alias("wn"))
-            .select(id_col, F.col("wn.i").alias("start"),
-                    F.col("wn.h").alias("span_hash")))
-    dup = (rows.groupBy("span_hash")
-           .agg(F.countDistinct(id_col).alias("nd"))
-           .where(F.col("nd") >= 2)
-           .select("span_hash"))
+    rows = _span_windows(df, text_col, id_col, w)
+    dup = duplicated_spans(df, text_col, id_col, w).select("span_hash")
     hit = rows.join(dup, on="span_hash").select(id_col, "start").distinct()
-    from pyspark.sql import Window
     ww = Window.partitionBy(id_col).orderBy("start")
     isl = (hit.withColumn(
                "new_cut",
@@ -784,8 +753,7 @@ def duplicated_span_cuts_duck_sql(w: int = 16, table: str = "dup_docs",
                                   id_col: str = "doc_id") -> str:
     """DuckDB replay of duplicated_span_cuts (CTE bodies + SELECT, no
     leading WITH; same contract as duplicated_spans_duck_sql)."""
-    tk = (f"string_split(trim(regexp_replace(lower({text_col}), "
-          f"'\\s+', ' ', 'g')), ' ')")
+    tk = _TOKENS_DUCK.format(col=text_col)
     return (
         f"sc_t AS (SELECT {id_col}, {tk} AS toks FROM {table}), "
         f"sc_w AS (SELECT {id_col}, unnest(range(1, len(toks) - {w - 2}))"
@@ -811,21 +779,22 @@ def itemset_jaccard_pairs(sets: DataFrame, id_col: str = "id",
                           items_col: str = "s", min_common: int = 2,
                           df_cap: int = BUCKET_CAP,
                           min_jaccard_pct: int = 50) -> DataFrame:
-    """Near-dup pairs over ARBITRARY per-entity item sets — the
-    entity-level generalization of ngram_jaccard_pairs (same inverted
-    index + df-cap pruning + exact verify), decoupled from tokenization
-    so the items can be turn-content hashes (conversation dedup),
+    """Near-dup pairs over ARBITRARY per-entity item sets — the one
+    inverted-index pair path (df-cap pruning, min_common, exact verify),
+    decoupled from tokenization so the items can be word-n-gram hashes
+    (ngram_jaccard_pairs), turn-content hashes (conv_dedup_pairs),
     attachment digests, cited-URL sets, etc.
 
-    `sets` carries one row per entity: (id, array of DISTINCT items).
-    Returns (a, b, common, jacc_pct) exactly as ngram_jaccard_pairs:
-    `common` counts shared INDEXED items (item frequency in [2, df_cap]
-    — hotter items are stop-pruned, losing only candidate evidence),
-    `jacc_pct` is exact over the full sets.
+    `sets` carries one row per entity: (id, array of items); duplicate
+    items count once. Returns (a, b, common, jacc_pct): `common` counts
+    shared INDEXED items (item frequency in [2, df_cap] — hotter items
+    are stop-pruned, losing only candidate evidence), `jacc_pct` is
+    exact over the full sets.
 
     Scale: the index is a narrow (item, id) relation shuffled on the
     item; per-item pair fan-out is bounded by df_cap^2; the verify join
     ships each entity's item array once per surviving candidate side."""
+    release_dedup_caches(session=sets.sparkSession)
     sets = _persist_tracked(sets.select(
         F.col(id_col).alias("id"),
         F.array_distinct(F.col(items_col)).alias("s")))
@@ -833,22 +802,15 @@ def itemset_jaccard_pairs(sets: DataFrame, id_col: str = "id",
     keep = (tok.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
             .where((F.col("c") >= 2) & (F.col("c") <= df_cap))
             .select("h"))
-    tok2 = tok.join(keep, "h")
-    x = tok2.select("h", F.col("id").alias("a"))
-    y = tok2.select("h", F.col("id").alias("b"))
-    # same no-spread rationale as ngram_jaccard_pairs above
-    cand = (x.join(y, "h").where(F.col("a") < F.col("b"))
-            .groupBy("a", "b").agg(F.count(F.lit(1)).alias("common"))
+    # NO _spread_pairs here: the df-cap + min_common inverted-index
+    # prefilter already thins candidates to near the true-pair count, so
+    # the verify stage is light and the extra exchange costs more than
+    # it buys (measured 1.6 s -> 1.9 s WITH the spread at sf0.1);
+    # contrast minhash_lsh_pairs, whose band collisions are bulky.
+    cand = (_co_members(tok.join(keep, "h"), "h").groupBy("a", "b")
+            .agg(F.count(F.lit(1)).cast("int").alias("common"))
             .where(F.col("common") >= min_common))
-    sa, sb = sets.alias("sa"), sets.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s")))
-    union = F.size(F.col("sa.s")) + F.size(F.col("sb.s")) - inter
-    return (cand.join(sa, F.col("a") == F.col("sa.id"))
-            .join(sb, F.col("b") == F.col("sb.id"))
-            .select("a", "b", F.col("common").cast("int").alias("common"),
-                    F.floor(inter * 100 / union).cast("int")
-                    .alias("jacc_pct"))
-            .where(F.col("jacc_pct") >= min_jaccard_pct))
+    return _jaccard_verify(cand, sets, min_jaccard_pct)
 
 
 def conv_dedup_pairs(transcripts: DataFrame, min_common: int = 2,

@@ -23,10 +23,15 @@ Paths:
 from __future__ import annotations
 
 from collections import Counter
+from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
+
+from cld2_spark.operators.dedup import (_persist_tracked, _spread_pairs,
+                                        capped_band_pairs,
+                                        release_dedup_caches)
 
 
 def _dot(a: str, b: str) -> str:
@@ -38,18 +43,28 @@ def _norm(a: str) -> str:
     return f"sqrt(aggregate({a}, 0D, (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
 
 
+def _cosine(a: str, b: str) -> Column:
+    """Exact cosine of two array columns, summed sequentially per row."""
+    return F.expr(_dot(a, b)) / (F.expr(_norm(a)) * F.expr(_norm(b)))
+
+
+def _top_k(scored: DataFrame, k: int, *order: Column,
+           by: str = "qid") -> DataFrame:
+    """The first k rows per `by` in `order` (unique tie-break last)."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k))
+
+
 def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Brute-force cosine top-k: broadcast(queries) x vectors."""
     q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
     v = vectors.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
-    sim = F.expr(_dot("qv", "nv")) / (F.expr(_norm("qv")) * F.expr(_norm("nv")))
     scored = (v.crossJoin(F.broadcast(q))
               .where(F.col("nid") != F.col("qid"))
-              .select("qid", "nid", sim.alias("sim")))
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+              .select("qid", "nid", _cosine("qv", "nv").alias("sim")))
+    return _top_k(scored, k, F.desc("sim"), F.asc("nid"))
 
 
 def _planes_literal(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -67,16 +82,22 @@ def lsh_bucket_expr(vec_col: str, planes: list[list[float]]) -> str:
     return "(" + " + ".join(bits) + ")"
 
 
+def _lsh_keys(vec_col: str, n_tables: int, n_planes: int, dim: int,
+              seed: int) -> list[Column]:
+    """One sign-bucket key per table: "{t}_" + the bucket id under table
+    t's planes (seed + t), so equal bucket ids of two tables never meet."""
+    return [F.concat(F.lit(f"{t}_"), F.expr(lsh_bucket_expr(
+                vec_col, _planes_literal(dim, n_planes, seed=seed + t)))
+                .cast("string"))
+            for t in range(n_tables)]
+
+
 # Which sizing path estimate_rows took, by name -- observable so a Spark
 # upgrade that silently breaks the plan-statistics read (degrading every
 # caller to a full count() scan) fails a pytest instead of hiding
 # (VERDICT r5 #7). Keys: "plan_stats", "probe_exact", "probe_width",
 # "full_count".
 ESTIMATE_PATHS: "Counter[str]" = Counter()
-
-
-def _estimate_path(name: str) -> None:
-    ESTIMATE_PATHS[name] += 1
 
 
 def estimate_rows(df: DataFrame, probe_rows: int = 64) -> int:
@@ -99,25 +120,25 @@ def estimate_rows(df: DataFrame, probe_rows: int = 64) -> int:
         stats = df._jdf.queryExecution().optimizedPlan().stats()
         rc = stats.rowCount()
         if rc.isDefined():
-            _estimate_path("plan_stats")
+            ESTIMATE_PATHS["plan_stats"] += 1
             return max(int(str(rc.get())), 1)
         size = int(str(stats.sizeInBytes()))
     except Exception:
         pass  # private API unavailable; fall through to the probe
     head = df.limit(probe_rows).collect()
     if not head:
-        _estimate_path("probe_exact")
+        ESTIMATE_PATHS["probe_exact"] += 1
         return 1
     if len(head) < probe_rows:
-        _estimate_path("probe_exact")
+        ESTIMATE_PATHS["probe_exact"] += 1
         return len(head)       # the probe saw the whole table: exact
     if size is None:
         # both the plan-statistics read AND the bounded probe failed to
         # size the table: the full-scan fallback is correct but O(table);
         # ESTIMATE_PATHS makes this regression observable
-        _estimate_path("full_count")
+        ESTIMATE_PATHS["full_count"] += 1
         return max(int(df.count()), 1)
-    _estimate_path("probe_width")
+    ESTIMATE_PATHS["probe_width"] += 1
     # width = mean serialized payload bytes per probed row, halved for a
     # typical parquet compression allowance (NOT sys.getsizeof of the repr,
     # whose per-object overheads inflate width ~10x); sizing only picks a
@@ -159,26 +180,19 @@ def lsh_cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
         n_vec = n_est if n_est is not None else estimate_rows(vectors)
         n_planes = max(6, int(np.ceil(np.log2(max(n_vec, 1) / target_bucket_size + 1))))
         n_planes = min(n_planes, 28)
-    parts_v, parts_q = [], []
-    for t in range(n_tables):
-        planes = _planes_literal(dim, n_planes, seed=42 + t)
-        bexpr = lsh_bucket_expr(vec_col, planes)
-        key = F.concat(F.lit(f"{t}_"), F.expr(bexpr).cast("string")).alias("bucket")
-        parts_v.append(vectors.select(F.col(id_col).alias("nid"),
-                                      F.col(vec_col).alias("nv"), key))
-        parts_q.append(queries.select(F.col(id_col).alias("qid"),
-                                      F.col(vec_col).alias("qv"), key))
-    sv, sq = parts_v[0], parts_q[0]
-    for pv, pq in zip(parts_v[1:], parts_q[1:]):
-        sv, sq = sv.unionAll(pv), sq.unionAll(pq)
-    sim = F.expr(_dot("qv", "nv")) / (F.expr(_norm("qv")) * F.expr(_norm("nv")))
-    cand = (sv.join(F.broadcast(sq), "bucket")
+    keys = _lsh_keys(vec_col, n_tables, n_planes, dim, seed=42)
+
+    def side(df: DataFrame, id_as: str, vec_as: str) -> DataFrame:
+        return reduce(DataFrame.unionAll, [
+            df.select(F.col(id_col).alias(id_as), F.col(vec_col).alias(vec_as),
+                      key.alias("bucket")) for key in keys])
+
+    cand = (side(vectors, "nid", "nv")
+            .join(F.broadcast(side(queries, "qid", "qv")), "bucket")
             .where(F.col("nid") != F.col("qid"))
-            .select("qid", "nid", sim.alias("sim"))
+            .select("qid", "nid", _cosine("qv", "nv").alias("sim"))
             .groupBy("qid", "nid").agg(F.first("sim").alias("sim")))
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    return _top_k(cand, k, F.desc("sim"), F.asc("nid"))
 
 
 def hash_id_expr(col: str, dialect: str) -> str:
@@ -205,40 +219,35 @@ def ivf_cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     hash-sampled centroid set is the standard IVF bootstrap when a
     trained codebook is unavailable)."""
     h = hash_id_expr(id_col, "spark")
-    cents = (vectors.where(F.expr(f"{h} % {cent_mod} = 0"))
-             .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cv")))
+    sample = vectors.where(F.expr(f"{h} % {cent_mod} = 0"))
     # empty-centroid guard (ADVICE r3), gated so the probe job only runs
     # when the table is small enough for emptiness to be plausible --
     # at >= 4*cent_mod rows P(no centroid) < e^-4 and the happy path
     # must not pay an extra scan-until-first-match job
-    if estimate_rows(vectors) < 4 * cent_mod and not cents.limit(1).take(1):
+    if estimate_rows(vectors) < 4 * cent_mod and not sample.limit(1).take(1):
         # no id hashed to 0 mod cent_mod: degrade to every-row-a-centroid
         # (exact brute force) instead of silently returning nothing
-        cents = vectors.select(F.col(id_col).alias("cell"),
-                               F.col(vec_col).alias("cv"))
-    csim = F.expr(_dot("v", "cv")) / (F.expr(_norm("v")) * F.expr(_norm("cv")))
+        sample = vectors
+    cents = sample.select(F.col(id_col).alias("cell"),
+                          F.col(vec_col).alias("cv"))
 
     def assign(df: DataFrame, idname: str, top: int) -> DataFrame:
         base = df.select(F.col(id_col).alias(idname), F.col(vec_col).alias("v"))
-        j = base.crossJoin(F.broadcast(cents)).withColumn("csim", csim)
-        w = Window.partitionBy(idname).orderBy(F.desc("csim"), F.asc("cell"))
-        return (j.withColumn("crank", F.row_number().over(w))
-                .where(F.col("crank") <= top)
+        j = (base.crossJoin(F.broadcast(cents))
+             .withColumn("csim", _cosine("v", "cv")))
+        return (_top_k(j, top, F.desc("csim"), F.asc("cell"), by=idname)
                 .select(idname, "cell", "v"))
 
     va = assign(vectors, "nid", 1).select("nid", F.col("v").alias("nv"), "cell")
     qa = assign(queries, "qid", n_probe).select(
         "qid", F.col("v").alias("qv"), "cell")
-    sim = F.expr(_dot("qv", "nv")) / (F.expr(_norm("qv")) * F.expr(_norm("nv")))
     # the probed query side (|queries| x n_probe rows) is the small side of
     # an ANN batch: broadcast it so the big vector side never shuffles
     cand = (va.join(F.broadcast(qa), "cell")
             .where(F.col("nid") != F.col("qid"))
-            .select("qid", "nid", sim.alias("sim"))
+            .select("qid", "nid", _cosine("qv", "nv").alias("sim"))
             .groupBy("qid", "nid").agg(F.max("sim").alias("sim")))
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    return _top_k(cand, k, F.desc("sim"), F.asc("nid"))
 
 
 def embedding_dup_pairs(vectors: DataFrame, threshold: float = 0.98,
@@ -252,25 +261,16 @@ def embedding_dup_pairs(vectors: DataFrame, threshold: float = 0.98,
     tables with the band-bucket star cap (a 10K-copy embedding group costs
     10K pairs), then exact cosine verifies. Group consumers take connected
     components over the verified pairs (see dedup.capped_band_pairs)."""
-    from cld2_spark.operators.dedup import (_spread_pairs, capped_band_pairs,
-                                            release_dedup_caches)
-
     release_dedup_caches(session=vectors.sparkSession)  # same cache lifecycle
-    band_cols = []
-    for t in range(n_tables):
-        planes = _planes_literal(dim, n_planes, seed=77 + t)
-        band_cols.append(
-            F.concat(F.lit(f"{t}_"),
-                     F.expr(lsh_bucket_expr(vec_col, planes)).cast("string")))
+    keys = _lsh_keys(vec_col, n_tables, n_planes, dim, seed=77)
     ids = (vectors.select(F.col(id_col).alias("id"),
-                          F.explode(F.array(*band_cols)).alias("band_key"))
+                          F.explode(F.array(*keys)).alias("band_key"))
            .select("band_key", "id"))
     cand = _spread_pairs(capped_band_pairs(ids, bucket_cap))
     va = vectors.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
     vb = vectors.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
-    sim = F.expr(_dot("va", "vb")) / (F.expr(_norm("va")) * F.expr(_norm("vb")))
     return (cand.join(va, "a").join(vb, "b")
-            .withColumn("__sim", sim)
+            .withColumn("__sim", _cosine("va", "vb"))
             .where(F.col("__sim") >= threshold)
             .select("a", "b", F.round("__sim", 4).alias("sim")))
 
@@ -294,6 +294,25 @@ def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
                 f"CASE WHEN scale = 0D THEN transform({vec_col}, x -> 0) "
                 f"ELSE transform({vec_col}, "
                 f"x -> CAST(round(CAST(x AS DOUBLE) / scale) AS INT)) END")))
+
+
+def _sq_dist(size_of: str, x: str, c: str) -> str:
+    """sum_i (x_i - c_i)^2 over i = 1..size(size_of), folded sequentially
+    per row; x and c are element expressions of the index `i`."""
+    return (f"aggregate(sequence(1, size({size_of})), 0D, (acc, i) -> acc + "
+            f"({x} - {c}) * ({x} - {c}))")
+
+
+def _argmin(df: DataFrame, keys: list[str], d: str, pick: str,
+            carry: tuple[str, ...] = ()) -> DataFrame:
+    """Per `keys`: the `pick` at the smallest `d` (ties -> smaller pick,
+    one min(struct) aggregate) and that d, with `carry` columns taken
+    by first() (constant per key)."""
+    return (df.groupBy(*keys)
+            .agg(F.min(F.struct(d, pick)).alias("m"),
+                 *[F.first(c).alias(c) for c in carry])
+            .select(*keys, *carry, F.col(f"m.{pick}").alias(pick),
+                    F.col(f"m.{d}").alias(d)))
 
 
 # Ceiling for the FLAT assignment strategy: the centroid table is
@@ -356,6 +375,7 @@ def kmeans_assign(df: DataFrame, iters: int = 2, cent_mod: int = 61,
     Returns (id, cluster, dist) after `iters` refinement rounds, where
     dist is the exact squared distance to the final assigned centroid.
     """
+    release_dedup_caches(session=df.sparkSession)  # same cache lifecycle
     h = hash_id_expr(id_col, "spark")
     if target_cluster_size is not None:
         # expected cluster size == the sampling stride; k_est = n/cent_mod.
@@ -374,31 +394,17 @@ def kmeans_assign(df: DataFrame, iters: int = 2, cent_mod: int = 61,
     n_rows = n_est if n_est is not None else estimate_rows(df)
     k_est = max(n_rows // cent_mod, 1)
     two_level = k_est > broadcast_cap
-    dist = ("aggregate(sequence(1, size(codes)), 0D, (acc, i) -> acc + "
-            "(CAST(element_at(codes, i) AS DOUBLE) "
-            " - element_at(s, i) / n) * "
-            "(CAST(element_at(codes, i) AS DOUBLE) "
-            " - element_at(s, i) / n))")
-    # centroid-to-centroid distance: mean(s/n) vs a coarse mean (cs/cn)
-    dist_cc = ("aggregate(sequence(1, size(s)), 0D, (acc, i) -> acc + "
-               "(element_at(s, i) / n - element_at(cs, i) / cn) * "
-               "(element_at(s, i) / n - element_at(cs, i) / cn))")
-    dist_rc = ("aggregate(sequence(1, size(codes)), 0D, (acc, i) -> acc + "
-               "(CAST(element_at(codes, i) AS DOUBLE) "
-               " - element_at(cs, i) / cn) * "
-               "(CAST(element_at(codes, i) AS DOUBLE) "
-               " - element_at(cs, i) / cn))")
+    code = "CAST(element_at(codes, i) AS DOUBLE)"
+    mean, coarse_mean = "element_at(s, i) / n", "element_at(cs, i) / cn"
 
-    def assign_flat(cent_df: DataFrame) -> DataFrame:
-        j = (codes.crossJoin(F.broadcast(cent_df))
-             .withColumn("dist", F.expr(dist)))
-        return (j.groupBy(id_col)
-                .agg(F.min(F.struct("dist", "cell")).alias("m"),
-                     F.first("codes").alias("codes"))
-                .select(id_col, "codes", F.col("m.cell").alias("cell"),
-                        F.col("m.dist").alias("dist")))
+    def nearest(pairs: DataFrame) -> DataFrame:
+        """Exact argmin over candidate (row, centroid) pairs."""
+        j = pairs.withColumn("dist", F.expr(_sq_dist("codes", code, mean)))
+        return _argmin(j, [id_col], "dist", "cell", ("codes",))
 
-    def assign_two_level(cent_df: DataFrame) -> DataFrame:
+    def assign(cent_df: DataFrame) -> DataFrame:
+        if not two_level:
+            return nearest(codes.crossJoin(F.broadcast(cent_df)))
         # coarse cells = deterministic 1/coarse_factor hash-sample of the
         # centroid ids (cell ids are vec ids, already a uniform sample).
         # coarse_factor must be coprime to cent_mod: both sample the SAME
@@ -410,31 +416,18 @@ def kmeans_assign(df: DataFrame, iters: int = 2, cent_mod: int = 61,
                           F.col("s").alias("cs"), F.col("n").alias("cn")))
         # fine centroid -> nearest coarse cell (k x k/cf compares, but the
         # left side is only k rows — negligible next to the corpus pass)
-        f2c = (cent_df.crossJoin(F.broadcast(coarse))
-               .withColumn("cd", F.expr(dist_cc))
-               .groupBy("cell")
-               .agg(F.min(F.struct(F.col("cd"), F.col("ccell"))).alias("m"),
-                    F.first("s").alias("s"), F.first("n").alias("n"))
-               .select(F.col("m.ccell").alias("ccell"), "cell", "s", "n"))
+        f2c = _argmin(cent_df.crossJoin(F.broadcast(coarse)).withColumn(
+                          "cd", F.expr(_sq_dist("s", mean, coarse_mean))),
+                      ["cell"], "cd", "ccell", ("s", "n"))
         # row -> nearest coarse cell (broadcast of k/cf rows)
-        r2c = (codes.crossJoin(F.broadcast(coarse))
-               .withColumn("cd", F.expr(dist_rc))
-               .groupBy(id_col)
-               .agg(F.min(F.struct(F.col("cd"), F.col("ccell"))).alias("m"),
-                    F.first("codes").alias("codes"))
-               .select(id_col, "codes", F.col("m.ccell").alias("ccell")))
+        r2c = _argmin(codes.crossJoin(F.broadcast(coarse)).withColumn(
+                          "cd", F.expr(_sq_dist("codes", code, coarse_mean))),
+                      [id_col], "cd", "ccell", ("codes",))
         # exact argmin within the coarse cell: join keyed by ccell — the
         # fine side carries ~coarse_factor centroids per key; the corpus
         # shuffles ONCE on ccell per iteration (AQE splits skewed cells)
-        j = (r2c.join(f2c, on="ccell")
-             .withColumn("dist", F.expr(dist)))
-        return (j.groupBy(id_col)
-                .agg(F.min(F.struct("dist", "cell")).alias("m"),
-                     F.first("codes").alias("codes"))
-                .select(id_col, "codes", F.col("m.cell").alias("cell"),
-                        F.col("m.dist").alias("dist")))
+        return nearest(r2c.drop("cd").join(f2c.drop("cd"), on="ccell"))
 
-    assign = assign_two_level if two_level else assign_flat
     a = assign(cents)
     for _ in range(iters - 1):
         # persist the previous iteration's assignment: the next round
@@ -445,7 +438,6 @@ def kmeans_assign(df: DataFrame, iters: int = 2, cent_mod: int = 61,
         # Tracked in the dedup cache registry so long-lived sessions
         # release superseded iterations (same policy as pointer-jumping
         # connected components).
-        from cld2_spark.operators.dedup import _persist_tracked
         a = _persist_tracked(a)
         # one aggregation chain rebuilds the centroids: the per-(cell,
         # pos) count IS the cell's row count (every row contributes one
@@ -487,8 +479,6 @@ def semdedup_pairs(df: DataFrame, threshold: float = 0.98,
 
     Returns (a, b, sim) with a < b and sim >= threshold.
     """
-    from cld2_spark.operators.dedup import _persist_tracked
-
     a = kmeans_assign(df, iters=iters, cent_mod=cent_mod,
                       id_col=id_col, vec_col=vec_col,
                       target_cluster_size=target_cluster_size, n_est=n_est)
@@ -518,10 +508,9 @@ def semdedup_pairs(df: DataFrame, threshold: float = 0.98,
     e = _persist_tracked(e)
     x = e.select("cluster", F.col("id").alias("a"), F.col("v").alias("va"))
     y = e.select("cluster", F.col("id").alias("b"), F.col("v").alias("vb"))
-    sim = F.expr(_dot("va", "vb")) / (F.expr(_norm("va")) * F.expr(_norm("vb")))
     return (x.join(y, on="cluster")
             .where(F.col("a") < F.col("b"))
-            .withColumn("sim", sim)
+            .withColumn("sim", _cosine("va", "vb"))
             .where(F.col("sim") >= threshold)
             .select("a", "b", F.round("sim", 4).alias("sim")))
 
@@ -549,17 +538,41 @@ def pq_encode(df: DataFrame, n_sub: int = 4, cb_mod: int = 37,
     Returns (vec_id, codes array<bigint> — codeword ids in subspace
     order, dist — total squared reconstruction residual, rounded)."""
     assigned, _ = pq_assignments(df, n_sub, cb_mod, id_col, vec_col)
-    # dist sums n_sub doubles: fold them in SUBSPACE ORDER (not F.sum,
-    # whose partial-aggregation order is partitioning-dependent) so the
-    # value is bit-stable across runs and engines
     return (assigned.groupBy(id_col)
             .agg(F.expr("transform(array_sort(collect_list("
                         "struct(s, cw))), t -> CAST(t.cw AS BIGINT))")
                  .alias("codes"),
-                 F.round(F.expr(
-                     "aggregate(transform(array_sort(collect_list("
-                     "struct(s, d2))), t -> t.d2), 0D, (a, x) -> a + x)"),
-                     6).alias("dist")))
+                 _subspace_sum("d2").alias("dist")))
+
+
+# squared distance of subvector v to codeword cv (both array<double>)
+_PQ_D2 = ("aggregate(zip_with(v, cv, (a, b) -> (a - b) * (a - b)), "
+          "0D, (acc, x) -> acc + x)")
+
+
+def _subspace_sum(col: str) -> Column:
+    """A group's per-subspace `col` values summed in SUBSPACE ORDER (not
+    F.sum, whose partial-aggregation order is partitioning-dependent) so
+    the value is bit-stable across runs and engines -- a last-ulp
+    difference could flip a rounded rank key. Rounded to 6 places."""
+    return F.round(F.expr(
+        f"aggregate(transform(array_sort(collect_list(struct(s, {col}))), "
+        f"t -> t.{col}), 0D, (a, x) -> a + x)"), 6)
+
+
+def _subvectors(df: DataFrame, n_sub: int, id_col: str, vec_col: str,
+                id_as: str, vec_as: str) -> DataFrame:
+    """(id_as, s, vec_as): each vector's n_sub contiguous subvectors,
+    subspace s = 0..n_sub-1, as array<double>."""
+    dim = f"size({vec_col})"
+    sub = (f"transform(sequence(0, {n_sub - 1}), s -> named_struct("
+           f"'s', s, 'v', slice({vec_col}, s * ({dim} DIV {n_sub}) + 1, "
+           f"{dim} DIV {n_sub})))")
+    return (df.select(F.col(id_col).alias(id_as),
+                      F.explode(F.expr(sub)).alias("p"))
+            .select(id_as, F.col("p.s").alias("s"),
+                    F.expr("transform(p.v, x -> CAST(x AS DOUBLE))")
+                    .alias(vec_as)))
 
 
 def pq_assignments(df: DataFrame, n_sub: int = 4, cb_mod: int = 37,
@@ -570,28 +583,12 @@ def pq_assignments(df: DataFrame, n_sub: int = 4, cb_mod: int = 37,
     codebook = (cw, s, cv) with double-cast subvectors. Shared by
     pq_encode (reassembly) and pq_adc_topk (ADC search)."""
     h = hash_id_expr(id_col, "spark")
-    dim_expr = f"size({vec_col})"
-    sub = (f"transform(sequence(0, {n_sub - 1}), s -> named_struct("
-           f"'s', s, 'v', slice({vec_col}, s * ({dim_expr} DIV {n_sub}) + 1, "
-           f"{dim_expr} DIV {n_sub})))")
-    ex = (df.select(F.col(id_col), F.explode(F.expr(sub)).alias("p"))
-          .select(id_col, F.col("p.s").alias("s"),
-                  F.expr("transform(p.v, x -> CAST(x AS DOUBLE))")
-                  .alias("v")))
-    cb = (df.where(F.expr(f"{h} % {cb_mod} = 0"))
-          .select(F.col(id_col).alias("cw"), F.expr(sub).alias("ps"))
-          .select("cw", F.explode("ps").alias("p"))
-          .select("cw", F.col("p.s").alias("s"),
-                  F.expr("transform(p.v, x -> CAST(x AS DOUBLE))")
-                  .alias("cv")))
-    d2 = ("aggregate(zip_with(v, cv, (a, b) -> (a - b) * (a - b)), "
-          "0D, (acc, x) -> acc + x)")
-    assigned = (ex.join(F.broadcast(cb), on="s")
-                .withColumn("d2", F.expr(d2))
-                .groupBy(id_col, "s")
-                .agg(F.min(F.struct(F.col("d2"), F.col("cw"))).alias("m"))
-                .select(id_col, "s", F.col("m.cw").alias("cw"),
-                        F.col("m.d2").alias("d2")))
+    ex = _subvectors(df, n_sub, id_col, vec_col, id_col, "v")
+    cb = _subvectors(df.where(F.expr(f"{h} % {cb_mod} = 0")), n_sub,
+                     id_col, vec_col, "cw", "cv")
+    assigned = _argmin(ex.join(F.broadcast(cb), on="s")
+                       .withColumn("d2", F.expr(_PQ_D2)),
+                       [id_col, "s"], "d2", "cw")
     return assigned, cb
 
 
@@ -611,38 +608,20 @@ def pq_adc_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     aggregate. No shuffle ever carries an embedding array. Returns
     (qid, nid, adist, rank) — rank by (adist asc, nid) per query."""
     assigned, cb = pq_assignments(vectors, n_sub, cb_mod, id_col, vec_col)
-    dim_expr = f"size({vec_col})"
-    sub = (f"transform(sequence(0, {n_sub - 1}), s -> named_struct("
-           f"'s', s, 'v', slice({vec_col}, s * ({dim_expr} DIV {n_sub}) + 1, "
-           f"{dim_expr} DIV {n_sub})))")
-    qx = (queries.select(F.col(id_col).alias("qid"),
-                         F.explode(F.expr(sub)).alias("p"))
-          .select("qid", F.col("p.s").alias("s"),
-                  F.expr("transform(p.v, x -> CAST(x AS DOUBLE))")
-                  .alias("v")))
-    qd2 = ("aggregate(zip_with(v, cv, (a, b) -> (a - b) * (a - b)), "
-           "0D, (acc, x) -> acc + x)")
-    lut = (qx.join(F.broadcast(cb), on="s")
-           .select("qid", "s", "cw", F.expr(qd2).alias("qd2")))
-    # fold the n_sub LUT entries in SUBSPACE ORDER (not F.sum: partial
-    # aggregation order is partitioning-dependent, and a last-ulp
-    # difference could flip the rounded rank key between runs/engines)
+    lut = (_subvectors(queries, n_sub, id_col, vec_col, "qid", "v")
+           .join(F.broadcast(cb), on="s")
+           .select("qid", "s", "cw", F.expr(_PQ_D2).alias("qd2")))
     scored = (assigned.select(F.col(id_col).alias("nid"), "s", "cw")
               .join(F.broadcast(lut), on=["s", "cw"])
               .where(F.col("nid") != F.col("qid"))
               .groupBy("qid", "nid")
-              .agg(F.round(F.expr(
-                       "aggregate(transform(array_sort(collect_list("
-                       "struct(s, qd2))), t -> t.qd2), 0D, (a, x) -> a + x)"),
-                       6).alias("adist"),
+              .agg(_subspace_sum("qd2").alias("adist"),
                    F.count(F.lit(1)).alias("nsub")))
     # a (query, vector) pair is rankable only when every subspace
     # contributed (always true by construction; the guard keeps a
     # malformed short vector from ranking on partial distance)
-    w = Window.partitionBy("qid").orderBy(F.asc("adist"), F.asc("nid"))
-    return (scored.where(F.col("nsub") == n_sub)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
+    return (_top_k(scored.where(F.col("nsub") == n_sub), k,
+                   F.asc("adist"), F.asc("nid"))
             .select("qid", "nid", "adist", F.col("rank").cast("int")
                     .alias("rank")))
 
@@ -673,9 +652,6 @@ def kcenter_select(df: DataFrame, k: int = 6, id_col: str = "vec_id",
     bounded by codegen expression size (~k*dim integer literals per
     projection; keep k*dim under ~64K tokens — k<=100 at dim 64), which
     is exactly the regime greedy k-center is used in."""
-    from cld2_spark.operators.dedup import (_persist_tracked,
-                                            release_dedup_caches)
-
     release_dedup_caches(session=df.sparkSession)
     # tracked persist, NOT a finally-block unpersist (ADVICE r6): the
     # returned DataFrame is lazy, so an unpersist on exit would drop the

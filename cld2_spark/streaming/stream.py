@@ -12,7 +12,10 @@ under the same watermark; no custom stateful operator is required.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import contextlib
+import os
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cld2_spark.pipeline.stages import run_pipeline
 from cld2_spark.session import scoped_conf
@@ -33,6 +36,25 @@ def _no_empty_trailing_batch(spark: SparkSession):
     emission). Conf is restored afterwards either way."""
     return scoped_conf(
         spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+
+
+def _replay(spark: SparkSession, writer, work_dir: str, timeout_sec: int,
+            what: str, no_data_batches: bool = False) -> None:
+    """Run a finite availableNow replay of `writer` (checkpoint under
+    work_dir) to completion. no_data_batches=False runs it without the
+    trailing empty batch (_no_empty_trailing_batch). A replay still
+    running after timeout_sec is stopped and raises TimeoutError: never
+    read a half-written snapshot -- a still-running query could be
+    mid-overwrite of its sink, silently returning partial results."""
+    scope = (contextlib.nullcontext() if no_data_batches
+             else _no_empty_trailing_batch(spark))
+    with scope:
+        q = (writer.option("checkpointLocation", f"{work_dir}/ckpt")
+             .trigger(availableNow=True).start())
+        if not q.awaitTermination(timeout_sec):
+            q.stop()
+            raise TimeoutError(
+                f"{what} replay did not finish in {timeout_sec}s")
 
 
 TRANSCRIPT_DDL = ("conv_id string, turn_idx int, role string, text string, "
@@ -64,12 +86,8 @@ def start_windowed_stats_stream(spark: SparkSession, source_dir: str,
     watermark allows are DROPPED by the engine -- the correctness contract
     a 10^12-turn streaming deployment needs (state is bounded by the
     watermark horizon, not by stream length)."""
-    from pyspark.sql import functions as F
-
-    reader = spark.readStream.schema(TRANSCRIPT_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(source_dir).withWatermark("ts", watermark)
+    src = stream_transcripts(spark, source_dir, watermark,
+                             max_files_per_trigger)
     agg = (src.groupBy(F.window("ts", window), "role")
            .agg(F.count("*").alias("n_turns"),
                 F.sum(F.length("text")).alias("total_chars")))
@@ -85,6 +103,17 @@ def start_windowed_stats_stream(spark: SparkSession, source_dir: str,
 
 EVENTS_DDL = ("event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
+
+
+def _events_source(spark: SparkSession, events_path: str) -> DataFrame:
+    """File-source stream of the events table (a directory or one file)."""
+    reader = spark.readStream.schema(EVENTS_DDL)
+    if os.path.isfile(events_path):
+        # the file source requires a DIRECTORY; a single-file table is
+        # addressed as its parent dir + a name filter
+        reader = reader.option("pathGlobFilter", os.path.basename(events_path))
+        events_path = os.path.dirname(events_path)
+    return reader.parquet(events_path)
 
 
 def run_events_window_stream(spark: SparkSession, events_path: str,
@@ -103,18 +132,8 @@ def run_events_window_stream(spark: SparkSession, events_path: str,
     An unbounded deployment would run append mode + watermark exactly as
     start_windowed_stats_stream does; this entry point is the
     finite-replay verification surface."""
-    from pyspark.sql import functions as F
-
-    import os
-
     out_dir = f"{work_dir}/data"
-    reader = spark.readStream.schema(EVENTS_DDL)
-    if os.path.isfile(events_path):
-        # the file source requires a DIRECTORY; a single-file table is
-        # addressed as its parent dir + a name filter
-        reader = reader.option("pathGlobFilter", os.path.basename(events_path))
-        events_path = os.path.dirname(events_path)
-    src = reader.parquet(events_path).withWatermark("ts", watermark)
+    src = _events_source(spark, events_path).withWatermark("ts", watermark)
     agg = (src.groupBy(F.window("ts", window).alias("w"), "event_type")
            .agg(F.count("*").alias("n_events"),
                 F.round(F.sum("value"), 2).alias("sum_value")))
@@ -122,17 +141,8 @@ def run_events_window_stream(spark: SparkSession, events_path: str,
     def sink(batch_df, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(out_dir)
 
-    with _no_empty_trailing_batch(spark):
-        q = (agg.writeStream.outputMode("complete").foreachBatch(sink)
-             .option("checkpointLocation", f"{work_dir}/ckpt")
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(timeout_sec):
-            # never read a half-written snapshot: a still-running query
-            # could be mid-overwrite of out_dir, silently returning
-            # partial windows
-            q.stop()
-            raise TimeoutError(
-                f"events window replay did not finish in {timeout_sec}s")
+    _replay(spark, agg.writeStream.outputMode("complete").foreachBatch(sink),
+            work_dir, timeout_sec, "events window")
     return (spark.read.parquet(out_dir)
             .select(F.unix_timestamp(F.col("w.start")).alias("window_start"),
                     "event_type", "n_events", "sum_value"))
@@ -195,8 +205,6 @@ def start_dedup_stream(spark: SparkSession, source_dir: str, sink_dir: str,
     micro-batch is engine-chosen; across micro-batches the first delivery
     wins (it owns the state entry).
     """
-    from pyspark.sql import functions as F
-
     src = (stream_transcripts(spark, source_dir, watermark,
                               max_files_per_trigger)
            .withColumn("fingerprint", F.md5(F.col("text")))
@@ -234,26 +242,13 @@ def run_click_purchase_join_stream(spark: SparkSession, events_path: str,
     the same exchange a batch join would do — and per-key state size is
     bounded by the horizon, not the stream length.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     out_dir = f"{work_dir}/data"
-
-    def _src(tag: str):
-        reader = spark.readStream.schema(EVENTS_DDL)
-        path = events_path
-        if os.path.isfile(path):
-            reader = reader.option("pathGlobFilter", os.path.basename(path))
-            path = os.path.dirname(path)
-        return reader.parquet(path)
-
-    clicks = (_src("c").where("event_type = 'click'")
+    clicks = (_events_source(spark, events_path).where("event_type = 'click'")
               .select(F.col("user_id").alias("c_user"),
                       F.col("event_id").alias("click_id"),
                       F.col("ts").alias("click_ts"))
               .withWatermark("click_ts", watermark))
-    buys = (_src("p").where("event_type = 'purchase'")
+    buys = (_events_source(spark, events_path).where("event_type = 'purchase'")
             .select(F.col("user_id").alias("p_user"),
                     F.col("ts").alias("buy_ts"),
                     F.col("value").alias("buy_value"))
@@ -270,15 +265,8 @@ def run_click_purchase_join_stream(spark: SparkSession, events_path: str,
         # writes idempotent (same batch id -> same dir, overwritten)
         batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    with _no_empty_trailing_batch(spark):
-        q = (joined.writeStream.outputMode("append").foreachBatch(sink)
-             .option("checkpointLocation", f"{work_dir}/ckpt")
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"click/purchase join replay did not finish in "
-                f"{timeout_sec}s")
+    _replay(spark, joined.writeStream.outputMode("append").foreachBatch(sink),
+            work_dir, timeout_sec, "click/purchase join")
     # an explicit directory list, not a `batch=*` glob: Spark's
     # FileStreamSink metadata probe takes a glob as a literal path and
     # logs a FileNotFoundException stack trace on every read
@@ -306,29 +294,15 @@ def run_enrichment_stream(spark: SparkSession, events_path: str,
     availableNow replay; returns the enriched rows read back from the
     sink — byte-comparable to the plain batch join the oracle runs.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
-    reader = spark.readStream.schema(EVENTS_DDL)
-    path = events_path
-    if os.path.isfile(path):
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    src = reader.parquet(path)
+    src = _events_source(spark, events_path)
     enriched = (src.join(F.broadcast(dim), src.user_id == dim.c_custkey,
                          "inner")
                 .select("event_id", "user_id", "event_type",
                         F.col("c_mktsegment").alias("mktsegment"),
                         F.round("value", 2).alias("value")))
-    q = (enriched.writeStream.outputMode("append").format("parquet")
-         .option("path", f"{work_dir}/data")
-         .option("checkpointLocation", f"{work_dir}/ckpt")
-         .trigger(availableNow=True).start())
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"enrichment stream replay did not finish in {timeout_sec}s")
+    _replay(spark, enriched.writeStream.outputMode("append").format("parquet")
+            .option("path", f"{work_dir}/data"),
+            work_dir, timeout_sec, "enrichment stream", no_data_batches=True)
     return spark.read.parquet(f"{work_dir}/data")
 
 
@@ -347,17 +321,8 @@ def run_events_session_stream(spark: SparkSession, events_path: str,
     Complete output mode via foreachBatch for the same finite-replay
     reason as run_events_window_stream; an unbounded deployment would
     use append mode + the watermark to emit closed sessions only."""
-    import os
-
-    from pyspark.sql import functions as F
-
     out_dir = f"{work_dir}/data"
-    reader = spark.readStream.schema(EVENTS_DDL)
-    if os.path.isfile(events_path):
-        reader = reader.option("pathGlobFilter",
-                               os.path.basename(events_path))
-        events_path = os.path.dirname(events_path)
-    src = reader.parquet(events_path).withWatermark("ts", watermark)
+    src = _events_source(spark, events_path).withWatermark("ts", watermark)
     agg = (src.groupBy("user_id",
                        F.session_window(F.col("ts"), gap).alias("sw"))
            .agg(F.count(F.lit(1)).alias("n_events")))
@@ -365,14 +330,8 @@ def run_events_session_stream(spark: SparkSession, events_path: str,
     def sink(batch_df, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(out_dir)
 
-    with _no_empty_trailing_batch(spark):
-        q = (agg.writeStream.outputMode("complete").foreachBatch(sink)
-             .option("checkpointLocation", f"{work_dir}/ckpt")
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"session window replay did not finish in {timeout_sec}s")
+    _replay(spark, agg.writeStream.outputMode("complete").foreachBatch(sink),
+            work_dir, timeout_sec, "session window")
     return (spark.read.parquet(out_dir)
             .select("user_id",
                     F.expr("CAST(unix_timestamp(sw.start) AS BIGINT)")

@@ -45,18 +45,18 @@ def test_simhash_pairs(docs):
 
 
 def test_simhash_batch_deterministic():
-    from cld2_spark.operators.dedup import simhash64_batch
-    a = simhash64_batch(["hello world text", "hello world text", "other"])
+    from cld2_spark.operators.dedup import simhash62_batch
+    a = simhash62_batch(["hello world text", "hello world text", "other"])
     assert a[0] == a[1] != a[2]
-    b = simhash64_batch(["other", "hello world text"])
+    b = simhash62_batch(["other", "hello world text"])
     assert b[1] == a[0] and b[0] == a[2]  # batch-position independent
 
 
 def test_simhash_short_text_not_paired(spark):
     # ADVICE r1: texts shorter than SHINGLE_K must not all collide at
     # hamming 0 ('ok' vs 'no' are distinct rows, not near-duplicates)
-    from cld2_spark.operators.dedup import simhash64_batch, simhash_pairs
-    fp = simhash64_batch(["ok", "no", ""])
+    from cld2_spark.operators.dedup import simhash62_batch, simhash_pairs
+    fp = simhash62_batch(["ok", "no", ""])
     assert all(v == -1 for v in fp)  # sentinel, filtered upstream
     df = spark.createDataFrame(
         [(0, "ok"), (1, "no"), (2, "yes")], "doc_id long, text string")

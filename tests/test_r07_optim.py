@@ -126,6 +126,32 @@ def test_semdedup_matches_unpersisted_recompute(spark):
     assert got == want and got
 
 
+def test_semdedup_releases_previous_caches(spark):
+    """kmeans_assign (and semdedup_pairs through it) follows the dedup
+    cache lifecycle: each call releases the previous call's persisted
+    assignments, so repeated calls leave one call's worth behind."""
+    from cld2_spark.operators.dedup import release_dedup_caches
+    from cld2_spark.operators.similarity import semdedup_pairs
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs()
+                   .keySet().toArray())
+
+    def frame(shift: int):
+        return spark.createDataFrame(
+            [(i, [float((i * 7 + d * 3 + shift) % 11 - 5) for d in range(8)])
+             for i in range(60)], "vec_id bigint, embedding array<double>")
+
+    release_dedup_caches(session=spark)
+    before = persisted()
+    semdedup_pairs(frame(0), threshold=0.9, cent_mod=7).collect()
+    one_call = len(persisted() - before)
+    for shift in (1, 2):
+        semdedup_pairs(frame(shift), threshold=0.9, cent_mod=7).collect()
+    assert one_call >= 1
+    assert len(persisted() - before) == one_call
+
+
 def test_register_memo_restores_dropped_view(spark):
     """The per-session `_register` memo must not trust its key once an
     expected view is gone: a query entry after `transcripts` was dropped

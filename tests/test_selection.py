@@ -150,6 +150,28 @@ def test_itemset_jaccard_conversation_dedup(spark):
     assert loose == {("A", "B"), ("A", "C"), ("B", "C")}
 
 
+def test_conv_dedup_releases_previous_caches(spark):
+    """conv_dedup_pairs follows the dedup cache lifecycle: each call
+    releases the previous call's persisted item sets, so repeated calls
+    on one session leave exactly one of them behind."""
+    from cld2_spark.operators.dedup import (conv_dedup_pairs,
+                                            release_dedup_caches)
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs()
+                   .keySet().toArray())
+
+    release_dedup_caches(session=spark)
+    before = persisted()
+    for n in (3, 4, 5):
+        rows = [(f"c{c}", t, "user", f"turn {(c + t) % n}")
+                for c in range(n) for t in range(4)]
+        conv_dedup_pairs(spark.createDataFrame(
+            rows, "conv_id string, turn_idx int, role string, text string"),
+            min_jaccard_pct=0).collect()
+    assert len(persisted() - before) == 1
+
+
 def test_tool_transitions_start_and_null_markers(spark):
     from __spark_entry__ import _TOOL_TRANSITIONS_SQL
     spark.createDataFrame([
