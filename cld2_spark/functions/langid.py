@@ -50,13 +50,14 @@ SUMMARY_SCHEMA = StructType([
     StructField("summary_pct", IntegerType()),
 ])
 
-# the keep/drop pipeline's schema: only what the decision consumes.
-# `lang1` here is the pipeline's per-turn language answer = the kernel's
-# summary_lang (the FIXTURES.md contract name predates the sorted-array
-# refactor). be_ok is the short-turn bestEffort rescue flag
+# the keep/drop pipeline's schema: only what the decision and the scrub
+# consume. `lang1` here is the pipeline's per-turn language answer = the
+# kernel's summary_lang (the FIXTURES.md contract name predates the
+# sorted-array refactor). be_ok is the short-turn bestEffort rescue flag
 # (analyze.BEST_EFFORT_MAX_BYTES): true when the answer is a bestEffort
 # guess that passed its own confidence gate; is_reliable stays false on
-# such rows.
+# such rows. The last five are analyze.rule_pass's quality flags and
+# scrub/toxicity guards.
 PIPELINE_SCHEMA = StructType([
     StructField("lang1", StringType()),
     StructField("pct1", IntegerType()),
@@ -66,6 +67,8 @@ PIPELINE_SCHEMA = StructType([
     StructField("ppl", DoubleType()),
     StructField("tri_grams", LongType()),
     StructField("be_ok", BooleanType()),
+    *(StructField(k, BooleanType()) for k in
+      ("too_short", "low_quality", "has_digit", "has_at", "tox_cand")),
 ])
 
 # W4 chunk vector: per-language spans of the source text
@@ -116,19 +119,56 @@ def _span_rows(res: dict) -> pd.Series:
     return pd.Series(rows)
 
 
+def _stat_checked_zip_reload() -> None:
+    """Make `zipimporter.invalidate_caches` re-read an archive's directory
+    only when the archive's (st_mtime_ns, st_size) changed since its last
+    read. PySpark's worker calls `importlib.invalidate_caches()` at the
+    start of every task; before Python 3.13 that makes every cached
+    zipimporter re-read its whole directory, and the 1,328 entries of
+    pyspark.zip alone cost 0.13-0.26 s per task (3.13 only drops the
+    cached directory). Installed once per process; a first call per
+    archive re-reads, as it would have."""
+    import os
+    import sys
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 13) or hasattr(cls, "_cld2s_reload"):
+        return
+    reload = cls._cld2s_reload = cls.invalidate_caches
+    stamps: dict[str, tuple[int, int]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and stamps.get(self.archive) == stamp \
+                and files is not None:
+            self._files = files
+            return
+        reload(self)
+        stamps[self.archive] = stamp
+
+    cls.invalidate_caches = invalidate_caches
+
+
 def _langid_udf(name: str, schema, out, doc: str, analyze: bool = False,
                 **flags):
     """One SCALAR_ITER pandas UDF over a langid kernel. Per Python worker
-    it loads the model once; per Arrow batch it fills NULL text with "",
-    turns any hint columns into hint records, and cuts the rows into
-    `kernel_slices`. Per slice it makes one kernel call (analyze_batch,
-    or detect_batch with `flags`) and yields `out(result)`: Spark checks
-    only the total row count of an iterator UDF, so a batch may come back
-    as several frames."""
+    it installs the stat-checked zip reload and loads the model once; per
+    Arrow batch it fills NULL text with "", turns any hint columns into
+    hint records, and cuts the rows into `kernel_slices`. Per slice it
+    makes one kernel call (analyze_batch, or detect_batch with `flags`)
+    and yields `out(result)`: Spark checks only the total row count of an
+    iterator UDF, so a batch may come back as several frames."""
     def udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         from cld2_spark.kernels.analyze import analyze_batch, kernel_slices
         from cld2_spark.kernels.detect import detect_batch
         from cld2_spark.kernels.model import default_model
+        _stat_checked_zip_reload()
         model = default_model()
         for batch in batches:
             text, *hint_cols = batch if isinstance(batch, tuple) else (batch,)

@@ -1,10 +1,13 @@
 """Heuristic quality rules (Gopher/C4-style), engine-portable.
 
-One set of named thresholds; three consumers:
-  - Spark pipeline: `pipeline.stages.with_quality` evaluates
+One set of named thresholds and one flag rule (`flags` over arrays,
+`flags_sql` over SQL expressions); four feature forms:
+  - the keep/drop pipeline: `kernels.analyze.rule_pass` counts the
+    features from the codepoints the langid kernel already decoded, so
+    no per-row JVM string work runs ahead of the UDF.
+  - Spark SQL: `pipeline.stages.with_quality` evaluates
     `features_sql('spark')` once per row as helper columns and
-    `flags_sql` over them -- pure whole-stage-codegen SQL, no UDF
-    (SURVEY.md §2.11 "heuristic quality rules -> pure Spark SQL").
+    `flags_sql` over them (the standalone `quality_flags` query).
   - DuckDB oracle SQL for the driver correctness gate.
   - pandas reference implementation (oracle labels, FIXTURES.md §4).
 
@@ -81,6 +84,19 @@ def flags_sql(f: dict[str, str]) -> dict[str, str]:
     }
 
 
+def flags(f: dict) -> dict:
+    """`too_short` and `low_quality` over feature arrays (NumPy arrays or
+    pandas Series) in `f`: the same rule as `flags_sql`."""
+    return {
+        "too_short": f["n_chars"] < MIN_CHARS,
+        "low_quality": ((f["n_chars"] > MAX_CHARS)
+                        | (f["n_words"] > MAX_WORDS)
+                        | (f["n_alpha"] > f["n_words"] * MAX_MEAN_WORD_LEN)
+                        | (f["n_symbols"] * 2 > f["n_chars"])
+                        | (f["n_digits"] * 2 > f["n_chars"])),
+    }
+
+
 def low_quality_sql(col: str, dialect: str) -> str:
     """Boolean SQL expression: True when the turn fails the heuristic rules."""
     return flags_sql(features_sql(col, dialect))["low_quality"]
@@ -116,15 +132,8 @@ def features_pandas(s):
 
 
 def low_quality_pandas(s):
-    f = features_pandas(s)
-    return (
-        (f["n_chars"] > MAX_CHARS)
-        | (f["n_words"] > MAX_WORDS)
-        | (f["n_alpha"] > f["n_words"] * MAX_MEAN_WORD_LEN)
-        | (f["n_symbols"] * 2 > f["n_chars"])
-        | (f["n_digits"] * 2 > f["n_chars"])
-    )
+    return flags(features_pandas(s))["low_quality"]
 
 
 def too_short_pandas(s):
-    return s.fillna("").str.len() < MIN_CHARS
+    return flags(features_pandas(s))["too_short"]

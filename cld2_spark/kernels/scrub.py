@@ -11,7 +11,9 @@ re do too), POSIX-ish classes avoided. Order matters: credit card before
 phone (both are digit runs), SSN before phone.
 
 The scrub stage itself is pure built-in `regexp_replace` chains on the JVM
-(SURVEY.md §2.11) -- no UDF in the hot path.
+(SURVEY.md §2.11), each behind a cheap guard; in the keep/drop pipeline
+the guards come from the langid kernel's codepoint pass
+(`analyze.rule_pass`), so only rows whose guard fires reach a regex.
 """
 
 from __future__ import annotations
@@ -60,6 +62,7 @@ TOXICITY_PATTERN = (r"(?i)(?:"
 
 def scrub_pandas(s):
     """Apply the PII chain to a pandas Series of strings (oracle path).
+    NULL stays NULL, as in the SQL engines.
 
     Compiled with re.ASCII so \\b/\\w match Java/RE2's ASCII semantics."""
     import re
@@ -67,7 +70,7 @@ def scrub_pandas(s):
     out = s.fillna("")
     for _, pat, tok in PII_PATTERNS:
         out = out.str.replace(re.compile(pat, re.ASCII), tok, regex=True)
-    return out
+    return out.astype(object).where(s.notna(), None)
 
 
 def toxicity_mask_pandas(s):
@@ -93,30 +96,37 @@ def scrub_sql(col: str, dialect: str) -> str:
 # Guards on the ORIGINAL text are sound supersets: replacement tokens
 # contain no '@' and no digits, so a row that ever matches still triggers.
 # About 5% of turns contain a digit and 5% an '@', so most rows skip every
-# regex. The four digit guards share one `rlike '[0-9]'` flag column,
-# evaluated once per row. Measured over 40,000 turns (4 vCPUs, local[2]):
-# the flag costs 0.15 s; a `translate` digit count inside each guard cost
-# 0.33 s per guard, which made the guarded chain (1.28 s) no cheaper than
-# the unguarded one (1.27 s).
+# regex. The four digit guards share one flag, evaluated once per row. On
+# its own (the `pii_scrub` query) the flag is an `rlike '[0-9]'` column.
+# Measured over 40,000 turns (4 vCPUs, local[2]): the flag costs 0.15 s; a
+# `translate` digit count inside each guard cost 0.33 s per guard, which
+# made the guarded chain (1.28 s) no cheaper than the unguarded one
+# (1.27 s). The keep/drop pipeline passes its langid struct's
+# `has_digit`/`has_at` fields instead (`analyze.rule_pass`).
 _HAS_DIGIT = "_scrub_has_digit"
-_GUARDS = {
-    "email": "instr({orig}, '@') > 0",
-    "cc": _HAS_DIGIT, "ssn": _HAS_DIGIT, "phone": _HAS_DIGIT, "ip": _HAS_DIGIT,
-}
 
 
-def scrub_spark_columns(df, text_col: str, out_col: str):
+def scrub_spark_columns(df, text_col: str, out_col: str,
+                        has_digit: str | None = None,
+                        has_at: str | None = None):
     """Hot-path Spark scrub: one withColumn per pattern (separate Projects,
     so CollapseProject keeps each expensive regex evaluated once) with each
-    regex gated behind a cheap containment test -- clean rows never enter
-    the regex engine. Output identical to scrub_sql/the DuckDB oracle."""
+    regex gated behind a cheap guard -- clean rows never enter the regex
+    engine. `has_digit` and `has_at` are boolean SQL guards over the
+    original text, sound supersets of "contains a digit" / "contains an
+    '@'"; left out, they are `rlike '[0-9]'` and `instr(text, '@') > 0`.
+    Output identical to scrub_sql/the DuckDB oracle."""
     from pyspark.sql import functions as F
 
-    df = df.withColumns({out_col: F.col(text_col),
-                         _HAS_DIGIT: F.expr(f"{text_col} rlike '[0-9]'")})
+    df = df.withColumn(out_col, F.col(text_col))
+    if has_digit is None:
+        df = df.withColumn(_HAS_DIGIT, F.expr(f"{text_col} rlike '[0-9]'"))
+        has_digit = _HAS_DIGIT
+    if has_at is None:
+        has_at = f"instr({text_col}, '@') > 0"
     for name, pat, tok in PII_PATTERNS:
         p = _sql_lit(pat, "spark")
-        guard = _GUARDS[name].format(orig=text_col)
+        guard = has_at if name == "email" else has_digit
         df = df.withColumn(out_col, F.expr(
             f"CASE WHEN {guard} THEN regexp_replace({out_col}, '{p}', '{tok}') "
             f"ELSE {out_col} END"))
@@ -134,7 +144,11 @@ def _sql_lit(pat: str, dialect: str) -> str:
     return p
 
 
-def toxicity_sql(col: str, dialect: str) -> str:
+def toxicity_sql(col: str, dialect: str, guard: str | None = None) -> str:
+    """The toxicity test as a SQL expression for `dialect`. The Spark
+    form evaluates the regex only where the boolean SQL `guard` holds,
+    which must be a sound superset of a match; left out, it is the
+    substring tests below."""
     p = _sql_lit(TOXICITY_PATTERN, dialect)
     if dialect == "duckdb":
         return f"regexp_matches({col}, '{p}')"
@@ -142,9 +156,12 @@ def toxicity_sql(col: str, dialect: str) -> str:
     # same trick as the scrub guards -- any boundary-anchored (?i) match
     # implies the lowercased word appears as a plain substring, so the
     # guard is a sound superset and clean rows never enter the regex
-    # engine (measured 0.42 s -> 0.28 s over 320K turns). NULL input
-    # stays NULL, exactly as the bare rlike behaves.
-    guard = " OR ".join(f"instr(lower({col}), '{w}') > 0"
-                        for w in TOXICITY_WORDS)
+    # engine (measured 0.42 s -> 0.28 s over 320K turns). The keep/drop
+    # pipeline passes its langid struct's `tox_cand` field instead
+    # (`analyze.rule_pass`). NULL input stays NULL, exactly as the bare
+    # rlike behaves.
+    if guard is None:
+        guard = " OR ".join(f"instr(lower({col}), '{w}') > 0"
+                            for w in TOXICITY_WORDS)
     return (f"(CASE WHEN {col} IS NULL THEN CAST(NULL AS BOOLEAN) "
             f"WHEN {guard} THEN ({col} rlike '{p}') ELSE false END)")

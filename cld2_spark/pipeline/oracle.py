@@ -2,9 +2,12 @@
 
 Produces the per-turn keep/drop + scrubbed-text labels the Spark pipeline is
 graded against (FIXTURES.md §4, north-rule F1 >= 0.99). Runs the SAME
-kernels as the Spark UDFs (analyze_batch) plus pandas equivalents of the
-SQL-only stages, so any Spark/oracle divergence is a real pipeline bug, not
-an oracle artifact.
+langid kernel as the Spark UDFs (analyze_batch) plus pandas forms of the
+rules, the toxicity check and the scrub. The pipeline takes its rule flags
+and guards from the kernel's codepoint pass (`analyze.rule_pass`); the
+oracle ignores those and keeps its own forms, so the parity tests check
+that pass against independent code, and any Spark/oracle divergence is a
+real pipeline bug, not an oracle artifact.
 """
 
 from __future__ import annotations
@@ -35,7 +38,9 @@ def oracle_labels(transcripts: pd.DataFrame, text_col: str = "text") -> pd.DataF
     too_short = Q.too_short_pandas(texts).to_numpy()
     low_quality = Q.low_quality_pandas(texts).to_numpy()
     toxic = S.toxicity_mask_pandas(texts).to_numpy()
-    scrubbed = S.scrub_pandas(texts)
+    # a NULL text is "" to the rules (too_short) and stays NULL when
+    # scrubbed, as in run_pipeline
+    scrubbed = S.scrub_pandas(df[text_col])
 
     # the pipeline's `lang1` column is the per-turn answer = the kernel's
     # summary_lang (same mapping as functions/langid.pipeline_udf)

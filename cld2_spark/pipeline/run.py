@@ -15,11 +15,15 @@ North-rule requirements implemented here:
     commit group writes it filtered on its buckets. The filter is
     deterministic, so Catalyst pushes it beneath the langid UDF to the
     scan and a group scores only its own rows.
-  - SQL overlaps Python within a group: each group's write runs with the
-    Arrow batch bytes capped at ARROW_BATCH_BYTES, so a scan task sends
-    the UDF several batches and the JVM computes the rules and scrub of
-    batch k+1 while Python scores batch k. The cap is set around the
-    group writes only, and the caller's value is put back afterwards.
+  - Arrow batches capped within a group: each group's write runs with
+    the Arrow batch bytes capped at ARROW_BATCH_BYTES, so a scan task
+    sends the UDF several batches instead of one. The cap was chosen
+    when the rule and scrub SQL ran beneath the UDF, to overlap it with
+    the kernel; the rules are now computed in the kernel, and with
+    nothing beneath the UDF the cap no longer measurably shortens the
+    job (BENCH/BASELINE.md). It still lowers the worker's peak RSS by
+    about 4 MB. The cap is set around the group writes only, and the
+    caller's value is put back afterwards.
 
 The job changes no session setting it does not restore: the parquet sink
 sets dynamic partition overwrite on its own writer.
@@ -50,8 +54,9 @@ BUCKET_COL = "bucket"
 # Arrow bytes per batch while a commit group is written (see the module
 # docstring). A group leaves each scan task a few thousand turns, one batch
 # under the session's 10,000-row bound; the value won a 128 KiB-4 MiB sweep
-# on the resumable benchmark (BENCH/BASELINE.md). Not session-wide: the
-# other queries' pandas UDFs keep the session's batching.
+# on the resumable benchmark (BENCH/BASELINE.md) while the rule SQL ran
+# beneath the UDF. Not session-wide: the other queries' pandas UDFs keep
+# the session's batching.
 ARROW_BATCH_BYTES = 512 * 1024
 
 

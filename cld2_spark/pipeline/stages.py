@@ -9,18 +9,19 @@ Physical shape (designed for 10^12 turns / 1000 executors):
   - every stage is row-local: NO shuffle anywhere in the chain; the only
     exchanges in a production run are the source scan and the sink write.
   - the single Python stage is one Arrow-batched iterator UDF (`pipeline_udf`)
-    computing langid + cross-check + perplexity in one normalization pass;
-    everything else is whole-stage-codegen SQL (rules, scrub, decision).
-  - the rules, toxicity check and scrub read only the text, so
-    `run_pipeline` attaches them BEFORE the UDF: Catalyst plans them in
-    the subtree beneath ArrowEvalPython, i.e. in the Arrow writer that
-    feeds the Python worker. The task thread writes (and so computes the
-    rules of) batch k+1 whenever the worker's socket takes input, while
-    the worker is still scoring batch k, so the JVM's string work overlaps
-    the kernel; in the Project above the UDF they would run only once each
-    batch had come back. The decision reads the UDF's
-    struct and stays above; so does the last scrub step, which
-    CollapseProject folds into the Project holding the UDF call.
+    computing langid + cross-check + perplexity + the heuristic rules in
+    one normalization pass; the rest is whole-stage-codegen SQL above it.
+  - nothing is attached beneath the UDF: the kernel's codepoint pass
+    (`analyze.rule_pass`) returns `too_short` and `low_quality` and three
+    guards, `has_digit`, `has_at` and `tox_cand`, in the langid struct.
+    Spark 4.1's runner feeds the Python worker from the task thread and
+    pipelines only a socket buffer's worth of input, so JVM string work
+    beneath the UDF ran serially ahead of the kernel instead of
+    overlapping it.
+  - above the UDF, each PII scrub step runs only where its guard is set
+    and the toxicity regex only where `tox_cand` is; the guards are sound
+    supersets of the SQL tests they replace, so clean rows never enter a
+    regex. The decision reads the flags from the struct.
   - `partition_for_scale` gives the explicit conv_id hash partitioning +
     salt for mega-conversations demanded by the north rule; per-turn stages
     don't need it (row-local), so it's applied only when downstream
@@ -47,7 +48,9 @@ def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach `too_short` and `low_quality`. The five features are helper
+    """Attach `too_short` and `low_quality` in Spark SQL (the standalone
+    `quality_flags` query; the pipeline reads them from the langid
+    struct). The five features are helper
     columns of their own Project: the rules read n_chars and n_words more
     than once, so CollapseProject keeps each feature evaluated once per
     row instead of inlining it into every rule that reads it."""
@@ -60,20 +63,25 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def with_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
-    df = df.withColumn("toxic", F.expr(S.toxicity_sql(text_col, "spark")))
-    return S.scrub_spark_columns(df, text_col, "scrubbed_text")
+    """Attach `toxic` and `scrubbed_text` above `with_langid`: each regex
+    runs only where its guard in the langid struct is set."""
+    df = df.withColumn("toxic", F.expr(
+        S.toxicity_sql(text_col, "spark", guard=f"{LD}.tox_cand")))
+    return S.scrub_spark_columns(df, text_col, "scrubbed_text",
+                                 has_digit=f"{LD}.has_digit",
+                                 has_at=f"{LD}.has_at")
 
 
 def with_decision(df: DataFrame) -> DataFrame:
     cols: dict[str, Column] = {
-        "too_short": F.col("too_short"),
+        "too_short": F.col(f"{LD}.too_short"),
         "lang1": F.col(f"{LD}.lang1"),
         "is_reliable": F.col(f"{LD}.is_reliable"),
         "rel1": F.col(f"{LD}.rel1"),
         "ft_lang": F.col(f"{LD}.ft_lang"),
         "ppl": F.col(f"{LD}.ppl"),
         "tri_grams": F.col(f"{LD}.tri_grams"),
-        "low_quality": F.col("low_quality"),
+        "low_quality": F.col(f"{LD}.low_quality"),
         "toxic": F.col("toxic"),
         "be_ok": F.col(f"{LD}.be_ok"),
     }
@@ -86,7 +94,7 @@ def run_pipeline(df: DataFrame, text_col: str = "text",
     """Full per-turn chain; returns the flat verdict table (FIXTURES.md §4).
     `passthrough` names extra input columns to carry into the output (e.g.
     the event-time column for a downstream stateful streaming operator)."""
-    out = with_decision(with_langid(with_scrub(with_quality(df, text_col), text_col), text_col))
+    out = with_decision(with_scrub(with_langid(df, text_col), text_col))
     return out.select(
         "conv_id", "turn_idx",
         F.col(f"{LD}.lang1").alias("lang1"),

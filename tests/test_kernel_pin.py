@@ -1,7 +1,7 @@
 """Pin of the langid kernels' outputs: the sha256 of every output key of
 detect_batch (default, hints, best_effort, score_as_quads, return_spans)
-and of analyze_batch over one seeded input set, in the style of
-test_jpeg_encoder_pin.py. No JVM.
+and of analyze_batch (its rule-pass flags and guards included) over one
+seeded input set, in the style of test_jpeg_encoder_pin.py. No JVM.
 
 The inputs are seeded whole texts and short fragments from the training
 corpus and the CLD2 unit-test pairs, plus rows that mix Latin, Greek,
@@ -259,6 +259,10 @@ OUTPUT_SHA256: dict[str, dict[str, str]] = {
             "5d953d2921603e5cc4440152a418e07735a1cf49cf158f3cb578d7dec114bbd9",
         "ft_lang":
             "55d271c375ce53e8319e56592cfd05a3e910ae53dcafceda3b2327856f679058",
+        "has_at":
+            "9437b37a09e00d4debb974f1680853a3ca3db452e7547f834471ab11ea39461d",
+        "has_digit":
+            "038cbac8808dfc404cd3c7d6c8ac4ab41e2d3f5f39284a45d63f09228dcfb2e7",
         "is_reliable":
             "d1c888893968c3b6eafe03ce943db9b9d7e11631f216f4e94c9e6d2f90869b6e",
         "lang1":
@@ -267,6 +271,8 @@ OUTPUT_SHA256: dict[str, dict[str, str]] = {
             "31a7cc97ceb54fadef33594bbe6304efc17ae6d9020e3501c0d6141f29d31b1f",
         "lang3":
             "eb9479e494dcea7a03ac33074a4c2dd1836b32a74ee7b0c74cc6dd7420ee32e8",
+        "low_quality":
+            "9437b37a09e00d4debb974f1680853a3ca3db452e7547f834471ab11ea39461d",
         "ns1":
             "20e07e5bf0a812a177787d2880ad8356f490f0664a9951418d3d10562b0ca8a2",
         "ns2":
@@ -291,6 +297,10 @@ OUTPUT_SHA256: dict[str, dict[str, str]] = {
             "475fd2e4e3c213bed7174cdcfb4fa5270494052fe6369d4ac8e627486950e364",
         "tri_grams":
             "6936fb01d2ed07afa7371bdf08f844a84010aa0d3cc0ad4b066037bcbef06653",
+        "too_short":
+            "c13296ddfee5a1684d7c6fe195be35a20bbb7e5735fdceaeb4e51701851e91e1",
+        "tox_cand":
+            "9437b37a09e00d4debb974f1680853a3ca3db452e7547f834471ab11ea39461d",
     },
 }
 

@@ -9,13 +9,12 @@ from cld2_spark.sources.transcripts import spark_transcripts
 
 
 def test_pipeline_is_shuffle_free_single_python_stage(spark, tmp_path):
-    """One Python stage, no shuffle, and the quality rules and toxicity
-    check computed in the subtree that feeds ArrowEvalPython, so their
-    work for batch k+1 overlaps the kernel on batch k; above the node they
-    would run only after each batch returns. Only the last guarded scrub
-    step may sit above it: it reads the previous step's output once, so
-    CollapseProject folds it into the Project holding the UDF call. The
-    Spark rule SQL counts with the regex engine, never `translate`."""
+    """One Python stage, no shuffle, and no string work beneath
+    ArrowEvalPython: the langid kernel's codepoint pass returns the rule
+    flags and the scrub/toxicity guards, so the subtree that feeds the
+    Python worker only scans. Above the UDF the decision reads
+    `too_short` and `low_quality` from the struct, and every scrub step
+    and the toxicity regex sit behind a guard field of it."""
     import re
 
     # realistic source: parquet scan, not an in-memory relation
@@ -26,11 +25,23 @@ def test_pipeline_is_shuffle_free_single_python_stage(spark, tmp_path):
     stats = plan_stats(df)
     assert stats["exchanges"] == 0, plan
     assert stats["python_stages"] == 1, plan
-    py_in = re.search(r"^\(\d+\) ArrowEvalPython\s*\nInput \[\d+\]: \[(.*)\]$",
-                      plan, re.M)
-    assert py_in, plan
-    beneath = {c.split("#")[0] for c in py_in.group(1).split(", ")}
-    assert {"too_short", "low_quality", "toxic", "scrubbed_text"} <= beneath, plan
+    py = re.search(r"^\((\d+)\) ArrowEvalPython\s*\nInput \[\d+\]: \[(.*)\]$",
+                   plan, re.M)
+    assert py, plan
+    beneath = {c.split("#")[0] for c in py.group(2).split(", ")}
+    assert beneath == {"conv_id", "turn_idx", "text"}, plan
+    # operator ids number the chain bottom-up: the ones below the UDF's
+    # are the subtree that feeds it
+    details = re.split(r"^(?=\(\d+\) )", plan.split("\n\n\n", 1)[1], flags=re.M)
+    below = "".join(d for d in details
+                    if (m := re.match(r"\((\d+)\)", d))
+                    and int(m.group(1)) < int(py.group(1)))
+    assert "Scan parquet" in below, plan
+    for op in ("regexp", "rlike", "split(", "instr(", "lower("):
+        assert op not in below.lower(), (op, below)
+    above = plan.split(py.group(0), 1)[1]
+    for field in ("too_short", "low_quality", "has_digit", "has_at", "tox_cand"):
+        assert re.search(rf"(?:pythonUDF\d+|ld)#\d+\.{field}\b", above), (field, plan)
     assert "translate(" not in plan
 
 

@@ -59,3 +59,56 @@ def test_package_runs_from_py_files_zip(tmp_path):
     # accidental fallback to the checkout's package
     assert out.returncode == 0, out.stderr[-2000:]
     assert "ZIP_DEPLOY_OK" in out.stdout
+
+
+RELOAD_PROBE = r"""
+import importlib, os, sys, zipfile, zipimport
+repo, zip_path = sys.argv[1:]
+sys.path.insert(0, repo)
+from cld2_spark.functions.langid import _stat_checked_zip_reload
+
+def write(names):
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for name in names:
+            zf.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+write(["m1"])
+sys.path.insert(0, zip_path)
+import m1
+reads = []
+orig = zipimport._read_directory
+zipimport._read_directory = lambda path: reads.append(path) or orig(path)
+_stat_checked_zip_reload()
+_stat_checked_zip_reload()  # a second install is a no-op
+importlib.invalidate_caches()
+assert reads == [zip_path], reads  # the first call re-reads, as before
+importlib.invalidate_caches()
+importlib.invalidate_caches()
+assert reads == [zip_path], reads  # unchanged archive: not re-read
+st = os.stat(zip_path)
+write(["m1", "m2"])
+os.utime(zip_path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+importlib.invalidate_caches()
+assert reads == [zip_path] * 2, reads
+import m2
+assert m2.NAME == "m2"
+print("ZIP_RELOAD_OK")
+"""
+
+
+def test_zip_reload_is_stat_checked(tmp_path):
+    """Every PySpark task calls importlib.invalidate_caches(); the langid
+    UDF's stat-checked reload re-reads a zip archive's directory only
+    when the archive changed, so a module added to a rewritten zip still
+    imports and an unchanged one is not re-read."""
+    import pytest
+    if sys.version_info >= (3, 13):
+        pytest.skip("3.13's zipimporter drops the cached directory instead")
+    probe = tmp_path / "probe.py"
+    probe.write_text(RELOAD_PROBE)
+    out = subprocess.run([sys.executable, str(probe), str(REPO),
+                          str(tmp_path / "mods.zip")],
+                         capture_output=True, text=True, timeout=300,
+                         cwd=str(tmp_path))
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "ZIP_RELOAD_OK" in out.stdout

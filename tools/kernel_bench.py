@@ -21,6 +21,10 @@ worker's memory; each input runs in a fresh child process so its reading
 does not sit under the other input's peak. A last, untimed pass counts
 the rows detect pass 1 sent to the retry, the rows the bestEffort rescue
 took, and the rows over 2 KB the squeeze trigger tested and squeezed.
+It also times `analyze.rule_pass` alone over the normalized slices (best
+of three, the quality flags and the scrub/toxicity guards) and prints
+the share of rows that set each guard: those rows still pay the regexes
+above the UDF.
 
 With `--against DIR` it compares this tree's kernel with the one in the
 checkout DIR: per input, n_runs pairs of child processes score the same
@@ -154,6 +158,28 @@ def row_counts(texts: list[str], model) -> dict[str, int]:
     return counts
 
 
+GUARDS = ("has_digit", "has_at", "tox_cand")
+
+
+def rule_pass_stats(texts: list[str]) -> tuple[float, dict[str, float]]:
+    """Best of three timed rule passes over the slices, normalized
+    beforehand, and the share of rows that set each guard."""
+    from cld2_spark.kernels import text as T
+    from cld2_spark.kernels.analyze import kernel_slices, rule_pass
+
+    parts = [(T.normalize_batch(texts[s]),
+              np.fromiter(map(len, texts[s]), dtype=np.int64))
+             for s in kernel_slices(texts)]
+    best = float("inf")
+    for _ in range(3):
+        t0 = time.monotonic()
+        outs = [rule_pass(nb, n_chars) for nb, n_chars in parts]
+        best = min(best, time.monotonic() - t0)
+    share = {g: sum(int(o[g].sum()) for o in outs) / len(texts)
+             for g in GUARDS}
+    return best, share
+
+
 def pass_seconds(texts: list[str], model) -> float:
     """One timed pass over `texts`, one kernel call per slice, as the
     langid UDF makes them."""
@@ -188,6 +214,10 @@ def run_input(name: str, n_runs: int, seed: int) -> None:
           f"({best:.2f}s / {len(texts)} rows); retried rows {c['retry']}, "
           f"rescued rows {c['rescue']}, squeeze-tested rows {c['tested']} "
           f"(squeezed {c['squeezed']})")
+    rule_s, share = rule_pass_stats(texts)
+    print(f"[{name}] rule pass: {rule_s * 1e3:.1f} ms ({rule_s / best:.1%} "
+          f"of the best run); rows with "
+          + ", ".join(f"{g} {share[g]:.2%}" for g in GUARDS))
 
 
 CHILD_RUNS = 3
