@@ -129,11 +129,3 @@ def features_pandas(s):
         "n_digits": t.str.count(_DIGIT),
         "n_alpha": t.str.count(_ALPHA),
     }
-
-
-def low_quality_pandas(s):
-    return flags(features_pandas(s))["low_quality"]
-
-
-def too_short_pandas(s):
-    return flags(features_pandas(s))["too_short"]

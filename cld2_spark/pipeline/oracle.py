@@ -35,8 +35,8 @@ def oracle_labels(transcripts: pd.DataFrame, text_col: str = "text") -> pd.DataF
     parts = ([analyze_batch(rows[s]) for s in kernel_slices(rows)]
              or [analyze_batch([])])
     res = {k: np.concatenate([p[k] for p in parts]) for k in parts[0]}
-    too_short = Q.too_short_pandas(texts).to_numpy()
-    low_quality = Q.low_quality_pandas(texts).to_numpy()
+    rules = {k: v.to_numpy()
+             for k, v in Q.flags(Q.features_pandas(texts)).items()}
     toxic = S.toxicity_mask_pandas(texts).to_numpy()
     # a NULL text is "" to the rules (too_short) and stays NULL when
     # scrubbed, as in run_pipeline
@@ -46,10 +46,9 @@ def oracle_labels(transcripts: pd.DataFrame, text_col: str = "text") -> pd.DataF
     # summary_lang (same mapping as functions/langid.pipeline_udf)
     lang = res["summary_lang"]
     keep, reason = decision_pandas(
-        too_short=too_short, lang1=lang, is_reliable=res["is_reliable"],
-        rel1=res["rel1"], ft_lang=res["ft_lang"], ppl=res["ppl"],
-        tri_grams=res["tri_grams"], low_quality=low_quality, toxic=toxic,
-        be_ok=res["be_ok"])
+        lang1=lang, is_reliable=res["is_reliable"], rel1=res["rel1"],
+        ft_lang=res["ft_lang"], ppl=res["ppl"], tri_grams=res["tri_grams"],
+        toxic=toxic, be_ok=res["be_ok"], **rules)
 
     return pd.DataFrame({
         "conv_id": df["conv_id"],

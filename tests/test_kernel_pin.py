@@ -1,7 +1,9 @@
 """Pin of the langid kernels' outputs: the sha256 of every output key of
 detect_batch (default, hints, best_effort, score_as_quads, return_spans)
 and of analyze_batch (its rule-pass flags and guards included) over one
-seeded input set, in the style of test_jpeg_encoder_pin.py. No JVM.
+seeded input set, in the style of test_jpeg_encoder_pin.py, and of the
+rule pass (`analyze.features` and `analyze.rule_pass`) over a second set
+that sets every flag and guard. No JVM.
 
 The inputs are seeded whole texts and short fragments from the training
 corpus and the CLD2 unit-test pairs, plus rows that mix Latin, Greek,
@@ -67,6 +69,32 @@ def pin_texts() -> list[str]:
     return texts + MIXED
 
 
+# rows the langid inputs above lack: '@', lexicon words, digits, every
+# whitespace kind, and each way to be too short or low quality
+RULE_PIECES = [*" \t\n\x0b\f\r aZ09@!-~\u00e9\u212a\U0001F600\u3000",
+               "frakking", "GoRRam", "belgium++", "frell", "dren", "SMEG",
+               "head", " jo@x.com ", "123-45-6789", "4111 1111"]
+RULE_EDGES = ["", " ", "\t x \t", "!!!! ab", "12345 ab", "a" * 60 + " b",
+              "x" * (100_000 + 1),
+              "word " * 33_000 + "mail jo@x.com 123-45-6789 frakking"]
+
+
+def rule_texts() -> list[str]:
+    rng = np.random.default_rng(20261021)
+    return ["".join(rng.choice(RULE_PIECES, size=int(rng.integers(0, 40))))
+            for _ in range(600)] + RULE_EDGES
+
+
+def rule_outputs() -> dict[str, np.ndarray]:
+    from cld2_spark.kernels import text as T
+    from cld2_spark.kernels.analyze import features, rule_pass
+
+    texts = rule_texts()
+    nb = T.normalize_batch(texts)
+    n_chars = np.fromiter(map(len, texts), count=len(texts), dtype=np.int64)
+    return {**features(nb, n_chars), **rule_pass(nb, n_chars)}
+
+
 def _digest(a) -> str:
     a = np.asarray(a)
     h = hashlib.sha256(f"{a.dtype.kind}{a.dtype.itemsize}{a.shape}".encode())
@@ -78,6 +106,8 @@ def _digest(a) -> str:
 
 
 def output_digests(variant: str) -> dict[str, str]:
+    if variant == "rules":
+        return {k: _digest(v) for k, v in sorted(rule_outputs().items())}
     texts, model = pin_texts(), default_model()
     if variant == "analyze":
         out = analyze_batch(texts, model)
@@ -302,9 +332,41 @@ OUTPUT_SHA256: dict[str, dict[str, str]] = {
         "tox_cand":
             "9437b37a09e00d4debb974f1680853a3ca3db452e7547f834471ab11ea39461d",
     },
+    "rules": {
+        "has_at":
+            "cb2d3c68556edee8841fea02e0b2da697ab7dd56df2a295f53fcd5c9d3cf5c1f",
+        "has_digit":
+            "54529b6cd6bd1255659284adc025701c6d695d34ef43bad2c05acd80ad99c062",
+        "low_quality":
+            "3e6b54e5791d56342cb7d87a24b56ecf97081966eeb88cecd4dd53d02e552aac",
+        "n_alpha":
+            "e4f8616f2e895afa1235d70d5281941354de3f05e36755c837f37c010bde0c06",
+        "n_at":
+            "45ca6ceed873fa6a59ab4d3a4f79adb06f70d0f0695a93e8bf91af7b74844690",
+        "n_chars":
+            "6d0f6125318ff78cf879470d021d246aa03f44160ad7a4c5f96532691319efbb",
+        "n_digits":
+            "b741b768d2eb61564b7406ad7499aad62301a47810ef5c10d537a7327d2ebcee",
+        "n_symbols":
+            "0dc106dc5fbf2918e03378b7b0180006649b92546719cb4550ddda30224aabf8",
+        "n_words":
+            "bde70c61819c585a4134de92a5ba0ea5950d14efed92df3be467e4a745751b7c",
+        "too_short":
+            "e9b12d90a0ebefa713d38051fbf01fd5a5c13a5e046766e3abe5dce4ab9cdcf1",
+        "tox_cand":
+            "029a96aff262434ecd5d24e782bf9c2650781cb3acd492e71aac94c1ee8d2814",
+    },
 }
 
 
-@pytest.mark.parametrize("variant", [*DETECT_VARIANTS, "analyze"])
+@pytest.mark.parametrize("variant", [*DETECT_VARIANTS, "analyze", "rules"])
 def test_kernel_outputs_pinned(variant):
     assert output_digests(variant) == OUTPUT_SHA256[variant]
+
+
+def test_rule_inputs_set_every_flag_and_guard():
+    """The rule pin sees a change to any flag or guard: each is set on
+    some rows of its input set and clear on others."""
+    out = rule_outputs()
+    for k in ("too_short", "low_quality", "has_digit", "has_at", "tox_cand"):
+        assert 0 < out[k].sum() < len(out[k]), k

@@ -207,9 +207,8 @@ def test_spark_rule_forms_match_both_oracles_on_edge_strings(spark):
     assert got["low_quality"].tolist()[-1] and len(EDGE_TEXTS[-1]) == Q.MAX_CHARS + 1
 
     s = pd.Series(EDGE_TEXTS, dtype=object)
-    want = pd.DataFrame({**Q.features_pandas(s),
-                         "too_short": Q.too_short_pandas(s),
-                         "low_quality": Q.low_quality_pandas(s),
+    f = Q.features_pandas(s)
+    want = pd.DataFrame({**f, **Q.flags(f),
                          "toxic": S.toxicity_mask_pandas(s),
                          "scrubbed_text": S.scrub_pandas(s)})
     # NULL text: Spark and DuckDB propagate NULL; the pandas rule forms
@@ -281,9 +280,8 @@ def test_pipeline_rule_path_matches_both_oracles_on_edge_strings(spark):
     flags = ["too_short", "low_quality", "toxic", "scrubbed_text"]
 
     s = pd.Series(texts, dtype=object)
-    want = pd.DataFrame({**Q.features_pandas(s),
-                         "too_short": Q.too_short_pandas(s),
-                         "low_quality": Q.low_quality_pandas(s),
+    f = Q.features_pandas(s)
+    want = pd.DataFrame({**f, **Q.flags(f),
                          "toxic": S.toxicity_mask_pandas(s),
                          "scrubbed_text": S.scrub_pandas(s)})
     # NULL text is "" to the rules: too_short, NULL toxic, NULL scrubbed
@@ -376,11 +374,12 @@ def test_kernel_rule_pass_matches_pandas_forms():
     n_chars = np.array([len(t) for t in texts])
     nb = T.normalize_batch(texts)
     f = A.features(nb, n_chars)
-    for k, v in Q.features_pandas(s).items():
+    want = Q.features_pandas(s)
+    for k, v in want.items():
         np.testing.assert_array_equal(f[k], v.to_numpy(), err_msg=k)
     r = A.rule_pass(nb, n_chars)
-    np.testing.assert_array_equal(r["too_short"], Q.too_short_pandas(s).to_numpy())
-    np.testing.assert_array_equal(r["low_quality"], Q.low_quality_pandas(s).to_numpy())
+    for k, v in Q.flags(want).items():
+        np.testing.assert_array_equal(r[k], v.to_numpy(), err_msg=k)
     np.testing.assert_array_equal(r["has_digit"], s.str.contains("[0-9]").to_numpy())
     np.testing.assert_array_equal(r["has_at"], s.str.contains("@", regex=False).to_numpy())
     ascii_lower = s.map(lambda t: "".join(c.lower() if c < "\x80" else c for c in t))
