@@ -71,8 +71,7 @@ from cld2_spark.operators.multimodal import (
     encode_png_pixels, encode_wav_fixture, encode_wav_pcm_fixture,
     extract_features, feature_pixels, frame_sample, image_thumbnails,
     video_frame_features, wav_sample_features)
-from cld2_spark.operators.ngram_lm import (_TOKS_DUCK, _TOKS_SPARK,
-                                           ccnet_buckets,
+from cld2_spark.operators.ngram_lm import (ccnet_buckets,
                                            ccnet_buckets_oracle_sql,
                                            lm_score, lm_score_oracle_sql,
                                            pmi_collocations, pmi_oracle_sql)
@@ -93,8 +92,8 @@ from cld2_spark.operators.textstats import (
     tfidf_search_oracle_sql, winnow_fingerprints, with_split)
 from cld2_spark.operators.tokenizer import (
     encode_corpus, encode_corpus_unigram, encode_corpus_wordpiece, merges_df,
-    train_bpe, train_unigram, train_wordpiece, unigram_vocab_df,
-    wordpiece_vocab_df)
+    tokens_sql, train_bpe, train_unigram, train_wordpiece, unigram_vocab_df,
+    wordpiece_vocab_df, ws_class_sql)
 from cld2_spark.pipeline.conversation import conversation_features
 from cld2_spark.pipeline.stages import run_pipeline, with_quality
 from cld2_spark.session import ensure_parallelism
@@ -398,10 +397,10 @@ def _q_dedup_groups(spark, sf_dir):
 
 
 def _q_token_stats(spark, sf_dir):
+    split = f"split(trim(text), {ws_class_sql('spark')})"
     return spark.sql(
-        "SELECT doc_id, "
-        "size(split(trim(text), '\\\\s+')) AS n_tokens, "
-        "size(array_distinct(split(trim(text), '\\\\s+'))) AS n_distinct_tokens, "
+        f"SELECT doc_id, size({split}) AS n_tokens, "
+        f"size(array_distinct({split})) AS n_distinct_tokens, "
         "md5(lower(trim(text))) AS fingerprint "
         "FROM documents WHERE length(trim(text)) > 0")
 
@@ -850,7 +849,7 @@ def _q_top_ngrams(spark, sf_dir):
     (each doc counts a gram once -- the dedup-relevant notion). Exact
     two-level aggregate with map-side partials; ties broken by gram text
     so the result is deterministic."""
-    tk = "split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' ')"
+    tk = tokens_sql("text", "spark", drop_empty=False)
     grams = (f"transform(sequence(1, size({tk}) - 1), "
              f"i -> concat_ws(' ', slice({tk}, i, 2)))")
     docs = spark.table("documents").where(F.expr(f"size({tk}) >= 2"))
@@ -939,7 +938,7 @@ def _q_curation_pipeline(spark, sf_dir):
     d2 = decontaminate(d1, bench, n=8)
     kept = quality_rank_filter(d2, pct=0.25).select("doc_id")
     d3 = d2.join(kept, "doc_id")  # quality floor as a semi join
-    tok = "size(split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' '))"
+    tok = f"size({tokens_sql('text', 'spark', drop_empty=False)})"
     return (with_split(d3)
             .groupBy("source", "split")
             .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -983,9 +982,9 @@ def _q_doc_chunks(spark, sf_dir):
     all before a sink); chunk content travels as md5 so the oracle
     verifies the exact window text. Short docs yield one full-doc chunk."""
     w, s = 64, 48
+    tk = tokens_sql("text", "spark", drop_empty=False)
     return spark.sql(
-        f"WITH t AS (SELECT doc_id, split(trim(regexp_replace(lower(text),"
-        f" '\\\\s+', ' ')), ' ') AS tk FROM documents), "
+        f"WITH t AS (SELECT doc_id, {tk} AS tk FROM documents), "
         f"c AS (SELECT doc_id, size(tk) AS n_tok, "
         f"  posexplode(transform(sequence(0, "
         f"    greatest(CAST(ceil((size(tk) - {w}) / {s}.0) AS INT), 0)), "
@@ -994,7 +993,7 @@ def _q_doc_chunks(spark, sf_dir):
         f"SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx, "
         f"CAST(chunk_idx * {s} + 1 AS BIGINT) AS tok_start, "
         f"CAST(size(toks) AS BIGINT) AS n_tok, "
-        f"md5(concat_ws(' ', toks)) AS chunk_hash FROM c")
+        f"md5(array_join(toks, ' ')) AS chunk_hash FROM c")
 
 
 def _q_compression_ratio(spark, sf_dir):
@@ -1180,7 +1179,7 @@ def _q_dedup_keep_best(spark, sf_dir):
                               min_jaccard_pct=MIN_JACC_PCT,
                               bucket_cap=BUCKET_CAP)
     groups = connected_components(pairs)
-    tk = "split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' ')"
+    tk = tokens_sql("text", "spark", drop_empty=False)
     scored = docs.select(
         "doc_id",
         F.expr(f"(size(array_distinct({tk})) * 1000000L) DIV size({tk})")
@@ -1630,8 +1629,8 @@ def _q_video_meta(spark, sf_dir):
 
 
 def _q_conversation_features(spark, sf_dir):
-    """Grouped-map pandas UDF (applyInPandas): per-conversation ordered
-    stats; oracle = equivalent window SQL in DuckDB."""
+    """Per-conversation ordered stats: a LAG window plus groupBy, all
+    JVM-side; oracle = the same window SQL in DuckDB."""
     return conversation_features(spark.table("transcripts"))
 
 
@@ -1820,7 +1819,7 @@ def _context_trim_sql(dialect: str, budget: int = 40) -> str:
     bucketing — a co-located sort per conversation, no extra shuffle at
     10^12 turns. The reverse cumulative token sum is an explicit
     ROWS-frame running total; kept = cum_tail <= budget."""
-    toks = (_TOKS_SPARK if dialect == "spark" else _TOKS_DUCK).format(c="text")
+    toks = tokens_sql("text", dialect, drop_empty=True)
     ln = "size" if dialect == "spark" else "len"
     return (
         f"SELECT conv_id, turn_idx, n_tokens, cum_tail, "
@@ -2012,8 +2011,7 @@ def _role_share_sql(dialect: str) -> str:
     conversations; a tool-spam conversation shows up as tool_ppm ~10^6).
     One groupBy on the native conv_id key; the per-role conditional
     sums are map-side combinable."""
-    toks = (_TOKS_SPARK if dialect == "spark" else _TOKS_DUCK).format(
-        c="text")
+    toks = tokens_sql("text", dialect, drop_empty=True)
     ln = "size" if dialect == "spark" else "len"
     n = f"CAST({ln}({toks}) AS BIGINT)"
     share = ("CAST(CASE WHEN total = 0 THEN 0 ELSE "
@@ -2040,8 +2038,7 @@ def _dataset_card_sql(dialect: str) -> str:
     """One-row corpus summary (the dataset-card metrics block): doc and
     source counts, total tokens, mean doc length in exact milli-tokens.
     Single map-side-combinable global aggregate."""
-    toks = (_TOKS_SPARK if dialect == "spark" else _TOKS_DUCK).format(
-        c="text")
+    toks = tokens_sql("text", dialect, drop_empty=True)
     ln = "size" if dialect == "spark" else "len"
     d = "DIV" if dialect == "spark" else "//"
     return f"""
@@ -2642,7 +2639,7 @@ def oracle_sql() -> dict[str, str]:
     return {
         "scrub_pii": (
             f"{ctes} SELECT conv_id, turn_idx, "
-            f"{scrub_sql('text', 'duckdb')} AS scrubbed_text FROM transcripts"),
+            f"{scrub_sql('text')} AS scrubbed_text FROM transcripts"),
         "quality_flags": (
             f"{ctes} SELECT conv_id, turn_idx, "
             f"{too_short_sql('text', 'duckdb')} AS too_short, "

@@ -79,17 +79,13 @@ def toxicity_mask_pandas(s):
     return s.fillna("").str.contains(re.compile(TOXICITY_PATTERN, re.ASCII))
 
 
-def scrub_sql(col: str, dialect: str) -> str:
-    """Render the scrub chain as a SQL expression for `dialect`
-    ('spark' or 'duckdb'). Both engines replace all occurrences (DuckDB
-    needs the 'g' flag)."""
+def scrub_sql(col: str) -> str:
+    """Render the scrub chain as a DuckDB SQL expression (the oracle form;
+    Spark runs `scrub_spark_columns`)."""
     expr = col
     for _, pat, tok in PII_PATTERNS:
-        p = _sql_lit(pat, dialect)
-        if dialect == "duckdb":
-            expr = f"regexp_replace({expr}, '{p}', '{tok}', 'g')"
-        else:
-            expr = f"regexp_replace({expr}, '{p}', '{tok}')"
+        expr = (f"regexp_replace({expr}, '{_sql_lit(pat, 'duckdb')}', "
+                f"'{tok}', 'g')")
     return expr
 
 

@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (IntegerType, LongType, StructField,
                                StructType)
 
+from cld2_spark.operators.tokenizer import tokens_sql
+
 DIM = 64                    # hash buckets (bias feature sits at id=DIM)
 SCALE = 1 << 20             # fixed-point scale S
 Z_CAP = 1 << 40             # margin clamp (keeps |z|*S within int64)
@@ -65,25 +67,16 @@ ITERS = 12
 # slow's), so it exercises real sign-discriminative learning; the hash-
 # collision noise in those buckets is the honest fastText-trick error
 # floor. Label is computed per dialect (lambda syntax differs).
-# explicit ASCII whitespace class, per dialect: Java regex \\s includes
-# \\x0B while RE2's does not, so neither engine may use \\s. The SPARK
-# spelling doubles the backslashes because Spark SQL string literals
-# UNESCAPE \\t/\\n/\\r (and mangle \\f to a literal 'f' -- the bug this
-# fixes); DuckDB literals pass the pattern to RE2 verbatim.
-_WS_SPARK = "[ \\\\t\\\\n\\\\r\\\\f]+"
-_WS_DUCK = "[ \\t\\n\\r\\f]+"
-_CNT_SPARK = ("size(filter(split(trim(regexp_replace(lower(text), "
-              f"'{_WS_SPARK}'" + ", ' ')), ' '), t -> t = '{w}'))")
-_CNT_DUCK = ("len(list_filter(string_split(trim(regexp_replace(lower(text),"
-             f" '{_WS_DUCK}'" + ", ' ', 'g')), ' '), t -> t = '{w}'))")
-DEFAULT_LABEL = (f"CASE WHEN {_CNT_SPARK.format(w='fast')} > "
-                 f"{_CNT_SPARK.format(w='slow')} THEN 1 ELSE 0 END")
-DEFAULT_LABEL_DUCK = (f"CASE WHEN {_CNT_DUCK.format(w='fast')} > "
-                      f"{_CNT_DUCK.format(w='slow')} THEN 1 ELSE 0 END")
+def _label_sql(dialect: str) -> str:
+    toks = tokens_sql("text", dialect, drop_empty=False)
+    size, filt = ("size", "filter") if dialect == "spark" else (
+        "len", "list_filter")
+    n = [f"{size}({filt}({toks}, t -> t = '{w}'))" for w in ("fast", "slow")]
+    return f"CASE WHEN {n[0]} > {n[1]} THEN 1 ELSE 0 END"
 
-# portable tokenizer — identical semantics in Spark SQL and DuckDB
-_TOKS_SPARK = ("filter(split(trim(regexp_replace(lower({c}), "
-               f"'{_WS_SPARK}'" + ", ' ')), ' '), t -> t <> '')")
+
+DEFAULT_LABEL = _label_sql("spark")
+DEFAULT_LABEL_DUCK = _label_sql("duckdb")
 
 
 def _feat_ids_spark(toks_expr: str, dim: int) -> str:
@@ -101,7 +94,7 @@ def featurize(df: DataFrame, dim: int = DIM, text_col: str = "text",
     (O(tokens^2) per row, corpus-scan only, zero shuffle), plus the bias
     feature (f=dim, x=1) appended last.
     """
-    toks = _TOKS_SPARK.format(c=text_col)
+    toks = tokens_sql(text_col, "spark", drop_empty=True)
     fids = _feat_ids_spark(toks, dim)
     base = df.where(F.col(text_col).isNotNull()).select(
         id_col,
@@ -213,8 +206,7 @@ def oracle_ctes(dim: int = DIM, iters: int = ITERS,
     s, h, zc = SCALE, SCALE // 2, Z_CAP
     parts = [
         f"cf_docs AS MATERIALIZED (SELECT {id_col}, CAST({label_sql} AS INT) AS y, "
-        f"list_filter(string_split(trim(regexp_replace(lower({text_col}), "
-        f"'{_WS_DUCK}', ' ', 'g')), ' '), t -> t <> '') AS toks "
+        f"{tokens_sql(text_col, 'duckdb', drop_empty=True)} AS toks "
         f"FROM {docs_table} WHERE {text_col} IS NOT NULL)",
         f"cf_tok AS MATERIALIZED (SELECT {id_col}, y, unnest(toks) AS tok FROM cf_docs)",
         f"cf_x AS MATERIALIZED (SELECT {id_col}, y, CAST(('0x' || substr(md5(tok), 1, 8))"

@@ -31,11 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-# explicit ASCII whitespace class, NOT '\\s+': Java \s matches U+000B,
-# the DuckDB oracles' RE2 class does not (ADVICE r6; see classifier._WS_SPARK
-# for the escaping rules)
-_TOK = ("split(trim(regexp_replace(lower({c}), "
-        "'[ \\\\t\\\\n\\\\r\\\\f]+', ' ')), ' ')")
+from cld2_spark.operators.tokenizer import tokens_sql
 
 
 def sample_hash(id_col: str, salt: str, dialect: str = "spark") -> str:
@@ -72,7 +68,7 @@ def _gram_hashes(df: DataFrame, text_col: str, id_col: str,
     a truncated hash would birthday-collide and silently flag clean docs;
     md5 keeps the oracle portable, and production can swap in
     xxhash64(gram) pairs if the 32-byte shuffle key matters."""
-    tk = _TOK.format(c=text_col)
+    tk = tokens_sql(text_col, "spark", drop_empty=False)
     grams = (f"transform(sequence(1, size({tk}) - {n - 1}), "
              f"i -> concat_ws(' ', slice({tk}, i, {n})))")
     return (df.where(F.expr(f"size({tk}) >= {n}"))
@@ -172,7 +168,7 @@ def pack_sequences(df: DataFrame, budget: int,
     import numpy as np
     import pandas as pd
 
-    tk = _TOK.format(c=text_col)
+    tk = tokens_sql(text_col, "spark", drop_empty=False)
     base = df.select(
         F.col(id_col),
         (F.col(id_col) % n_blocks).cast("int").alias("block"),
@@ -215,10 +211,10 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
       top_2gram_char_frac— chars covered by the most frequent word
                            2-gram / total chars
     `line_sep` is a regex AS EMBEDDED in the SQL string literal (one
-    backslash level is consumed by the SQL parser, like _TOK's '\\\\s+'):
+    backslash level is consumed by the SQL parser):
     the default splits sentence-ish on '.'; pass '\\\\n' for
     newline-delimited corpora."""
-    tk = _TOK.format(c=text_col)
+    tk = tokens_sql(text_col, "spark", drop_empty=False)
     lines = (f"filter(transform(split({text_col}, '{line_sep}'), "
              f"x -> trim(x)), x -> length(x) > 0)")
     ln = (df.select(id_col, F.explode(F.expr(lines)).alias("line"))
@@ -265,7 +261,7 @@ def mixture_sample(df: DataFrame, weights: dict[str, float],
     decision is the same deterministic salted-hash coin as
     stratified_sample — the corpus side never shuffles.
     """
-    tk = _TOK.format(c=text_col)
+    tk = tokens_sql(text_col, "spark", drop_empty=False)
     toks = df.select(F.col(source_col),
                      F.expr(f"size({tk})").cast("bigint").alias("n_tok"),
                      F.col(id_col), F.col(text_col))
@@ -302,7 +298,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 5,
     tf/df join shuffles on term — both sides are already (term, counts)
     aggregates, orders of magnitude smaller than the corpus.
     """
-    tk = _TOK.format(c=text_col)
+    tk = tokens_sql(text_col, "spark", drop_empty=False)
     tok = (df.select(id_col, group_col,
                      F.explode(F.expr(tk)).alias("term"))
            .where(F.length("term") >= 3))
@@ -403,7 +399,7 @@ def gopher_quality(df: DataFrame, text_col: str = "text",
 
     Mean word length is compared integer-exactly (sum_len vs bound *
     n_words) so the verdict cannot flip on a float division ulp."""
-    tk = _TOK.format(c=text_col)
+    tk = tokens_sql(text_col, "spark", drop_empty=False)
     stop = "array('the', 'be', 'to', 'of', 'and', 'that', 'have', 'with')"
     base = df.select(
         F.col(id_col),
@@ -546,7 +542,7 @@ def kanon_grams(df: DataFrame, n: int = 3, k_anon: int = 20,
     input rows are already (doc, gram)-unique. Shuffle volume is the
     per-doc distinct-gram set, and the released table is tiny by
     construction (Zipf head)."""
-    toks = _TOK.format(c=text_col)
+    toks = tokens_sql(text_col, "spark", drop_empty=False)
     grams = (f"array_distinct(CASE WHEN size({toks}) >= {n} THEN "
              f"transform(sequence(1, size({toks}) - {n} + 1), "
              f"i -> array_join(slice({toks}, i, {n}), ' ')) "
@@ -596,7 +592,7 @@ def rep_ngram_battery(df: DataFrame, ns: tuple = (2, 3, 4, 5, 6, 7, 8, 9, 10),
     (doc, n). Token volume is sum_n (len-n+1) rows per doc — the
     published battery's inherent cost; both shuffles key on the doc id
     so AQE coalesces them with the corpus partitioning."""
-    tk = _TOK.format(c=text_col)
+    tk = tokens_sql(text_col, "spark", drop_empty=False)
     # tokenize ONCE into a materialized column: inlining the regex split
     # into every per-n branch would re-run it 2*|ns| times per row (the
     # difference measured 37.5 s -> ~3 s on the sf0.1 bench)
@@ -632,9 +628,7 @@ def rep_ngram_battery_oracle_sql(table: str = "documents",
                                  id_col: str = "doc_id") -> str:
     """LIVE DuckDB replica: same tokenization, same count*len char mass,
     same (c, len, gram) arg-max tie-break, same integer ppm."""
-    toks = ("list_filter(string_split(trim(regexp_replace(lower("
-            f"{text_col}), '[ \\t\\n\\r\\f]+', ' ', 'g')), ' '), "
-            "t -> t <> '')")
+    toks = tokens_sql(text_col, "duckdb", drop_empty=True)
     nlist = "[" + ", ".join(str(n) for n in ns) + "]"
     return f"""
 WITH rb_tok AS MATERIALIZED (

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import LongType
 
+from cld2_spark.operators.tokenizer import tokens_sql
+
 N_BANDS = 4
 SHINGLE_K = 5
 ROWS_PER_BAND = 3  # r: per-band collision prob = jaccard**r
@@ -61,9 +63,8 @@ SIMHASH_BANDS = [(0, 0xFFFF), (16, 0xFFFF), (32, 0x7FFF), (47, 0x7FFF)]
 
 _SHINGLES = ("transform(sequence(1, greatest(length({col}) - {k1}, 1)), "
              "i -> substring({col}, i, {k}))")
-# whitespace-normalized lowercase tokens (word n-grams and token windows),
-# in Spark SQL and in the DuckDB replays
-_TOKENS = "split(trim(regexp_replace(lower({col}), '\\\\s+', ' ')), ' ')"
+# the DuckDB replays' tokens, spelled as in the pinned oracle texts: RE2's
+# `\s` is exactly tokenizer.WS_CLASS, so they split as tokens_sql does
 _TOKENS_DUCK = ("string_split(trim(regexp_replace(lower({col}), '\\s+', ' ', "
                 "'g')), ' ')")
 
@@ -138,8 +139,9 @@ def _shingle_hash_set_expr(col: str, k: int = SHINGLE_K) -> str:
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the lowest-id row per exact text hash. One shuffle."""
-    h = F.md5(F.col(text_col))
+    """Keep the lowest-id row per exact text hash. One shuffle. NULL texts
+    form one group, keyed '' (never an md5), so the join keeps its row."""
+    h = F.coalesce(F.md5(F.col(text_col)), F.lit(""))
     w = df.withColumn("__h", h)
     keep = w.groupBy("__h").agg(F.min(id_col).alias(id_col))
     return w.join(keep, [id_col, "__h"], "inner").drop("__h")
@@ -313,7 +315,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     ships int64 hash arrays, same as minhash_lsh_pairs."""
     # n-grams joined with single spaces, each hashed with the shared
     # 60-bit md5 hash
-    tk = _TOKENS.format(col=text_col)
+    tk = tokens_sql(text_col, "spark", drop_empty=False)
     grams = (f"transform(sequence(1, size({tk}) - {n - 1}), "
              f"i -> concat_ws(' ', slice({tk}, i, {n})))")
     hs = f"transform({grams}, g -> {shingle_hash_expr('g', 'spark')})"
@@ -529,7 +531,7 @@ def _span_windows(df: DataFrame, text_col: str, id_col: str,
                   w: int) -> DataFrame:
     """(id, start, span_hash): one row per w-token window (1-based first
     token, md5 over the space-joined window) of each doc of >= w tokens."""
-    tk = _TOKENS.format(col=text_col)
+    tk = tokens_sql(text_col, "spark", drop_empty=False)
     wins = (f"transform(sequence(1, size({tk}) - {w - 1}), "
             f"i -> named_struct('i', i, 'h', "
             f"md5(array_join(slice({tk}, i, {w}), ' '))))")

@@ -48,7 +48,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from cld2_spark.operators.ngram_lm import _TOKS_DUCK, _TOKS_SPARK
+from cld2_spark.operators.tokenizer import tokens_sql
 
 N_BUCKETS = 4096
 
@@ -64,7 +64,7 @@ def _grams_expr(toks: str) -> str:
 def _doc_buckets(df: DataFrame, text_col: str, id_col: str,
                  n_buckets: int) -> DataFrame:
     """(id, b): one row per gram OCCURRENCE, hashed into [0, B)."""
-    toks = _TOKS_SPARK.format(c=text_col)
+    toks = tokens_sql(text_col, "spark", drop_empty=True)
     return (df.where(F.col(text_col).isNotNull())
             .select(id_col, F.explode(F.expr(_grams_expr(toks)))
                     .alias("__g"))
@@ -112,7 +112,7 @@ def dsir_oracle_sql(target_pred: str, k: int = 50, table: str = "documents",
                     n_buckets: int = N_BUCKETS) -> str:
     """LIVE DuckDB replica (target slice = `table` WHERE target_pred)."""
     b = n_buckets
-    toks = _TOKS_DUCK.format(c=text_col)
+    toks = tokens_sql(text_col, "duckdb", drop_empty=True)
     grams = (f"CASE WHEN len(toks) >= 2 THEN list_concat(toks, "
              f"list_transform(generate_series(1, len(toks) - 1), "
              f"i -> toks[i] || ' ' || toks[i + 1])) ELSE toks END")

@@ -57,8 +57,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from cld2_spark.operators.dedup import _persist_tracked, release_dedup_caches
-from cld2_spark.operators.ngram_lm import (_TOKS_DUCK, _TOKS_SPARK,
-                                           _bigrams_expr)
+from cld2_spark.operators.ngram_lm import _bigrams_expr
+from cld2_spark.operators.tokenizer import tokens_sql
 
 DAMP_NUM, DAMP_DEN = 850, 1000      # d = 0.85 as a rational
 BASE_PPM = 150_000                  # (1 - d) * 10^6
@@ -70,7 +70,7 @@ ITERS = 5                           # fixed PageRank rounds
 
 def _filtered_tokens(df: DataFrame, text_col: str, id_col: str,
                      min_len: int) -> DataFrame:
-    toks = _TOKS_SPARK.format(c=text_col)
+    toks = tokens_sql(text_col, "spark", drop_empty=True)
     return (df.where(F.col(text_col).isNotNull())
               .select(id_col,
                       F.expr(f"filter({toks}, t -> length(t) >= {min_len})")
@@ -140,7 +140,7 @@ def textrank_oracle_sql(table: str = "documents", text_col: str = "text",
                         iters: int = ITERS) -> str:
     """LIVE DuckDB replica: same graph build, same integer PageRank,
     iterations unrolled as MATERIALIZED CTEs."""
-    toks = _TOKS_DUCK.format(c=text_col)
+    toks = tokens_sql(text_col, "duckdb", drop_empty=True)
     ctes = [
         f"""tr_tok AS MATERIALIZED (
   SELECT {id_col},

@@ -38,20 +38,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from cld2_spark.operators.tokenizer import tokens_sql
+
 ALPHA_PPM = 400_000          # stupid-backoff alpha = 0.4, in ppm
 MIN_COUNT = 1                # KenLM-style pruning threshold
-
-# explicit ASCII whitespace class, per dialect: Java regex \\s includes
-# \\x0B while RE2's does not, so neither engine may use \\s. The SPARK
-# spelling doubles the backslashes because Spark SQL string literals
-# UNESCAPE \\t/\\n/\\r (and mangle \\f to a literal 'f' -- the bug this
-# fixes); DuckDB literals pass the pattern to RE2 verbatim.
-_WS_SPARK = "[ \\\\t\\\\n\\\\r\\\\f]+"
-_WS_DUCK = "[ \\t\\n\\r\\f]+"
-_TOKS_SPARK = ("filter(split(trim(regexp_replace(lower({c}), "
-               f"'{_WS_SPARK}'" + ", ' ')), ' '), t -> t <> '')")
-_TOKS_DUCK = ("list_filter(string_split(trim(regexp_replace(lower({c}), "
-              f"'{_WS_DUCK}'" + ", ' ', 'g')), ' '), t -> t <> '')")
 
 
 def _bigrams_expr(toks_col: str) -> str:
@@ -61,7 +51,7 @@ def _bigrams_expr(toks_col: str) -> str:
 
 
 def _tokenized(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    toks = _TOKS_SPARK.format(c=text_col)
+    toks = tokens_sql(text_col, "spark", drop_empty=True)
     return (df.where(F.col(text_col).isNotNull())
               .select(id_col, F.expr(toks).alias("__toks")))
 
@@ -199,7 +189,7 @@ def lm_score_oracle_sql(table: str = "documents", text_col: str = "text",
                         min_count: int = MIN_COUNT) -> str:
     """LIVE DuckDB replica: trains the same LM and scores with the same
     integer algebra."""
-    toks = _TOKS_DUCK.format(c=text_col)
+    toks = tokens_sql(text_col, "duckdb", drop_empty=True)
     return f"""
 WITH lm_tok AS MATERIALIZED (
   SELECT {id_col}, {toks} AS toks FROM {table}
@@ -271,7 +261,7 @@ def pmi_oracle_sql(table: str = "documents", k: int = 50,
                    text_col: str = "text", id_col: str = "doc_id",
                    min_count: int = 5) -> str:
     """LIVE DuckDB replica: same counts, same integer PMI ratio."""
-    toks = _TOKS_DUCK.format(c=text_col)
+    toks = tokens_sql(text_col, "duckdb", drop_empty=True)
     return f"""
 WITH pm_tok AS MATERIALIZED (
   SELECT {id_col}, {toks} AS toks FROM {table}

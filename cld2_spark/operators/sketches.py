@@ -20,15 +20,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# whitespace tokenizer shared with the curation/dedup operators (parity
-# with every DuckDB oracle's string_split recipe)
-_TOKENS = "split(trim(regexp_replace(lower({c}), '\\\\s+', ' ')), ' ')"
+from cld2_spark.operators.tokenizer import tokens_sql
 
 
 def _token_stream(df: DataFrame, text_col: str) -> DataFrame:
-    tk = _TOKENS.format(c=text_col)
-    return (df.select(F.explode(F.expr(tk)).alias("token"))
-            .where(F.col("token") != ""))
+    tk = tokens_sql(text_col, "spark", drop_empty=True)
+    return df.select(F.explode(F.expr(tk)).alias("token"))
 
 
 def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -1,9 +1,8 @@
 """Text-analysis operators for training-data pipelines (SQL-first).
 
 Everything here is whole-stage-codegen SQL except heuristic language-ID,
-which reuses the langid kernels. Token counting uses a whitespace split plus
-a BPE-ish regex token count; fingerprinting is a normalized md5 (and the
-rolling SimHash lives in operators/dedup.py).
+which reuses the langid kernels. Tokens are `tokenizer.tokens_sql`'s
+whitespace tokens; the rolling SimHash lives in operators/dedup.py.
 """
 
 from __future__ import annotations
@@ -11,19 +10,7 @@ from __future__ import annotations
 import pandas as pd  # module-level: pandas_udf resolves string type hints
 from pyspark.sql import DataFrame, functions as F
 
-# BPE-ish word/number/punct tokens (portable across Java regex / RE2 / re)
-BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.trim(F.col(text_col))
-    ws_tokens = F.when(F.length(t) == 0, 0).otherwise(F.size(F.split(t, r"\s+")))
-    pat = BPE_TOKEN_PATTERN.replace("\\", "\\\\")
-    bpe_count = F.expr(f"size(regexp_extract_all(trim({text_col}), '{pat}', 0))")
-    return (df
-            .withColumn("n_ws_tokens", ws_tokens)
-            .withColumn("n_bpe_tokens", bpe_count)
-            .withColumn("fingerprint", F.md5(F.lower(t))))
+from cld2_spark.operators.tokenizer import tokens_sql
 
 
 def lang_distribution(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -78,10 +65,10 @@ def quality_rank_filter(df: DataFrame, pct: float = 0.25,
     """
     from pyspark.sql import Window
 
-    tk = ("split(trim(regexp_replace(lower({c}), '\\\\s+', ' ')), ' ')"
-          .format(c=text_col))
+    tk = tokens_sql(text_col, "spark", drop_empty=False)
     score = F.expr(f"size(array_distinct({tk})) / size({tk})")
-    w = Window.partitionBy(group_col).orderBy("score")
+    # NULL text scores NULL and ranks last, as in SQL's default order
+    w = Window.partitionBy(group_col).orderBy(F.asc_nulls_last("score"))
     return (df.select(id_col, group_col, score.alias("score"))
             .withColumn("pr", F.percent_rank().over(w))
             .where(F.col("pr") >= pct)
@@ -113,8 +100,7 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     fewer than w shingles produce one window covering all shingles (the
     standard short-document convention).
     """
-    tk = (f"split(trim(regexp_replace(lower({text_col}), "
-          f"'\\\\s+', ' ')), ' ')")
+    tk = tokens_sql(text_col, "spark", drop_empty=False)
     hs = (f"CASE WHEN size({tk}) >= {k} THEN "
           f"transform(sequence(1, size({tk}) - {k} + 1), i -> "
           f"cast(conv(substr(md5(concat_ws(' ', slice({tk}, i, {k}))), "
@@ -168,15 +154,6 @@ def compression_ratio(df: DataFrame, text_col: str = "text",
                                "ELSE (n_comp * 1000000L) DIV n_raw END")))
 
 
-# explicit ASCII whitespace class, NOT '\\s+': Java regex \s also matches
-# U+000B while the paired DuckDB oracles use RE2's [ \t\n\r\f]+, so a
-# document containing a vertical tab would tokenize differently between
-# engines (ADVICE r6; same rule as ngram_lm._WS_SPARK — the doubled
-# backslashes survive Spark SQL string-literal unescaping)
-_TS_TOK = ("split(trim(regexp_replace(lower({c}), "
-           "'[ \\\\t\\\\n\\\\r\\\\f]+', ' ')), ' ')")
-
-
 def blocklist_hits(df: DataFrame, blocked: list[str],
                    text_col: str = "text", id_col: str = "doc_id"
                    ) -> DataFrame:
@@ -191,7 +168,7 @@ def blocklist_hits(df: DataFrame, blocked: list[str],
     Matching is exact-token (post lowercase/whitespace-normalize), the
     published C4 form — substring matching would also hit Scunthorpe-
     style false positives."""
-    toks = _TS_TOK.format(c=text_col)
+    toks = tokens_sql(text_col, "spark", drop_empty=False)
     lit = "array(" + ", ".join(
         "'" + b.replace("'", "\\'") + "'" for b in sorted(blocked)) + ")"
     n = (f"CAST(size(filter({toks}, t -> array_contains({lit}, t))) "
@@ -205,9 +182,7 @@ def blocklist_oracle_sql(blocked: list[str], table: str = "documents",
                          text_col: str = "text",
                          id_col: str = "doc_id") -> str:
     """LIVE DuckDB replica of the token blocklist rule."""
-    toks = ("list_filter(string_split(trim(regexp_replace(lower("
-            f"{text_col}), '[ \\t\\n\\r\\f]+', ' ', 'g')), ' '), "
-            "t -> t <> '')")
+    toks = tokens_sql(text_col, "duckdb", drop_empty=True)
     lit = "[" + ", ".join(
         "'" + b.replace("'", "''") + "'" for b in sorted(blocked)) + "]"
     return (f"SELECT {id_col}, CAST(len(list_filter({toks}, "
@@ -229,10 +204,9 @@ def lexical_diversity(df: DataFrame, text_col: str = "text",
     Shape: one (doc, token) map-side-combinable count, one doc-keyed
     agg — the token_stats shuffle pattern. Docs with n < 2 emit
     repeat_ppm = 0 (no pair exists)."""
-    toks = _TS_TOK.format(c=text_col)
+    toks = tokens_sql(text_col, "spark", drop_empty=True)
     return (df.where(F.col(text_col).isNotNull())
             .select(id_col, F.explode(F.expr(toks)).alias("tok"))
-            .where(F.col("tok") != "")
             .groupBy(id_col, "tok")
             .agg(F.count(F.lit(1)).alias("c"))
             .groupBy(id_col)
@@ -250,9 +224,7 @@ def lexical_diversity_oracle_sql(table: str = "documents",
                                  text_col: str = "text",
                                  id_col: str = "doc_id") -> str:
     """LIVE DuckDB replica: same counts, same integer Simpson ppm."""
-    toks = ("list_filter(string_split(trim(regexp_replace(lower("
-            f"{text_col}), '[ \\t\\n\\r\\f]+', ' ', 'g')), ' '), "
-            "t -> t <> '')")
+    toks = tokens_sql(text_col, "duckdb", drop_empty=True)
     return f"""
 WITH ld_c AS (
   SELECT {id_col}, tok, CAST(COUNT(*) AS BIGINT) AS c
@@ -282,7 +254,7 @@ def tfidf_search(df: DataFrame, query_terms: list[str], k: int = 20,
     corpus-sized. df(t) is a |Q|-row aggregate broadcast back; the
     final top-k is TakeOrderedAndProject. Ties break to the smaller
     doc id."""
-    toks = _TS_TOK.format(c=text_col)
+    toks = tokens_sql(text_col, "spark", drop_empty=False)
     lit = "array(" + ", ".join(
         "'" + t.replace("'", "\\'") + "'" for t in sorted(set(query_terms))
     ) + ")"
@@ -314,9 +286,7 @@ def tfidf_search_oracle_sql(query_terms: list[str], k: int = 20,
                             id_col: str = "doc_id") -> str:
     """LIVE DuckDB replica: same hits, same integer idf ratio, same
     tie-break."""
-    toks = ("list_filter(string_split(trim(regexp_replace(lower("
-            f"{text_col}), '[ \\t\\n\\r\\f]+', ' ', 'g')), ' '), "
-            "t -> t <> '')")
+    toks = tokens_sql(text_col, "duckdb", drop_empty=True)
     lit = "[" + ", ".join(
         "'" + t.replace("'", "''") + "'" for t in sorted(set(query_terms))
     ) + "]"
@@ -440,8 +410,7 @@ def length_histogram(df: DataFrame, text_col: str = "text",
     string algebra, no floating log whose last ulp could flip a bucket
     boundary between engines. Bucket -1 collects empty documents.
     One combinable projection + a buckets-sized groupBy."""
-    toks = _TS_TOK.format(c=text_col)
-    n = f"size(filter({toks}, t -> t != ''))"
+    n = f"size({tokens_sql(text_col, 'spark', drop_empty=True)})"
     bucket = (f"CASE WHEN {n} <= 0 THEN -1 "
               f"ELSE length(bin({n})) - 1 END")
     return (df.where(F.col(text_col).isNotNull())
@@ -453,9 +422,7 @@ def length_histogram(df: DataFrame, text_col: str = "text",
 def length_histogram_oracle_sql(table: str = "documents",
                                 text_col: str = "text") -> str:
     """LIVE DuckDB replica: same tokenizer, same bin()-string log2."""
-    toks = ("list_filter(string_split(trim(regexp_replace(lower("
-            f"{text_col}), '[ \\t\\n\\r\\f]+', ' ', 'g')), ' '), "
-            "t -> t <> '')")
+    toks = tokens_sql(text_col, "duckdb", drop_empty=True)
     n = f"len({toks})"
     return (f"SELECT CAST(CASE WHEN {n} <= 0 THEN -1 "
             f"ELSE length(bin({n})) - 1 END AS INTEGER) AS log2_tokens, "

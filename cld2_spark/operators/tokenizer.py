@@ -36,9 +36,9 @@ independent single-node oracle in tools/freeze_expected.py):
   * encoding applies learned merges in rank order: repeatedly merge the
     LOWEST-rank pair present in the word until none applies.
 
-Words are split on the explicit ASCII whitespace class [ \\t\\n\\r\\f]
-(identical semantics in Java regex, RE2, Python re and DuckDB — Python's
-\\s is Unicode-aware and Java's is not, so neither is portable).
+Words are split on WS_CLASS, the one whitespace class of every tokenizer
+in the engine; `tokens_sql` renders the lowercase/collapse/trim/split
+token array over it for Spark SQL and for the DuckDB oracles.
 
 No analogue in the reference (CLD2 tokenizes for language scoring only);
 cited absence: SURVEY.md SS2.13.
@@ -51,8 +51,35 @@ from typing import Iterator, List, Sequence, Tuple
 import pandas as pd  # module-level: pandas_udf resolves string type hints
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# portable whitespace class — see module docstring
+# The whitespace class of every tokenizer, in every engine: explicit ASCII,
+# never `\s`. Java's `\s` also matches U+000B (vertical tab) while RE2's
+# does not, so a `\s` tokenizer splits "a\x0bb" in Spark and not in the
+# DuckDB oracles; Python's `\s` is Unicode-aware.
 WS_CLASS = "[ \\t\\n\\r\\f]+"
+
+
+def ws_class_sql(dialect: str) -> str:
+    """WS_CLASS as a quoted SQL string literal for `dialect` ('spark' or
+    'duckdb'). Spark SQL literals unescape backslashes (and turn `\\f`
+    into a plain `f`), so the Spark spelling doubles them; DuckDB hands
+    the literal to RE2 as written."""
+    p = WS_CLASS.replace("\\", "\\\\") if dialect == "spark" else WS_CLASS
+    return f"'{p}'"
+
+
+def tokens_sql(col: str, dialect: str, drop_empty: bool) -> str:
+    """SQL array of the lowercased whitespace tokens of `col`: runs of
+    WS_CLASS collapse to one space, the ends are trimmed, the rest splits
+    on ' '. Without `drop_empty` an empty or all-whitespace text yields
+    one empty token (`['']`); with it, empty tokens are filtered out.
+    The same rows give the same arrays in Spark SQL and DuckDB."""
+    ws = ws_class_sql(dialect)
+    if dialect == "spark":
+        toks = f"split(trim(regexp_replace(lower({col}), {ws}, ' ')), ' ')"
+        return f"filter({toks}, t -> t <> '')" if drop_empty else toks
+    toks = (f"string_split(trim(regexp_replace(lower({col}), {ws}, ' ', "
+            f"'g')), ' ')")
+    return f"list_filter({toks}, t -> t <> '')" if drop_empty else toks
 
 
 def merge_word(syms: List[str], a: str, b: str) -> List[str]:

@@ -223,18 +223,6 @@ def test_decode_image_meta_spark(spark):
     assert out[out.fmt.isna()].width.eq(-1).all()
 
 
-def test_token_stats(spark):
-    from cld2_spark.operators.textstats import with_token_stats
-    df = spark.createDataFrame(
-        [(0, "hello world, it's 42 degrees"), (1, ""), (2, "  one  ")],
-        "doc_id long, text string")
-    out = with_token_stats(df).toPandas().sort_values("doc_id")
-    assert out.n_ws_tokens.tolist() == [5, 0, 1]
-    # hello|world|,|it|'|s|42|degrees -> 8 BPE-ish tokens
-    assert out.n_bpe_tokens.tolist() == [8, 0, 1]
-    assert out.fingerprint.iloc[0] != out.fingerprint.iloc[2]
-
-
 def test_lang_distribution(spark):
     import json
     from pathlib import Path

@@ -225,7 +225,7 @@ def test_spark_rule_forms_match_both_oracles_on_edge_strings(spark):
         f"SELECT {sel}, {Q.too_short_sql('text', 'duckdb')} AS too_short, "
         f"{Q.low_quality_sql('text', 'duckdb')} AS low_quality, "
         f"{S.toxicity_sql('text', 'duckdb')} AS toxic, "
-        f"{S.scrub_sql('text', 'duckdb')} AS scrubbed_text "
+        f"{S.scrub_sql('text')} AS scrubbed_text "
         f"FROM tbl ORDER BY id").df()
     # known divergences of the DuckDB oracle (PARITY.md): RE2's \s lacks
     # \x0b, and RE2's (?i) folds the Kelvin sign to 'k'
@@ -304,7 +304,7 @@ def test_pipeline_rule_path_matches_both_oracles_on_edge_strings(spark):
         f"SELECT {sel}, {Q.too_short_sql('text', 'duckdb')} AS too_short, "
         f"{Q.low_quality_sql('text', 'duckdb')} AS low_quality, "
         f"{S.toxicity_sql('text', 'duckdb')} AS toxic, "
-        f"{S.scrub_sql('text', 'duckdb')} AS scrubbed_text "
+        f"{S.scrub_sql('text')} AS scrubbed_text "
         f"FROM tbl ORDER BY id").df()
     # DuckDB reads NULL as NULL throughout; the pipeline's flags read ""
     duck.loc[0, feats + ["too_short", "low_quality"]] = [0] * 5 + [True, False]

@@ -1,5 +1,6 @@
 """Skew handling: a mega-conversation must not pin one task."""
 
+import duckdb
 from pyspark.sql import functions as F
 
 from cld2_spark.pipeline.stages import partition_for_scale, run_pipeline
@@ -33,19 +34,28 @@ def test_conversation_features_mega_conversation(spark):
     """VERDICT r1 #7: conversation-level features must not pin one Python
     task on a mega-conversation. The production path is pure window SQL +
     groupBy (JVM-side, map-side partials, AQE-splittable); this asserts it
-    (a) matches the grouped-map variant and (b) contains no Python stage.
+    (a) matches the driver contract's DuckDB oracle for the same rule,
+    replayed over the same rows, and (b) contains no Python stage.
     """
-    from cld2_spark.pipeline.conversation import (
-        conversation_features, conversation_features_grouped_map)
+    import __spark_entry__ as E
+    from cld2_spark.pipeline.conversation import conversation_features
 
     df = spark_transcripts(spark, n_turns=200, mega_turns=3000)
     sql_out = (conversation_features(df).toPandas()
                .sort_values("conv_id").reset_index(drop=True))
-    gm_out = (conversation_features_grouped_map(df).toPandas()
-              .sort_values("conv_id").reset_index(drop=True))
+    # the oracle reads the `transcripts` CTE of the driver prelude: drop
+    # the prelude and point it at these rows instead
+    oracle, ctes = E.oracle_sql()["conversation_features"], E._duck_ctes()
+    assert oracle.startswith(ctes + ", ")
+    con = duckdb.connect()
+    con.register("transcripts", df.toPandas())
+    want = (con.execute("WITH " + oracle[len(ctes) + 2:]).df()
+            .sort_values("conv_id").reset_index(drop=True))
+    assert sql_out["conv_id"].tolist() == want["conv_id"].tolist()
     for col in ("n_turns", "n_user_turns", "total_chars"):
-        assert (sql_out[col].to_numpy() == gm_out[col].to_numpy()).all(), col
-    assert (abs(sql_out["mean_gap_s"] - gm_out["mean_gap_s"]) < 1e-6).all()
+        assert (sql_out[col].to_numpy() == want[col].to_numpy()).all(), col
+    for col in ("mean_gap_s", "max_gap_s"):
+        assert (abs(sql_out[col] - want[col]) < 1e-6).all(), col
     mega = sql_out[sql_out.conv_id == "mega"]
     assert int(mega.n_turns.iloc[0]) == 3000
     # the production plan is fully JVM-side: no Python/pandas stage
