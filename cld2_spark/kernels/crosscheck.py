@@ -54,7 +54,6 @@ def crosscheck_batch(stream: GramStream,
     if model is None:
         from .model import default_model
         model = default_model()
-    tri = model.tri
     n = stream.nb.n
     L = len(model.langs)
     arr, rid_s, buf = stream.letters
@@ -65,9 +64,9 @@ def crosscheck_batch(stream: GramStream,
 
     top = np.zeros(n, dtype=np.int64)
     top_score = np.zeros(n, dtype=np.int64)
-    if len(g_rid) and tri is not None:
+    if len(g_rid):
         h = quad_hash_v2(buf, bs, np.minimum(bl, 12))
-        found, langs3, qprobs3 = tri.probe(h)
+        found, langs3, qprobs3 = model.tri.probe(h)
         # doc-level score fold in cache-resident row cohorts (g_rid sorted)
         COHORT = 1024
         # uint8 views suffice: index arithmetic upcasts, bincount casts --

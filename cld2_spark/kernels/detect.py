@@ -141,7 +141,6 @@ def resolve_hints(model, hints: list) -> tuple[np.ndarray, np.ndarray]:
     n = len(hints)
     ids = np.full((n, MAX_LANG_PRIORS), -1, dtype=np.int64)
     ws = np.zeros((n, MAX_LANG_PRIORS), dtype=np.int16)
-    ht = model.hints
     for i, h in enumerate(hints):
         if not h:
             continue
@@ -160,13 +159,13 @@ def resolve_hints(model, hints: list) -> tuple[np.ndarray, np.ndarray]:
             if gid is not None:
                 merge(gid, LANGUAGE_HINT_WEIGHT)
         cl = h.get("content_language")
-        if cl and ht is not None:
+        if cl:
             for tag in str(cl).split(","):
-                for gid, w in ht.lookup_tag(tag):
+                for gid, w in model.hints.lookup_tag(tag):
                     merge(gid, w)
         tld = h.get("tld")
-        if tld and ht is not None:
-            for gid, w in ht.lookup_tld(str(tld)):
+        if tld:
+            for gid, w in model.hints.lookup_tld(str(tld)):
                 merge(gid, w)
         enc = h.get("encoding")
         if enc:
@@ -1004,7 +1003,6 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
         scr_s, orig_s = stream.scr_s, stream.orig_s
         w_rid, wh40, pair40, wpos = (stream.w_rid, stream.wh40,
                                      stream.pair40, stream.wpos)
-        use_backoff = best_effort and bool(model.quad_backoff)
         keep = repeat_filter(stream.h, stream.g_rid)
         if repeats:
             keep &= predicted_filter(stream.h, stream.g_rid)
@@ -1028,10 +1026,9 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
             # consulted only under bestEffort ("give best-effort answer")
             # -- measured: +4 held-out cases there, -1 on the default
             # path (documented deviation; PARITY.md).
-            bt = (model.quad_backoff or {}).get(ut.SCRIPTS[s][0]) \
-                if use_backoff else None
-            if bt is not None and not found.all():
+            if best_effort and not found.all():
                 miss = ~found
+                bt = model.quad_backoff[ut.SCRIPTS[s][0]]
                 _, bl3, bq3 = bt.probe(stream.backoff_hash(kidx[m][miss]))
                 langs3[miss] = bl3
                 qprobs3[miss] = np.minimum(bq3, BACKOFF_MAX_QPROB)
@@ -1040,7 +1037,7 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
             # internal/scoreonescriptspan.cc:856-975); word hits carry
             # no bytes (delta votes only)
             hits = [(g_rid[m], pos[m], langs3, qprobs3, gb[m], None)]
-            if model.ref_word_delta is not None and len(w_rid):
+            if len(w_rid):
                 wm = scr_s[wpos] == s
                 keep_w = repeat_filter(wh40, w_rid) & wm
                 if repeats:
@@ -1055,8 +1052,6 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
                           (wh40, model.ref_word_distinct, True),
                           (pair40, model.ref_word_distinct, True)]
                 for wh, rt, dis in probes:
-                    if rt is None:
-                        continue
                     sel = keep_w & (wh != 0)
                     if not sel.any():
                         continue
@@ -1090,8 +1085,7 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
     # merged into one chunk stream: unigrams via the flattened CjkUni DFA,
     # bigrams via bit-exact BiHashV2 over the UTF-8 bytes of the two chars
     # probed into kCjkDeltaBi (GetBiHits, internal/cldutil.cc:248-310).
-    if model.ref_cjk_uni is not None and \
-            np.isin(CJK_SCRIPTS, stream.present).any():
+    if np.isin(CJK_SCRIPTS, stream.present).any():
         mask = nb.letter & np.isin(nb.script, CJK_SCRIPTS)
         if mask.any():
             idx = np.flatnonzero(mask)
@@ -1100,7 +1094,7 @@ def _detect_pass(stream: GramStream, model: Cld2sModel, *, repeats: bool,
             found, langs3, qprobs3 = model.ref_cjk_uni.probe(cps)
             hits = [(g_rid, idx, langs3, qprobs3,
                      u8len[idx].astype(np.int32), None)]
-            if len(idx) > 1 and model.ref_cjk_bi is not None:
+            if len(idx) > 1:
                 adj = (idx[1:] == idx[:-1] + 1) & (g_rid[1:] == g_rid[:-1])
                 if adj.any():
                     from .hashes import bi_hash_v2
@@ -1231,46 +1225,44 @@ def _remove_unreliable(model, tote) -> None:
     # full (n, L) matrices (bandwidth: the full-matrix form measurably
     # hurt 4->16-core scaling)
     rows0, langs0 = np.nonzero(bytes_rl > 0)
-    alt = model.closest_alt
-    if alt is not None:
-        L = bytes_rl.shape[1]
-        alt64 = alt.astype(np.int64)
-        # bounded merge rounds: one merge per row per round avoids endpoint
-        # write conflicts (the reference scans slots sequentially)
-        for _ in range(4):
-            b0 = bytes_rl[rows0, langs0]
-            relpct0 = relw_rl[rows0, langs0] // np.maximum(b0, 1)
-            m0 = (b0 > 0) & (relpct0 < MIN_RELIABLE_KEEP_PERCENT)
-            rows, langs = rows0[m0], langs0[m0]
-            if len(rows) == 0:
-                break
-            a = alt64[langs]
-            ok = a >= 0
-            rows, langs, a = rows[ok], langs[ok], a[ok]
-            if len(rows) == 0:
-                break
-            ok = bytes_rl[rows, a] > 0
-            rows, langs, a = rows[ok], langs[ok], a[ok]
-            if len(rows) == 0:
-                break
-            # dedupe reversed pairs, then one merge per row this round
-            lo, hi = np.minimum(langs, a), np.maximum(langs, a)
-            key = rows.astype(np.int64) * (L * L) + lo * L + hi
-            _, fi = np.unique(key, return_index=True)
-            rows, langs, a = rows[fi], langs[fi], a[fi]
-            _, ri = np.unique(rows, return_index=True)
-            rows, langs, a = rows[ri], langs[ri], a[ri]
-            rel_l = relw_rl[rows, langs] // np.maximum(bytes_rl[rows, langs], 1)
-            rel_a = relw_rl[rows, a] // np.maximum(bytes_rl[rows, a], 1)
-            into_lang = (rel_a < rel_l) | ((rel_a == rel_l) & (langs < a))
-            to = np.where(into_lang, langs, a)
-            frm = np.where(into_lang, a, langs)
-            newpct = np.maximum(np.maximum(rel_l, rel_a),
-                                MIN_RELIABLE_KEEP_PERCENT)
-            new = tote[:, rows, langs] + tote[:, rows, a]
-            new[2] = newpct * new[0]
-            tote[:, rows, frm] = 0
-            tote[:, rows, to] = new
+    L = bytes_rl.shape[1]
+    alt64 = model.closest_alt.astype(np.int64)
+    # bounded merge rounds: one merge per row per round avoids endpoint
+    # write conflicts (the reference scans slots sequentially)
+    for _ in range(4):
+        b0 = bytes_rl[rows0, langs0]
+        relpct0 = relw_rl[rows0, langs0] // np.maximum(b0, 1)
+        m0 = (b0 > 0) & (relpct0 < MIN_RELIABLE_KEEP_PERCENT)
+        rows, langs = rows0[m0], langs0[m0]
+        if len(rows) == 0:
+            break
+        a = alt64[langs]
+        ok = a >= 0
+        rows, langs, a = rows[ok], langs[ok], a[ok]
+        if len(rows) == 0:
+            break
+        ok = bytes_rl[rows, a] > 0
+        rows, langs, a = rows[ok], langs[ok], a[ok]
+        if len(rows) == 0:
+            break
+        # dedupe reversed pairs, then one merge per row this round
+        lo, hi = np.minimum(langs, a), np.maximum(langs, a)
+        key = rows.astype(np.int64) * (L * L) + lo * L + hi
+        _, fi = np.unique(key, return_index=True)
+        rows, langs, a = rows[fi], langs[fi], a[fi]
+        _, ri = np.unique(rows, return_index=True)
+        rows, langs, a = rows[ri], langs[ri], a[ri]
+        rel_l = relw_rl[rows, langs] // np.maximum(bytes_rl[rows, langs], 1)
+        rel_a = relw_rl[rows, a] // np.maximum(bytes_rl[rows, a], 1)
+        into_lang = (rel_a < rel_l) | ((rel_a == rel_l) & (langs < a))
+        to = np.where(into_lang, langs, a)
+        frm = np.where(into_lang, a, langs)
+        newpct = np.maximum(np.maximum(rel_l, rel_a),
+                            MIN_RELIABLE_KEEP_PERCENT)
+        new = tote[:, rows, langs] + tote[:, rows, a]
+        new[2] = newpct * new[0]
+        tote[:, rows, frm] = 0
+        tote[:, rows, to] = new
     b0 = bytes_rl[rows0, langs0]
     relpct0 = relw_rl[rows0, langs0] // np.maximum(b0, 1)
     kill = (b0 > 0) & (relpct0 < MIN_RELIABLE_KEEP_PERCENT)

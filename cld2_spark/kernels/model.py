@@ -234,23 +234,23 @@ class Cld2sModel:
     langs: list[str]                       # global lang id -> ISO code
     group_tables: dict[str, GramTable]     # script name -> quadgram table
     expected_1kb: np.ndarray               # (n_langs,) int32 expected score per 1KB
-    version: str = "cld2s-r1"
     # J2 dual-lookup second tables (kQuad_obj2, GetQuadHits
-    # internal/cldutil.cc:355-362): probed on a main-table miss. The
-    # reference uses table 2 as overflow space for odd table sizes; ours is
-    # a prefix-trigram backoff trained on the same split (documented
-    # deviation -- see detect.py).
-    quad_backoff: dict[str, GramTable] | None = None
-    tri: GramTable | None = None           # trigram table (fastText cross-check)
+    # internal/cldutil.cc:355-362), one per group table: probed on a
+    # main-table miss. The reference uses table 2 as overflow space for odd
+    # table sizes; ours is a prefix-trigram backoff trained on the same
+    # split (documented deviation -- see detect.py).
+    quad_backoff: dict[str, GramTable]
+    tri: GramTable                         # trigram table (fastText cross-check)
     # Reference tables parsed from the checkout (tools/parse_reference_tables.py)
-    ref_word_delta: RefTable | None = None     # kDeltaOcta_obj (J5)
-    ref_word_distinct: RefTable | None = None  # kDistinctOcta_obj (J5/J6)
-    ref_cjk_bi: RefTable | None = None         # kCjkDeltaBi_obj (J4, BiHashV2)
-    ref_cjk_uni: UniTable | None = None        # CjkUni DFA + kCjkCompat (J3)
+    ref_word_delta: RefTable               # kDeltaOcta_obj (J5)
+    ref_word_distinct: RefTable            # kDistinctOcta_obj (J5/J6)
+    ref_cjk_bi: RefTable                   # kCjkDeltaBi_obj (J4, BiHashV2)
+    ref_cjk_uni: UniTable                  # CjkUni DFA + kCjkCompat (J3)
     # closest-alt merge targets for RemoveUnreliableLanguages (P7), global
     # lang ids, -1 = none (kClosestAltLanguage, compact_lang_det_impl.cc:252-427)
-    closest_alt: np.ndarray | None = None
-    hints: HintTables | None = None
+    closest_alt: np.ndarray
+    hints: HintTables
+    version: str = "cld2s-r1"
     lang_id: dict[str, int] = field(default_factory=dict)
 
     def __post_init__(self):
@@ -268,39 +268,33 @@ class Cld2sModel:
             arrs[f"g_{name}_keys"] = t.keys
             arrs[f"g_{name}_langs"] = t.langs
             arrs[f"g_{name}_qprobs"] = t.qprobs
-        if self.quad_backoff:
-            arrs["backoff_names"] = np.array(sorted(self.quad_backoff))
-            for name, t in self.quad_backoff.items():
-                arrs[f"b_{name}_keys"] = t.keys
-                arrs[f"b_{name}_langs"] = t.langs
-                arrs[f"b_{name}_qprobs"] = t.qprobs
-        if self.tri is not None:
-            arrs["tri_keys"] = self.tri.keys
-            arrs["tri_langs"] = self.tri.langs
-            arrs["tri_qprobs"] = self.tri.qprobs
+        arrs["backoff_names"] = np.array(sorted(self.quad_backoff))
+        for name, t in self.quad_backoff.items():
+            arrs[f"b_{name}_keys"] = t.keys
+            arrs[f"b_{name}_langs"] = t.langs
+            arrs[f"b_{name}_qprobs"] = t.qprobs
+        arrs["tri_keys"] = self.tri.keys
+        arrs["tri_langs"] = self.tri.langs
+        arrs["tri_qprobs"] = self.tri.qprobs
         for name, t in (("rwd", self.ref_word_delta),
                         ("rwx", self.ref_word_distinct),
                         ("rcb", self.ref_cjk_bi)):
-            if t is not None:
-                arrs[f"{name}_keys"] = t.keys
-                arrs[f"{name}_keymask"] = np.array([t.keymask], dtype=np.uint32)
-                arrs[f"{name}_langs_latn"] = t.langs_latn
-                arrs[f"{name}_langs_othr"] = t.langs_othr
-                arrs[f"{name}_qprobs"] = t.qprobs
-        if self.ref_cjk_uni is not None:
-            arrs["rcu_cps"] = self.ref_cjk_uni.cps
-            arrs["rcu_langs"] = self.ref_cjk_uni.langs
-            arrs["rcu_qprobs"] = self.ref_cjk_uni.qprobs
-        if self.closest_alt is not None:
-            arrs["closest_alt"] = self.closest_alt
-        if self.hints is not None:
-            for nm, d in (("htf", self.hints.tag_full),
-                          ("hts", self.hints.tag_short),
-                          ("htd", self.hints.tld)):
-                keys = sorted(d)
-                flat = [d[k] + [(-1, 0)] * (2 - len(d[k])) for k in keys]
-                arrs[f"{nm}_keys"] = np.array(keys)
-                arrs[f"{nm}_vals"] = np.array(flat, dtype=np.int16)  # (m,2,2)
+            arrs[f"{name}_keys"] = t.keys
+            arrs[f"{name}_keymask"] = np.array([t.keymask], dtype=np.uint32)
+            arrs[f"{name}_langs_latn"] = t.langs_latn
+            arrs[f"{name}_langs_othr"] = t.langs_othr
+            arrs[f"{name}_qprobs"] = t.qprobs
+        arrs["rcu_cps"] = self.ref_cjk_uni.cps
+        arrs["rcu_langs"] = self.ref_cjk_uni.langs
+        arrs["rcu_qprobs"] = self.ref_cjk_uni.qprobs
+        arrs["closest_alt"] = self.closest_alt
+        for nm, d in (("htf", self.hints.tag_full),
+                      ("hts", self.hints.tag_short),
+                      ("htd", self.hints.tld)):
+            keys = sorted(d)
+            flat = [d[k] + [(-1, 0)] * (2 - len(d[k])) for k in keys]
+            arrs[f"{nm}_keys"] = np.array(keys)
+            arrs[f"{nm}_vals"] = np.array(flat, dtype=np.int16)  # (m,2,2)
         np.savez_compressed(path, **arrs)
 
     @staticmethod
@@ -309,53 +303,38 @@ class Cld2sModel:
             z = np.load(io.BytesIO(path_or_bytes), allow_pickle=False)
         else:
             z = np.load(path_or_bytes, allow_pickle=False)
-        groups = {}
-        for name in z["group_names"].tolist():
-            groups[name] = GramTable(
-                keys=z[f"g_{name}_keys"], langs=z[f"g_{name}_langs"],
-                qprobs=z[f"g_{name}_qprobs"])
-        backoff = None
-        if "backoff_names" in z:
-            backoff = {}
-            for name in z["backoff_names"].tolist():
-                backoff[name] = GramTable(
-                    keys=z[f"b_{name}_keys"], langs=z[f"b_{name}_langs"],
-                    qprobs=z[f"b_{name}_qprobs"])
-        tri = None
-        if "tri_keys" in z:
-            tri = GramTable(keys=z["tri_keys"], langs=z["tri_langs"],
-                            qprobs=z["tri_qprobs"])
-        refs: dict[str, RefTable | None] = {}
-        for name in ("rwd", "rwx", "rcb"):
-            refs[name] = None
-            if f"{name}_keys" in z:
-                refs[name] = RefTable(
-                    keys=z[f"{name}_keys"],
-                    keymask=int(z[f"{name}_keymask"][0]),
-                    langs_latn=z[f"{name}_langs_latn"],
-                    langs_othr=z[f"{name}_langs_othr"],
-                    qprobs=z[f"{name}_qprobs"])
-        ref_uni = None
-        if "rcu_cps" in z:
-            ref_uni = UniTable(cps=z["rcu_cps"], langs=z["rcu_langs"],
-                               qprobs=z["rcu_qprobs"])
-        hints = None
-        if "htf_keys" in z:
-            def _dict(nm):
-                out = {}
-                for k, vals in zip(z[f"{nm}_keys"].tolist(), z[f"{nm}_vals"]):
-                    out[str(k)] = [(int(g), int(w)) for g, w in vals if g >= 0]
-                return out
-            hints = HintTables(tag_full=_dict("htf"), tag_short=_dict("hts"),
-                               tld=_dict("htd"))
+        def _grams(prefix, names):
+            return {name: GramTable(keys=z[f"{prefix}{name}_keys"],
+                                    langs=z[f"{prefix}{name}_langs"],
+                                    qprobs=z[f"{prefix}{name}_qprobs"])
+                    for name in z[names].tolist()}
+
+        def _ref(name):
+            return RefTable(keys=z[f"{name}_keys"],
+                            keymask=int(z[f"{name}_keymask"][0]),
+                            langs_latn=z[f"{name}_langs_latn"],
+                            langs_othr=z[f"{name}_langs_othr"],
+                            qprobs=z[f"{name}_qprobs"])
+
+        def _dict(nm):
+            out = {}
+            for k, vals in zip(z[f"{nm}_keys"].tolist(), z[f"{nm}_vals"]):
+                out[str(k)] = [(int(g), int(w)) for g, w in vals if g >= 0]
+            return out
+
         return Cld2sModel(
             langs=[str(x) for x in z["langs"].tolist()],
-            group_tables=groups, quad_backoff=backoff,
-            tri=tri,
-            ref_word_delta=refs["rwd"], ref_word_distinct=refs["rwx"],
-            ref_cjk_bi=refs["rcb"], ref_cjk_uni=ref_uni,
-            closest_alt=z["closest_alt"] if "closest_alt" in z else None,
-            hints=hints,
+            group_tables=_grams("g_", "group_names"),
+            quad_backoff=_grams("b_", "backoff_names"),
+            tri=GramTable(keys=z["tri_keys"], langs=z["tri_langs"],
+                          qprobs=z["tri_qprobs"]),
+            ref_word_delta=_ref("rwd"), ref_word_distinct=_ref("rwx"),
+            ref_cjk_bi=_ref("rcb"),
+            ref_cjk_uni=UniTable(cps=z["rcu_cps"], langs=z["rcu_langs"],
+                                 qprobs=z["rcu_qprobs"]),
+            closest_alt=z["closest_alt"],
+            hints=HintTables(tag_full=_dict("htf"), tag_short=_dict("hts"),
+                             tld=_dict("htd")),
             expected_1kb=z["expected_1kb"],
             version=str(z["version"][0]),
         )

@@ -21,15 +21,13 @@ REASONS = ["too_short", "langid_unreliable", "low_quality", "high_perplexity",
            "toxicity"]
 
 
-def langid_unreliable_mask(lang1, is_reliable, rel1, ft_lang, be_ok=None):
+def langid_unreliable_mask(lang1, is_reliable, rel1, ft_lang, be_ok):
     """Vectorized over numpy arrays / pandas Series.
 
     `be_ok` (short-turn bestEffort rescue, VERDICT r3 #2): such rows carry
     is_reliable=false honestly (the answer IS a guess) but are exempt from
     the ~is_reliable drop -- the guess passed bestEffort's own confidence
     gate. The cross-check disagreement veto still applies."""
-    if be_ok is None:
-        be_ok = np.zeros(len(np.asarray(lang1)), dtype=bool)
     disagree = (ft_lang != "un") & (ft_lang != lang1)
     return ((lang1 == "un") | (~is_reliable & ~be_ok)
             | (disagree & (rel1 < FT_DISAGREE_MAX_REL)))
@@ -40,7 +38,7 @@ def high_perplexity_mask(ppl, tri_grams):
 
 
 def decision_pandas(too_short, lang1, is_reliable, rel1, ft_lang, ppl,
-                    tri_grams, low_quality, toxic, be_ok=None):
+                    tri_grams, low_quality, toxic, be_ok):
     """Returns (keep: bool array, drop_reason: object array with None)."""
     lang1 = np.asarray(lang1, dtype=object)
     ft_lang = np.asarray(ft_lang, dtype=object)
@@ -49,8 +47,7 @@ def decision_pandas(too_short, lang1, is_reliable, rel1, ft_lang, ppl,
         ("langid_unreliable", np.asarray(
             langid_unreliable_mask(lang1, np.asarray(is_reliable, dtype=bool),
                                    np.asarray(rel1), ft_lang,
-                                   be_ok=None if be_ok is None
-                                   else np.asarray(be_ok, dtype=bool)),
+                                   np.asarray(be_ok, dtype=bool)),
             dtype=bool)),
         ("low_quality", np.asarray(low_quality, dtype=bool)),
         ("high_perplexity", np.asarray(
@@ -71,16 +68,14 @@ def decision_columns(df_cols):
     """Spark Column expressions from a dict of input columns.
 
     df_cols needs: too_short, lang1, is_reliable, rel1, ft_lang, ppl,
-    tri_grams, low_quality, toxic. Returns (keep, drop_reason) Columns.
+    tri_grams, low_quality, toxic, be_ok. Returns (keep, drop_reason)
+    Columns.
     """
     from pyspark.sql import functions as F
 
     c = df_cols
-    be_ok = c.get("be_ok")
-    not_reliable = (~c["is_reliable"]) if be_ok is None \
-        else (~c["is_reliable"] & ~be_ok)
     unreliable = (
-        (c["lang1"] == "un") | not_reliable
+        (c["lang1"] == "un") | (~c["is_reliable"] & ~c["be_ok"])
         | ((c["ft_lang"] != "un") & (c["ft_lang"] != c["lang1"])
            & (c["rel1"] < F.lit(FT_DISAGREE_MAX_REL)))
     )

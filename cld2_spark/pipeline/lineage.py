@@ -32,12 +32,9 @@ def observed(df: DataFrame) -> tuple[DataFrame, Observation]:
     return df.observe(obs, *aggs), obs
 
 
-def write_metrics_sidecar(output_path: str, obs: Observation,
+def write_metrics_sidecar(output_path: str, metrics: dict,
                           extra: dict | None = None) -> dict:
-    metrics = dict(obs.get)
-    metrics["wall_clock_unix"] = int(time.time())
-    if extra:
-        metrics.update(extra)
+    metrics = {**metrics, "wall_clock_unix": int(time.time()), **(extra or {})}
     side = Path(output_path) / "_cld2s_metrics.json"
     side.parent.mkdir(parents=True, exist_ok=True)
     side.write_text(json.dumps(metrics, indent=2, default=str))

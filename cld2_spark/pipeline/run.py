@@ -9,24 +9,18 @@ North-rule requirements implemented here:
     written with dynamic partition overwrite on the bucket column, so
     re-processing a bucket is idempotent (exactly-once per bucket).
   - per-partition lineage + metrics: each bucket's manifest entry carries
-    its row/keep/drop-reason counts (Observation metrics, lineage.py) and
-    the model version; a run-level sidecar aggregates them.
+    its commit group's id and row/keep/drop-reason counts (Observation
+    metrics, lineage.py) and the model version; a run-level sidecar sums
+    each group's counts once.
   - one verdict plan per call: `run_pipeline` is built once and each
-    commit group writes it filtered on its buckets. The filter is
-    deterministic, so Catalyst pushes it beneath the langid UDF to the
-    scan and a group scores only its own rows.
-  - Arrow batches capped within a group: each group's write runs with
-    the Arrow batch bytes capped at ARROW_BATCH_BYTES, so a scan task
-    sends the UDF several batches instead of one. The cap was chosen
-    when the rule and scrub SQL ran beneath the UDF, to overlap it with
-    the kernel; the rules are now computed in the kernel, and with
-    nothing beneath the UDF the cap no longer measurably shortens the
-    job (BENCH/BASELINE.md). It still lowers the worker's peak RSS by
-    about 4 MB. The cap is set around the group writes only, and the
-    caller's value is put back afterwards.
+    commit group is a plain write of it filtered on its buckets. The
+    filter is deterministic, so Catalyst pushes it beneath the langid UDF
+    to the scan and a group scores only its own rows. The UDF bounds its
+    own per-call memory (`kernel_slices`), so a group needs no Arrow
+    batch setting of its own.
 
-The job changes no session setting it does not restore: the parquet sink
-sets dynamic partition overwrite on its own writer.
+The job sets no session conf: the parquet sink sets dynamic partition
+overwrite on its own writer.
 
 At 100TB the same shape holds: the Iceberg table is partitioned by the same
 bucket expression, buckets map to partition pruning on read, and the
@@ -45,19 +39,10 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cld2_spark.pipeline import sink
 from cld2_spark.pipeline.lineage import observed, write_metrics_sidecar
+from cld2_spark.pipeline.sink import BUCKET_COL
 from cld2_spark.pipeline.stages import run_pipeline
-from cld2_spark.session import scoped_conf
-
-BUCKET_COL = "bucket"
-
-# Arrow bytes per batch while a commit group is written (see the module
-# docstring). A group leaves each scan task a few thousand turns, one batch
-# under the session's 10,000-row bound; the value won a 128 KiB-4 MiB sweep
-# on the resumable benchmark (BENCH/BASELINE.md) while the rule SQL ran
-# beneath the UDF. Not session-wide: the other queries' pandas UDFs keep
-# the session's batching.
-ARROW_BATCH_BYTES = 512 * 1024
 
 
 def bucket_expr(n_buckets: int):
@@ -107,46 +92,27 @@ def run_resumable(spark: SparkSession, input_df: DataFrame, output_dir: str,
     for group_start in range(0, len(todo), buckets_per_commit):
         group = todo[group_start:group_start + buckets_per_commit]
         out, obs = observed(verdicts.where(F.col(BUCKET_COL).isin(group)))
-        from cld2_spark.pipeline.sink import write_bucketed
-        with scoped_conf(spark, "spark.sql.execution.arrow.maxBytesPerBatch",
-                         str(ARROW_BATCH_BYTES)):
-            write_bucketed(out, output_dir, table=iceberg_table)
-        metrics = dict(obs.get)
-        group_id = f"g{min(group)}"
+        sink.write_bucketed(out, output_dir, table=iceberg_table)
+        entry = {"group_id": f"g{min(group)}", "group_metrics": dict(obs.get),
+                 "model_version": version}
         for b in group:
-            manifest["completed_buckets"][str(b)] = {
-                "group_id": group_id,
-                "group_metrics": metrics, "model_version": version}
+            manifest["completed_buckets"][str(b)] = entry
         save_manifest(output_dir, manifest)
         processed += len(group)
         if fail_after_buckets is not None and processed >= fail_after_buckets:
             raise RuntimeError(f"injected failure after {processed} buckets")
 
-    write_metrics_sidecar(output_dir, _SumObs(manifest), extra={
+    # metrics are per commit group: sum each group once (two groups can
+    # hold equal metrics); an empty group's NULL sums count as 0
+    groups = {e["group_id"]: e["group_metrics"]
+              for e in manifest["completed_buckets"].values()}
+    total: dict[str, int] = {}
+    for metrics in groups.values():
+        for k, v in metrics.items():
+            total[k] = total.get(k, 0) + (v or 0)
+    write_metrics_sidecar(output_dir, total, extra={
         "n_buckets": n_buckets, "model_version": version})
     return manifest
-
-
-class _SumObs:
-    """Adapter: aggregate per-group metrics into one sidecar dict."""
-
-    def __init__(self, manifest: dict):
-        total: dict[str, int] = {}
-        seen_groups = set()
-        for entry in manifest["completed_buckets"].values():
-            # metrics are per commit-group: dedupe on the group id, not on
-            # metric content (two groups can legitimately produce identical
-            # metric dicts). Older manifests without group_id fall back to
-            # content dedupe.
-            key = entry.get("group_id") or json.dumps(
-                entry["group_metrics"], sort_keys=True, default=str)
-            if key in seen_groups:
-                continue
-            seen_groups.add(key)
-            for k, v in entry["group_metrics"].items():
-                if isinstance(v, (int, float)) and v is not None:
-                    total[k] = total.get(k, 0) + v
-        self.get = total
 
 
 def main() -> None:

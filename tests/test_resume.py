@@ -70,16 +70,15 @@ def test_write_bucketed_direct_call_preserves_other_buckets(spark, tmp_path):
     assert kept == {"bucket=0", "bucket=1"}
 
 
-def test_group_writes_cap_batch_bytes_and_score_only_their_rows(
+def test_group_writes_score_only_their_rows_and_keep_session_conf(
         spark, tmp_path, monkeypatch):
-    """Each commit-group write runs under the pipeline's Arrow byte bound,
-    and its frame comes from the one verdict plan with the bucket filter
-    pushed beneath ArrowEvalPython to the scan: above the UDF, every group
-    would score every row. The caller's session settings are back after a
-    normal return, an injected crash and a failing write."""
+    """Each commit-group write's frame comes from the one verdict plan with
+    the bucket filter pushed beneath ArrowEvalPython to the scan: above the
+    UDF, every group would score every row. The caller's session settings
+    are unchanged after a normal return, an injected crash and a failing
+    write."""
     import re
 
-    import cld2_spark.pipeline.run as R
     import cld2_spark.pipeline.sink as S
     from cld2_spark.plans.inspect import formatted_plan
 
@@ -92,7 +91,7 @@ def test_group_writes_cap_batch_bytes_and_score_only_their_rows(
     fail = {"on": False}
 
     def recording_write(out, output_dir, table=None):
-        seen.append((spark.conf.get(batch_key), formatted_plan(out)))
+        seen.append(formatted_plan(out))
         if fail["on"]:
             raise OSError("sink failed")
         return real_write(out, output_dir, table=table)
@@ -121,8 +120,7 @@ def test_group_writes_cap_batch_bytes_and_score_only_their_rows(
             spark.conf.set(k, v)
 
     assert len(seen) == 2 + 1 + 1
-    for batch_bytes, plan in seen:
-        assert int(batch_bytes) == R.ARROW_BATCH_BYTES
+    for plan in seen:
         tree = plan.split("\n\n")[0].splitlines()
         udf_lines = [i for i, ln in enumerate(tree) if "ArrowEvalPython" in ln]
         assert len(udf_lines) == 1, plan
@@ -134,3 +132,58 @@ def test_group_writes_cap_batch_bytes_and_score_only_their_rows(
             filt_line = next(i for i, ln in enumerate(tree)
                              if re.search(rf"Filter \({n}\)$", ln))
             assert filt_line > udf_lines[0], plan
+
+
+def test_crash_resume_rerun_pins_manifest_and_sidecar(spark, tmp_path):
+    """A few conversations over 16 buckets, 4 per commit, so some commit
+    groups hold no rows: crash after two groups, resume, then rerun. The
+    sidecar's counts equal the oracle's on the same rows, the manifest
+    lists every bucket once, and the rerun rewrites no bucket directory."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from cld2_spark.pipeline.decide import REASONS
+    from cld2_spark.pipeline.oracle import oracle_labels
+    from cld2_spark.pipeline.run import bucket_expr
+
+    n_buckets, per_commit = 16, 4
+    pdf = synth_transcripts_pandas(80)  # 4 conversations
+    df = spark.createDataFrame(pdf)
+    used = {r[0] for r in df.select(bucket_expr(n_buckets)).distinct().collect()}
+    groups = [set(range(g, g + per_commit))
+              for g in range(0, n_buckets, per_commit)]
+    assert any(not (g & used) for g in groups), used
+
+    out = tmp_path / "out"
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, df, str(out), n_buckets=n_buckets,
+                      buckets_per_commit=per_commit, fail_after_buckets=8)
+    run_resumable(spark, df, str(out), n_buckets=n_buckets,
+                  buckets_per_commit=per_commit)
+
+    def listing():
+        return {p.name: sorted((f.name, f.stat().st_mtime_ns)
+                               for f in p.iterdir())
+                for p in (out / "data").iterdir() if p.is_dir()}
+
+    before = listing()
+    run_resumable(spark, df, str(out), n_buckets=n_buckets,
+                  buckets_per_commit=per_commit)
+    assert listing() == before
+    assert set(before) == {f"bucket={b}" for b in used}
+
+    text = (out / "_cld2s_manifest.json").read_text()
+    done = json.loads(text)["completed_buckets"]
+    assert sorted(int(b) for b in done) == list(range(n_buckets))
+    assert all(text.count(f'"{b}":') == 1 for b in range(n_buckets))
+
+    want = oracle_labels(pdf)
+    reasons = want["drop_reason"].value_counts()
+    metrics = json.loads((out / "_cld2s_metrics.json").read_text())
+    assert metrics["n_turns"] == len(pdf)
+    assert metrics["n_keep"] == int(want["keep"].sum())
+    for r in REASONS:
+        assert metrics[f"n_{r}"] == int(reasons.get(r, 0)), r
+    assert spark.read.parquet(str(out / "data")).where(
+        F.col("keep")).count() == metrics["n_keep"]
