@@ -50,13 +50,11 @@ SUMMARY_SCHEMA = StructType([
     StructField("summary_pct", IntegerType()),
 ])
 
-# the keep/drop pipeline's schema: only what the decision and the scrub
-# consume. `lang1` here is the pipeline's per-turn language answer = the
-# kernel's summary_lang (the FIXTURES.md contract name predates the
-# sorted-array refactor). be_ok is the short-turn bestEffort rescue flag
-# (analyze.BEST_EFFORT_MAX_BYTES): true when the answer is a bestEffort
-# guess that passed its own confidence gate; is_reliable stays false on
-# such rows. The last five are analyze.rule_pass's quality flags and
+# the keep/drop pipeline's schema: only what the decision, the scrub and
+# the verdict table consume. `lang1` here is the pipeline's per-turn
+# language answer = the kernel's summary_lang (the FIXTURES.md contract
+# name predates the sorted-array refactor). Then the kernel's four
+# verdicts, in decide.REASONS order, and analyze.rule_pass's three
 # scrub/toxicity guards.
 PIPELINE_SCHEMA = StructType([
     StructField("lang1", StringType()),
@@ -65,10 +63,9 @@ PIPELINE_SCHEMA = StructType([
     StructField("is_reliable", BooleanType()),
     StructField("ft_lang", StringType()),
     StructField("ppl", DoubleType()),
-    StructField("tri_grams", LongType()),
-    StructField("be_ok", BooleanType()),
     *(StructField(k, BooleanType()) for k in
-      ("too_short", "low_quality", "has_digit", "has_at", "tox_cand")),
+      ("too_short", "langid_unreliable", "low_quality", "high_perplexity",
+       "has_digit", "has_at", "tox_cand")),
 ])
 
 # W4 chunk vector: per-language spans of the source text
@@ -101,22 +98,21 @@ def _frame(schema: StructType, **source: str):
 
 
 def _span_rows(res: dict) -> pd.Series:
-    """detect_batch's flat span arrays -> one list of span structs per row."""
+    """detect_batch's flat span arrays -> one list of span structs per
+    row, built as one Arrow list array: the spans sorted stably by row,
+    each row's list bounds found by one searchsorted."""
     import numpy as np
-    n = len(res["summary_lang"])
+    import pyarrow as pa
     rid = res["span_rid"]
     order = np.argsort(rid, kind="stable")
-    bounds = np.searchsorted(rid[order], np.arange(n + 1))
-    rows = []
-    off, ln, lg = (res["span_off"][order], res["span_len"][order],
-                   res["span_lang"][order])
-    offb, lnb = res["span_off_b"][order], res["span_len_b"][order]
-    for i in range(n):
-        lo, hi = bounds[i], bounds[i + 1]
-        rows.append([{"off": int(off[j]), "len": int(ln[j]),
-                      "off_b": int(offb[j]), "len_b": int(lnb[j]),
-                      "lang": str(lg[j])} for j in range(lo, hi)])
-    return pd.Series(rows)
+    bounds = np.searchsorted(rid[order], np.arange(len(res["summary_lang"]) + 1))
+    ints = ("off", "len", "off_b", "len_b")
+    spans = pa.StructArray.from_arrays(
+        [pa.array(res[f"span_{k}"][order], type=pa.int32()) for k in ints]
+        + [pa.array(res["span_lang"][order], type=pa.string())],
+        names=[*ints, "lang"])
+    return pd.Series(pd.arrays.ArrowExtensionArray(
+        pa.ListArray.from_arrays(pa.array(bounds, type=pa.int32()), spans)))
 
 
 def _stat_checked_zip_reload() -> None:

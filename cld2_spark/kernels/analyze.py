@@ -7,9 +7,12 @@ bestEffort rescue (a row selection of the stream) and the trigram
 cross-check. The stream lives only for one analyze_batch call. The same
 decoded codepoints feed `rule_pass`: the quality flags and the guards of
 the PII scrub and the toxicity check, so the keep/drop pipeline runs no
-per-row string work ahead of its UDF. This is the single kernel behind the
-Spark langid UDFs and the single-node pandas oracle, so Spark output and
-oracle labels agree by construction.
+per-row string work ahead of its UDF. Only this kernel sees pass 1, the
+bestEffort rescue and the cross-check together, so it also writes the
+langid and perplexity verdicts: with the rule pass's two, four of the
+decision's five. This is the single kernel behind the Spark langid UDFs
+and the single-node pandas oracle, so Spark output and oracle labels
+agree by construction.
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ import numpy as np
 
 from . import quality as Q
 from . import text as T
-from .crosscheck import crosscheck_batch
+from .crosscheck import MIN_GRAMS_FOR_PPL, PERPLEXITY_THRESHOLD, crosscheck_batch
 from .detect import GramStream, detect_batch
 from .model import Cld2sModel
 from .scrub import TOXICITY_WORDS
@@ -32,6 +35,10 @@ from .scrub import TOXICITY_WORDS
 # guess. Measured +4 held-out cases (77 -> 81 of 104) on sub-128-byte
 # fragments.
 BEST_EFFORT_MAX_BYTES = 256
+
+# cross-check: a confident disagreeing trigram verdict below this CLD2-side
+# reliability makes the langid verdict unreliable
+FT_DISAGREE_MAX_REL = 90
 
 # Codepoints of text per kernel call. The kernel allocates ~125-170
 # transient bytes per input codepoint, so bounding the text per call
@@ -167,8 +174,8 @@ def analyze_batch(texts: list[str],
     out = detect_batch(texts, model, stream=stream)
     # bestEffort rescue for short refused/unreliable rows: the answer
     # fields adopt the bestEffort guess, is_reliable stays False (the
-    # honest flag: it IS a guess), and `be_ok` tells the decision stage
-    # the guess passed bestEffort's own confidence gate.
+    # honest flag: it IS a guess), and `be_ok` marks the guesses that
+    # passed bestEffort's own confidence gate.
     short = ((out["text_bytes"] > 0)
              & (out["text_bytes"] <= BEST_EFFORT_MAX_BYTES)
              & ((out["summary_lang"] == "un") | ~out["is_reliable"]))
@@ -187,5 +194,15 @@ def analyze_batch(texts: list[str],
     out["ft_lang"] = cc["ft_lang"]
     out["ppl"] = cc["ppl"]
     out["tri_grams"] = cc["n_grams"]
+    # the langid verdict: a refusal, an unreliable answer that is not a
+    # gated bestEffort guess, or a confident cross-check disagreement
+    # below FT_DISAGREE_MAX_REL
+    lang = out["summary_lang"]
+    disagree = (out["ft_lang"] != "un") & (out["ft_lang"] != lang)
+    out["langid_unreliable"] = (
+        (lang == "un") | (~out["is_reliable"] & ~out["be_ok"])
+        | (disagree & (out["rel1"] < FT_DISAGREE_MAX_REL)))
+    out["high_perplexity"] = ((out["ppl"] > PERPLEXITY_THRESHOLD)
+                              & (out["tri_grams"] >= MIN_GRAMS_FOR_PPL))
     out.update(rules)
     return out

@@ -49,8 +49,9 @@ def char_trigrams(arr: np.ndarray, rid_s: np.ndarray):
 
 def crosscheck_batch(stream: GramStream,
                      model: Cld2sModel | None = None) -> dict[str, np.ndarray]:
-    """Returns per-row: ft_lang (code), ft_score (int), ppl (float), n_grams,
-    scored over the letters of every script of the detector's `stream`."""
+    """Returns per-row: ft_lang (code, "un" when no trigram scores), ppl
+    (float) and n_grams, scored over the letters of every script of the
+    detector's `stream`."""
     if model is None:
         from .model import default_model
         model = default_model()
@@ -102,4 +103,4 @@ def crosscheck_batch(stream: GramStream,
     lang_arr = np.array(model.langs + ["un"], dtype=object)
     ft_lang = lang_arr[np.where(top_score > 0, top, L)]
     ppl = np.where(n_grams > 0, surprise / np.maximum(n_grams, 1), float(MAX_QPROB))
-    return {"ft_lang": ft_lang, "ft_score": top_score, "ppl": ppl, "n_grams": n_grams}
+    return {"ft_lang": ft_lang, "ppl": ppl, "n_grams": n_grams}

@@ -527,13 +527,14 @@ def pq_encode(df: DataFrame, n_sub: int = 4, cb_mod: int = 37,
     same trained-codebook-free bootstrap ivf_cosine_topk uses, stable
     under reruns and appends, no RNG, no count() job.
 
-    Shape at 100 TB: the codebook relation is tiny (n_sub * n/cb_mod
-    rows) and broadcast; the corpus explodes to one row per (vector,
-    subspace) — a pure projection — and the argmin is one map-side-
-    combinable min(struct) aggregate keyed by (vec_id, subspace),
-    followed by one reassembly aggregate keyed by vec_id. Ties break by
-    codeword id. Exact double algebra throughout so a SQL oracle
-    replays it bit-for-bit.
+    Shape at 100 TB: the codebook relation has n_sub * n/cb_mod rows and
+    is broadcast, so at a fixed `cb_mod` it grows with n: size `cb_mod`
+    at about n/target_cells to keep it bounded. The corpus explodes to
+    one row per (vector, subspace) — a pure projection — and the argmin
+    is one map-side-combinable min(struct) aggregate keyed by (vec_id,
+    subspace), followed by one reassembly aggregate keyed by vec_id.
+    Ties break by codeword id. Exact double algebra throughout so a SQL
+    oracle replays it bit-for-bit.
 
     Returns (vec_id, codes array<bigint> — codeword ids in subspace
     order, dist — total squared reconstruction residual, rounded)."""

@@ -3,11 +3,13 @@
 Produces the per-turn keep/drop + scrubbed-text labels the Spark pipeline is
 graded against (FIXTURES.md §4, north-rule F1 >= 0.99). Runs the SAME
 langid kernel as the Spark UDFs (analyze_batch) plus pandas forms of the
-rules, the toxicity check and the scrub. The pipeline takes its rule flags
-and guards from the kernel's codepoint pass (`analyze.rule_pass`); the
-oracle ignores those and keeps its own forms, so the parity tests check
-that pass against independent code, and any Spark/oracle divergence is a
-real pipeline bug, not an oracle artifact.
+rules, the toxicity check and the scrub. It takes the kernel's langid
+answer and its `langid_unreliable` and `high_perplexity` verdicts as they
+are; the pipeline also takes its rule flags and guards from the kernel's
+codepoint pass (`analyze.rule_pass`), which the oracle ignores for its own
+forms, so the parity tests check that pass against independent code, and
+any Spark/oracle divergence is a real pipeline bug, not an oracle
+artifact.
 """
 
 from __future__ import annotations
@@ -35,9 +37,7 @@ def oracle_labels(transcripts: pd.DataFrame, text_col: str = "text") -> pd.DataF
     parts = ([analyze_batch(rows[s]) for s in kernel_slices(rows)]
              or [analyze_batch([])])
     res = {k: np.concatenate([p[k] for p in parts]) for k in parts[0]}
-    rules = {k: v.to_numpy()
-             for k, v in Q.flags(Q.features_pandas(texts)).items()}
-    toxic = S.toxicity_mask_pandas(texts).to_numpy()
+    rules = Q.flags(Q.features_pandas(texts))
     # a NULL text is "" to the rules (too_short) and stays NULL when
     # scrubbed, as in run_pipeline
     scrubbed = S.scrub_pandas(df[text_col])
@@ -45,10 +45,10 @@ def oracle_labels(transcripts: pd.DataFrame, text_col: str = "text") -> pd.DataF
     # the pipeline's `lang1` column is the per-turn answer = the kernel's
     # summary_lang (same mapping as functions/langid.pipeline_udf)
     lang = res["summary_lang"]
-    keep, reason = decision_pandas(
-        lang1=lang, is_reliable=res["is_reliable"], rel1=res["rel1"],
-        ft_lang=res["ft_lang"], ppl=res["ppl"], tri_grams=res["tri_grams"],
-        toxic=toxic, be_ok=res["be_ok"], **rules)
+    keep, reason = decision_pandas({
+        **rules, "toxicity": S.toxicity_mask_pandas(texts),
+        "langid_unreliable": res["langid_unreliable"],
+        "high_perplexity": res["high_perplexity"]})
 
     return pd.DataFrame({
         "conv_id": df["conv_id"],

@@ -11,9 +11,10 @@ Physical shape (designed for 10^12 turns / 1000 executors):
   - the single Python stage is one Arrow-batched iterator UDF (`pipeline_udf`)
     computing langid + cross-check + perplexity + the heuristic rules in
     one normalization pass; the rest is whole-stage-codegen SQL above it.
-  - nothing is attached beneath the UDF: the kernel's codepoint pass
-    (`analyze.rule_pass`) returns `too_short` and `low_quality` and three
-    guards, `has_digit`, `has_at` and `tox_cand`, in the langid struct.
+  - nothing is attached beneath the UDF: the langid struct carries the
+    kernel's four verdicts (`too_short`, `langid_unreliable`,
+    `low_quality`, `high_perplexity`) and the codepoint pass's three
+    guards, `has_digit`, `has_at` and `tox_cand`.
     Spark 4.1's runner feeds the Python worker from the task thread and
     pipelines only a socket buffer's worth of input, so JVM string work
     beneath the UDF ran serially ahead of the kernel instead of
@@ -21,7 +22,7 @@ Physical shape (designed for 10^12 turns / 1000 executors):
   - above the UDF, each PII scrub step runs only where its guard is set
     and the toxicity regex only where `tox_cand` is; the guards are sound
     supersets of the SQL tests they replace, so clean rows never enter a
-    regex. The decision reads the flags from the struct.
+    regex. The decision reads the flags from the struct, plus `toxic`.
   - `partition_for_scale` gives the explicit conv_id hash partitioning +
     salt for mega-conversations demanded by the north rule; per-turn stages
     don't need it (row-local), so it's applied only when downstream
@@ -30,12 +31,12 @@ Physical shape (designed for 10^12 turns / 1000 executors):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from cld2_spark.functions.langid import pipeline_udf
 from cld2_spark.kernels import quality as Q
 from cld2_spark.kernels import scrub as S
-from cld2_spark.pipeline.decide import decision_columns
+from cld2_spark.pipeline.decide import REASONS, decision_columns
 
 LD = "ld"  # struct column name for langid output
 
@@ -73,19 +74,10 @@ def with_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def with_decision(df: DataFrame) -> DataFrame:
-    cols: dict[str, Column] = {
-        "too_short": F.col(f"{LD}.too_short"),
-        "lang1": F.col(f"{LD}.lang1"),
-        "is_reliable": F.col(f"{LD}.is_reliable"),
-        "rel1": F.col(f"{LD}.rel1"),
-        "ft_lang": F.col(f"{LD}.ft_lang"),
-        "ppl": F.col(f"{LD}.ppl"),
-        "tri_grams": F.col(f"{LD}.tri_grams"),
-        "low_quality": F.col(f"{LD}.low_quality"),
-        "toxic": F.col("toxic"),
-        "be_ok": F.col(f"{LD}.be_ok"),
-    }
-    keep, reason = decision_columns(cols)
+    """Attach `keep` and `drop_reason`: the langid struct carries every
+    verdict but toxicity, which `with_scrub` attaches as `toxic`."""
+    flags = {r: F.col(f"{LD}.{r}") for r in REASONS if r != "toxicity"}
+    keep, reason = decision_columns({**flags, "toxicity": F.col("toxic")})
     return df.withColumn("keep", keep).withColumn("drop_reason", reason)
 
 

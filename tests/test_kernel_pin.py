@@ -293,6 +293,8 @@ OUTPUT_SHA256: dict[str, dict[str, str]] = {
             "9437b37a09e00d4debb974f1680853a3ca3db452e7547f834471ab11ea39461d",
         "has_digit":
             "038cbac8808dfc404cd3c7d6c8ac4ab41e2d3f5f39284a45d63f09228dcfb2e7",
+        "high_perplexity":
+            "8c4787a28233987854e73fa220c42c3daca1acf344977f358cfdcd44e773b127",
         "is_reliable":
             "d1c888893968c3b6eafe03ce943db9b9d7e11631f216f4e94c9e6d2f90869b6e",
         "lang1":
@@ -301,6 +303,8 @@ OUTPUT_SHA256: dict[str, dict[str, str]] = {
             "31a7cc97ceb54fadef33594bbe6304efc17ae6d9020e3501c0d6141f29d31b1f",
         "lang3":
             "eb9479e494dcea7a03ac33074a4c2dd1836b32a74ee7b0c74cc6dd7420ee32e8",
+        "langid_unreliable":
+            "a68855571e81e20ffaa03ed55a387ec8fb72703c8febf041bfc45d07758b95f5",
         "low_quality":
             "9437b37a09e00d4debb974f1680853a3ca3db452e7547f834471ab11ea39461d",
         "ns1":

@@ -12,9 +12,9 @@ def test_pipeline_is_shuffle_free_single_python_stage(spark, tmp_path):
     """One Python stage, no shuffle, and no string work beneath
     ArrowEvalPython: the langid kernel's codepoint pass returns the rule
     flags and the scrub/toxicity guards, so the subtree that feeds the
-    Python worker only scans. Above the UDF the decision reads
-    `too_short` and `low_quality` from the struct, and every scrub step
-    and the toxicity regex sit behind a guard field of it."""
+    Python worker only scans. Above the UDF the decision reads the
+    kernel's four verdicts from the struct, and every scrub step and the
+    toxicity regex sit behind a guard field of it."""
     import re
 
     # realistic source: parquet scan, not an in-memory relation
@@ -40,7 +40,8 @@ def test_pipeline_is_shuffle_free_single_python_stage(spark, tmp_path):
     for op in ("regexp", "rlike", "split(", "instr(", "lower("):
         assert op not in below.lower(), (op, below)
     above = plan.split(py.group(0), 1)[1]
-    for field in ("too_short", "low_quality", "has_digit", "has_at", "tox_cand"):
+    for field in ("too_short", "langid_unreliable", "low_quality",
+                  "high_perplexity", "has_digit", "has_at", "tox_cand"):
         assert re.search(rf"(?:pythonUDF\d+|ld)#\d+\.{field}\b", above), (field, plan)
     assert "translate(" not in plan
 
